@@ -24,7 +24,7 @@ final class EGraph(
     val edges: DataFrame,
     val indexes: DataFrame) {
 
-  private lazy val undirected = GraphBuilder.undirected(edges).materialize()
+  private lazy val undirected = GraphBuilder.undirectedOf(edges)
 
   def node(key: String): DataFrame =
     nodes.filter(col("key_data") === key)
@@ -43,10 +43,17 @@ final class EGraph(
       col("key_type") === keyType && col("key_str") === key)
       .select("node_key")
 
-  def indexRange(name: String, keyType: String, lo: Double, hi: Double): DataFrame =
+  /** A store-loaded frame carries the typed key_num shadow column
+    * (GraphStore.saveIndexes): filtering it pushes to the scan, as in
+    * QueryJson.run; a cast of key_str cannot. */
+  def indexRange(name: String, keyType: String, lo: Double, hi: Double): DataFrame = {
+    val key =
+      if (indexes.columns.contains("key_num")) col("key_num")
+      else col("key_str").try_cast("double")
     indexes.filter(col("index_name") === name && col("key_type") === keyType &&
-      col("key_str").try_cast("double").between(lo, hi))
+      key.between(lo, hi))
       .select("node_key")
+  }
 
   def linksFrom(key: String): DataFrame =
     edges.filter(col("src_key") === key)

@@ -98,9 +98,10 @@ object GraphBuilder {
   // the adjacency is a materialized artifact (GraphStore persists it
   // in production); memoizing the built frame per (session, dir)
   // keeps the many graph queries from re-running the orders⋈lineitem
-  // build. Keyed ONLY by the immutable input directory — frames from
-  // mutable sources (e.g. a GraphStore that gets overwritten) never
-  // enter these caches.
+  // build. Keyed by the immutable input directory. GraphStore's
+  // frames come from its own relation cache instead, keyed by a
+  // marked (never rewritten) version dir and its _SUCCESS mtime, so a
+  // new version or a rewritten store is a new frame instance.
   // bounded so a long-lived multi-store service cannot accumulate
   // checkpointed frames (and pinned SparkSessions) without limit.
   // Eviction only DROPS the reference — never unpersist: these are
@@ -112,16 +113,29 @@ object GraphBuilder {
   private val edgeCache =
     new graft.util.LruCache[(SparkSession, String), DataFrame](16)
   private val undirectedCache =
-    new graft.util.LruCache[(SparkSession, String), DataFrame](16)
+    new graft.util.LruCache[DataFrame, DataFrame](16)
 
   /** Memoized undirected adjacency of the demo graph for `dir`. */
   def undirectedFor(s: SparkSession, dir: String): DataFrame =
-    undirectedCache.getOrElseUpdate((s, dir))(markStable(
-      undirected(edges(s, dir)).materialize()))
+    undirectedOf(edges(s, dir))
+
+  /** Checkpointed [[undirected]] adjacency of an edge frame, memoized
+    * per [[markStable]] frame instance (the demo graph's per-dir
+    * edges, a GraphStore edges version) and itself stable, so its
+    * [[aKeyed]] copy is memoized too. One-shot frames get a fresh
+    * checkpoint per call. The build is eager, so it is serialized per
+    * key like [[aKeyed]]. */
+  def undirectedOf(edges: DataFrame): DataFrame =
+    if (!isStable(edges)) undirected(edges).materialize()
+    else graft.util.Latches.forKey(edges).synchronized {
+      undirectedCache.getOrElseUpdate(edges)(
+        markStable(undirected(edges).materialize()))
+    }
 
   // ---- stable-instance registry --------------------------------
-  // Frames handed out by the dir-keyed caches above are LONG-LIVED
-  // (the memo returns the same instance to every query), so derived
+  // Frames handed out by the caches above and GraphStore's relation
+  // cache are LONG-LIVED (the memo returns the same instance to
+  // every query), so derived
   // artifacts keyed on them (aKeyed, broadcastAdjacency, lpaCache)
   // actually get cache hits. A frame built fresh per call (e.g. the
   // dedup keeper-resolution adjacency — a new unionByName().distinct()
@@ -135,7 +149,7 @@ object GraphBuilder {
       new java.util.WeakHashMap[DataFrame, java.lang.Boolean]))
 
   /** Register `df` as a long-lived, memo-eligible frame instance.
-    * The dir-keyed caches here do it automatically; a service
+    * The caches here and GraphStore's do it automatically; a service
     * holding its own adjacency for many queries can opt in. */
   def markStable(df: DataFrame): DataFrame = { stableFrames.add(df); df }
 
@@ -166,8 +180,10 @@ object GraphBuilder {
     * memo pins the FIRST call's snapshot for the frame instance's
     * cache lifetime. A long-lived service holding one frame over
     * storage that gets overwritten must hand a fresh frame per read
-    * point — the dir-keyed query-path caches do (immutable input
-    * dirs), and GraphStore readers construct new frames per epoch.
+    * point — the dir-keyed query-path caches read immutable input
+    * dirs, and GraphStore hands out one frame per marked version (a
+    * commit or a rewritten store is a new instance; expiry-bearing
+    * tables get a fresh, unregistered frame per read).
     * Build is serialized PER KEY (striped latch, not one monitor —
     * concurrent first builds of DIFFERENT graphs run in parallel):
     * it is an EAGER shuffle+checkpoint, and racing first calls for
@@ -198,14 +214,8 @@ object GraphBuilder {
     * scratch copy is never re-read after `body`; the blocks are
     * freed immediately instead of waiting out 16 LRU misses. */
   def withAKeyed[T](edges: DataFrame)(body: DataFrame => T): T =
-    if (isStable(edges)) {
-      // scratch A/B flag (r13 probe): skip the memoized
-      // repartition+checkpoint and hand the stable frame straight to
-      // the operator
-      val raw = edges.sparkSession.conf.getOption("graft.akeyed.raw")
-        .exists(_.trim.equalsIgnoreCase("true"))
-      body(if (raw) edges else aKeyed(edges))
-    } else {
+    if (isStable(edges)) body(aKeyed(edges))
+    else {
       val scratch = edges.repartition(col("a"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try body(scratch) finally scratch.unpersist(blocking = false)

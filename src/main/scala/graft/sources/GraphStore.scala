@@ -27,6 +27,21 @@ import graft.index.Sharding
   * previous version stays intact (a plain overwrite deletes the only
   * copy of prior state before the new one is durable). The two most
   * recent good versions are kept; older ones are pruned best-effort.
+  *
+  * Read path: a marked version dir never changes, so every load and
+  * probe reads it through one resolved `spark.read.parquet` relation
+  * per (session, version dir, `_SUCCESS` mtime), kept in a bounded
+  * LRU. A reused relation keeps its file listing and schema: no
+  * per-call listing or schema-inference job, and a rewritten root
+  * (new marker mtime) is read fresh. The cached relations are
+  * [[graft.graph.GraphBuilder.markStable]] frames, so adjacency built
+  * over a stored edges version is memoized per version. Only marked
+  * versions are cached: plain (pre-versioning) layouts are read anew
+  * per call, and a table carrying `expires_at_us` hands out a fresh
+  * expiry-filtered frame per call (its filter is per execution), so
+  * no expiry-bearing frame is ever cached or memoized. Parquet read
+  * options that shape a relation (e.g. schema merging) are fixed at a
+  * version's first read in a session.
   */
 object GraphStore {
 
@@ -45,34 +60,44 @@ object GraphStore {
       .filter(v => fs.exists(new Path(dir, s"$v/_SUCCESS")))
   }
 
-  /** Epoch-pinned version if the given epoch names this table, else
-    * the newest complete version dir, else the plain dir itself for
-    * layouts written before versioning. */
-  private def resolveWith(spark: SparkSession, epoch: Map[String, String],
-      root: String, table: String): String = {
+  // bounded so a service reading many stores cannot pin relations
+  // (and their SparkSessions) without limit; eviction drops only the
+  // reference
+  private val relations =
+    new graft.util.LruCache[(SparkSession, String, Long), DataFrame](32)
+
+  /** THE read helper: the epoch-pinned version if the given epoch
+    * names this table (one marker stat, no listing of the retained
+    * versions), else the newest complete version dir — either one
+    * through its cached relation — else the plain dir itself, read
+    * anew, for layouts written before versioning; all under the
+    * per-execution expiry filter. */
+  private def read(spark: SparkSession, epoch: Map[String, String],
+      root: String, table: String): DataFrame = {
     val dir = s"$root/$table"
-    val versions = goodVersions(spark, dir)
-    epoch.get(table).filter(versions.contains)
-      .orElse(versions.headOption)
-      .map(v => s"$dir/$v").getOrElse {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def marked(v: String): Option[DataFrame] =
+      (try Some(fs.getFileStatus(new Path(dir, s"$v/_SUCCESS")).getModificationTime)
+      catch { case _: java.io.FileNotFoundException => None }).map { m =>
+        relations.getOrElseUpdate((spark, s"$dir/$v", m))(
+          graft.graph.GraphBuilder.markStable(spark.read.parquet(s"$dir/$v")))
+      }
+    notExpired(epoch.get(table).flatMap(marked)
+      .orElse(goodVersions(spark, dir).view.flatMap(marked).headOption)
+      .getOrElse {
         // pre-versioning plain layout: the SAME visibility contract
         // as hasTable — readable iff its own _SUCCESS proves the
         // write completed. Silently reading an unmarked directory
         // here would launder a torn write through loadNodes/
         // loadSnapshot while hasTable correctly reports it absent.
-        val p = new Path(dir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         require(fs.exists(new Path(p, "_SUCCESS")),
           s"$dir has no complete version dir and no _SUCCESS marker; " +
             "refusing to read a possibly-incomplete layout " +
             "(see GraphStore.hasTable's visibility contract)")
-        dir
-      }
+        spark.read.parquet(dir)
+      })
   }
-
-  private def resolve(spark: SparkSession, root: String,
-      table: String): String =
-    resolveWith(spark, currentEpoch(spark, root), root, table)
 
   /** The root epoch: table → pinned version. Written atomically by
     * [[commitEpoch]] AFTER all of a batch's table saves, so readers
@@ -268,9 +293,8 @@ object GraphStore {
   def loadSnapshot(spark: SparkSession, root: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val epoch = currentEpoch(spark, root)
-    def read(table: String) =
-      notExpired(spark.read.parquet(resolveWith(spark, epoch, root, table)))
-    (read("nodes"), read("edges"), read("indexes"))
+    (read(spark, epoch, root, "nodes"), read(spark, epoch, root, "edges"),
+      read(spark, epoch, root, "indexes"))
   }
 
   /** CONTRACT: a table is visible iff a reader can prove it complete
@@ -283,8 +307,8 @@ object GraphStore {
     * let StreamingIngest launder a crashed half-write into the next
     * committed epoch as if it were good prior state. Losing sight of
     * unmarked data is recoverable (re-ingest); silently merging a
-    * torn prior state is not. resolveWith enforces the same contract
-    * on the load path. Goes through the path's own Hadoop FileSystem
+    * torn prior state is not. The read helper enforces the same
+    * contract on the load path. Goes through the path's own Hadoop FileSystem
     * so it answers correctly on any scheme (hdfs://, s3a://). */
   def hasTable(spark: SparkSession, root: String, table: String): Boolean = {
     val dir = new Path(s"$root/$table")
@@ -294,13 +318,13 @@ object GraphStore {
   }
 
   def loadNodes(spark: SparkSession, root: String): DataFrame =
-    notExpired(spark.read.parquet(resolve(spark, root, "nodes")))
+    read(spark, currentEpoch(spark, root), root, "nodes")
 
   def loadEdges(spark: SparkSession, root: String): DataFrame =
-    notExpired(spark.read.parquet(resolve(spark, root, "edges")))
+    read(spark, currentEpoch(spark, root), root, "edges")
 
   def loadIndexes(spark: SparkSession, root: String): DataFrame =
-    notExpired(spark.read.parquet(resolve(spark, root, "indexes")))
+    read(spark, currentEpoch(spark, root), root, "indexes")
 
   /** Point lookup against the stored node partitioning: computes the
     * shard from the key so the scan prunes to one directory. */

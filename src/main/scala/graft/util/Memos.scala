@@ -12,9 +12,9 @@ package graft.util
   * passes start from the identical warm-inputs/cold-derived state and
   * per-key times stay attribution-comparable.
   *
-  * INPUT-layer caches (the dir-keyed edge/undirected frames that the
-  * untimed warmup builds) deliberately do NOT register — they are
-  * warm in both passes by protocol.
+  * INPUT-layer caches (the edge frames and their undirected
+  * adjacency that the untimed warmup builds, GraphStore's relations)
+  * deliberately do NOT register — warm in both passes by protocol.
   */
 object Memos {
   private val resets = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
