@@ -249,8 +249,10 @@ object Bench {
           .mkString(",")}],"repair_passes":$repairs,"window_quality":"$quality","loadavg":${
         jstr(loadavg)},"volatile_keys":[${volatile.map(jstr).mkString(",")}]}"""
     val passTotals = passes.map(_.map(_._2).filter(_ >= 0).sum)
+    // repair passes add resets beyond the base two
+    val protocol = s"best_of_${passes.size}_reset"
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","protocol":"best_of_2_reset","queries":${
+      s"""{"metric":"total","value":$total,"unit":"sec","protocol":"$protocol","queries":${
         jmap(results)},"passes":[${passes.map(jmap).mkString(",")
         }],"pass_totals":[${passTotals.map(jnum).mkString(",")
         }],"noise":$noise,"record":${
@@ -273,7 +275,7 @@ object Bench {
         },"repair_passes":$repairs,"window_quality":"$quality","volatile":${
         volatile.size},"loadavg":${jstr(loadavg)}},"""
     val fixedPre =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","protocol":"best_of_2_reset",$noiseShort"queries":{"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","protocol":"$protocol",$noiseShort"queries":{"""
     val esShort = if (es.length <= 200) es else "{}"
     // the line is budgeted (slowest keys only when it overflows) but
     // must carry a COMPLETE signal (r12 verdict #2 — the churning

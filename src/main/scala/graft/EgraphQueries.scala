@@ -299,10 +299,11 @@ object EgraphQueries {
     },
 
     "g_kcore" -> { (s, d) =>
-      // deterministic h-index fixpoint — exact core numbers, one
-      // aggregation shuffle per round; the DuckDB oracle replays the
-      // same all-integer iteration via a counter-carrying recursive
-      // CTE (exact, not rows-only, since r07)
+      // exact core numbers: single-task bucket peeling below
+      // graft.graph.broadcastEdges, the h-index fixpoint rounds past
+      // it; the DuckDB oracle replays the same all-integer iteration
+      // via a counter-carrying recursive CTE (exact, not rows-only,
+      // since r07)
       Algorithms.kCore(GraphBuilder.undirectedFor(s, d))
         .orderBy("node")
     },
@@ -319,9 +320,11 @@ object EgraphQueries {
     },
 
     "g_communities" -> { (s, d) =>
-      // deterministic DataFrame LPA (min-label tie-break), canonical
-      // min-member community names; the DuckDB oracle replays the 5
-      // integer/string-ordered rounds exactly (exact since r07).
+      // deterministic LPA (min-label tie-break; single task below
+      // graft.graph.broadcastEdges, DataFrame rounds past it),
+      // canonical min-member community names; the DuckDB oracle
+      // replays the 5 integer/string-ordered rounds exactly (exact
+      // since r07).
       // Memoized: the partition is an artifact g_modularity consumes.
       Algorithms.labelPropagationCached(GraphBuilder.undirectedFor(s, d))
         .orderBy("node")

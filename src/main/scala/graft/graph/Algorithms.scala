@@ -143,12 +143,24 @@ object Algorithms {
     * two joins and one aggregation. The adjacency is pre-partitioned
     * on the join key `a` so the big side is never re-exchanged, and
     * the rank state carries `share` = rank/deg so out-degree is not
-    * re-joined every round. */
+    * re-joined every round.
+    *
+    * Dual regime, like [[kCore]]: under `graft.graph.broadcastEdges`
+    * the same unnormalized update runs as ONE executor task over the
+    * broadcast out-lists ([[singleTask]]); the values differ from the
+    * rounds only by summation order, in the last ulp. Contract notes:
+    * the input is the symmetric adjacency (every `b` is also an `a`),
+    * rows with a null id are dropped in both regimes, and only STRING
+    * adjacencies take the single task (see [[broadcastRegimeEligible]]). */
   def pageRank(undirectedEdges0: DataFrame, iters: Int = 10,
       damping: Double = 0.85): DataFrame =
-    GraphBuilder.withAKeyed(undirectedEdges0) { undirectedEdges =>
+    if (singleTaskEligible(undirectedEdges0))
+      singleTask(undirectedEdges0, "rank")(g =>
+        pageRankKernel(g, iters, damping))
+    else GraphBuilder.withAKeyed(undirectedEdges0) { keyed =>
     // (scoped: a one-shot input's repartitioned copy is freed on
     // return; the result below is rooted at its own checkpoints)
+    val undirectedEdges = nonNullIds(keyed)
     // base: (node, deg) — every node of an undirected adjacency has
     // at least one edge, so the group-by covers all nodes
     val base = undirectedEdges.groupBy(col("a").as("node"))
@@ -174,14 +186,43 @@ object Algorithms {
     ranks.select("node", "rank")
   }
 
+  /** The rounds' update, as index arrays: each node pushes
+    * share = rank/deg to its out-list, then
+    * rank = (1 − d) + d · Σ shares received. */
+  private def pageRankKernel(g: IndexedAdjacency, iters: Int,
+      damping: Double): Array[Double] = {
+    var rank = Array.fill(g.n)(1.0)
+    for (_ <- 1 to iters) {
+      val csum = new Array[Double](g.n)
+      for (v <- 0 until g.n) {
+        val share = rank(v) / g.adj(v).length
+        g.adj(v).foreach(u => csum(u) += share)
+      }
+      rank = csum.map(c => (1.0 - damping) + damping * c)
+    }
+    rank
+  }
+
   /** Connected components by min-label propagation: every node takes
     * the minimum label in its closed neighborhood until fixpoint.
     * Converges in O(component diameter) rounds; each round is one
     * aggregation shuffle. Returns (node, component) with the
-    * component named by its lexicographically smallest member. */
+    * component named by its smallest member in Spark's string order.
+    *
+    * Dual regime, like [[kCore]]: under `graft.graph.broadcastEdges`
+    * ONE executor task traverses the broadcast adjacency once
+    * ([[singleTask]]) — exact, the same map as the rounds. Contract
+    * notes: the input is the symmetric adjacency, `maxIter` does not
+    * apply below the ceiling (the traversal always finishes, so the
+    * convergence-failure throw is a rounds-only behavior), rows with
+    * a null id are dropped in both regimes, and only STRING
+    * adjacencies take the single task. */
   def connectedComponents(undirectedEdges0: DataFrame,
       maxIter: Int = 50): DataFrame =
-    GraphBuilder.withAKeyed(undirectedEdges0) { undirectedEdges =>
+    if (singleTaskEligible(undirectedEdges0))
+      singleTask(undirectedEdges0, "component")(componentsKernel)
+    else GraphBuilder.withAKeyed(undirectedEdges0) { keyed =>
+    val undirectedEdges = nonNullIds(keyed)
     var labels = undirectedEdges.select(col("a").as("node")).distinct()
       .withColumn("label", col("node")).materialize()
     var changed = true
@@ -209,6 +250,25 @@ object Algorithms {
     labels.withColumnRenamed("label", "component")
   }
 
+  /** One depth-first sweep in index order: the first node of each
+    * component is its smallest index, i.e. the rounds' `min(label)`. */
+  private def componentsKernel(g: IndexedAdjacency): Array[String] = {
+    val comp = Array.fill(g.n)(-1)
+    val stack = new Array[Int](g.n) // each node is pushed at most once
+    for (s <- 0 until g.n if comp(s) < 0) {
+      comp(s) = s
+      stack(0) = s
+      var top = 1
+      while (top > 0) {
+        top -= 1
+        g.adj(stack(top)).foreach { u =>
+          if (comp(u) < 0) { comp(u) = s; stack(top) = u; top += 1 }
+        }
+      }
+    }
+    comp.map(g.ids)
+  }
+
   /** k-core decomposition by h-index iteration (Lü et al., "The
     * H-index of a network node", Nature Comm. 2016): start every
     * node at its degree and repeatedly replace each estimate with
@@ -223,7 +283,7 @@ object Algorithms {
     * pathological degree ever demanded it. Returns (node, core).
     *
     * Dual regime: under the broadcast ceiling
-    * (`graft.kcore.broadcastEdges`) the decomposition runs as ONE
+    * (`graft.graph.broadcastEdges`) the decomposition runs as ONE
     * executor task over the broadcast adjacency — exact
     * Batagelj–Zaveršnik bucket peeling, O(E), whose output IS the
     * h-index fixpoint (both equal the core number, Lü et al. Thm 1)
@@ -231,18 +291,18 @@ object Algorithms {
     * round overhead (~10 convergence rounds × collect_list shuffle +
     * checkpoint + convergence job for milliseconds of actual work).
     * Past the ceiling the rounds above are the scale shape and run
-    * unchanged; spec pins regime equality. Two contract notes:
-    * `maxIter` does not apply below the ceiling (peeling is exact
-    * and always terminates, so the convergence-failure throw is a
-    * shuffle-regime-only behavior), and the broadcast kernel keys on
-    * STRING node columns — non-string adjacencies ride the shuffle
-    * regime at any size (see [[broadcastRegimeEligible]]). */
-  def kCore(undirectedEdges0: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = undirectedEdges0.sparkSession
-    if (broadcastRegimeEligible(undirectedEdges0,
-        confLong(spark, "graft.kcore.broadcastEdges", kcoreBroadcastEdges)))
-      return kCoreBroadcast(undirectedEdges0)
-    GraphBuilder.withAKeyed(undirectedEdges0) { undirectedEdges =>
+    * unchanged; spec pins regime equality. Contract notes: the input
+    * is the symmetric adjacency, `maxIter` does not apply below the
+    * ceiling (peeling is exact and always terminates, so the
+    * convergence-failure throw is a rounds-only behavior), rows with
+    * a null id are dropped in both regimes, and the single task keys
+    * on STRING node columns — non-string adjacencies ride the rounds
+    * at any size (see [[broadcastRegimeEligible]]). */
+  def kCore(undirectedEdges0: DataFrame, maxIter: Int = 50): DataFrame =
+    if (singleTaskEligible(undirectedEdges0))
+      singleTask(undirectedEdges0, "core")(kCoreKernel)
+    else GraphBuilder.withAKeyed(undirectedEdges0) { keyed =>
+    val undirectedEdges = nonNullIds(keyed)
     // h-index of a desc-sorted estimate list: |{i : s_i ≥ i+1}| —
     // the count form of "largest h with h values ≥ h"
     def hIndex(ests: Column): Column =
@@ -278,14 +338,55 @@ object Algorithms {
     if (changed) throw new IllegalStateException(
       s"k-core did not converge in $maxIter rounds; raise maxIter")
     core.withColumnRenamed("c", "core")
-    }
   }
 
-  /** Edge-count ceiling for the single-task peeling regime of
-    * [[kCore]] — same ~120 MB grouped-map envelope as
-    * [[betweennessBroadcastEdges]] (the two regimes share the
-    * memoized [[broadcastAdjacency]]). */
-  val kcoreBroadcastEdges = 2000000L
+  /** Exact core numbers by bucket peeling (Batagelj & Zaveršnik
+    * 2003). Integer-only — no FP wobble between regimes. */
+  private def kCoreKernel(g: IndexedAdjacency): Array[Int] = {
+    val n = g.n
+    val core = g.adj.map(_.length)
+    if (n > 0) {
+      val maxDeg = core.max
+      // bin[d] = start offset of degree-d nodes in vert
+      val bin = new Array[Int](maxDeg + 2)
+      core.foreach(d => bin(d + 1) += 1)
+      for (d <- 1 to maxDeg + 1) bin(d) += bin(d - 1)
+      val pos = new Array[Int](n)
+      val vert = new Array[Int](n)
+      val fill = bin.clone()
+      for (v <- 0 until n) { pos(v) = fill(core(v)); vert(pos(v)) = v; fill(core(v)) += 1 }
+      for (i <- 0 until n) {
+        val v = vert(i)
+        g.adj(v).foreach { u =>
+          if (core(u) > core(v)) {
+            // swap u with the first vertex of its bucket, then
+            // shrink the bucket boundary and u's core by one
+            val du = core(u); val pu = pos(u)
+            val pw = bin(du); val w = vert(pw)
+            if (u != w) {
+              pos(u) = pw; vert(pw) = u
+              pos(w) = pu; vert(pu) = w
+            }
+            bin(du) += 1
+            core(u) -= 1
+          }
+        }
+      }
+    }
+    core
+  }
+
+  /** Edge-count ceiling (`graft.graph.broadcastEdges`) for the
+    * single-task regimes of [[pageRank]], [[connectedComponents]],
+    * [[labelPropagation]], [[kCore]] and [[betweenness]]: ~2M
+    * directed rows ≈ ~120 MB as the grouped
+    * `Map[node, Array[neighbor]]` (~60 B/edge — leaner than a
+    * hash-join relation, so the ceiling sits above
+    * [[triangleBroadcastEdges]] at the same memory envelope). All
+    * five share the memoized [[broadcastAdjacency]]; the driver
+    * materializes only its |V| pre-grouped rows, bounded by the
+    * ceiling itself. */
+  val broadcastEdges = 2000000L
 
   /** One conf-ceiling parse for the regime gates. Malformed values
     * fall back to the default silently — these are perf knobs, not
@@ -313,59 +414,56 @@ object Algorithms {
       edges.count() <= ceiling
   }
 
-  /** Broadcast regime of [[kCore]]: exact core numbers by bucket
-    * peeling (Batagelj & Zaveršnik 2003) in one executor task over
-    * the broadcast symmetric adjacency. Integer-only — no FP wobble
-    * between regimes. */
-  private def kCoreBroadcast(undirectedEdges: DataFrame): DataFrame = {
+  /** The one gate of the five single-task kernels. */
+  private def singleTaskEligible(undirectedEdges: DataFrame): Boolean =
+    broadcastRegimeEligible(undirectedEdges, confLong(
+      undirectedEdges.sparkSession, "graft.graph.broadcastEdges",
+      broadcastEdges))
+
+  /** Rows with a null endpoint, dropped by every regime: the rounds'
+    * equi-joins never match a null id, but their group-bys would
+    * still emit a null node (and count its rows into a neighbor's
+    * degree) that [[broadcastAdjacency]]'s null-free map has not. */
+  private def nonNullIds(edges: DataFrame): DataFrame =
+    edges.filter(col("a").isNotNull && col("b").isNotNull)
+
+  /** A decoded [[broadcastAdjacency]] in index form: node ids sorted
+    * in Spark's string order — UTF-8 bytes, as `UTF8String` compares;
+    * JVM `String` order is UTF-16 and disagrees on supplementary
+    * characters — so the smallest index is the id the rounds' `min`
+    * and `min_by` elect. Neighbors are indexes restricted to known
+    * nodes (identity on a symmetric adjacency), repeats kept so a
+    * repeated row counts twice, as in the rounds. */
+  private final class IndexedAdjacency(g: Map[String, Array[String]]) {
+    val ids: Array[String] = g.keys.toArray
+      .map(org.apache.spark.unsafe.types.UTF8String.fromString)
+      .sortWith(_.compareTo(_) < 0).map(_.toString)
+    val n: Int = ids.length
+    val adj: Array[Array[Int]] = {
+      val idx = ids.zipWithIndex.toMap
+      ids.map(k => g(k).flatMap(idx.get))
+    }
+  }
+
+  /** Single-task regime of [[pageRank]], [[connectedComponents]],
+    * [[labelPropagation]] and [[kCore]]: ONE executor task decodes
+    * the memoized broadcast adjacency, runs `kernel` over its index
+    * form and emits (node, `valueCol`) with the kernel's value per
+    * node index. Below the ceiling the rounds' cost is pure per-job
+    * overhead for milliseconds of work. The result is a lazy
+    * checkpoint: the first action runs the kernel once and pins the
+    * |V|-row result, so multi-action consumers don't re-run it (the
+    * rounds' result is materialized and has the same property). */
+  private def singleTask[V: scala.reflect.runtime.universe.TypeTag](
+      undirectedEdges: DataFrame, valueCol: String)(
+      kernel: IndexedAdjacency => Array[V]): DataFrame = {
     val spark = undirectedEdges.sparkSession
     import spark.implicits._
     val bAdj = broadcastAdjacency(undirectedEdges)
     spark.sparkContext.parallelize(Seq(0), 1).flatMap { _ =>
-      val g = PackedAdjacency.decode(bAdj)
-      val ids = g.keys.toArray.sorted
-      val idx = ids.zipWithIndex.toMap
-      val n = ids.length
-      // neighbors restricted to known nodes — identity on the
-      // symmetric adjacency every caller hands in
-      val adj: Array[Array[Int]] =
-        ids.map(k => g(k).flatMap(idx.get))
-      val core = adj.map(_.length)
-      if (n > 0) {
-        val maxDeg = core.max
-        // bin[d] = start offset of degree-d nodes in vert
-        val bin = new Array[Int](maxDeg + 2)
-        core.foreach(d => bin(d + 1) += 1)
-        for (d <- 1 to maxDeg + 1) bin(d) += bin(d - 1)
-        val pos = new Array[Int](n)
-        val vert = new Array[Int](n)
-        val fill = bin.clone()
-        for (v <- 0 until n) { pos(v) = fill(core(v)); vert(pos(v)) = v; fill(core(v)) += 1 }
-        for (i <- 0 until n) {
-          val v = vert(i)
-          adj(v).foreach { u =>
-            if (core(u) > core(v)) {
-              // swap u with the first vertex of its bucket, then
-              // shrink the bucket boundary and u's core by one
-              val du = core(u); val pu = pos(u)
-              val pw = bin(du); val w = vert(pw)
-              if (u != w) {
-                pos(u) = pw; vert(pw) = u
-                pos(w) = pu; vert(pu) = w
-              }
-              bin(du) += 1
-              core(u) -= 1
-            }
-          }
-        }
-      }
-      (0 until n).iterator.map(v => (ids(v), core(v)))
-    }.toDF("node", "core")
-      // lazy checkpoint: the first action runs the peel once and
-      // pins the |V|-row result, so multi-action consumers don't
-      // re-run the O(E) single-task kernel per action (the shuffle
-      // regime's result is materialized and has the same property)
-      .materialize(false)
+      val g = new IndexedAdjacency(PackedAdjacency.decode(bAdj))
+      g.ids.iterator.zip(kernel(g).iterator)
+    }.toDF("node", valueCol).materialize(false)
   }
 
   /** HyperBall-style neighborhood-function estimation: for EVERY
@@ -746,11 +844,10 @@ object Algorithms {
     * cost dominates below cluster scale). Past the ceiling the
     * DataFrame rounds above are the right shape — k·|V| state rows
     * shuffling on (s, v) — and run unchanged
-    * (`graft.betweenness.broadcastEdges` overrides the ceiling;
-    * spec pins regime equality). */
+    * (`graft.graph.broadcastEdges` overrides the ceiling, as for the
+    * other single-task kernels; spec pins regime equality). */
   def betweenness(undirectedEdges: DataFrame, k: Int = 16,
       maxDepth: Int = 4): DataFrame = {
-    val spark = undirectedEdges.sparkSession
     val nodes = undirectedEdges.select(col("a")).distinct()
       .materialize(true)
     val n = nodes.count()
@@ -762,8 +859,7 @@ object Algorithms {
       .orderBy(md5(col("a").cast("string")), col("a")).limit(kk.toInt)
       .select(col("a").as("s"))
     val deltas =
-      if (broadcastRegimeEligible(undirectedEdges, confLong(spark,
-          "graft.betweenness.broadcastEdges", betweennessBroadcastEdges)))
+      if (singleTaskEligible(undirectedEdges))
         dependencyBroadcast(undirectedEdges, seeds, maxDepth)
       else dependencyShuffle(undirectedEdges, seeds, maxDepth)
     val scale = n.toDouble / kk.toDouble / 2.0
@@ -774,21 +870,13 @@ object Algorithms {
           .as("betweenness"))
   }
 
-  /** Edge-count ceiling for the seed-parallel broadcast regime of
-    * [[betweenness]]: ~2M directed rows ≈ ~120 MB as the grouped
-    * `Map[node, Array[neighbor]]` (~60 B/edge — leaner than a
-    * hash-join relation, so the ceiling sits above
-    * [[triangleBroadcastEdges]] at the same memory envelope). The
-    * driver materializes only |V| pre-grouped rows (see
-    * [[broadcastAdjacency]]), bounded by the ceiling itself. */
-  val betweennessBroadcastEdges = 2000000L
-
   /** Memoized broadcast adjacency behind the sub-ceiling regimes —
     * grouped DISTRIBUTED (groupBy(a) + collect_list, so the driver
     * receives |V| pre-built rows instead of 2|E| pairs to re-group)
-    * and shipped once per frame instance: [[betweenness]] and
-    * [[kCore]] probe the same map. Eviction drops the reference;
-    * the TorrentBroadcast is reclaimed by the ContextCleaner.
+    * and shipped once per frame instance: [[betweenness]] and the
+    * [[singleTask]] kernels probe the same map. Eviction drops the
+    * reference; the TorrentBroadcast is reclaimed by the
+    * ContextCleaner.
     *
     * The broadcast payload is PACKED (r12): one -joined
     * neighbor string + the neighbor count per node, decoded to the
@@ -815,15 +903,11 @@ object Algorithms {
       adjBcastCache.getOrElseUpdate(undirectedEdges) {
         val spark = undirectedEdges.sparkSession
         import spark.implicits._
-        // null keys are dropped to MATCH the shuffle regimes, whose
-        // equi-joins never match a null `a` — without this a null id
-        // survives the groupBy into the map and `ids.sorted` in
-        // kCoreBroadcast NPEs (String natural order), a
-        // regime-divergent failure for the same input. (A null `b`
-        // is already skipped by collect_list; the filter makes both
-        // sides of the contract explicit.)
-        val adj = undirectedEdges
-          .filter(col("a").isNotNull && col("b").isNotNull)
+        // null ids are dropped, as in the rounds ([[nonNullIds]]) —
+        // without this a null id survives the groupBy into the map
+        // and the kernels' id sort NPEs, a regime-divergent failure
+        // for the same input
+        val adj = nonNullIds(undirectedEdges)
           .groupBy(col("a").cast("string").as("a"))
           .agg(concat_ws(PackedAdjacency.Sep.toString,
               collect_list(col("b").cast("string"))).as("bs"),
@@ -835,7 +919,7 @@ object Algorithms {
 
   /** Executor-side decode of [[broadcastAdjacency]]'s packed payload,
     * cached per JVM and broadcast id so the k seed tasks (and any
-    * same-graph consumer, e.g. kCore after betweenness) share ONE
+    * same-graph consumer, e.g. kCore after labelPropagation) share ONE
     * Map[String, Array[String]] materialization. Bounded LRU — an
     * executor outliving many graphs must not pin every decoded map.
     * Decode is loud on separator collisions: the packed neighbor
@@ -936,7 +1020,7 @@ object Algorithms {
         }
         out
       }.toDF("v", "delta")
-      // lazy checkpoint, same reason as kCoreBroadcast: don't re-run
+      // lazy checkpoint, same reason as singleTask: don't re-run
       // k seed sweeps per downstream action
       .materialize(false)
   }
@@ -1060,15 +1144,27 @@ object Algorithms {
     * label frame stays |V| rows (AQE broadcasts it into the edge
     * join while it fits; at cluster scale the join shuffles on the
     * edge key exactly once per round), and the argmax folds into
-    * min_by over (count desc, label asc). */
+    * min_by over (count desc, label asc).
+    *
+    * Dual regime, like [[kCore]]: under `graft.graph.broadcastEdges`
+    * the same synchronous rounds run in ONE executor task over the
+    * broadcast adjacency ([[singleTask]]) — exact, the same map as
+    * the rounds. Contract notes: the input is the symmetric
+    * adjacency, labels and community names compare in Spark's string
+    * order (UTF-8 bytes), rows with a null id are dropped in both
+    * regimes, and only STRING adjacencies take the single task. */
   def labelPropagation(undirectedEdges: DataFrame,
       steps: Int = 5): DataFrame =
+    if (singleTaskEligible(undirectedEdges))
+      singleTask(undirectedEdges, "community")(g =>
+        labelPropagationKernel(g, steps))
     // the shared a-keyed adjacency (memoized for stable frames,
     // scoped scratch for one-shot ones); rounds reference the
     // checkpointed frame, so the cluster-scale SMJ path ships its
     // b-exchange once via ReuseExchange, as before
-    GraphBuilder.withAKeyed(undirectedEdges) { edges =>
+    else GraphBuilder.withAKeyed(undirectedEdges) { keyed =>
     val spark = undirectedEdges.sparkSession
+    val edges = nonNullIds(keyed)
     var labels = edges.select(col("a").as("node")).distinct()
       .withColumn("label", col("node")).materialize(true)
     // broadcast regime, same |V|-ceiling convention as ballSizes:
@@ -1162,6 +1258,38 @@ object Algorithms {
     val mat = labels.materialize()
     val canon = mat.groupBy("label").agg(min("node").as("community"))
     mat.join(canon, "label").select("node", "community")
+  }
+
+  /** The rounds' update, as index arrays: each round every node takes
+    * the label most frequent among its neighbors' previous labels,
+    * ties toward the smallest; then each community is named by its
+    * smallest member. */
+  private def labelPropagationKernel(g: IndexedAdjacency,
+      steps: Int): Array[String] = {
+    var label = Array.range(0, g.n)
+    val cnt = new Array[Int](g.n) // zero between nodes
+    for (_ <- 1 to steps) {
+      label = Array.tabulate(g.n) { v =>
+        // the running (max count, then min label) winner is the
+        // final one: a label can only take the lead when it reaches
+        // the current maximum
+        var best = label(v)
+        var bestC = 0
+        g.adj(v).foreach { u =>
+          val l = label(u)
+          cnt(l) += 1
+          if (cnt(l) > bestC || (cnt(l) == bestC && l < best)) {
+            best = l; bestC = cnt(l)
+          }
+        }
+        g.adj(v).foreach(u => cnt(label(u)) = 0)
+        best
+      }
+    }
+    // nodes in index order: the first member seen names the label
+    val canon = Array.fill(g.n)(-1)
+    for (v <- 0 until g.n if canon(label(v)) < 0) canon(label(v)) = v
+    label.map(l => g.ids(canon(l)))
   }
 
   /** Node-count ceiling for statically broadcasting the LPA label

@@ -71,13 +71,10 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
       "c" -> "d",
       "e" -> "f", "f" -> "g", "e" -> "g", "g" -> "h",
       "d" -> "e")
-    val peel = Algorithms.kCore(g)
+    def run() = Algorithms.kCore(g)
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    spark.conf.set("graft.kcore.broadcastEdges", "0")
-    val rounds =
-      try Algorithms.kCore(g)
-        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-      finally spark.conf.unset("graft.kcore.broadcastEdges")
+    val peel = run()
+    val rounds = inRounds(run())
     assert(peel == rounds, s"$peel vs $rounds")
   }
 
@@ -251,13 +248,10 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     def g = und("a" -> "b", "b" -> "c", "a" -> "c",
       "d" -> "e", "e" -> "f", "d" -> "f", "c" -> "d", "b" -> "e")
     for (depth <- Seq(2, 4)) {
-      val bcast = Algorithms.betweenness(g, k = 16, maxDepth = depth)
+      def run() = Algorithms.betweenness(g, k = 16, maxDepth = depth)
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      spark.conf.set("graft.betweenness.broadcastEdges", "0")
-      val shuffle =
-        try Algorithms.betweenness(g, k = 16, maxDepth = depth)
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-        finally spark.conf.unset("graft.betweenness.broadcastEdges")
+      val bcast = run()
+      val shuffle = inRounds(run())
       assert(bcast == shuffle, s"depth=$depth: $bcast vs $shuffle")
     }
   }
@@ -280,6 +274,19 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     assert(walks.schema("node").dataType ==
       org.apache.spark.sql.types.LongType)
     assert(walks.filter(col("step") === 2).count() == 4)
+    // pageRank, components and LPA keep the rounds too: their node
+    // and label columns stay long
+    val long = org.apache.spark.sql.types.LongType
+    val pr = Algorithms.pageRank(und, 3)
+    assert(pr.schema("node").dataType == long)
+    assert(pr.count() == 4)
+    val cc = Algorithms.connectedComponents(und)
+    assert(cc.schema("component").dataType == long)
+    assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    val lp = Algorithms.labelPropagation(und, 2)
+    assert(lp.schema("community").dataType == long)
+    assert(lp.count() == 4)
   }
 
   test("modularity matches the hand-computed two-triangle value") {
@@ -357,10 +364,11 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
       "scratch a-keyed copy must be unpersisted after the scope")
     assert(GraphBuilder.aKeyedCacheSize == before,
       "one-shot frames must not occupy the memo")
-    // the full algorithm path: result stays correct and usable AFTER
-    // the scratch frame was freed (results are checkpoint-rooted)
-    val comp = Algorithms.connectedComponents(oneShot)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    // the full algorithm path (the rounds, which take withAKeyed's
+    // scratch branch): result stays correct and usable AFTER the
+    // scratch frame was freed (results are checkpoint-rooted)
+    val comp = inRounds(Algorithms.connectedComponents(oneShot)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
     assert(comp == Map("a" -> "a", "b" -> "a", "c" -> "a",
       "d" -> "d", "e" -> "d"))
     assert(GraphBuilder.aKeyedCacheSize == before)
@@ -384,9 +392,64 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
       ("c", "d"), ("d", "c"), ("d", "a"), ("a", "d"),
       (null.asInstanceOf[String], "a"), ("a", null.asInstanceOf[String]))
       .toDF("a", "b")
-    val cores = Algorithms.kCore(e) // under ceiling → broadcast regime
-      .filter(col("node").isNotNull)
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    def both(verb: => org.apache.spark.sql.DataFrame) = {
+      def run() = verb.collect().map(r => r.getString(0) -> r.get(1)).toMap
+      val (kernel, rounds) = (run(), inRounds(run()))
+      for (m <- Seq(kernel, rounds))
+        assert(m.keySet == Set("a", "b", "c", "d"), s"null id kept: $m")
+      (kernel, rounds)
+    }
+    val (cores, coreRounds) = both(Algorithms.kCore(e))
     assert(cores == Map("a" -> 2, "b" -> 2, "c" -> 2, "d" -> 2))
+    assert(coreRounds == cores)
+    // the null row must not count into a's degree either: on the
+    // 2-regular cycle every rank stays 1.0
+    val (pr, prRounds) = both(Algorithms.pageRank(e, 5))
+    for (m <- Seq(pr, prRounds))
+      assert(m.values.forall(v => math.abs(v.asInstanceOf[Double] - 1.0) < 1e-12), m)
+    val (cc, ccRounds) = both(Algorithms.connectedComponents(e))
+    assert(cc.values.toSet == Set("a") && ccRounds == cc)
+    val (lp, lpRounds) = both(Algorithms.labelPropagation(e, 3))
+    assert(lpRounds == lp)
+  }
+
+  // Several components, LPA count ties, and ids whose orders disagree:
+  // "｡" (U+FF61) and "ﾟ" (U+FF9F) sort before "😀" and "😁" (U+1F600,
+  // U+1F601) in UTF-8 bytes, Spark's string order, but after them in
+  // JVM UTF-16 order, where the emoji are surrogate pairs.
+  private def mixed = und(
+    "ﾟ" -> "｡", "ﾟ" -> "😀", "😀" -> "😁",
+    "a" -> "b", "b" -> "c", "c" -> "d",
+    "e" -> "f", "f" -> "g", "e" -> "g",
+    "h" -> "i", "h" -> "j", "i" -> "j", "j" -> "k")
+
+  test("pagerank regimes agree: single task == rounds to 1e-9") {
+    for (g <- Seq(mixed, GraphBuilder.undirectedFor(spark, sfDir))) {
+      def run() = Algorithms.pageRank(g, 10)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      val (kernel, rounds) = (run(), inRounds(run()))
+      assert(kernel.keySet == rounds.keySet)
+      val worst = kernel.map { case (k, v) => math.abs(v - rounds(k)) }.max
+      assert(worst <= 1e-9, s"max |kernel - rounds| = $worst")
+    }
+  }
+
+  test("components and LPA regimes agree: single task == rounds") {
+    def maps(g: org.apache.spark.sql.DataFrame) = {
+      val cc = Algorithms.connectedComponents(g)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val lp = Seq(0, 1, 2, 5).map(steps => Algorithms.labelPropagation(g, steps)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+      (cc, lp)
+    }
+    val (cc, lp) = maps(mixed)
+    assert(cc("😀") == "｡" && cc("a") == "a" && cc("k") == "h", cc)
+    // round 1: "😀" sees "ﾟ" and "😁" once each and takes "ﾟ", the
+    // smaller in UTF-8 order, as "｡" does; their community is named
+    // by "｡", again the smaller in UTF-8 order
+    assert(lp(1)("😀") == "｡" && lp(1)("｡") == "｡", lp(1))
+    assert(inRounds(maps(mixed)) == ((cc, lp)))
+    val demo = GraphBuilder.undirectedFor(spark, sfDir)
+    assert(maps(demo) == inRounds(maps(demo)))
   }
 }

@@ -7,6 +7,14 @@ import org.scalatest.Suite
 trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
   lazy val spark: SparkSession = SparkFixture.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the graph operators pinned to their DataFrame
+    * rounds: a zero `graft.graph.broadcastEdges` ceiling turns the
+    * single-task kernels off. */
+  def inRounds[T](body: => T): T = {
+    spark.conf.set("graft.graph.broadcastEdges", "0")
+    try body finally spark.conf.unset("graft.graph.broadcastEdges")
+  }
 }
 
 object SparkFixture {
