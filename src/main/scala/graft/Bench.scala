@@ -13,8 +13,8 @@ package graft
   *  - TWO full timed passes over the query map, same order. Between
   *    them, [[graft.util.Memos.resetDerived]] clears every derived
   *    memo cache (a-keyed copies, broadcast maps, triangle/ball/LPA/
-  *    walk artifacts, the minhash pair build, GraphX graphs) and the
-  *    untimed warmup re-runs — so pass 2 re-measures the OPERATORS
+  *    walk artifacts, the minhash pair build) and the untimed
+  *    warmup re-runs — so pass 2 re-measures the OPERATORS
   *    from the identical warm-inputs/cold-derived state instead of
   *    reading pass 1's caches. Per-key value = min of the two passes;
   *    a burst must straddle BOTH visits of a key (minutes apart) to
@@ -50,26 +50,17 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
     // untimed warmup: executor spin-up, codegen/JIT, and the SHARED
-    // real-data input artifacts (adjacency, GraphX graph) — run
+    // real-data input artifact (the undirected adjacency) — run
     // before EACH pass so both passes start from the same state
-    // (r04: g_bfs_levels 0.8 s warm vs 8.1 s carrying the cold build)
     def warm(): Unit = {
       val r = spark.range(0, 1000000).selectExpr("id", "id % 97 AS k")
       r.join(r.groupBy("k").count(), "k").agg(Map("count" -> "sum")).count()
       import spark.implicits._
       val ring = (0 until 64)
         .map(i => (s"n$i", s"n${(i + 1) % 64}")).toDF("a", "b")
-      graft.graph.GraphXBridge.connectedComponents(ring).count()
-      graft.graph.GraphXBridge.pageRank(ring, 3).count()
-      graft.graph.GraphXBridge.shortestPathsWeighted(
-        ring.withColumn("w", org.apache.spark.sql.functions.lit(1.0)),
-        "n0").count()
       graft.graph.Algorithms.ballSizes(ring, 2).count()
-      if (only.forall(_.exists(_.startsWith("g_")))) {
-        val ug = graft.graph.GraphBuilder.undirectedFor(spark, sfDir)
-        val g = graft.graph.GraphXBridge.fromUndirected(ug)
-        g.vertices.count(); g.edges.count()
-      }
+      if (only.forall(_.exists(_.startsWith("g_"))))
+        graft.graph.GraphBuilder.undirectedFor(spark, sfDir).count()
       // warm the sentinel query itself (its first-ever run carries
       // plan+codegen cost that would always read as "noise" in the
       // start-of-window sentinel sample)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.graph.{Algorithms, GraphBuilder, GraphXBridge, Traversal}
+import graft.graph.{Algorithms, GraphBuilder, Traversal}
 import graft.index.TypedIndexes
 import graft.search.Search
 import graft.functions.Registry
@@ -128,11 +128,8 @@ object EgraphQueries {
     },
 
     "g_bfs_levels" -> { (s, d) =>
-      // bounded Pregel on the shared memoized graph; the DataFrame
-      // frontier loop (Traversal.bfsLevels) is the spec-pinned
-      // equivalent alternative
-      GraphXBridge.bfsLevelsBounded(
-          GraphBuilder.undirectedFor(s, d), "c:1", 4)
+      Traversal.bfsLevels(
+          GraphBuilder.undirectedFor(s, d), Seq("c:1"), 4)
         .orderBy("node")
     },
 
@@ -270,30 +267,23 @@ object EgraphQueries {
         .orderBy("t")
     },
 
-    // the three heavyweight iterative algorithms run on the GraphX/
-    // Pregel backend (the north-star scale path for batch graph
-    // analytics); the DataFrame implementations in Algorithms/
-    // Traversal are spec-pinned equivalent alternatives
+    // PageRank and components: single task below
+    // graft.graph.broadcastEdges, DataFrame rounds past it
     "g_pagerank" -> { (s, d) =>
-      GraphXBridge.pageRank(GraphBuilder.undirectedFor(s, d), iters = 5)
+      Algorithms.pageRank(GraphBuilder.undirectedFor(s, d), iters = 5)
         .select(col("node"), round(col("rank"), 4).as("rank"))
         .orderBy("node")
     },
 
     "g_connected_components" -> { (s, d) =>
-      GraphXBridge.connectedComponents(
-          GraphBuilder.undirectedFor(s, d))
+      Algorithms.connectedComponents(GraphBuilder.undirectedFor(s, d))
         .orderBy("node")
     },
 
     "g_sssp_weighted" -> { (s, d) =>
-      // this query's weights are all 1.0, so it runs the SAME Pregel
-      // relaxation kernel on the shared memoized graph (whose edge
-      // attribute is 1.0) instead of building a private weighted
-      // graph; genuinely weighted inputs go through
-      // shortestPathsWeighted, spec-pinned in GraphXSpec
-      GraphXBridge.shortestPathsUnit(
-          GraphBuilder.undirectedFor(s, d), "c:1")
+      // Bellman-Ford rounds over unit weights
+      Traversal.shortestPathsWeighted(
+          GraphBuilder.undirectedFor(s, d).withColumn("w", lit(1.0)), "c:1")
         .select(col("node"), round(col("dist"), 4).as("dist"))
         .orderBy("node")
     },
@@ -310,11 +300,11 @@ object EgraphQueries {
 
     "g_ppr" -> { (s, d) =>
       // personalized PageRank seeded at c:1 — "nodes related to X"
-      // at whole-graph scale; the DuckDB oracle replays GraphX's
-      // update at round(·,4), like g_pagerank (exact since r07;
-      // proximity semantics also pinned in GraphXSpec)
-      GraphXBridge.personalizedPageRank(
-          GraphBuilder.undirectedFor(s, d), "c:1", iters = 5)
+      // at whole-graph scale; the DuckDB oracle replays the seeded
+      // update at round(·,4), like g_pagerank (proximity semantics
+      // also pinned in GraphSpec)
+      Algorithms.pageRank(GraphBuilder.undirectedFor(s, d), iters = 5,
+          seed = Some("c:1"))
         .select(col("node"), round(col("rank"), 4).as("rank"))
         .orderBy("node")
     },
@@ -424,7 +414,7 @@ object EgraphQueries {
     }
   )
 
-  /** GraphX static PageRank replicated in SQL: rank₀ = 1.0, then
+  /** Replays Algorithms.pageRank in SQL: rank₀ = 1.0, then
     * rankᵢ(v) = 0.15 + 0.85·Σ rankᵢ₋₁(u)/outdeg(u) for 5 unrolled
     * iterations (aggregation inside a recursive CTE is not portable,
     * and 5 plain CTEs are). round(·,4) absorbs the sub-ulp
@@ -444,10 +434,9 @@ object EgraphQueries {
         SELECT node, round(rank, 4) AS rank FROM p$iters ORDER BY node"""
   }
 
-  // Replays GraphX's personalized PageRank update exactly
-  // (org.apache.spark.graphx.lib.PageRank.runWithOptions with srcId):
+  // Replays Algorithms.pageRank with seed = c:1 exactly:
   // r0 = 1 at the seed and 0 elsewhere; every round EVERY node gets
-  // resetProb·1[v=seed] + 0.85·Σ_{u→v} r(u)/deg(u) (nodes with no
+  // 0.15·1[v=seed] + 0.85·Σ_{u→v} r(u)/deg(u) (nodes with no
   // in-messages get the coalesced 0). Same FP-determinism argument as
   // pagerankSql: the per-round sums re-associate across engines, but
   // round(·,4) absorbs the low-bit noise (verified exact at sf0.01).

@@ -47,10 +47,7 @@ object Algorithms {
   /** Per-node triangle participation on the same degree-ordered
     * wedge join as [[triangleCount]] — each matched triangle emits
     * its three corners, one explode + one agg on top of the m^1.5
-    * stream. Preferred over the GraphX kernel on the query path when
-    * the input is a one-off frame (an overlaid graph): the Pregel
-    * form pays a full private graph build that the memoized shared
-    * graph normally amortizes. */
+    * stream. Nodes in no triangle have no row. */
   def trianglesPerNode(undirectedEdges: DataFrame): DataFrame =
     triangleStream(undirectedEdges)
       .select(explode(array(col("u"), col("w1"), col("w2"))).as("node"))
@@ -59,7 +56,7 @@ object Algorithms {
   /** One row per triangle (u, w1, w2), memoized per adjacency frame
     * instance (reference equality — GraphBuilder/EgraphQueries hand
     * every caller the same memoized frame per (session, dir), the
-    * same contract as GraphXBridge.graphCache). The wedge join is
+    * same contract as the broadcast-adjacency memo). The wedge join is
     * the whole m^1.5 cost and the triangle list is tiny relative to
     * it, so the global count, per-node counts and clustering
     * coefficients — three different reductions over the SAME
@@ -138,12 +135,18 @@ object Algorithms {
   /** Edge-count ceiling for broadcasting the triangle-closure side. */
   val triangleBroadcastEdges = 1000000L
 
-  /** PageRank with uniform teleport; `iters` fixed rounds. Round =
+  /** PageRank, `iters` fixed rounds, uniform or seeded teleport. Round =
     * edges ⋈ rank-state + contribution group-by + base left-join:
     * two joins and one aggregation. The adjacency is pre-partitioned
     * on the join key `a` so the big side is never re-exchanged, and
     * the rank state carries `share` = rank/deg so out-degree is not
     * re-joined every round.
+    *
+    * With a `seed`, the same rounds compute personalized PageRank:
+    * every rank starts at 1 on the seed and 0 elsewhere, and the
+    * teleport term is (1 − d)·1[v = seed], so rank measures
+    * proximity to the seed. A seed absent from the graph leaves
+    * every rank at 0.
     *
     * Dual regime, like [[kCore]]: under `graft.graph.broadcastEdges`
     * the same unnormalized update runs as ONE executor task over the
@@ -153,20 +156,23 @@ object Algorithms {
     * rows with a null id are dropped in both regimes, and only STRING
     * adjacencies take the single task (see [[broadcastRegimeEligible]]). */
   def pageRank(undirectedEdges0: DataFrame, iters: Int = 10,
-      damping: Double = 0.85): DataFrame =
+      damping: Double = 0.85, seed: Option[String] = None): DataFrame =
     if (singleTaskEligible(undirectedEdges0))
       singleTask(undirectedEdges0, "rank")(g =>
-        pageRankKernel(g, iters, damping))
+        pageRankKernel(g, iters, damping, seed))
     else GraphBuilder.withAKeyed(undirectedEdges0) { keyed =>
     // (scoped: a one-shot input's repartitioned copy is freed on
     // return; the result below is rooted at its own checkpoints)
     val undirectedEdges = nonNullIds(keyed)
+    // teleport indicator: 1 on every node, or only on the seed
+    val teleport = seed.fold(lit(1.0))(s =>
+      when(col("node") === lit(s), 1.0).otherwise(0.0))
     // base: (node, deg) — every node of an undirected adjacency has
     // at least one edge, so the group-by covers all nodes
     val base = undirectedEdges.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("deg")).materialize()
-    var ranks = base.select(col("node"), lit(1.0).as("rank"),
-      (lit(1.0) / col("deg")).as("share")).materialize()
+    var ranks = base.select(col("node"), teleport.as("rank"),
+      (teleport / col("deg")).as("share")).materialize()
     for (_ <- 1 to iters) {
       val contribs = undirectedEdges
         .join(ranks.select(col("node"), col("share")), col("a") === col("node"))
@@ -177,8 +183,9 @@ object Algorithms {
       // cadences) costs more than the materialization job
       ranks = base.join(contribs, Seq("node"), "left")
         .select(col("node"),
-          (lit(1.0 - damping) + lit(damping) * coalesce(col("csum"), lit(0.0)))
-            .as("rank"), col("deg"))
+          (lit(1.0 - damping) * teleport +
+            lit(damping) * coalesce(col("csum"), lit(0.0))).as("rank"),
+          col("deg"))
         .withColumn("share", col("rank") / col("deg"))
         .drop("deg")
         .materialize()
@@ -188,17 +195,23 @@ object Algorithms {
 
   /** The rounds' update, as index arrays: each node pushes
     * share = rank/deg to its out-list, then
-    * rank = (1 − d) + d · Σ shares received. */
+    * rank = (1 − d)·t(v) + d · Σ shares received, where the teleport
+    * t is 1 everywhere, or 1 on the seed and 0 elsewhere. */
   private def pageRankKernel(g: IndexedAdjacency, iters: Int,
-      damping: Double): Array[Double] = {
-    var rank = Array.fill(g.n)(1.0)
+      damping: Double, seed: Option[String]): Array[Double] = {
+    val teleport = seed.fold(Array.fill(g.n)(1.0)) { s =>
+      val i = g.ids.indexOf(s) // -1 when absent: all zeros
+      Array.tabulate(g.n)(v => if (v == i) 1.0 else 0.0)
+    }
+    var rank = teleport
     for (_ <- 1 to iters) {
       val csum = new Array[Double](g.n)
       for (v <- 0 until g.n) {
         val share = rank(v) / g.adj(v).length
         g.adj(v).foreach(u => csum(u) += share)
       }
-      rank = csum.map(c => (1.0 - damping) + damping * c)
+      rank = Array.tabulate(g.n)(v =>
+        (1.0 - damping) * teleport(v) + damping * csum(v))
     }
     rank
   }
@@ -277,8 +290,8 @@ object Algorithms {
     * only decrease), one aggregation shuffle per round, and
     * convergence falls out of the round's own aggregation like
     * [[connectedComponents]]. Per-node aggregation state is the
-    * neighbor-estimate list (O(degree), the same bound as GraphX's
-    * neighbor-collecting supersteps); the h-index itself is
+    * neighbor-estimate list (O(degree), the same bound as a Pregel
+    * neighbor-collecting superstep); the h-index itself is
     * order-free, so skew-salting the collect would compose if a
     * pathological degree ever demanded it. Returns (node, core).
     *
@@ -649,8 +662,8 @@ object Algorithms {
     // are untracked JVM objects, so the unified memory manager never
     // sees their demand and never evicts cached blocks for them — a
     // session that already holds memoized artifacts (adjacency,
-    // GraphX RDDs, checkpointed round frames) has that much less
-    // heap than maxMemory says. Measured: the 64× combined-heavies
+    // checkpointed round frames) has that much less heap than
+    // maxMemory says. Measured: the 64× combined-heavies
     // run OOM'd the 48 g JVM on a maxMemory-only budget after
     // betweenness/LPA left ~tens of GB resident, while the identical
     // solo build passed. The /8 floor keeps a minimal hash window
@@ -1137,10 +1150,10 @@ object Algorithms {
     * (order-dependent) LPA. Final community names are canonicalized
     * to the smallest member key.
     *
-    * Replaces GraphX's LabelPropagation for the query path: that
-    * implementation merges a per-message Map[label, count] per
-    * superstep (measured 18.5 s at sf0.01 where this one runs ~2 s),
-    * while here each round is Tungsten-codegen'd aggregation — the
+    * GraphX's LabelPropagation, which this replaced on the query
+    * path, merges a per-message Map[label, count] per superstep
+    * (measured 18.5 s at sf0.01 where this one runs ~2 s); here
+    * each round is Tungsten-codegen'd aggregation — the
     * label frame stays |V| rows (AQE broadcasts it into the edge
     * join while it fits; at cluster scale the join shuffles on the
     * edge key exactly once per round), and the argmax folds into

@@ -105,8 +105,8 @@ object GraphBuilder {
   // bounded so a long-lived multi-store service cannot accumulate
   // checkpointed frames (and pinned SparkSessions) without limit.
   // Eviction only DROPS the reference — never unpersist: these are
-  // localCheckpoint roots, and derived cached plans (e.g. the GraphX
-  // graphs built from them) recompute THROUGH the checkpoint if their
+  // localCheckpoint roots, and derived cached plans (e.g. the a-keyed
+  // copies built from them) recompute THROUGH the checkpoint if their
   // own blocks fall out; unpersisting the root would make that
   // recompute impossible. Dropped frames are reclaimed by the
   // ContextCleaner once no derived plan references them.

@@ -129,7 +129,10 @@ object Traversal {
 
   /** Weighted single-source shortest distances by iterative edge
     * relaxation (Bellman-Ford rounds; converges in ≤ diameter
-    * rounds, each one shuffle). Edges: (a, b, w). */
+    * rounds, each one shuffle). Edges: (a, b, w). Throws if
+    * distances still improve after `maxIter` rounds, like
+    * [[Algorithms.connectedComponents]]: returning them would hand
+    * back too-long distances and drop the nodes not reached yet. */
   def shortestPathsWeighted(edges0: DataFrame, source: String,
       maxIter: Int = 20): DataFrame = {
     val spark = edges0.sparkSession
@@ -154,6 +157,9 @@ object Traversal {
         .limit(1).count() > 0
       dist = relaxed.select("node", "dist")
     }
+    if (changed) throw new IllegalStateException(
+      s"shortest paths did not converge in $maxIter rounds — " +
+        "distances were still improving; raise maxIter")
     dist
     }
   }

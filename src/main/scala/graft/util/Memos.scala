@@ -2,7 +2,7 @@ package graft.util
 
 /** Registry of the engine's DERIVED-artifact memo caches (a-keyed
   * adjacency copies, broadcast adjacency maps, triangle/ball/LPA/walk
-  * artifacts, the minhash pair build, GraphX graphs…).
+  * artifacts, the minhash pair build…).
   *
   * Exists for the benchmark's best-of-2 protocol: a second timed pass
   * over the query map must re-measure the OPERATORS, not hit their

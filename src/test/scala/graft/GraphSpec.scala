@@ -139,6 +139,19 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     assert(pr("hub") > pr("x3"))
   }
 
+  test("weighted sssp throws when maxIter runs out, exact with enough rounds") {
+    // a 25-node path from one end: 24 edges to relax, so 20 rounds
+    // stop while distances are still improving
+    val path = und((0 until 24).map(i => s"p$i" -> s"p${i + 1}"): _*)
+      .withColumn("w", lit(1.0))
+    val e = intercept[IllegalStateException](
+      Traversal.shortestPathsWeighted(path, "p0", maxIter = 20))
+    assert(e.getMessage.contains("did not converge"), e.getMessage)
+    val d = Traversal.shortestPathsWeighted(path, "p0", maxIter = 25)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(d == (0 until 25).map(i => s"p$i" -> i.toDouble).toMap)
+  }
+
   test("weighted sssp matches hand-computed distances") {
     import spark.implicits._
     val e = Seq(("a", "b", 1.0), ("b", "c", 2.0), ("a", "c", 5.0), ("c", "d", 1.0))
@@ -423,15 +436,90 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     "e" -> "f", "f" -> "g", "e" -> "g",
     "h" -> "i", "h" -> "j", "i" -> "j", "j" -> "k")
 
+  private def ranks(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+
   test("pagerank regimes agree: single task == rounds to 1e-9") {
-    for (g <- Seq(mixed, GraphBuilder.undirectedFor(spark, sfDir))) {
-      def run() = Algorithms.pageRank(g, 10)
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    // unseeded, and seeded at a node whose UTF-8 and UTF-16 indexes
+    // differ and at the demo graph's catalog seed
+    for ((g, seed) <- Seq(mixed -> None, mixed -> Some("😀"),
+        GraphBuilder.undirectedFor(spark, sfDir) -> None,
+        GraphBuilder.undirectedFor(spark, sfDir) -> Some("c:1"))) {
+      def run() = ranks(Algorithms.pageRank(g, 10, seed = seed))
       val (kernel, rounds) = (run(), inRounds(run()))
       assert(kernel.keySet == rounds.keySet)
       val worst = kernel.map { case (k, v) => math.abs(v - rounds(k)) }.max
-      assert(worst <= 1e-9, s"max |kernel - rounds| = $worst")
+      assert(worst <= 1e-9, s"$seed: max |kernel - rounds| = $worst")
     }
+  }
+
+  test("personalized pagerank concentrates rank near the seed") {
+    // two hubs in separate neighborhoods joined by one bridge: a walk
+    // restarting at hub1 must rank hub1's neighbors above hub2's
+    val edges = und(
+      "hub1" -> "a1", "hub1" -> "a2", "hub1" -> "a3",
+      "hub2" -> "b1", "hub2" -> "b2", "hub2" -> "b3",
+      "a1" -> "hub2")
+    for (pr <- Seq(ranks(Algorithms.pageRank(edges, 20, seed = Some("hub1"))),
+        inRounds(ranks(Algorithms.pageRank(edges, 20, seed = Some("hub1")))))) {
+      assert(pr("hub1") == pr.values.max)
+      assert(pr("a2") > pr("b2"), s"seed-side neighbor must outrank: $pr")
+      assert(pr.values.forall(_ >= 0.0))
+      assert(pr.size == 8)
+      // no sinks on a symmetric adjacency: the walk keeps mass 1
+      assert(math.abs(pr.values.sum - 1.0) < 1e-9, s"mass drifted: $pr")
+    }
+  }
+
+  test("personalized pagerank from a seed absent from the graph is 0 everywhere") {
+    val g = und("a" -> "b", "b" -> "c")
+    for (pr <- Seq(ranks(Algorithms.pageRank(g, 5, seed = Some("zz"))),
+        inRounds(ranks(Algorithms.pageRank(g, 5, seed = Some("zz")))))) {
+      assert(pr == Map("a" -> 0.0, "b" -> 0.0, "c" -> 0.0))
+    }
+  }
+
+  test("label propagation yields a valid full partition") {
+    val edges = GraphBuilder.undirected(
+      GraphBuilder.edges(spark, sfDir)).localCheckpoint()
+    val nodes = edges.select(col("a").as("node")).distinct()
+    for (lp <- Seq(Algorithms.labelPropagation(edges).cache(),
+        inRounds(Algorithms.labelPropagation(edges).cache()))) {
+      // exactly one community per node, no node lost or invented
+      assert(lp.count() == nodes.count())
+      assert(lp.join(nodes, "node").count() == nodes.count())
+      // community names are member keys of the graph
+      assert(lp.join(nodes.withColumnRenamed("node", "community"), "community")
+        .count() == lp.count())
+    }
+  }
+
+  test("dataframe LPA separates disjoint cliques and is deterministic") {
+    val edges = und(
+      "a1" -> "a2", "a2" -> "a3", "a1" -> "a3",
+      "b1" -> "b2", "b2" -> "b3", "b1" -> "b3")
+    // the DataFrame rounds; the single-task kernel is pinned equal to
+    // them below
+    def run() = inRounds(Algorithms.labelPropagation(edges, 5)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+    val lp = run()
+    assert(lp.filter(_._1.startsWith("a")).values.toSet == Set("a1"))
+    assert(lp.filter(_._1.startsWith("b")).values.toSet == Set("b1"))
+    assert(run() == lp) // min-label tie-break → fully deterministic
+  }
+
+  test("per-node triangle counts on a known graph") {
+    // triangle a-b-c, plus b-c-d making a second triangle on edge b-c;
+    // e is in no triangle and so has no row
+    val edges = und(
+      "a" -> "b", "b" -> "c", "a" -> "c", "b" -> "d", "c" -> "d",
+      "d" -> "e")
+    val got = Algorithms.trianglesPerNode(edges)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == Map("a" -> 1L, "b" -> 2L, "c" -> 2L, "d" -> 1L))
+    // Σ per-node = 3 × global
+    val global = Algorithms.triangleCount(edges).head().getLong(0)
+    assert(got.values.sum == 3 * global)
   }
 
   test("components and LPA regimes agree: single task == rounds") {

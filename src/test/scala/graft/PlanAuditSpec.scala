@@ -512,14 +512,13 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     val deliberateProducts = Set(
       "e_knn_brute", "d_neardup_embedding", "d_jaccard_pairs",
       "d_jaccard_ngrams")
-    // GraphX/driver-eager queries are EXCLUDED, not allowlisted:
-    // their result frame wraps an already-executed RDD, so its plan
-    // is a bare ExistingRDD scan — asserting on it would be vacuous
-    // while executing the whole algorithm inside a plan test. Their
-    // execution shapes are pinned by GraphXSpec/DedupSpec instead.
+    // driver-eager queries are EXCLUDED, not allowlisted: building
+    // their result frame runs the whole algorithm as a driver loop of
+    // jobs, and the frame only scans the executed checkpoints, so
+    // asserting on its plan would be vacuous. Their results are
+    // pinned by GraphSpec/DedupSpec instead.
     val eagerBacked = Set(
-      "g_pagerank", "g_connected_components", "g_sssp_weighted",
-      "g_bfs_levels", "d_dedup_clusters")
+      "g_sssp_weighted", "g_bfs_levels", "d_dedup_clusters")
     for ((name, _) <- SparkEntry.queries
          if !deliberateProducts(name) && !eagerBacked(name)) {
       val p = executedPlan(name)
