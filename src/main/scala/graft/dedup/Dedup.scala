@@ -61,15 +61,6 @@ object Dedup {
   def minhashSignature(shingles: Column, k: Int): Column =
     graft.functions.Registry.minhashSig(shingles, lit(k))
 
-  /** One-permutation MinHash signature (OPH, Li et al. 2012 +
-    * rotation densification) — ONE hash per shingle instead of k.
-    * Same banding/verification pipeline downstream; opt in via
-    * `graft.minhash.oph` (bulk path) or at store creation
-    * (DedupIndex pins the choice in `_meta.json` — mixing schemes
-    * inside one store would be a silent recall hole). */
-  def minhashSignatureOph(shingles: Column, k: Int): Column =
-    graft.functions.Registry.minhashSigOph(shingles, lit(k))
-
   /** Banded LSH bucket hashes: `b` bands of `r` signature rows each,
     * as an array of per-band bucket ids (index = band). */
   def lshBands(sig: Column, b: Int, r: Int): Column =
@@ -95,8 +86,7 @@ object Dedup {
     * twice (band join sides / verification) and counts it for the
     * broadcast decision. */
   def signatures(docs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 30, bands: Int = 6,
-      oph: Boolean = false): DataFrame = {
+      numHashes: Int = 30, bands: Int = 6): DataFrame = {
     graft.functions.Registry.registerAll(docs.sparkSession)
     val r = numHashes / bands
     docs.select(col(idCol).as("id"),
@@ -106,9 +96,7 @@ object Dedup {
       // a per-band transform lambda, and an inline signature
       // expression would be re-hashed once per band (the ngrams
       // scaladoc documents this expression-recapture class)
-      .withColumn("sig",
-        if (oph) minhashSignatureOph(col("sh"), numHashes)
-        else minhashSignature(col("sh"), numHashes))
+      .withColumn("sig", minhashSignature(col("sh"), numHashes))
       .select(col("id"), col("sh"), size(col("sh")).as("sz"),
         lshBands(col("sig"), bands, r).as("ba"))
       .materialize()
@@ -164,8 +152,6 @@ object Dedup {
     // the same reason production pipelines exact-dedup before fuzzy.
     // The group key is md5 of the sorted hashed set (128-bit,
     // content-derived — no 64-bit birthday risk at 10^10 docs).
-    val oph = docs.sparkSession.conf.getOption("graft.minhash.oph")
-      .exists(_.trim.equalsIgnoreCase("true"))
     val r = numHashes / bands
     graft.functions.Registry.registerAll(docs.sparkSession)
     // materialized ONCE (r12): `members` and `reps` both derive from
@@ -187,9 +173,7 @@ object Dedup {
     // broadcast count.
     val reps = hashed.groupBy(col("gk"))
       .agg(min(col("id")).as("id"), first(col("sh")).as("sh"))
-      .withColumn("sig",
-        if (oph) minhashSignatureOph(col("sh"), numHashes)
-        else minhashSignature(col("sh"), numHashes))
+      .withColumn("sig", minhashSignature(col("sh"), numHashes))
       .select(col("gk"), col("id"), col("sh"), size(col("sh")).as("sz"),
         lshBands(col("sig"), bands, r).as("ba"))
       .materialize()

@@ -21,9 +21,6 @@ object Registry {
     reg.createOrReplaceTempFunction("graft_minhash_sig",
       exprs => VectorExpressions.MinHashSigExpr(exprs(0),
         exprs(1).eval().asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_oph",
-      exprs => VectorExpressions.OnePermMinHashExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
     reg.createOrReplaceTempFunction("graft_simhash",
       exprs => VectorExpressions.SimHash64Expr(exprs(0)), "built-in")
     reg.createOrReplaceTempFunction("graft_jaccard_sorted",
@@ -133,8 +130,6 @@ object Registry {
   def dotProduct(a: Column, b: Column): Column = call_function("graft_dot", a, b)
   def minhashSig(tokens: Column, k: Column): Column =
     call_function("graft_minhash_sig", tokens, k)
-  def minhashSigOph(tokens: Column, k: Column): Column =
-    call_function("graft_minhash_oph", tokens, k)
   def simhash(tokens: Column): Column = call_function("graft_simhash", tokens)
   def jaccardSorted(a: Column, b: Column): Column =
     call_function("graft_jaccard_sorted", a, b)

@@ -176,65 +176,6 @@ object VectorExpressions {
       copy(child = c)
   }
 
-  /** One-permutation MinHash (Li, Owen & Zhang, NIPS 2012) with
-    * circular rotation densification (Shrivastava & Li, ICML 2014):
-    * ONE hash per shingle instead of k — each (already xxhash64'd)
-    * shingle routes to bin floorMod(h, k) and competes for that
-    * bin's min; an empty bin borrows the nearest non-empty bin to
-    * its right (circular), re-hashed with the borrow DISTANCE so two
-    * signatures agree on a borrowed bin only when they agree on the
-    * donor bin and the distance. Per-bin collision probability ≈ J
-    * like classic MinHash; variance is higher on sets much smaller
-    * than k (more borrowed bins) — the planted-dup recall spec and
-    * the recorded sf0.1 A/B bound that in practice. Cost: O(1) per
-    * shingle vs classic's O(k) re-hashes — the k-pass map-side
-    * signature was the top key of the clean bench (r10 verdict #3).
-    * An empty input yields the all-MaxValue signature, matching
-    * [[MinHashSigExpr]] (empty docs collide with each other only). */
-  case class OnePermMinHashExpr(child: Expression, k: Int)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-    private lazy val isLong =
-      child.dataType.asInstanceOf[ArrayType].elementType == LongType
-
-    override def nullSafeEval(v: Any): Any = {
-      val arr = v.asInstanceOf[ArrayData]
-      val mins = Array.fill(k)(Long.MaxValue)
-      val n = arr.numElements()
-      var nonEmpty = 0
-      var t = 0
-      while (t < n) {
-        val h = if (isLong) arr.getLong(t) else {
-          val s = arr.getUTF8String(t)
-          XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset,
-            s.numBytes, 42L)
-        }
-        val bin = java.lang.Math.floorMod(h, k.toLong).toInt
-        if (mins(bin) == Long.MaxValue) nonEmpty += 1
-        if (h < mins(bin)) mins(bin) = h
-        t += 1
-      }
-      if (nonEmpty > 0 && nonEmpty < k) {
-        // densify: O(k + empty·distance) — k ≤ a few hundred, and a
-        // set of size ≥ k log k rarely leaves any bin empty
-        val out = mins.clone()
-        var i = 0
-        while (i < k) {
-          if (mins(i) == Long.MaxValue) {
-            var d = 1
-            while (mins((i + d) % k) == Long.MaxValue) d += 1
-            out(i) = XXH64.hashLong(mins((i + d) % k), d.toLong)
-          }
-          i += 1
-        }
-        new GenericArrayData(out)
-      } else new GenericArrayData(mins)
-    }
-    override protected def withNewChildInternal(c: Expression): OnePermMinHashExpr =
-      copy(child = c)
-  }
-
   /** Content-defined chunk cut pairs of a token array: boundary
     * after 1-based position i (i ≥ 3) whenever md5 of the 3-token
     * window "t_{i-2} t_{i-1} t_i" has low nibble 0 (≡ the hex

@@ -861,8 +861,10 @@ object Algorithms {
     * other single-task kernels; spec pins regime equality). */
   def betweenness(undirectedEdges: DataFrame, k: Int = 16,
       maxDepth: Int = 4): DataFrame = {
-    val nodes = undirectedEdges.select(col("a")).distinct()
-      .materialize(true)
+    // a null id is no node (see [[nonNullIds]]): it must not count
+    // into n, be drawn as a seed or get an output row
+    val nodes = undirectedEdges.select(col("a")).filter(col("a").isNotNull)
+      .distinct().materialize(true)
     val n = nodes.count()
     val kk = math.min(k.toLong, n)
     // cast-to-string before md5: identity for the string-keyed query
@@ -1043,7 +1045,10 @@ object Algorithms {
     * dependency rows for depths ≥ 1. */
   private def dependencyShuffle(undirectedEdges0: DataFrame,
       seeds: DataFrame, maxDepth: Int): DataFrame =
-    GraphBuilder.withAKeyed(undirectedEdges0) { edges =>
+    GraphBuilder.withAKeyed(undirectedEdges0) { keyed =>
+    // null ids dropped AFTER the memoized keying (the memo is keyed by
+    // the caller's frame instance) — else a round settles a null v
+    val edges = nonNullIds(keyed)
     // pre-partition the adjacency on the ONE join key every sweep
     // uses and materialize it once: k is fixed, so the per-seed state
     // is scale-free, and the rounds' cost at 8×/64× graphs was pure

@@ -17,25 +17,13 @@ import graft.plans.Materialize._
   * per write — here the "index" is the LSH band table that makes
   * similarity queries incremental too).
   *
-  * Store layout (segment log, NOT merged state):
-  * {{{
-  *   root/
-  *     _meta.json            (threshold + LSH geometry, written once)
-  *     seg-<ts>-<seq>/
-  *       _SUCCESS            (commit marker, written LAST)
-  *       bands/              (band, bucket, id, sz parquet)
-  *       sets/               (id, sh parquet)
-  * }}}
+  * Storage is a [[SegmentStore]] log with two tables per segment —
+  * `bands/` (band, bucket, id, sz) and `sets/` (id, sh) — plus this
+  * index's `_meta.json` (threshold + LSH geometry, written once).
   * Each update writes ONLY the batch's own rows — O(batch) bytes,
   * never O(corpus) (IncrementalAgg rewrites its merged state because
   * that state is vocabulary-sized; a dedup index is corpus-sized, so
-  * the log form is the one that survives at scale). Readers union
-  * the committed segments; a crash mid-write leaves a marker-less
-  * directory that every reader skips (same contract as GraphStore /
-  * IncrementalAgg), and the many-small-segments problem is exactly
-  * what [[Compaction]] exists for — compacting `bands/` across
-  * segments preserves semantics because a document's index rows
-  * depend only on its own text.
+  * the log form is the one that survives at scale).
   *
   * Soundness of batch-at-a-time detection: Dedup.signatures is
   * map-side pure (a doc's rows never depend on the rest of the
@@ -61,11 +49,18 @@ object DedupIndex {
   /** Index parameters, pinned at creation: detection quality is a
     * property of the STORE (signatures written with one geometry are
     * not comparable to signatures of another), so a mismatched
-    * update must fail loudly, not silently degrade recall. */
+    * update must fail loudly, not silently degrade recall. The probe
+    * layout is store geometry too: `probeBuckets` is pinned from
+    * [[IndexLayout.defaultProbeBuckets]] at creation, 0 on stores
+    * created before the bucketed layout existed (flat segments). */
   case class Meta(threshold: Double, numHashes: Int, bands: Int,
-      probeBuckets: Int = 0, oph: Boolean = false)
+      probeBuckets: Int = 0)
 
   case class UpdateResult(segment: String, pairs: DataFrame)
+
+  private[graft] val store = new SegmentStore(Seq(
+    SegmentTable("bands", "bucket", "band INT, bucket BIGINT, id BIGINT, sz INT"),
+    SegmentTable("sets", "id", "id BIGINT, sh ARRAY<BIGINT>")))
 
   /** Near-dup-check `newDocs` against the store AND itself, then
     * commit the batch as a new segment. Returns the segment name and
@@ -77,104 +72,32 @@ object DedupIndex {
     * `segmentName` pins the segment's identity for REPLAYED batches
     * (a streaming caller names segments by batch id): if the named
     * directory already exists — committed or torn — it is deleted
-    * and rewritten, which is safe because a segment's content is a
-    * pure function of the batch, and necessary so a crash-recovery
-    * re-run converges instead of appending the batch's rows twice
-    * (the segment-log analogue of StreamingIngest's latest-wins
-    * upsert idempotence). */
+    * and rewritten (see [[SegmentStore.withWriter]]), so a
+    * crash-recovery re-run converges instead of appending the batch's
+    * rows twice. An id already in the store is dropped, not
+    * re-indexed (first write wins, [[SegmentStore]]'s `firstWrites`):
+    * a CHANGED text under the same id is an upsert, which is
+    * [[graft.sources.DocumentIngest]] territory, not an append-only
+    * dedup log's. */
   def update(spark: SparkSession, root: String, newDocs: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       numHashes: Int = 30, bands: Int = 6,
       segmentName: Option[String] = None): UpdateResult = {
-    val meta = readOrInitMeta(spark, root,
-      Meta(threshold, numHashes, bands,
-        IndexLayout.defaultProbeBuckets(spark), ophConf(spark)))
-    require((meta.threshold, meta.numHashes, meta.bands) ==
-      ((threshold, numHashes, bands)),
-      s"index at $root was built with $meta; updates must match " +
-        s"(got threshold=$threshold numHashes=$numHashes bands=$bands)")
-    // probe layout is store geometry too — pinned at creation
-    // (IndexLayout.defaultProbeBuckets), 0 on stores created before
-    // the bucketed layout existed (flat segments, unpruned probes)
-    val p = meta.probeBuckets
-    // single-writer lease: a concurrent update/compaction would
-    // interleave shadow commits (see Lease)
-    Lease.withWriter(spark, root) {
-    IndexLayout.withProbePushdown(spark) {
-    val rootP = new Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // drop a replayed segment BEFORE the store is read, so the
-    // recomputed candidates see exactly the pre-batch store
-    segmentName.foreach { s =>
-      require(s.startsWith("seg-"), s"segment name must start with seg-: $s")
-      val sp = new Path(root, s)
-      if (fs.exists(sp)) fs.delete(sp, true)
-    }
-
-    // ONE listing per update (segments()/tombSegments() would each
-    // re-read every _sources marker; on object storage with thousands
-    // of streaming segments that metadata walk must not run several
-    // times per micro-batch)
-    val allSegs = ShadowLog.list(fs, rootP, "_SUCCESS",
-      _.startsWith("seg-"))._1
-    val segs = allSegs.filterNot(_.endsWith("-tomb"))
-    val tombs = allSegs.filter(_.endsWith("-tomb"))
-    // heal manifest holes ONCE, on the writer path: a pre-manifest
-    // store (or a crash between a segment commit and its manifest
-    // rewrite) pays its listStatus walk here exactly once, and every
-    // probe after this line resolves layout from the manifest
-    IndexLayout.ensureLayouts(fs, rootP, segs, Seq("bands", "sets"))
-    val cap = IndexLayout.probeKeyCap(spark)
-
-    // dropDuplicates BEFORE the store check: an at-least-once source
-    // can redeliver a document INSIDE one micro-batch, and the store
-    // left-anti below only filters ids already committed — without
-    // this a within-batch duplicate is written twice into the
-    // append-only segment (unretractable) and fans out duplicate
-    // (a,b,j) rows in this and every future update. Same guard as
-    // EmbeddingDedupIndex.update. A LIVE-tombstoned id is dropped
-    // from the arrival too (see tombstone): its stored rows are being
-    // retracted, so re-indexing it would resurrect the data
-    val rawSigs = notTombstoned(spark, root, tombs, Dedup
-      .signatures(newDocs, idCol, textCol, numHashes, bands, meta.oph)
-      .dropDuplicates("id"), "id")
-    // an id already in the store is dropped, not re-indexed: the
-    // segment log cannot retract the old rows, so re-ingesting would
-    // permanently double the id's bands/sets (every future batch
-    // fans out against both copies) and emit degenerate (id,id)
-    // self-pairs from the candidate join. First write wins — replays
-    // and at-least-once sources converge; a CHANGED text under the
-    // same id is an upsert, which is [[graft.sources.DocumentIngest]]
-    // territory, not an append-only dedup log's.
-    // The store side of the anti-join is PRUNED to the batch's own
-    // ids (an id-only probe of the id-sorted sets layout) — reading
-    // every committed id per batch was the r8 O(store) finding
-    val batchIds = if (segs.isEmpty) None
-      else IndexLayout.collectKeys(
-        newDocs.select(col(idCol)).distinct(), p, cap, "batch ids")
-    val sigs = (if (segs.isEmpty) rawSigs
-      else rawSigs.join(probeSets(spark, root, segs, p, batchIds)
-          .select(col("id")),
-        Seq("id"), "left_anti")).materialize()
-    val newBands = sigs.select(col("id"), col("sz"),
-      posexplode(col("ba")).as(Seq("band", "bucket")))
+    val meta = openMeta(spark, root, threshold, numHashes, bands, "updates")
+    store.withWriter(spark, root, meta.probeBuckets, segmentName) { w =>
+    val sigs = w.firstWrites(
+      Dedup.signatures(newDocs, idCol, textCol, numHashes, bands), "sets")
+    val newBands = bandRows(sigs)
     val newSets = sigs.select(col("id"), col("sh"))
 
-    // fresh store: empty frames derived from the BATCH's own schema,
-    // so non-bigint id columns work on the first update too (the
-    // public currentBands/currentSets readers default to the
-    // documents-table shape). A non-empty store's bands scan is
-    // pruned to the batch's touched buckets — minhash band buckets
-    // are 64-bit hashes, so the bucket IN-list alone is exact
-    val batchBuckets = if (segs.isEmpty) None
-      else IndexLayout.collectKeys(
-        newBands.select(col("bucket")).distinct(), p, cap, "band buckets")
-    // tombstoned store rows are filtered out of candidate generation
-    // (a retracted id must never appear in new pairs); the sets reads
-    // need no filter — candidates can no longer name a tombstoned id
-    val storeBands = if (segs.isEmpty) newBands.limit(0)
-      else notTombstoned(spark, root, tombs,
-        probeBands(spark, root, segs, p, batchBuckets), "id")
+    // the store's bands scan is pruned to the batch's touched buckets
+    // — minhash band buckets are 64-bit hashes, so the bucket IN-list
+    // alone is exact. Tombstoned store rows are filtered out of
+    // candidate generation (a retracted id must never appear in new
+    // pairs); the sets reads need no filter — candidates can no
+    // longer name a tombstoned id
+    val storeBands = w.live(w.probe("bands", newBands.select(col("bucket")),
+      "band buckets", newBands))
 
     // size-ratio guard (J ≥ t ⇒ min/max set sizes ≥ t) kills
     // impossible pairs before verification, same as the bulk path
@@ -208,12 +131,9 @@ object DedupIndex {
     // (batch-driven by construction) — the corpus-token-scale
     // ARRAY<BIGINT> payloads were the heaviest part of the r8
     // full-store read
-    val candIds = if (segs.isEmpty) None
-      else IndexLayout.collectKeys(
-        cands.select(explode(array(col("a"), col("b"))).as("id"))
-          .distinct(), p, cap, "candidate ids")
-    val storeSets = if (segs.isEmpty) newSets.limit(0)
-      else probeSets(spark, root, segs, p, candIds)
+    val storeSets = w.probe("sets",
+      cands.select(explode(array(col("a"), col("b"))).as("id")),
+      "candidate ids", newSets)
     val allSets = storeSets.unionByName(newSets)
     val pairs = cands
       .join(allSets.select(col("id").as("a"), col("sh").as("sha")), "a")
@@ -223,24 +143,7 @@ object DedupIndex {
           col("sha"), col("shb")), 4).as("j"))
       .filter(col("j") >= threshold)
       .materialize()
-
-    // commit LAST: bands + sets land, then the root-level marker —
-    // a crash before the marker leaves an ignored orphan directory.
-    // Segments are written key-sorted with probe-sized row groups —
-    // the layout every future batch's pruned probes depend on
-    val seg = segmentName.getOrElse(f"seg-${System.currentTimeMillis()}%013d-${
-      saveSeq.incrementAndGet()}%04d")
-    // batch segments are the flat-sorted L0 tail — only compaction
-    // writes the P-way bucketed form (see IndexLayout)
-    IndexLayout.writeSorted(newBands, "bucket", s"$root/$seg/bands", 0)
-    IndexLayout.writeSorted(newSets, "id", s"$root/$seg/sets", 0)
-    fs.create(new Path(root, s"$seg/_SUCCESS"), true).close()
-    // manifest AFTER the marker: a crash in between leaves a hole the
-    // next update heals, never a manifest entry for an invisible dir
-    IndexLayout.recordLayouts(fs, new Path(root),
-      Map(seg -> Map("bands" -> Nil, "sets" -> Nil)), segs :+ seg)
-    UpdateResult(seg, pairs)
-    }
+    UpdateResult(w.commit("bands" -> newBands, "sets" -> newSets), pairs)
     }
   }
 
@@ -253,53 +156,27 @@ object DedupIndex {
     * O(batch) like update() but with no candidate join, no
     * verification read and no pairs; ids already in the store are
     * dropped (same first-write-wins contract), geometry is pinned by
-    * the same `_meta.json` check, and the committed segment is
-    * indistinguishable from an update()'s — a subsequent update()
-    * detects against it identically (pinned in DedupIndexSpec). */
+    * the same `_meta.json` check, the writer scope is update()'s, and
+    * the committed segment is indistinguishable from an update()'s —
+    * a subsequent update() detects against it identically (pinned in
+    * DedupIndexSpec). A bootstrap is a few large loads + one
+    * compactSegments (which buckets). */
   def bulkLoad(spark: SparkSession, root: String, docs: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       numHashes: Int = 30, bands: Int = 6): String = {
-    val meta = readOrInitMeta(spark, root,
-      Meta(threshold, numHashes, bands,
-        IndexLayout.defaultProbeBuckets(spark), ophConf(spark)))
-    require((meta.threshold, meta.numHashes, meta.bands) ==
-      ((threshold, numHashes, bands)),
-      s"index at $root was built with $meta; loads must match " +
-        s"(got threshold=$threshold numHashes=$numHashes bands=$bands)")
-    val p = meta.probeBuckets
-    Lease.withWriter(spark, root) {
-    IndexLayout.withProbePushdown(spark) {
-      val segs = segments(spark, root)
-      val tombs = tombSegments(spark, root)
-      val cap = IndexLayout.probeKeyCap(spark)
-      val rawSigs = notTombstoned(spark, root, tombs, Dedup
-        .signatures(docs, idCol, textCol, numHashes, bands, meta.oph)
-        .dropDuplicates("id"), "id")
-      val batchIds = if (segs.isEmpty) None
-        else IndexLayout.collectKeys(
-          docs.select(col(idCol)).distinct(), p, cap, "batch ids")
-      val sigs = (if (segs.isEmpty) rawSigs
-        else rawSigs.join(probeSets(spark, root, segs, p, batchIds)
-            .select(col("id")),
-          Seq("id"), "left_anti")).materialize()
-      val newBands = sigs.select(col("id"), col("sz"),
-        posexplode(col("ba")).as(Seq("band", "bucket")))
-      val seg = f"seg-${System.currentTimeMillis()}%013d-${
-        saveSeq.incrementAndGet()}%04d"
-      // bulk loads write the flat-sorted form too: a bootstrap is a
-      // few large loads + one compactSegments (which buckets)
-      IndexLayout.writeSorted(newBands, "bucket", s"$root/$seg/bands", 0)
-      IndexLayout.writeSorted(sigs.select(col("id"), col("sh")), "id",
-        s"$root/$seg/sets", 0)
-      val fs = new Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      fs.create(new Path(root, s"$seg/_SUCCESS"), true).close()
-      IndexLayout.recordLayouts(fs, new Path(root),
-        Map(seg -> Map("bands" -> Nil, "sets" -> Nil)), segs :+ seg)
-      seg
-    }
+    val meta = openMeta(spark, root, threshold, numHashes, bands, "loads")
+    store.withWriter(spark, root, meta.probeBuckets, None) { w =>
+      val sigs = w.firstWrites(
+        Dedup.signatures(docs, idCol, textCol, numHashes, bands), "sets")
+      w.commit("bands" -> bandRows(sigs),
+        "sets" -> sigs.select(col("id"), col("sh")))
     }
   }
+
+  /** One (id, sz, band, bucket) row per band of each signature row. */
+  private def bandRows(sigs: DataFrame): DataFrame =
+    sigs.select(col("id"), col("sz"),
+      posexplode(col("ba")).as(Seq("band", "bucket")))
 
   /** The per-batch store probes — the EXACT reads update() issues,
     * exposed package-private so PlanAuditSpec can pin their shape
@@ -308,471 +185,115 @@ object DedupIndex {
   private[graft] def probeBands(spark: SparkSession, root: String,
       segs: Seq[String], p: Int,
       buckets: Option[Array[(Any, Int)]]): DataFrame =
-    probeTable(spark, root, segs, "bands",
-      "band INT, bucket BIGINT, id BIGINT, sz INT", "bucket", p, buckets)
+    store.probeTable(spark, root, segs, "bands", p, buckets)
 
   private[graft] def probeSets(spark: SparkSession, root: String,
       segs: Seq[String], p: Int,
       ids: Option[Array[(Any, Int)]]): DataFrame =
-    probeTable(spark, root, segs, "sets",
-      "id BIGINT, sh ARRAY<BIGINT>", "id", p, ids)
-
-  /** The probe plan (see IndexLayout): flat L0 segments get ONE scan
-    * with the full key chain; bucketed (compacted) segments get
-    * grouped per-bucket scans, each pushing its own short chain. */
-  private def probeTable(spark: SparkSession, root: String,
-      segs: Seq[String], table: String, ddl: String, keyCol: String,
-      p: Int, keys: Option[Array[(Any, Int)]]): DataFrame = keys match {
-    case None => readSegments(spark, root, segs, table, ddl)
-    case Some(ks) if ks.isEmpty =>
-      readSegments(spark, root, Nil, table, ddl)
-    case Some(ks) =>
-      val fs = new Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      // layout resolution is ONE manifest read (see IndexLayout) —
-      // a segment missing from it (pre-manifest store, torn manifest
-      // write) costs one listStatus here, resolved once per probe
-      val rootP = new Path(root)
-      val cached = IndexLayout.readLayouts(fs, rootP)
-      val dirsBySeg = segs.map(s => s ->
-        IndexLayout.layoutFor(fs, rootP, cached, s, table)).toMap
-      val lay: IndexLayout.SegLayouts =
-        dirsBySeg.map { case (s, ds) => s -> Map(table -> ds) }
-      val (bucketed, flat) = segs.partition(s => dirsBySeg(s).nonEmpty)
-      val allKeys = ks.map(_._1)
-      val tail = if (flat.isEmpty) Nil
-        else Seq(readSegments(spark, root, flat, table, ddl,
-            layouts = Some(lay))
-          .where(IndexLayout.chain(spark, keyCol, allKeys)))
-      val bulk = if (bucketed.isEmpty) Nil
-        else if (p <= 0)
-          Seq(readSegments(spark, root, bucketed, table, ddl,
-              layouts = Some(lay))
-            .where(IndexLayout.chain(spark, keyCol, allKeys)))
-        else IndexLayout.scanGroups(spark, ks).map { case (dirs, gks) =>
-          readSegments(spark, root, bucketed, table, ddl, subs = dirs,
-              layouts = Some(lay))
-            .where(IndexLayout.chain(spark, keyCol, gks))
-        }
-      (tail ++ bulk) match {
-        case Nil => readSegments(spark, root, Nil, table, ddl)
-        case parts => parts.reduce(_ unionByName _)
-      }
-  }
+    store.probeTable(spark, root, segs, "sets", p, ids)
 
   /** All committed, non-retracted band rows (band, bucket, id, sz);
     * empty when the store is new. */
   def currentBands(spark: SparkSession, root: String): DataFrame =
-    notTombstoned(spark, root, tombSegments(spark, root),
-      readSegments(spark, root, segments(spark, root), "bands",
-        "band INT, bucket BIGINT, id BIGINT, sz INT"), "id")
+    store.current(spark, root, "bands")
 
   /** All committed, non-retracted shingle sets (id, sh); empty when
     * the store is new. */
   def currentSets(spark: SparkSession, root: String): DataFrame =
-    notTombstoned(spark, root, tombSegments(spark, root),
-      readSegments(spark, root, segments(spark, root), "sets",
-        "id BIGINT, sh ARRAY<BIGINT>"), "id")
+    store.current(spark, root, "sets")
 
   /** Committed, unshadowed DATA segments (tombstone segments are
     * listed by [[tombSegments]]). A compacted segment's `_sources`
     * file names the segments it replaced; those stay EXCLUDED even if
-    * their directories still exist (a crash between the compaction
-    * commit and the source cleanup leaves them behind — shadowing
-    * makes that window invisible to readers instead of double-counted;
-    * [[vacuumShadowed]] reclaims them). Protocol: [[ShadowLog]]. */
-  def segments(spark: SparkSession, root: String): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ShadowLog.list(fs, p, "_SUCCESS", _.startsWith("seg-"))._1
-      .filterNot(_.endsWith("-tomb"))
-  }
+    * their directories still exist (see [[SegmentStore]]). */
+  def segments(spark: SparkSession, root: String): Seq[String] =
+    store.segments(spark, root)
 
   /** Committed, unshadowed TOMBSTONE segments — see [[tombstone]]. */
   private[graft] def tombSegments(spark: SparkSession,
-      root: String): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ShadowLog.list(fs, p, "_SUCCESS", _.startsWith("seg-"))._1
-      .filter(_.endsWith("-tomb"))
-  }
+      root: String): Seq[String] = store.tombSegments(spark, root)
 
-  /** RETRACT documents from the index — the one lifecycle operation
-    * an append-only segment log cannot express in place, and a hard
-    * requirement of real corpora (opt-out and licensing deletions).
-    * Writes the ids as a small committed `seg-…-tomb` segment (one
-    * id-sorted `ids` table, same marker/shadow conventions); readers
-    * and probes anti-join it, and compaction APPLIES it:
-    *
-    *  - while a tombstone is LIVE, the id's stored rows are invisible
-    *    to every reader and probe (it can never appear in new pairs),
-    *    and a re-arrival of the id is dropped like a duplicate;
-    *  - a compaction that covers EVERY data segment rewrites the
-    *    store without the id's rows and drops the tombstone with the
-    *    sources it shadowed (partial/tiered folds apply the filter to
-    *    what they merge but keep the tombstone — rows may survive in
-    *    unmerged segments);
-    *  - cost stays O(batch) per update: the live tombstone set is
-    *    deletion-request-sized (it drains at every full compaction),
-    *    read whole and anti-joined — no probe shape changes.
-    *
-    * A tombstone retracts PAST data and blocks the id while live; it
-    * is not a permanent ban — once applied and dropped, a future
-    * re-ingestion of the same id is a fresh document (re-consent).
+  /** RETRACT documents from the index (opt-out and licensing
+    * deletions): see [[SegmentStore.tombstone]] for the contract.
     * Returns the segment name, or None for an empty id set. */
   def tombstone(spark: SparkSession, root: String,
-      ids: DataFrame): Option[String] = {
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(root, "_meta.json")),
-      s"no index at $root")
-    val idDf = ids.select(col(ids.columns.head).as("id")).distinct()
-    if (idDf.isEmpty) None
-    else Lease.withWriter(spark, root) {
-      val seg = f"seg-${System.currentTimeMillis()}%013d-${
-        saveSeq.incrementAndGet()}%04d-tomb"
-      IndexLayout.writeSorted(idDf, "id", s"$root/$seg/ids", 0)
-      fs.create(new Path(root, s"$seg/_SUCCESS"), true).close()
-      Some(seg)
-    }
-  }
+      ids: DataFrame): Option[String] = store.tombstone(spark, root, ids)
 
   /** The live (unapplied) tombstoned ids — empty when none. */
   def tombstonedIds(spark: SparkSession, root: String): DataFrame =
-    tombIdsOf(spark, root, tombSegments(spark, root))
+    store.tombstonedIds(spark, root)
 
-  private def tombIdsOf(spark: SparkSession, root: String,
-      tombs: Seq[String]): DataFrame =
-    if (tombs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("id BIGINT"))
-    else spark.read.parquet(tombs.map(s => s"$root/$s/ids"): _*)
-      .select("id").distinct()
-
-  /** `df` minus rows whose `idColName` is live-tombstoned; skips the
-    * join entirely when no tombstone segment exists (the common
-    * case — this is the forward path). */
-  private def notTombstoned(spark: SparkSession, root: String,
-      tombs: Seq[String], df: DataFrame, idColName: String): DataFrame =
-    if (tombs.isEmpty) df
-    else df.join(
-      tombIdsOf(spark, root, tombs).select(col("id").as(idColName)),
-      Seq(idColName), "left_anti")
-
-  /** Merge every committed segment into ONE compacted segment — the
-    * janitorial pass the segment-log form requires at scale: a
-    * streaming writer ([[graft.streaming.StreamingDedup]]) commits one
-    * segment per micro-batch, and at 100 TB that is thousands of
-    * KB-scale parquet directories whose per-file open/footer cost
-    * dominates the store probe long before data volume does (same
-    * disease [[Compaction]] treats for plain tables). Semantics are
-    * preserved by construction: a document's band/set rows depend only
-    * on its own text, so unioning rows across segments and rewriting
-    * them into byte-targeted files changes file layout, never content.
-    *
-    * Crash-safe swap, matching the store's marker conventions: the
-    * merged bands/sets land in a fresh `seg-` dir, `_sources` (the
-    * replaced segment names) is written, then `_SUCCESS` LAST — the
-    * instant the marker exists the sources are shadowed (see
-    * [[segments]]), so readers never see a double-counted or partial
-    * store; source directories are deleted after the commit, and a
-    * crash inside that cleanup just leaves shadowed dirs for
-    * [[vacuumShadowed]]. Returns the new segment name, or None when
-    * there is nothing to merge.
-    *
-    * Replay-pending guard (ENFORCED, not advisory): a streaming
-    * batch ([[graft.streaming.StreamingDedup]]) commits its index
-    * segment BEFORE its verdict log — a crash in between leaves a
-    * committed `…-batch-…` segment whose recovery will delete and
-    * rewrite it. Folding such a segment into a compaction target
-    * would let that rewrite re-append the batch's rows NEXT TO the
-    * compacted copy (double-counting the batch forever). So any
-    * source segment with `-batch-` in its name whose verdicts are
-    * not committed under `root/pairs` (neither a `_COMMITTED`
-    * marker nor shadowed by a committed pairs compaction) is
-    * EXCLUDED from this pass — compaction is now safe to run in the
-    * crash-recovery window, it simply leaves the replay-pending
-    * segment alone until its batch commits. */
-  /** `force` rewrites even a SINGLE segment — a no-op for merging,
-    * but the migration path for layout changes (probe-bounded pages,
-    * `graft.dedup.pageRows`): a store bulk-loaded before a layout fix
-    * is often one big compacted segment, which the `< 2` fast path
-    * would otherwise never touch. */
+  /** Merge every committed segment into ONE compacted segment — see
+    * [[SegmentStore.compactSegments]] for the crash-safe swap, the
+    * replay-pending guard and `force` (the migration path for layout
+    * changes such as `graft.dedup.pageRows`). */
   def compactSegments(spark: SparkSession, root: String,
       targetBytes: Long = 128L * 1024 * 1024,
       force: Boolean = false): Option[String] =
-    Lease.withWriter(spark, root) {
-      val (all, shadowed, srcs, tombs) = eligibleSources(spark, root)
-      if (srcs.size < (if (force) 1 else 2)) None
-      else mergeSources(spark, root, all, shadowed, srcs, tombs,
-        targetBytes)
-    }
+    store.compactSegments(spark, root, targetBytes, force)
 
-  /** Tiered (size-ratio) compaction — the HOT-PATH form
-    * [[graft.streaming.StreamingDedup]]'s auto-compaction runs: folds
-    * only segments the [[Compaction.tieredPick]] policy selects, so a
-    * trigger costs O(recent tail), never a full-store rewrite (the
-    * r9 ADVICE defect — full compaction every ~32 micro-batches is
-    * amortized O(store/n) per batch, unbounded as the store grows;
-    * under the ratio policy each row is rewritten
-    * O(log_ratio(store/batch)) times total). Same commit protocol,
-    * shadow closure, replay-pending guard and layout preservation as
-    * [[compactSegments]], which remains the explicit full-merge
-    * maintenance call. `ratio` defaults from
+  /** Tiered (size-ratio) compaction — the hot-path form
+    * [[graft.streaming.StreamingDedup]]'s auto-compaction runs; see
+    * [[SegmentStore.compactTiered]]. `ratio` defaults from
     * `graft.dedup.compactRatio` (4.0). */
   def compactTiered(spark: SparkSession, root: String,
       targetBytes: Long = 128L * 1024 * 1024,
       ratio: Option[Double] = None): Option[String] =
-    Lease.withWriter(spark, root) {
-    val (all, shadowed, srcs, tombs) = eligibleSources(spark, root)
-    if (srcs.size < 2) None
-    else {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // one size listing per TRIGGER (not per batch — triggers fire
-    // every ~autoCompactSegments batches, so this stays amortized)
-    val sized = srcs.map(s =>
-      s -> fs.getContentSummary(new Path(p, s)).getLength)
-    val r = ratio.getOrElse(
-      spark.conf.getOption("graft.dedup.compactRatio")
-        .map(_.toDouble).getOrElse(4.0))
-    val pick = Compaction.tieredPick(sized, r)
-    if (pick.size < 2) None
-    else mergeSources(spark, root, all, shadowed, pick, tombs, targetBytes)
-    }
-    }
+    store.compactTiered(spark, root, targetBytes, ratio)
 
-  /** (visible committed data segments, shadowed set, compactable
-    * subset, live tombstone segments): the replay-pending guard
-    * shared by both compaction forms. */
-  private def eligibleSources(spark: SparkSession, root: String)
-      : (Seq[String], Set[String], Seq[String], Seq[String]) = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (allWithTombs, shadowed) =
-      ShadowLog.list(fs, p, "_SUCCESS", _.startsWith("seg-"))
-    val tombs = allWithTombs.filter(_.endsWith("-tomb"))
-    val all = allWithTombs.filterNot(_.endsWith("-tomb"))
-    // replay-pending detection keys on the EXACT StreamingDedup
-    // naming pattern, not any "-batch-" substring (r8 ADVICE): a
-    // direct update() caller who picks a custom name containing
-    // "-batch-" but never writes a pairs log would otherwise have
-    // segments that are never compactable (a liveness leak)
-    def isStreamSeg(s: String) = StreamingBatchSegment.matches(s)
-    val pairsBase = new Path(root, "pairs")
-    val replayPending: Set[String] =
-      if (!all.exists(isStreamSeg)) Set.empty
-      else if (!fs.exists(pairsBase))
-        // streaming batch segments exist but NO pairs log does: the
-        // very first streaming batch crashed between its segment
-        // commit and its first pairs write. That is exactly the
-        // recovery window — every batch segment is replay-pending,
-        // none may be folded (the old `Set.empty` here would have
-        // compacted the torn segment away and the replay's left-anti
-        // would then drop the whole batch's verdicts forever)
-        all.filter(isStreamSeg).toSet
-      else {
-        val (vis, shad) = ShadowLog.list(fs, pairsBase, "_COMMITTED", _ => true)
-        val pairsCommitted = vis.toSet ++ shad
-        all.filter(s => isStreamSeg(s) && !pairsCommitted(s)).toSet
-      }
-    (all, shadowed, all.filterNot(replayPending), tombs)
-  }
-
-  /** Merge `srcs` into one fresh segment under the crash-safe shadow
-    * protocol (see [[compactSegments]]'s scaladoc for the full
-    * contract). `srcs` may be any eligible subset — tiered folds pass
-    * the policy's pick, the full form passes everything. Live
-    * tombstones are APPLIED to the merged rows; when the merge covers
-    * EVERY data segment the tombstones are drained too (shadowed with
-    * the sources and deleted — nothing is left for them to retract),
-    * while a partial fold keeps them (rows may survive in unmerged
-    * segments). */
-  private def mergeSources(spark: SparkSession, root: String,
-      all: Seq[String], shadowed: Set[String], srcs: Seq[String],
-      tombs: Seq[String], targetBytes: Long): Option[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val coversAll = all.toSet == srcs.toSet
-    val seg = f"seg-${System.currentTimeMillis()}%013d-${
-      saveSeq.incrementAndGet()}%04d-compact"
-    // merged tables are re-sorted and re-bucketed by their probe
-    // key: compaction must PRESERVE the pruned-probe layout
-    // (IndexLayout, P from the store's pinned meta) — a merged store
-    // that lost it would silently reintroduce the O(store) per-batch
-    // scan this layout exists to prevent
-    val pBuckets = metaProbeBuckets(spark, root)
-    for ((table, key, ddl) <- Seq(
-        ("bands", "bucket", "band INT, bucket BIGINT, id BIGINT, sz INT"),
-        ("sets", "id", "id BIGINT, sh ARRAY<BIGINT>"))) {
-      val paths = srcs.map(s => s"$root/$s/$table")
-      val pl = Compaction.planAll(spark, paths, targetBytes)
-      // bucket only when the merged table can fill the buckets
-      // (≥ ~one probe-sized row group per dir): a small store split
-      // P ways would EXPLODE its file count — the many-small-files
-      // disease compaction exists to cure. Below the bar the merged
-      // segment stays flat-sorted; probes treat it as L0 tail, which
-      // at that size is the right plan anyway.
-      val p = if (pl.nBytes >=
-          pBuckets.toLong * IndexLayout.blockBytes(spark)) pBuckets
-        else 0
-      // compaction APPLIES live tombstones: the merged copy is the
-      // first chance to physically drop a retracted id's rows
-      IndexLayout.writeSorted(
-        notTombstoned(spark, root, tombs,
-          readSegments(spark, root, srcs, table, ddl), "id"), key,
-        s"$root/$seg/$table", p, nOut = Some(pl.nOut))
-    }
-    // a covering merge drains the tombstones with its sources: every
-    // row they could retract is gone from the merged copy, so they
-    // are shadowed and deleted like any replaced segment. A partial
-    // fold keeps them — unmerged segments may still hold the rows.
-    val drained = if (coversAll) tombs else Nil
-    // closure, not just srcs: see ShadowLog — dropping a prior
-    // compaction target must not resurrect its crash relics
-    ShadowLog.writeSources(fs, p, seg,
-      ShadowLog.sourcesClosure(fs, p, srcs ++ drained, shadowed))
-    fs.create(new Path(root, s"$seg/_SUCCESS"), true).close()
-    // manifest: which bp dirs the bucketed write actually created
-    // (partitionBy materializes only non-empty buckets) — discovered
-    // with one listStatus per table HERE, at write time, so no probe
-    // ever pays it
-    IndexLayout.recordLayouts(fs, p,
-      Map(seg -> Seq("bands", "sets").map(t =>
-        t -> IndexLayout.listBp(fs, new Path(root, s"$seg/$t"))).toMap),
-      all.filterNot(srcs.toSet) :+ seg)
-    (srcs ++ drained).foreach(s => fs.delete(new Path(root, s), true))
-    Some(seg)
-  }
-
-  /** Delete segment directories no reader can see: compaction sources
-    * a crashed cleanup left behind (committed but shadowed) and
-    * marker-less crash orphans. Readers are never affected; like
-    * every mutation here it assumes the store's single-maintenance-
-    * writer discipline (a concurrent update's not-yet-committed dir
-    * looks exactly like a crash orphan). */
+  /** Delete segment directories no reader can see — see
+    * [[SegmentStore.vacuumShadowed]]. */
   def vacuumShadowed(spark: SparkSession, root: String): Seq[String] =
-    Lease.withWriter(spark, root) {
-      val p = new Path(root)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      ShadowLog.vacuum(fs, p, "_SUCCESS", _.startsWith("seg-"))
-    }
+    store.vacuumShadowed(spark, root)
 
-  /** Union read of the committed segments' `table` dirs. `subs`
-    * narrows to bucket subdirectories (e.g. "bp=7") — a segment
-    * without that subdir (no rows routed there) is skipped; bucketed
-    * segments read WITHOUT `subs` surface their `bp` partition
-    * column, dropped so every reader sees the flat schema. Layout
-    * (bucketed vs flat, which bp dirs exist) comes from the store's
-    * `_layouts` manifest — one small read, or the caller's
-    * already-resolved map — with a per-segment listStatus fallback
-    * for manifest misses; no per-(segment × dir) exists calls. */
-  private def readSegments(spark: SparkSession, root: String,
-      segs: Seq[String], table: String, emptyDdl: String,
-      subs: Seq[String] = Nil,
-      layouts: Option[IndexLayout.SegLayouts] = None): DataFrame = {
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(emptyDdl))
-    segs match {
-      case Nil => empty
-      case ss =>
-        val fs = new Path(root).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val rootP = new Path(root)
-        val lay = layouts.getOrElse(IndexLayout.readLayouts(fs, rootP))
-        def bps(s: String): Seq[String] =
-          IndexLayout.layoutFor(fs, rootP, lay, s, table)
-        // bucketed segments are read by their LEAF dirs, never via
-        // partition discovery: multiple segment roots each holding
-        // bp=* dirs trip CONFLICTING_DIRECTORY_STRUCTURES, and the
-        // bp value is write-time routing metadata no reader needs
-        val paths =
-          if (subs.nonEmpty)
-            ss.flatMap { s =>
-              val have = bps(s).toSet
-              subs.filter(have).map(d => s"$root/$s/$table/$d")
-            }
-          else ss.flatMap { s =>
-            val ds = bps(s)
-            if (ds.isEmpty) Seq(s"$root/$s/$table")
-            else ds.map(d => s"$root/$s/$table/$d")
-          }
-        if (paths.isEmpty) empty
-        else spark.read.parquet(paths: _*)
-    }
+  /** The pinned meta (created on first use), checked against the
+    * caller's geometry; `verb` names the caller in the error. */
+  private def openMeta(spark: SparkSession, root: String,
+      threshold: Double, numHashes: Int, bands: Int, verb: String): Meta = {
+    val meta = readOrInitMeta(spark, root, Meta(threshold, numHashes,
+      bands, IndexLayout.defaultProbeBuckets(spark)))
+    require((meta.threshold, meta.numHashes, meta.bands) ==
+      ((threshold, numHashes, bands)),
+      s"index at $root was built with $meta; $verb must match " +
+        s"(got threshold=$threshold numHashes=$numHashes bands=$bands)")
+    meta
   }
-
-  /** The store's pinned probe-bucket count; 0 when the meta file is
-    * absent or predates the field (legacy flat layout). */
-  private def metaProbeBuckets(spark: SparkSession, root: String): Int = {
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val mp = new Path(root, "_meta.json")
-    if (!fs.exists(mp)) 0
-    else {
-      val in = fs.open(mp)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      """"probeBuckets":(\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toInt).getOrElse(0)
-    }
-  }
-
-  /** Signature-scheme choice, read ONCE at store creation and pinned
-    * in `_meta.json` — a store probed with a different scheme than it
-    * was built with is a silent recall hole, so the conf never
-    * applies to an existing store. */
-  private def ophConf(spark: SparkSession): Boolean =
-    spark.conf.getOption("graft.minhash.oph")
-      .exists(_.trim.equalsIgnoreCase("true"))
 
   private def readOrInitMeta(spark: SparkSession, root: String,
       init: Meta): Meta = {
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = SegmentStore.fsOf(spark, root)
     val mp = new Path(root, "_meta.json")
-    if (fs.exists(mp)) {
-      val in = fs.open(mp)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      // three numeric fields, fixed order (written below) — a full
-      // JSON parser dependency is not warranted for a marker file.
-      // The threshold charset admits scientific notation: Scala
-      // renders e.g. 1.0E-4 in exponent form, and a store created
-      // with such a threshold must stay readable
-      // probeBuckets optional: absent = a store created before the
-      // bucketed probe layout existed = flat segments (0)
-      // oph optional too: absent = a store created before the
-      // one-permutation option existed = classic k-pass signatures
-      val m = """\{"threshold":([0-9.eE+-]+),"numHashes":(\d+),"bands":(\d+)(?:,"probeBuckets":(\d+))?(?:,"oph":(true|false))?\}"""
-        .r.findFirstMatchIn(txt.trim)
-        .getOrElse(throw new IllegalStateException(
-          s"unreadable dedup-index meta at $mp: $txt"))
-      Meta(m.group(1).toDouble, m.group(2).toInt, m.group(3).toInt,
-        Option(m.group(4)).map(_.toInt).getOrElse(0),
-        Option(m.group(5)).exists(_.toBoolean))
-    } else {
-      fs.mkdirs(new Path(root))
-      val out = fs.create(mp, false) // fail on concurrent create
-      try out.write(
-        s"""{"threshold":${init.threshold},"numHashes":${init.numHashes},"bands":${init.bands},"probeBuckets":${init.probeBuckets},"oph":${init.oph}}"""
-          .getBytes("UTF-8"))
-      finally out.close()
-      init
+    SegmentStore.readSmall(fs, mp) match {
+      case Some(txt) =>
+        // numeric fields, fixed order (written below) — a full JSON
+        // parser dependency is not warranted for a marker file. The
+        // threshold charset admits scientific notation: Scala renders
+        // e.g. 1.0E-4 in exponent form, and a store created with such
+        // a threshold must stay readable. probeBuckets optional:
+        // absent = a store created before the bucketed probe layout
+        // existed = flat segments (0). oph: written only by builds
+        // that had the opt-in one-permutation signatures
+        val m = """\{"threshold":([0-9.eE+-]+),"numHashes":(\d+),"bands":(\d+)(?:,"probeBuckets":(\d+))?(?:,"oph":(true|false))?\}"""
+          .r.findFirstMatchIn(txt.trim)
+          .getOrElse(throw new IllegalStateException(
+            s"unreadable dedup-index meta at $mp: $txt"))
+        if (Option(m.group(5)).contains("true"))
+          throw new IllegalStateException(
+            s"dedup index at $root was built with one-permutation " +
+              "MinHash signatures (\"oph\":true), which this build no " +
+              "longer computes — probing it with classic signatures " +
+              "would silently miss near-dups. Rebuild the index into a " +
+              "fresh root (bulkLoad the corpus, then compactSegments)")
+        Meta(m.group(1).toDouble, m.group(2).toInt, m.group(3).toInt,
+          Option(m.group(4)).map(_.toInt).getOrElse(0))
+      case None =>
+        fs.mkdirs(new Path(root))
+        val out = fs.create(mp, false) // fail on concurrent create
+        try out.write(
+          s"""{"threshold":${init.threshold},"numHashes":${init.numHashes},"bands":${init.bands},"probeBuckets":${init.probeBuckets}}"""
+            .getBytes("UTF-8"))
+        finally out.close()
+        init
     }
   }
-
-  /** The segment names [[graft.streaming.StreamingDedup]] commits —
-    * `seg-<epoch>-batch-<id>` (epoch = 8 hex chars of the query id)
-    * or the legacy pre-epoch `seg-batch-<id>`. This regex IS the
-    * naming contract: compactSegments' replay-pending guard and
-    * compactPairs' retain predicate key on it, so only genuinely
-    * streaming-named segments are held back for crash recovery — a
-    * direct update() caller's custom name can't get stuck pending. */
-  private[graft] val StreamingBatchSegment =
-    """seg-(?:[0-9a-fA-F]{8}-)?batch-\d{10}""".r
-
-  private val saveSeq = new java.util.concurrent.atomic.AtomicLong()
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,16 +25,9 @@ import graft.plans.Materialize._
   * reads, not O(store), once the store exceeds the batch in row
   * groups.
   *
-  * Store layout (segment log, `_SUCCESS`-gated, [[ShadowLog]]
-  * conventions):
-  * {{{
-  *   root/
-  *     _meta.json             (threshold + LSH geometry, written once)
-  *     seg-<ts>-<seq>/
-  *       _SUCCESS             (commit marker, written LAST)
-  *       bands/               (band, bucket, id parquet)
-  *       vecs/                (id, v, nm parquet)
-  * }}}
+  * Storage is the same [[SegmentStore]] log with two tables per
+  * segment — `bands/` (band, bucket, id) and `vecs/` (id, v, nm) —
+  * plus this index's `_meta.json` (threshold + LSH geometry).
   *
   * Geometry note: the BULK path (`Knn.nearDupPairsLsh`) scales its
   * bits with n and caps oversized buckets; an incremental store must
@@ -65,6 +58,11 @@ object EmbeddingDedupIndex {
 
   case class UpdateResult(segment: String, pairs: DataFrame)
 
+  private[graft] val store = new SegmentStore(Seq(
+      SegmentTable("bands", "bucket", "band INT, bucket BIGINT, id BIGINT"),
+      SegmentTable("vecs", "id", "id BIGINT, v ARRAY<FLOAT>, nm DOUBLE")),
+    (fs, root) => refuseRebanding(fs, root, "compacting"))
+
   /** Near-dup-check `newVecs` against the store AND itself, then
     * commit the batch as a new segment. Returns (a, b, sim) pairs,
     * canonically a < b, every pair cosine-verified at `threshold`.
@@ -76,109 +74,25 @@ object EmbeddingDedupIndex {
       idCol: String, vecCol: String, dim: Int, threshold: Double,
       bands: Int = 10, bits: Int = 6, maxBucket: Int = 500,
       segmentName: Option[String] = None): UpdateResult = {
-    Registry.registerAll(spark)
-    // loud bounds, enforced at store CREATION (a bad geometry would
-    // be pinned in _meta.json forever): bits <= 0 degenerates every
-    // vector into one bucket, and the cap is 16 like the bulk path
-    // (Knn.nearDupPairsLsh) — 2^16 buckets per band already
-    // discriminates a billion-row store (expected 15k rows/bucket at
-    // 1e9), while an unbounded bits lets the per-band bucket space
-    // (and with it any bucket-census frame) outgrow executor memory.
-    // An EXISTING store is validated against its own pinned meta
-    // below instead — a store legally created under an older bound
-    // must not be bricked by a tightened one (r8 review); the
-    // migration path off an out-of-bound geometry is [[reband]]
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // the reband-intent check runs BEFORE the meta parse (r8 ADVICE):
-    // a crash during reband's _meta.json rewrite leaves a torn meta,
-    // and parsing it first would report "unreadable meta" instead of
-    // the actionable recovery instruction — rerun reband
-    require(!fs.exists(new Path(root, Intent)),
-      s"a reband of $root is in progress or crashed — rerun reband " +
-        "to converge the store before updating")
-    val exists = fs.exists(new Path(root, "_meta.json"))
-    if (!exists) {
-      require(bits > 0 && bits <= 16, s"bits must be in [1, 16]: $bits")
-      require(bands > 0 && maxBucket > 0,
-        s"bands/maxBucket must be positive: $bands/$maxBucket")
-    }
-    val meta = readOrInitMeta(spark, root,
-      Meta(threshold, bands, bits, maxBucket,
-        probeBuckets = IndexLayout.defaultProbeBuckets(spark)))
-    require(meta.copy(probeBuckets = 0) ==
-      Meta(threshold, bands, bits, maxBucket),
-      s"index at $root was built with $meta; updates must match " +
-        s"(got threshold=$threshold bands=$bands bits=$bits " +
-        s"maxBucket=$maxBucket) — to change geometry, run reband")
-    // probe layout is store geometry too — pinned at creation, 0 on
-    // stores created before the bucketed layout existed
-    val p = meta.probeBuckets
-    // single-writer lease (see Lease): concurrent mutations would
-    // interleave shadow commits
-    Lease.withWriter(spark, root) {
-    IndexLayout.withProbePushdown(spark) {
-    // drop a replayed segment INSIDE the lease (r11 ADVICE): doing it
-    // before acquisition let a racing second writer delete the
-    // holder's in-flight epoch-named segment and only then be refused
-    segmentName.foreach { s =>
-      require(s.startsWith("seg-"), s"segment name must start with seg-: $s")
-      val sp = new Path(root, s)
-      if (fs.exists(sp)) fs.delete(sp, true)
-    }
-    // one listing per update (see DedupIndex) — data and tombstone
-    // segments split from the same ShadowLog pass
-    val allSegs = ShadowLog.list(fs, new Path(root), "_SUCCESS",
-      _.startsWith("seg-"))._1
-    val segs = allSegs.filterNot(_.endsWith("-tomb"))
-    val tombs = allSegs.filter(_.endsWith("-tomb"))
-    // heal manifest holes once on the writer path (pre-manifest
-    // stores / torn manifest writes) — see DedupIndex.update
-    IndexLayout.ensureLayouts(fs, new Path(root), segs,
-      Seq("bands", "vecs"))
-    val cap = IndexLayout.probeKeyCap(spark)
-
-    // a LIVE-tombstoned id is dropped from the arrival (retraction in
-    // progress — re-indexing would resurrect it; see tombstone)
-    val rawBase = notTombstoned(spark, root, tombs,
-      newVecs.select(col(idCol).as("id"), col(vecCol).as("v"),
-        sqrt(Knn.dot(col(vecCol), col(vecCol))).as("nm")), "id")
-    // first write wins — replays and at-least-once sources converge
-    // exactly one row per id even WITHIN a batch: an at-least-once
-    // source can redeliver inside one micro-batch, and the append-only
-    // log could never retract the double row. The store side of the
-    // anti-join is PRUNED to the batch's ids (id-sorted vecs layout +
-    // pushed IN-list, IndexLayout) — reading every committed vector
-    // row per batch was the r8 O(store) finding
-    val batchIds = if (segs.isEmpty) None
-      else IndexLayout.collectKeys(
-        newVecs.select(col(idCol)).distinct(), p, cap, "batch ids")
-    val base = (if (segs.isEmpty) rawBase.dropDuplicates("id")
-      else rawBase.dropDuplicates("id")
-        .join(probeVecs(spark, root, segs, p, batchIds).select(col("id")),
-        Seq("id"), "left_anti")).materialize()
+    val meta = openMeta(spark, root, threshold, bands, bits, maxBucket,
+      "updating", "updates")
+    store.withWriter(spark, root, meta.probeBuckets, segmentName) { w =>
+    val base = w.firstWrites(vecRows(newVecs, idCol, vecCol), "vecs")
 
     // banding materialized once: candOld, both candNew sides and the
     // segment write all read it (bands x bits dot products per row —
     // the bulk path checkpoints its banded frame for the same reason)
-    val newBands = base.select(col("id"), posexplode(array(
-        (0 until bands).map(j =>
-          Knn.lshBucketSeeded(col("v"), dim, bits, seed = j)): _*))
-      .as(Seq("band", "bucket"))).materialize()
+    val newBands = bandRows(base, dim, bands, bits).materialize()
     // bands scan pruned to the batch's touched buckets. Sign-LSH
     // buckets live in [0, 2^bits) per band, so the bucket-only
     // IN-list admits a row whose bucket matches in a DIFFERENT band
     // — at most a bands× over-read of the exact (band, bucket) rows,
     // still O(batch × bucket population), and the join below keys on
-    // both columns so correctness is untouched
-    val probeBucketKeys = if (segs.isEmpty) None
-      else IndexLayout.collectKeys(
-        newBands.select(col("bucket")).distinct(), p, cap, "band buckets")
-    // tombstoned store rows never enter candidate generation — a
-    // retracted id must not appear in new pairs
-    val storeBands = if (segs.isEmpty) newBands.limit(0)
-      else notTombstoned(spark, root, tombs,
-        probeBands(spark, root, segs, p, probeBucketKeys), "id")
+    // both columns so correctness is untouched. Tombstoned store rows
+    // never enter candidate generation — a retracted id must not
+    // appear in new pairs
+    val storeBands = w.live(w.probe("bands", newBands.select(col("bucket")),
+      "band buckets", newBands))
 
     // the bulk path's oversized-bucket guard, incremental form: a
     // bucket whose STORE+BATCH population exceeds maxBucket is
@@ -216,13 +130,10 @@ object EmbeddingDedupIndex {
     // CANDIDATE ids (batch-driven by construction) — the raw vector
     // payloads were the heaviest part of the r8 full-store read
     val cands = candOld.unionByName(candNew).distinct().materialize()
-    val candIds = if (segs.isEmpty) None
-      else IndexLayout.collectKeys(
-        cands.select(explode(array(col("a"), col("b"))).as("id"))
-          .distinct(), p, cap, "candidate ids")
-    val storeVecs = if (segs.isEmpty) base.limit(0).select("id", "v", "nm")
-      else probeVecs(spark, root, segs, p, candIds)
-    val allVecs = storeVecs.unionByName(base.select("id", "v", "nm"))
+    val storeVecs = w.probe("vecs",
+      cands.select(explode(array(col("a"), col("b"))).as("id")),
+      "candidate ids", base)
+    val allVecs = storeVecs.unionByName(base)
     val pairs = cands
       .join(allVecs.select(col("id").as("a"), col("v").as("va"),
         col("nm").as("na")), "a")
@@ -235,22 +146,7 @@ object EmbeddingDedupIndex {
       // an unguarded >= would assert similarity for it
       .filter(!isnan(col("sim")) && col("sim") >= threshold)
       .materialize()
-
-    // segments are written key-sorted with probe-sized row groups
-    // (IndexLayout) — the layout every future batch's pruned probes
-    // depend on
-    val seg = segmentName.getOrElse(f"seg-${System.currentTimeMillis()}%013d-${
-      saveSeq.incrementAndGet()}%04d")
-    // batch segments are the flat-sorted L0 tail — reband writes the
-    // P-way bucketed form (it rewrites the whole store anyway)
-    IndexLayout.writeSorted(newBands, "bucket", s"$root/$seg/bands", 0)
-    IndexLayout.writeSorted(base.select("id", "v", "nm"), "id",
-      s"$root/$seg/vecs", 0)
-    fs.create(new Path(root, s"$seg/_SUCCESS"), true).close()
-    IndexLayout.recordLayouts(fs, new Path(root),
-      Map(seg -> Map("bands" -> Nil, "vecs" -> Nil)), segs :+ seg)
-    UpdateResult(seg, pairs)
-    }
+    UpdateResult(w.commit("bands" -> newBands, "vecs" -> base), pairs)
     }
   }
 
@@ -269,63 +165,27 @@ object EmbeddingDedupIndex {
   def bulkLoad(spark: SparkSession, root: String, vecs: DataFrame,
       idCol: String, vecCol: String, dim: Int, threshold: Double,
       bands: Int = 10, bits: Int = 6, maxBucket: Int = 500): String = {
-    Registry.registerAll(spark)
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new Path(root, Intent)),
-      s"a reband of $root is in progress or crashed — rerun reband " +
-        "to converge the store before loading")
-    if (!fs.exists(new Path(root, "_meta.json"))) {
-      require(bits > 0 && bits <= 16, s"bits must be in [1, 16]: $bits")
-      require(bands > 0 && maxBucket > 0,
-        s"bands/maxBucket must be positive: $bands/$maxBucket")
-    }
-    val meta = readOrInitMeta(spark, root,
-      Meta(threshold, bands, bits, maxBucket,
-        probeBuckets = IndexLayout.defaultProbeBuckets(spark)))
-    require(meta.copy(probeBuckets = 0) ==
-      Meta(threshold, bands, bits, maxBucket),
-      s"index at $root was built with $meta; loads must match " +
-        s"(got threshold=$threshold bands=$bands bits=$bits " +
-        s"maxBucket=$maxBucket) — to change geometry, run reband")
-    val p = meta.probeBuckets
-    Lease.withWriter(spark, root) {
-    IndexLayout.withProbePushdown(spark) {
-      val allSegs = ShadowLog.list(fs, new Path(root), "_SUCCESS",
-        _.startsWith("seg-"))._1
-      val segs = allSegs.filterNot(_.endsWith("-tomb"))
-      val tombs = allSegs.filter(_.endsWith("-tomb"))
-      IndexLayout.ensureLayouts(fs, new Path(root), segs,
-        Seq("bands", "vecs"))
-      val cap = IndexLayout.probeKeyCap(spark)
-      val rawBase = notTombstoned(spark, root, tombs,
-        vecs.select(col(idCol).as("id"), col(vecCol).as("v"),
-          sqrt(Knn.dot(col(vecCol), col(vecCol))).as("nm")), "id")
-      val batchIds = if (segs.isEmpty) None
-        else IndexLayout.collectKeys(
-          vecs.select(col(idCol)).distinct(), p, cap, "batch ids")
-      val base = (if (segs.isEmpty) rawBase.dropDuplicates("id")
-        else rawBase.dropDuplicates("id")
-          .join(probeVecs(spark, root, segs, p, batchIds)
-            .select(col("id")), Seq("id"), "left_anti")).materialize()
-      val newBands = base.select(col("id"), posexplode(array(
-          (0 until bands).map(j =>
-            Knn.lshBucketSeeded(col("v"), dim, bits, seed = j)): _*))
-        .as(Seq("band", "bucket")))
-      val seg = f"seg-${System.currentTimeMillis()}%013d-${
-        saveSeq.incrementAndGet()}%04d"
-      // flat-sorted L0, like the text twin's bulk loads: a bootstrap
-      // is a few large loads + one compactSegments (which buckets)
-      IndexLayout.writeSorted(newBands, "bucket", s"$root/$seg/bands", 0)
-      IndexLayout.writeSorted(base.select("id", "v", "nm"), "id",
-        s"$root/$seg/vecs", 0)
-      fs.create(new Path(root, s"$seg/_SUCCESS"), true).close()
-      IndexLayout.recordLayouts(fs, new Path(root),
-        Map(seg -> Map("bands" -> Nil, "vecs" -> Nil)), segs :+ seg)
-      seg
-    }
+    val meta = openMeta(spark, root, threshold, bands, bits, maxBucket,
+      "loading", "loads")
+    store.withWriter(spark, root, meta.probeBuckets, None) { w =>
+      val base = w.firstWrites(vecRows(vecs, idCol, vecCol), "vecs")
+      w.commit("bands" -> bandRows(base, dim, bands, bits), "vecs" -> base)
     }
   }
+
+  /** (id, v, nm): the vector and its norm, the `vecs` table's rows. */
+  private def vecRows(df: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(vecCol).as("v"),
+      sqrt(Knn.dot(col(vecCol), col(vecCol))).as("nm"))
+
+  /** One (id, band, bucket) sign-LSH row per band of each vector. */
+  private def bandRows(vecs: DataFrame, dim: Int, bands: Int,
+      bits: Int): DataFrame =
+    vecs.select(col("id"), posexplode(array(
+        (0 until bands).map(j =>
+          Knn.lshBucketSeeded(col("v"), dim, bits, seed = j)): _*))
+      .as(Seq("band", "bucket")))
 
   /** The per-batch store probes — the EXACT reads update() issues,
     * package-private so PlanAuditSpec can pin their pushdown/pruning
@@ -333,54 +193,12 @@ object EmbeddingDedupIndex {
   private[graft] def probeBands(spark: SparkSession, root: String,
       segs: Seq[String], p: Int,
       buckets: Option[Array[(Any, Int)]]): DataFrame =
-    probeTable(spark, root, segs, "bands",
-      "band INT, bucket BIGINT, id BIGINT", "bucket", p, buckets)
+    store.probeTable(spark, root, segs, "bands", p, buckets)
 
   private[graft] def probeVecs(spark: SparkSession, root: String,
       segs: Seq[String], p: Int,
       ids: Option[Array[(Any, Int)]]): DataFrame =
-    probeTable(spark, root, segs, "vecs",
-      "id BIGINT, v ARRAY<FLOAT>, nm DOUBLE", "id", p, ids)
-
-  /** Flat-L0 + grouped-bucketed probe plan — see
-    * DedupIndex.probeTable / IndexLayout. */
-  private def probeTable(spark: SparkSession, root: String,
-      segs: Seq[String], table: String, ddl: String, keyCol: String,
-      p: Int, keys: Option[Array[(Any, Int)]]): DataFrame = keys match {
-    case None => readSegs(spark, root, segs, table, ddl)
-    case Some(ks) if ks.isEmpty => readSegs(spark, root, Nil, table, ddl)
-    case Some(ks) =>
-      val fs = new Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      // one manifest read resolves every segment's layout; a miss
-      // costs one listStatus for that segment only (see IndexLayout)
-      val rootP = new Path(root)
-      val cached = IndexLayout.readLayouts(fs, rootP)
-      val dirsBySeg = segs.map(s => s ->
-        IndexLayout.layoutFor(fs, rootP, cached, s, table)).toMap
-      val lay: IndexLayout.SegLayouts =
-        dirsBySeg.map { case (s, ds) => s -> Map(table -> ds) }
-      val (bucketed, flat) = segs.partition(s => dirsBySeg(s).nonEmpty)
-      val allKeys = ks.map(_._1)
-      val tail = if (flat.isEmpty) Nil
-        else Seq(readSegs(spark, root, flat, table, ddl,
-            layouts = Some(lay))
-          .where(IndexLayout.chain(spark, keyCol, allKeys)))
-      val bulk = if (bucketed.isEmpty) Nil
-        else if (p <= 0)
-          Seq(readSegs(spark, root, bucketed, table, ddl,
-              layouts = Some(lay))
-            .where(IndexLayout.chain(spark, keyCol, allKeys)))
-        else IndexLayout.scanGroups(spark, ks).map { case (dirs, gks) =>
-          readSegs(spark, root, bucketed, table, ddl, subs = dirs,
-              layouts = Some(lay))
-            .where(IndexLayout.chain(spark, keyCol, gks))
-        }
-      (tail ++ bulk) match {
-        case Nil => readSegs(spark, root, Nil, table, ddl)
-        case parts => parts.reduce(_ unionByName _)
-      }
-  }
+    store.probeTable(spark, root, segs, "vecs", p, ids)
 
   /** Migrate the store to a NEW LSH geometry without re-ingesting:
     * the vectors are the source of truth (`vecs/` persists them
@@ -399,7 +217,8 @@ object EmbeddingDedupIndex {
     *  1. `_reband` intent lands first (carrying the full target
     *     meta); [[update]] REFUSES while it exists;
     *  2. new bands + copied vecs + `_sources` closure + `_SUCCESS`
-    *     commit the segment under the shadow protocol;
+    *     commit the segment under the shadow protocol
+    *     ([[SegmentStore.seal]]);
     *  3. `_meta.json` is overwritten with the target geometry;
     *  4. the intent is cleared and shadowed sources deleted.
     * A crash at any point re-converges by calling reband again with
@@ -411,82 +230,55 @@ object EmbeddingDedupIndex {
   def reband(spark: SparkSession, root: String, bands: Int, bits: Int,
       maxBucket: Int): String = Lease.withWriter(spark, root) {
     Registry.registerAll(spark)
-    require(bits > 0 && bits <= 16, s"bits must be in [1, 16]: $bits")
-    require(bands > 0 && maxBucket > 0,
-      s"bands/maxBucket must be positive: $bands/$maxBucket")
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireGeometry(bands, bits, maxBucket)
+    val fs = SegmentStore.fsOf(spark, root)
     val intentP = new Path(root, Intent)
-    val target =
-      if (fs.exists(intentP)) {
+    val target = readMeta(fs, intentP) match {
+      case Some(t) =>
         // crashed reband: the intent is the contract — recovery must
         // finish THAT migration, not start a different one
-        val t = parseMeta(readSmall(fs, intentP), intentP)
         require(t.bands == bands && t.bits == bits &&
           t.maxBucket == maxBucket,
           s"a crashed reband to $t is pending at $root; rerun with " +
             s"that geometry to converge (got bands=$bands bits=$bits " +
             s"maxBucket=$maxBucket)")
         t
-      } else {
-        val mp = new Path(root, "_meta.json")
-        require(fs.exists(mp), s"no index at $root")
-        val old = parseMeta(readSmall(fs, mp), mp)
-        // replay-pending guard, BEFORE the intent lands (r10 — needed
-        // once StreamingEmbeddingDedup exists): a streaming batch
-        // whose verdicts are not committed WILL be replayed, and the
-        // replay deletes + rewrites its named segment. Reband cannot
-        // EXCLUDE such a segment (old-geometry bands next to the new
-        // generation is the half-migrated recall hole reband exists
-        // to prevent), so a FRESH reband refuses — and it must refuse
-        // before writing the intent, or the stranded intent would
-        // block the very stream recovery that clears the pending
-        // state. (The intent-exists recovery branch above proceeds:
-        // updates refuse while an intent exists, so no NEW batch can
-        // have torn after it landed.)
-        locally {
-          def isStreamSeg(s: String) =
-            DedupIndex.StreamingBatchSegment.matches(s)
-          val committedSegs = ShadowLog.list(fs, p, "_SUCCESS",
-            _.startsWith("seg-"))._1.filterNot(_.endsWith("-tomb"))
-          if (committedSegs.exists(isStreamSeg)) {
-            val pairsBase = new Path(root, "pairs")
-            val pairsCommitted: Set[String] =
-              if (!fs.exists(pairsBase)) Set.empty
-              else {
-                val (vis, shad) =
-                  ShadowLog.list(fs, pairsBase, "_COMMITTED", _ => true)
-                vis.toSet ++ shad
-              }
-            val pending = committedSegs.filter(s =>
-              isStreamSeg(s) && !pairsCommitted(s))
-            require(pending.isEmpty,
-              s"cannot reband $root: streaming batch segment(s) " +
-                s"${pending.mkString(", ")} are replay-pending " +
-                "(verdicts not committed) — their replay would " +
-                "rewrite a segment this migration folds away, " +
-                "silently dropping the batch. Resume the stream to " +
-                "convergence first")
-          }
-        }
-        val t = Meta(old.threshold, bands, bits, maxBucket,
-          probeBuckets = old.probeBuckets)
-        val out = fs.create(intentP, false)
-        try out.write(metaJson(t).getBytes("UTF-8")) finally out.close()
+      case None =>
+        val old = readMeta(fs, new Path(root, "_meta.json"))
+        require(old.nonEmpty, s"no index at $root")
+        // replay-pending guard, BEFORE the intent lands: a streaming
+        // batch whose verdicts are not committed WILL be replayed, and
+        // the replay deletes + rewrites its named segment. Reband
+        // cannot EXCLUDE such a segment (old-geometry bands next to
+        // the new generation is the half-migrated recall hole reband
+        // exists to prevent), so a FRESH reband refuses — and it must
+        // refuse before writing the intent, or the stranded intent
+        // would block the very stream recovery that clears the
+        // pending state. (The intent-exists recovery branch above
+        // proceeds: updates refuse while an intent exists, so no NEW
+        // batch can have torn after it landed.)
+        val pending = store.replayPending(fs, root,
+          store.listing(fs, root)._1)
+        require(pending.isEmpty,
+          s"cannot reband $root: streaming batch segment(s) " +
+            s"${pending.toSeq.sorted.mkString(", ")} are replay-pending " +
+            "(verdicts not committed) — their replay would " +
+            "rewrite a segment this migration folds away, " +
+            "silently dropping the batch. Resume the stream to " +
+            "convergence first")
+        val t = Meta(old.get.threshold, bands, bits, maxBucket,
+          probeBuckets = old.get.probeBuckets)
+        writeMeta(fs, intentP, t, overwrite = false)
         t
-      }
-    val (allSegs, shadowed) = ShadowLog.list(fs, p, "_SUCCESS",
-      _.startsWith("seg-"))
-    val segs = allSegs.filterNot(_.endsWith("-tomb"))
-    val tombs = allSegs.filter(_.endsWith("-tomb"))
+    }
+    val (segs, tombs, shadowed) = store.listing(fs, root)
     require(segs.nonEmpty, s"nothing to reband at $root")
     // materialize BEFORE any write: the vecs read must see the
     // pre-reband store even while this pass rewrites it. Reband is a
     // covering rewrite, so live tombstones are applied AND drained
     // here (their rows never reach the new generation)
-    val vecs = notTombstoned(spark, root, tombs,
-      readSegs(spark, root, segs, "vecs",
-        "id BIGINT, v ARRAY<FLOAT>, nm DOUBLE"), "id").materialize()
+    val vecs = store.notTombstoned(spark, root, tombs,
+      store.readSegments(spark, root, segs, "vecs")).materialize()
     // loud empty-store guard (r8 ADVICE): committed segments can
     // legally hold zero vector rows (an all-duplicate batch), and a
     // bare head() on them threw an unexplained NoSuchElementException
@@ -495,28 +287,17 @@ object EmbeddingDedupIndex {
       s"cannot reband $root: the committed segments hold zero vector " +
         "rows, so the embedding dimension is underivable — the store " +
         "has nothing to migrate")
-    val dim = dimRow.head.getInt(0)
-    val newBands = vecs.select(col("id"), posexplode(array(
-        (0 until bands).map(j =>
-          Knn.lshBucketSeeded(col("v"), dim, bits, seed = j)): _*))
-      .as(Seq("band", "bucket")))
-    val seg = f"seg-${System.currentTimeMillis()}%013d-${
-      saveSeq.incrementAndGet()}%04d-reband"
-    // rewritten under the same sorted probe layout as update()'s
-    // segments — a reband must not cost the store its pruned probes
-    IndexLayout.writeSorted(newBands, "bucket", s"$root/$seg/bands",
-      target.probeBuckets)
-    IndexLayout.writeSorted(vecs, "id", s"$root/$seg/vecs",
-      target.probeBuckets)
-    ShadowLog.writeSources(fs, p, seg,
-      ShadowLog.sourcesClosure(fs, p, segs ++ tombs, shadowed))
-    fs.create(new Path(root, s"$seg/_SUCCESS"), true).close()
-    IndexLayout.recordLayouts(fs, p,
-      Map(seg -> Seq("bands", "vecs").map(t =>
-        t -> IndexLayout.listBp(fs, new Path(root, s"$seg/$t"))).toMap),
-      Seq(seg))
-    val out = fs.create(new Path(root, "_meta.json"), true)
-    try out.write(metaJson(target).getBytes("UTF-8")) finally out.close()
+    val seg = store.newSegment("-reband")
+    // rewritten in the P-way bucketed probe layout — a reband must not
+    // cost the store its pruned probes
+    val layouts = Map(
+      "bands" -> store.writeTable(fs, root, seg, "bands",
+        bandRows(vecs, dimRow.head.getInt(0), bands, bits),
+        target.probeBuckets),
+      "vecs" -> store.writeTable(fs, root, seg, "vecs", vecs,
+        target.probeBuckets))
+    store.seal(fs, root, seg, layouts, Nil, segs ++ tombs, shadowed)
+    writeMeta(fs, new Path(root, "_meta.json"), target, overwrite = true)
     fs.delete(intentP, false)
     (segs ++ tombs).foreach(s => fs.delete(new Path(root, s), true))
     seg
@@ -525,277 +306,126 @@ object EmbeddingDedupIndex {
   /** Merge every committed segment into ONE compacted segment — the
     * janitorial pass for a long-lived embedding store (an update per
     * micro-batch accumulates KB-scale segments exactly like
-    * [[DedupIndex]]'s log; until r9 the only rewrite here was
-    * [[reband]], which re-derives every band from the vectors — a
-    * full hash pass a mere file-count cure does not need). Semantics
-    * preserved by construction: a vector's band/vecs rows depend only
-    * on itself. Same crash-safe `_sources`-shadow swap as
-    * [[DedupIndex.compactSegments]], and the same LSM effect: the
-    * merged segment is written in the P-way bucketed probe layout
-    * (from the store's pinned meta; declined for tables smaller than
-    * P × blockBytes). Refuses while a reband intent is pending — the
-    * reband owns the store until it converges. Replay-pending guard
-    * (since [[graft.streaming.StreamingEmbeddingDedup]] exists): a
-    * streaming-named segment whose verdicts are not committed under
-    * `root/pairs` is excluded, exactly the [[DedupIndex]] contract —
-    * folding it would let the crash-recovery rewrite double the
-    * batch. */
+    * [[DedupIndex]]'s log; [[reband]] would re-derive every band from
+    * the vectors — a full hash pass a mere file-count cure does not
+    * need). See [[SegmentStore.compactSegments]] for the swap, the
+    * bucketed layout and the replay-pending guard. Refuses while a
+    * reband intent is pending — the reband owns the store until it
+    * converges. */
   def compactSegments(spark: SparkSession, root: String,
       targetBytes: Long = 128L * 1024 * 1024): Option[String] =
-    Lease.withWriter(spark, root) {
-      val (all, shadowed, srcs, tombs) = eligibleSources(spark, root)
-      if (srcs.size < 2) None
-      else mergeSources(spark, root, all, shadowed, srcs, tombs,
-        targetBytes)
-    }
+    store.compactSegments(spark, root, targetBytes)
 
   /** Tiered (size-ratio) compaction — the hot-path form the streaming
-    * twin's auto-compaction runs; see [[DedupIndex.compactTiered]]
-    * (same policy, [[Compaction.tieredPick]]) and [[compactSegments]]
-    * (same protocol and guards). */
+    * twin's auto-compaction runs; see [[SegmentStore.compactTiered]]. */
   def compactTiered(spark: SparkSession, root: String,
       targetBytes: Long = 128L * 1024 * 1024,
       ratio: Option[Double] = None): Option[String] =
-    Lease.withWriter(spark, root) {
-    val (all, shadowed, srcs, tombs) = eligibleSources(spark, root)
-    if (srcs.size < 2) None
-    else {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sized = srcs.map(s =>
-      s -> fs.getContentSummary(new Path(p, s)).getLength)
-    val r = ratio.getOrElse(
-      spark.conf.getOption("graft.dedup.compactRatio")
-        .map(_.toDouble).getOrElse(4.0))
-    val pick = Compaction.tieredPick(sized, r)
-    if (pick.size < 2) None
-    else mergeSources(spark, root, all, shadowed, pick, tombs, targetBytes)
-    }
-    }
+    store.compactTiered(spark, root, targetBytes, ratio)
 
-  /** Same eligibility contract as DedupIndex.eligibleSources: visible
-    * committed data segments minus the streaming replay-pending set,
-    * plus the live tombstones. */
-  private def eligibleSources(spark: SparkSession, root: String)
-      : (Seq[String], Set[String], Seq[String], Seq[String]) = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new Path(root, Intent)),
-      s"a reband of $root is in progress or crashed — rerun reband " +
-        "to converge the store before compacting")
-    val (allWithTombs, shadowed) =
-      ShadowLog.list(fs, p, "_SUCCESS", _.startsWith("seg-"))
-    val tombs = allWithTombs.filter(_.endsWith("-tomb"))
-    val all = allWithTombs.filterNot(_.endsWith("-tomb"))
-    def isStreamSeg(s: String) =
-      DedupIndex.StreamingBatchSegment.matches(s)
-    val pairsBase = new Path(root, "pairs")
-    val replayPending: Set[String] =
-      if (!all.exists(isStreamSeg)) Set.empty
-      else if (!fs.exists(pairsBase)) all.filter(isStreamSeg).toSet
-      else {
-        val (vis, shad) = ShadowLog.list(fs, pairsBase, "_COMMITTED", _ => true)
-        val pairsCommitted = vis.toSet ++ shad
-        all.filter(s => isStreamSeg(s) && !pairsCommitted(s)).toSet
-      }
-    (all, shadowed, all.filterNot(replayPending), tombs)
-  }
-
-  private def mergeSources(spark: SparkSession, root: String,
-      all: Seq[String], shadowed: Set[String], srcs: Seq[String],
-      tombs: Seq[String], targetBytes: Long): Option[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val coversAll = all.toSet == srcs.toSet
-    val pBuckets = {
-      val mp = new Path(root, "_meta.json")
-      if (!fs.exists(mp)) 0
-      else parseMeta(readSmall(fs, mp), mp).probeBuckets
-    }
-    val seg = f"seg-${System.currentTimeMillis()}%013d-${
-      saveSeq.incrementAndGet()}%04d-compact"
-    for ((table, key, ddl) <- Seq(
-        ("bands", "bucket", "band INT, bucket BIGINT, id BIGINT"),
-        ("vecs", "id", "id BIGINT, v ARRAY<FLOAT>, nm DOUBLE"))) {
-      val paths = srcs.map(s => s"$root/$s/$table")
-      val pl = Compaction.planAll(spark, paths, targetBytes)
-      val pw = if (pl.nBytes >=
-          pBuckets.toLong * IndexLayout.blockBytes(spark)) pBuckets
-        else 0
-      // compaction APPLIES live tombstones — see DedupIndex
-      IndexLayout.writeSorted(
-        notTombstoned(spark, root, tombs,
-          readSegs(spark, root, srcs, table, ddl), "id"), key,
-        s"$root/$seg/$table", pw, nOut = Some(pl.nOut))
-    }
-    // a covering merge drains the tombstones with its sources
-    val drained = if (coversAll) tombs else Nil
-    ShadowLog.writeSources(fs, p, seg,
-      ShadowLog.sourcesClosure(fs, p, srcs ++ drained, shadowed))
-    fs.create(new Path(root, s"$seg/_SUCCESS"), true).close()
-    // live set re-listed AFTER the marker: the new target is visible
-    // and its sources are already shadowed, so the manifest prunes to
-    // exactly what readers can see
-    IndexLayout.recordLayouts(fs, p,
-      Map(seg -> Seq("bands", "vecs").map(t =>
-        t -> IndexLayout.listBp(fs, new Path(root, s"$seg/$t"))).toMap),
-      segments(spark, root))
-    (srcs ++ drained).foreach(s => fs.delete(new Path(root, s), true))
-    Some(seg)
-  }
-
-  /** Delete segment directories no reader can see — same contract as
-    * [[DedupIndex.vacuumShadowed]]. */
+  /** Delete segment directories no reader can see — see
+    * [[SegmentStore.vacuumShadowed]]. */
   def vacuumShadowed(spark: SparkSession, root: String): Seq[String] =
-    Lease.withWriter(spark, root) {
-      val p = new Path(root)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      ShadowLog.vacuum(fs, p, "_SUCCESS", _.startsWith("seg-"))
-    }
+    store.vacuumShadowed(spark, root)
 
   /** All committed, non-retracted vectors. */
   def currentVecs(spark: SparkSession, root: String): DataFrame =
-    notTombstoned(spark, root, tombSegments(spark, root),
-      readSegs(spark, root, segments(spark, root), "vecs",
-        "id BIGINT, v ARRAY<FLOAT>, nm DOUBLE"), "id")
+    store.current(spark, root, "vecs")
 
   /** Committed, unshadowed DATA segments (tombstones separate). */
-  def segments(spark: SparkSession, root: String): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ShadowLog.list(fs, p, "_SUCCESS", _.startsWith("seg-"))._1
-      .filterNot(_.endsWith("-tomb"))
-  }
+  def segments(spark: SparkSession, root: String): Seq[String] =
+    store.segments(spark, root)
 
   private[graft] def tombSegments(spark: SparkSession,
-      root: String): Seq[String] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ShadowLog.list(fs, p, "_SUCCESS", _.startsWith("seg-"))._1
-      .filter(_.endsWith("-tomb"))
-  }
+      root: String): Seq[String] = store.tombSegments(spark, root)
 
-  /** RETRACT vectors from the index — same contract, protocol and
-    * cost model as [[DedupIndex.tombstone]]: a live tombstone hides
-    * the id from every reader/probe and drops its re-arrivals; a
-    * covering compaction (or [[reband]], which rewrites everything)
-    * applies it physically and drains it. */
+  /** RETRACT vectors from the index — [[SegmentStore.tombstone]]'s
+    * contract; [[reband]], which rewrites everything, also applies
+    * and drains live tombstones. */
   def tombstone(spark: SparkSession, root: String,
-      ids: DataFrame): Option[String] = {
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(root, "_meta.json")), s"no index at $root")
-    val idDf = ids.select(col(ids.columns.head).as("id")).distinct()
-    if (idDf.isEmpty) None
-    else Lease.withWriter(spark, root) {
-      val seg = f"seg-${System.currentTimeMillis()}%013d-${
-        saveSeq.incrementAndGet()}%04d-tomb"
-      IndexLayout.writeSorted(idDf, "id", s"$root/$seg/ids", 0)
-      fs.create(new Path(root, s"$seg/_SUCCESS"), true).close()
-      Some(seg)
-    }
-  }
+      ids: DataFrame): Option[String] = store.tombstone(spark, root, ids)
 
   /** The live (unapplied) tombstoned ids — empty when none. */
   def tombstonedIds(spark: SparkSession, root: String): DataFrame =
-    tombIdsOf(spark, root, tombSegments(spark, root))
-
-  private def tombIdsOf(spark: SparkSession, root: String,
-      tombs: Seq[String]): DataFrame =
-    if (tombs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("id BIGINT"))
-    else spark.read.parquet(tombs.map(s => s"$root/$s/ids"): _*)
-      .select("id").distinct()
-
-  private def notTombstoned(spark: SparkSession, root: String,
-      tombs: Seq[String], df: DataFrame, idColName: String): DataFrame =
-    if (tombs.isEmpty) df
-    else df.join(
-      tombIdsOf(spark, root, tombs).select(col("id").as(idColName)),
-      Seq(idColName), "left_anti")
-
-  /** Union read of committed segments' `table` dirs — same bp-aware
-    * contract as DedupIndex.readSegments. */
-  private def readSegs(spark: SparkSession, root: String,
-      segs: Seq[String], table: String, emptyDdl: String,
-      subs: Seq[String] = Nil,
-      layouts: Option[IndexLayout.SegLayouts] = None): DataFrame = {
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(emptyDdl))
-    segs match {
-      case Nil => empty
-      case ss =>
-        val fs = new Path(root).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val rootP = new Path(root)
-        val lay = layouts.getOrElse(IndexLayout.readLayouts(fs, rootP))
-        def bps(s: String): Seq[String] =
-          IndexLayout.layoutFor(fs, rootP, lay, s, table)
-        // leaf-dir reads, never partition discovery — see
-        // DedupIndex.readSegments; layout from the manifest, no
-        // per-(segment × dir) exists calls
-        val paths =
-          if (subs.nonEmpty)
-            ss.flatMap { s =>
-              val have = bps(s).toSet
-              subs.filter(have).map(d => s"$root/$s/$table/$d")
-            }
-          else ss.flatMap { s =>
-            val ds = bps(s)
-            if (ds.isEmpty) Seq(s"$root/$s/$table")
-            else ds.map(d => s"$root/$s/$table/$d")
-          }
-        if (paths.isEmpty) empty
-        else spark.read.parquet(paths: _*)
-    }
-  }
+    store.tombstonedIds(spark, root)
 
   /** Reband intent marker: present from the moment a reband starts
-    * until its meta flip completes — updates refuse while it exists,
-    * closing the half-flipped-geometry window. */
+    * until its meta flip completes — updates, loads and compactions
+    * refuse while it exists, closing the half-flipped-geometry
+    * window. */
   private val Intent = "_reband"
 
-  private def metaJson(m: Meta): String =
-    s"""{"threshold":${m.threshold},"bands":${m.bands},"bits":${m.bits},"maxBucket":${m.maxBucket},"family":"${m.family}","probeBuckets":${m.probeBuckets}}"""
+  private def refuseRebanding(fs: FileSystem, root: String,
+      doing: String): Unit =
+    require(!fs.exists(new Path(root, Intent)),
+      s"a reband of $root is in progress or crashed — rerun reband " +
+        s"to converge the store before $doing")
 
-  private def parseMeta(txt: String, at: Path): Meta = {
-    val m = """\{"threshold":([0-9.eE+-]+),"bands":(\d+),"bits":(\d+),"maxBucket":(\d+)(?:,"family":"([A-Za-z0-9._-]+)")?(?:,"probeBuckets":(\d+))?\}"""
-      .r.findFirstMatchIn(txt.trim)
-      .getOrElse(throw new IllegalStateException(
-        s"unreadable embedding-dedup-index meta at $at: $txt"))
-    Meta(m.group(1).toDouble, m.group(2).toInt, m.group(3).toInt,
-      m.group(4).toInt,
-      // family absent = written by the build that introduced md5
-      // hyperplanes together with this field (see the Meta scaladoc);
-      // probeBuckets absent = pre-bucketed-layout store (flat, 0)
-      Option(m.group(5)).getOrElse(Knn.HyperplaneFamily),
-      Option(m.group(6)).map(_.toInt).getOrElse(0))
+  /** Loud bounds, enforced when a geometry is about to be pinned:
+    * bits <= 0 degenerates every vector into one bucket, and the cap
+    * is 16 like the bulk path (Knn.nearDupPairsLsh) — 2^16 buckets per
+    * band already discriminates a billion-row store, while an
+    * unbounded bits lets the per-band bucket space (and with it any
+    * bucket-census frame) outgrow executor memory. */
+  private def requireGeometry(bands: Int, bits: Int, maxBucket: Int): Unit = {
+    require(bits > 0 && bits <= 16, s"bits must be in [1, 16]: $bits")
+    require(bands > 0 && maxBucket > 0,
+      s"bands/maxBucket must be positive: $bands/$maxBucket")
   }
 
-  private def readSmall(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
-
-  private def readOrInitMeta(spark: SparkSession, root: String,
-      init: Meta): Meta = {
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+  /** The pinned meta (created on first use), checked against the
+    * caller's geometry. The reband-intent check runs BEFORE the meta
+    * parse (r8 ADVICE): a crash during reband's _meta.json rewrite
+    * leaves a torn meta, and parsing it first would report
+    * "unreadable meta" instead of the actionable recovery
+    * instruction. Bounds are checked only at store CREATION: an
+    * existing store is validated against its own pinned meta, so a
+    * store legally created under an older bound is not bricked by a
+    * tightened one — its migration path is [[reband]]. */
+  private def openMeta(spark: SparkSession, root: String,
+      threshold: Double, bands: Int, bits: Int, maxBucket: Int,
+      doing: String, verb: String): Meta = {
+    Registry.registerAll(spark)
+    val fs = SegmentStore.fsOf(spark, root)
+    refuseRebanding(fs, root, doing)
     val mp = new Path(root, "_meta.json")
-    if (fs.exists(mp)) parseMeta(readSmall(fs, mp), mp)
-    else {
+    val meta = readMeta(fs, mp).getOrElse {
+      requireGeometry(bands, bits, maxBucket)
       fs.mkdirs(new Path(root))
-      val out = fs.create(mp, false)
-      try out.write(metaJson(init).getBytes("UTF-8"))
-      finally out.close()
+      val init = Meta(threshold, bands, bits, maxBucket,
+        probeBuckets = IndexLayout.defaultProbeBuckets(spark))
+      writeMeta(fs, mp, init, overwrite = false)
       init
     }
+    require(meta.copy(probeBuckets = 0) ==
+      Meta(threshold, bands, bits, maxBucket),
+      s"index at $root was built with $meta; $verb must match " +
+        s"(got threshold=$threshold bands=$bands bits=$bits " +
+        s"maxBucket=$maxBucket) — to change geometry, run reband")
+    meta
   }
 
-  private val saveSeq = new java.util.concurrent.atomic.AtomicLong()
+  private def writeMeta(fs: FileSystem, p: Path, m: Meta,
+      overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(
+      s"""{"threshold":${m.threshold},"bands":${m.bands},"bits":${m.bits},"maxBucket":${m.maxBucket},"family":"${m.family}","probeBuckets":${m.probeBuckets}}"""
+        .getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  private def readMeta(fs: FileSystem, at: Path): Option[Meta] =
+    SegmentStore.readSmall(fs, at).map { txt =>
+      val m = """\{"threshold":([0-9.eE+-]+),"bands":(\d+),"bits":(\d+),"maxBucket":(\d+)(?:,"family":"([A-Za-z0-9._-]+)")?(?:,"probeBuckets":(\d+))?\}"""
+        .r.findFirstMatchIn(txt.trim)
+        .getOrElse(throw new IllegalStateException(
+          s"unreadable embedding-dedup-index meta at $at: $txt"))
+      Meta(m.group(1).toDouble, m.group(2).toInt, m.group(3).toInt,
+        m.group(4).toInt,
+        // family absent = written by the build that introduced md5
+        // hyperplanes together with this field (see the Meta scaladoc);
+        // probeBuckets absent = pre-bucketed-layout store (flat, 0)
+        Option(m.group(5)).getOrElse(Knn.HyperplaneFamily),
+        Option(m.group(6)).map(_.toInt).getOrElse(0))
+    }
 }

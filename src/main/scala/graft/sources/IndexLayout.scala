@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.slf4j.LoggerFactory
 
 /** Probe-prunable layout for the incremental dedup stores
-  * ([[DedupIndex]], [[EmbeddingDedupIndex]]) — the mechanism that
+  * ([[SegmentStore]], behind [[DedupIndex]] and
+  * [[EmbeddingDedupIndex]]) — the mechanism that
   * makes the per-micro-batch store READ O(batch), matching what the
   * protocol already guaranteed for state and writes.
   *
@@ -51,7 +52,7 @@ import org.slf4j.LoggerFactory
   *     write shuffles than it saves, and auto-compaction keeps the
   *     tail short anyway. A probe is then: one scan over the flat
   *     tail pushing the full chain (tail row groups are few, so the
-  *     eval term is tiny) UNIONED with ≤[[probeScanGroups]] scans
+  *     eval term is tiny) UNIONED with ≤[[ProbeScanGroups]] scans
   *     over the bucketed segments, each reading only the leaf dirs
   *     its key group routes to and pushing only that group's chain.
   *     Chain-eval work over the store's bulk drops to
@@ -162,13 +163,15 @@ object IndexLayout {
     (if (p > 0) w.partitionBy("bp") else w).parquet(path)
   }
 
-  /** Per-`isin`-chunk key count — each chunk is pushed as an
-    * OR-of-eq chain, so this bounds predicate/visitor recursion
-    * depth (1000 frames is safe on default JVM stacks; the balanced
-    * OR-tree above the chunks adds only log₂(chunks)). */
-  def probeChainLen(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption("graft.dedup.probeChainLen").map(_.toInt)
-      .getOrElse(1000)
+  /** Per-`isin`-chunk key count — each chunk is pushed as a
+    * left-deep OR-of-eq chain, so this bounds parquet's filter-visitor
+    * recursion depth (the balanced OR-tree above the chunks adds only
+    * log₂(chunks)). 1000 was NOT safe on a default 1 MiB task-thread
+    * stack: each chain level costs several (pre-JIT, large) frames,
+    * and the tiered-compaction spec's 24k-bucket probe overflowed it
+    * in 3 of 10 runs; 256 keeps a 4× margin at the same number
+    * of evaluated leaves. */
+  val ProbeChainLen = 256
 
   /** The batch's touched keys, collected WITH their bucket routes —
     * None when the batch exceeds the cap (caller reads unpruned;
@@ -195,17 +198,13 @@ object IndexLayout {
     * shorter chains but more driver planning/scheduling — 16 is the
     * measured local sweet spot; chain-eval stays O(batch × store ×
     * groups / P). */
-  def probeScanGroups(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption("graft.dedup.probeScanGroups").map(_.toInt)
-      .getOrElse(16)
+  val ProbeScanGroups = 16
 
-  /** Balanced OR-tree of ≤[[probeChainLen]]-key `isin` chunks —
+  /** Balanced OR-tree of ≤[[ProbeChainLen]]-key `isin` chunks —
     * semantically the `isin` the join would apply anyway, shaped so
     * expression/visitor recursion stays O(chainLen + log chunks). */
-  def chain(spark: org.apache.spark.sql.SparkSession, keyCol: String,
-      ks: Array[Any]): Column = {
-    val chunk = probeChainLen(spark)
-    val parts = ks.grouped(chunk)
+  def chain(keyCol: String, ks: Array[Any]): Column = {
+    val parts = ks.grouped(ProbeChainLen)
       .map(g => col(keyCol).isin(g.toIndexedSeq: _*)).toIndexedSeq
     def bal(lo: Int, hi: Int): Column =
       if (lo == hi) parts(lo)
@@ -213,20 +212,19 @@ object IndexLayout {
     bal(0, parts.length - 1)
   }
 
-  /** Routed keys packed into ≤[[probeScanGroups]] scan groups:
+  /** Routed keys packed into ≤[[ProbeScanGroups]] scan groups:
     * (bp dir names, that group's keys). */
-  def scanGroups(spark: org.apache.spark.sql.SparkSession,
-      ks: Array[(Any, Int)]): Seq[(Seq[String], Array[Any])] = {
+  def scanGroups(ks: Array[(Any, Int)]): Seq[(Seq[String], Array[Any])] = {
     val byBp = ks.groupBy(_._2).toSeq.sortBy(_._1)
     val per = math.max(1, math.ceil(
-      byBp.size.toDouble / probeScanGroups(spark)).toInt)
+      byBp.size.toDouble / ProbeScanGroups).toInt)
     byBp.grouped(per).map { grp =>
       (grp.map(g => s"bp=${g._1}"), grp.flatMap(_._2.map(_._1)).toArray)
     }.toSeq
   }
 
   /** Run `f` with the In→eq-chain parquet conversion threshold
-    * raised to [[probeChainLen]]: Spark's default (10) pushes larger
+    * raised to [[ProbeChainLen]]: Spark's default (10) pushes larger
     * IN-lists as a native In predicate, whose statistics evaluation
     * is envelope-only and prunes nothing for hash-spread keys. Both
     * index updates plan and MATERIALIZE every probe-dependent frame
@@ -250,7 +248,7 @@ object IndexLayout {
       val (depth, prev) = pushdownScopes.getOrElse(spark, (0, None))
       if (depth == 0) {
         val p = spark.conf.getOption(key)
-        spark.conf.set(key, math.max(probeChainLen(spark),
+        spark.conf.set(key, math.max(ProbeChainLen,
           p.map(_.toInt).getOrElse(10)).toString)
         pushdownScopes(spark) = (1, p)
       } else pushdownScopes(spark) = (depth + 1, prev)

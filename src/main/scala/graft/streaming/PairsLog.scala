@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, input_file_name}
 
-import graft.sources.{Compaction, DedupIndex, ShadowLog}
+import graft.sources.{Compaction, SegmentStore, ShadowLog}
 
 /** The streaming verdict log — one place for the machinery both
   * dedup-on-arrival streams share ([[StreamingDedup]] text pairs,
@@ -170,7 +170,7 @@ private[streaming] object PairsLog {
     val live = liveIndexSegs
     ShadowLog.writeSources(fs, p, seg,
       ShadowLog.sourcesClosure(fs, p, srcs, shadowed,
-        retain = s => DedupIndex.StreamingBatchSegment.matches(s) &&
+        retain = s => SegmentStore.StreamingBatchSegment.matches(s) &&
           live(s)))
     fs.create(new Path(p, s"$seg/_COMMITTED"), true).close()
     srcs.foreach(d => fs.delete(new Path(p, d), true))

@@ -843,4 +843,84 @@ class DedupIndexSpec extends AnyFunSuite with SparkFixture {
     }
     assert(e.getMessage.contains("must match"))
   }
+
+  test("bulkLoad heals a manifest hole, as update does") {
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    import graft.sources.{EmbeddingDedupIndex, IndexLayout}
+    def covered(root: String, live: Seq[String]): Unit = {
+      val rootP = new Path(root)
+      val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(live.size >= 2)
+      assert(live.toSet.subsetOf(IndexLayout.readLayouts(fs, rootP).keySet),
+        s"manifest misses ${live.toSet -- IndexLayout.readLayouts(fs, rootP).keySet}")
+    }
+    def dropManifest(root: String): Unit = {
+      val rootP = new Path(root)
+      rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(new Path(rootP, "_layouts"), false)
+    }
+    val docs = Tables.documents(spark, sfDir)
+      .select("doc_id", "text").localCheckpoint()
+    val root = Files.createTempDirectory("dedup-bulk-heal").toString
+    DedupIndex.bulkLoad(spark, root, docs.filter(col("doc_id") < 60),
+      "doc_id", "text", threshold = 0.8)
+    dropManifest(root)
+    DedupIndex.bulkLoad(spark, root,
+      docs.filter(col("doc_id") >= 60 && col("doc_id") < 120),
+      "doc_id", "text", threshold = 0.8)
+    covered(root, DedupIndex.segments(spark, root))
+
+    val eroot = Files.createTempDirectory("ededup-bulk-heal").toString
+    def vecs(ids: Range) = ids.map(i =>
+      (i.toLong, Array.tabulate(8)(j => ((i * 7 + j * 3) % 11).toFloat)))
+      .toDF("vec_id", "embedding")
+    EmbeddingDedupIndex.bulkLoad(spark, eroot, vecs(0 until 20),
+      "vec_id", "embedding", dim = 8, threshold = 0.9, bits = 4)
+    dropManifest(eroot)
+    EmbeddingDedupIndex.bulkLoad(spark, eroot, vecs(20 until 40),
+      "vec_id", "embedding", dim = 8, threshold = 0.9, bits = 4)
+    covered(eroot, EmbeddingDedupIndex.segments(spark, eroot))
+  }
+
+  test("an oph:true meta fails loudly; oph:false or absent still opens") {
+    import org.apache.hadoop.fs.Path
+    val docs = Tables.documents(spark, sfDir)
+      .select("doc_id", "text").filter(col("doc_id") < 30)
+    val root = Files.createTempDirectory("dedup-index-oph").toString
+    val mp = new Path(root, "_meta.json")
+    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def writeMeta(tail: String): Unit = {
+      val out = fs.create(mp, true)
+      try out.write(("""{"threshold":0.8,"numHashes":30,"bands":6,""" +
+        s""""probeBuckets":64$tail}""").getBytes("UTF-8"))
+      finally out.close()
+    }
+    // the build that had the opt-in one-permutation signatures wrote
+    // the field; a store built with them is unprobeable now
+    writeMeta(""","oph":true""")
+    for (run <- Seq[() => Any](
+        () => DedupIndex.update(spark, root, docs, "doc_id", "text",
+          threshold = 0.8),
+        () => DedupIndex.bulkLoad(spark, root, docs, "doc_id", "text",
+          threshold = 0.8))) {
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains("one-permutation") &&
+        e.getMessage.contains("Rebuild"), e.getMessage)
+    }
+    assert(DedupIndex.segments(spark, root).isEmpty)
+    // classic stores open whether or not they carry the field
+    writeMeta(""","oph":false""")
+    DedupIndex.update(spark, root, docs, "doc_id", "text", threshold = 0.8)
+    writeMeta("")
+    DedupIndex.update(spark, root, docs, "doc_id", "text", threshold = 0.8)
+    assert(DedupIndex.currentSets(spark, root).count() == docs.count())
+    // a fresh store does not write the field
+    val fresh = Files.createTempDirectory("dedup-index-nooph").toString
+    DedupIndex.update(spark, fresh, docs, "doc_id", "text", threshold = 0.8)
+    val fin = fs.open(new Path(fresh, "_meta.json"))
+    val ftxt = try scala.io.Source.fromInputStream(fin, "UTF-8").mkString
+    finally fin.close()
+    assert(!ftxt.contains("oph"), ftxt)
+  }
 }

@@ -175,8 +175,7 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
     assert(Dedup.duplicateSpans(selfRep, "doc_id", "text", n = 8).count() == 0)
   }
 
-  test("one-permutation minhash: planted near-dups recalled exactly " +
-      "like the classic k-pass signatures; store pins the scheme") {
+  test("k-pass minhash recalls every planted near-dup") {
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
     // 60 base docs of ~60 distinct tokens; 40 planted near-dups with
@@ -195,28 +194,10 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val classic = found(
       Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.8))
-    spark.conf.set("graft.minhash.oph", "true")
-    val oph = try found(
-      Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.8))
-    finally spark.conf.unset("graft.minhash.oph")
     assert(planted.subsetOf(classic), s"classic missed ${planted -- classic}")
-    assert(planted.subsetOf(oph), s"oph missed ${planted -- oph}")
-    // precision is exact under both (verification is exact Jaccard):
-    // every found pair really clears the threshold
+    // precision is exact (verification is exact Jaccard): every found
+    // pair really clears the threshold
     assert(classic == found(Dedup.minhashNearDups(docs, "doc_id", "text",
       threshold = 0.8)), "classic is deterministic")
-    // the store pins the scheme at creation: updates WITHOUT the conf
-    // keep probing with OPH signatures and find cross-batch dups
-    val root = java.nio.file.Files
-      .createTempDirectory("dedup-oph-store").toString
-    spark.conf.set("graft.minhash.oph", "true")
-    try graft.sources.DedupIndex.update(spark, root,
-      docs.filter(col("doc_id") < 1000), "doc_id", "text", threshold = 0.8)
-    finally spark.conf.unset("graft.minhash.oph")
-    val r2 = graft.sources.DedupIndex.update(spark, root,
-      docs.filter(col("doc_id") >= 1000), "doc_id", "text", threshold = 0.8)
-    assert(planted.subsetOf(found(r2.pairs)),
-      "meta-pinned OPH store must keep detecting across batches " +
-        "without the conf set")
   }
 }

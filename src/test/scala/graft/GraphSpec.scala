@@ -424,6 +424,12 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     assert(cc.values.toSet == Set("a") && ccRounds == cc)
     val (lp, lpRounds) = both(Algorithms.labelPropagation(e, 3))
     assert(lpRounds == lp)
+    // betweenness: the null node is neither counted into n (the n/k
+    // scale) nor drawn as a seed; on the 4-cycle each node carries
+    // half of the one pair routed through it either way
+    val (bc, bcRounds) = both(Algorithms.betweenness(e))
+    assert(bc == Map("a" -> 0.5, "b" -> 0.5, "c" -> 0.5, "d" -> 0.5))
+    assert(bcRounds == bc)
   }
 
   // Several components, LPA count ties, and ids whose orders disagree:
