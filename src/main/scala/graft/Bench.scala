@@ -36,6 +36,27 @@ package graft
   *    without digging through git history.
   */
 object Bench {
+  /** Untimed warmup shared with [[Probe]]: executor spin-up,
+    * codegen/JIT, the SHARED real-data input artifact (the undirected
+    * adjacency, when `graphInputs`) and the q1_agg sentinel query. */
+  private[graft] def warm(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String, graphInputs: Boolean): Unit = {
+    val r = spark.range(0, 1000000).selectExpr("id", "id % 97 AS k")
+    r.join(r.groupBy("k").count(), "k").agg(Map("count" -> "sum")).count()
+    import spark.implicits._
+    val ring = (0 until 64)
+      .map(i => (s"n$i", s"n${(i + 1) % 64}")).toDF("a", "b")
+    graft.graph.Algorithms.ballSizes(ring, 2).count()
+    if (graphInputs)
+      graft.graph.GraphBuilder.undirectedFor(spark, sfDir).count()
+    // warm the sentinel query itself (its first-ever run carries
+    // plan+codegen cost that would always read as "noise" in the
+    // start-of-window sentinel sample)
+    SparkEntry.queries.get("q1_agg")
+      .foreach(fn => try fn(spark, sfDir).count()
+        catch { case _: Throwable => () })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // all env knobs (master/executor sizing/shuffle width/conf
@@ -49,25 +70,9 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
-    // untimed warmup: executor spin-up, codegen/JIT, and the SHARED
-    // real-data input artifact (the undirected adjacency) — run
-    // before EACH pass so both passes start from the same state
-    def warm(): Unit = {
-      val r = spark.range(0, 1000000).selectExpr("id", "id % 97 AS k")
-      r.join(r.groupBy("k").count(), "k").agg(Map("count" -> "sum")).count()
-      import spark.implicits._
-      val ring = (0 until 64)
-        .map(i => (s"n$i", s"n${(i + 1) % 64}")).toDF("a", "b")
-      graft.graph.Algorithms.ballSizes(ring, 2).count()
-      if (only.forall(_.exists(_.startsWith("g_"))))
-        graft.graph.GraphBuilder.undirectedFor(spark, sfDir).count()
-      // warm the sentinel query itself (its first-ever run carries
-      // plan+codegen cost that would always read as "noise" in the
-      // start-of-window sentinel sample)
-      SparkEntry.queries.get("q1_agg")
-        .foreach(fn => try fn(spark, sfDir).count()
-          catch { case _: Throwable => () })
-    }
+    // run before EACH pass so both passes start from the same state
+    val graphInputs = only.forall(_.exists(_.startsWith("g_")))
+    def warm(): Unit = Bench.warm(spark, sfDir, graphInputs)
 
     // Attribution overrides: where one query CONSUMES another's
     // memoized artifact, the producer must run first so the shared

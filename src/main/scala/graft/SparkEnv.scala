@@ -2,8 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The probe/verify mains' shared session construction — one place
-  * for the env-driven overrides, so Bench and Verify run on the same
-  * fabric with the same knobs.
+  * for the env-driven overrides, so Bench, Verify and Probe run on the
+  * same fabric with the same knobs.
   *
   * - SPARK_GRAFT_CPUS: local[] width + default shuffle partitions.
   * - SPARK_GRAFT_MASTER: master override for multi-executor probes —

@@ -212,20 +212,9 @@ object Knn {
       dim: Int, threshold: Double, targetClusterSize: Int = 1024,
       iters: Int = 2): DataFrame = {
     Registry.registerAll(corpus.sparkSession)
-    // stage wall-clock telemetry for scale ladders (the r10 512×
-    // diagnosis ran on these): graft.semdedup.stageTimes=true
-    val verbose = corpus.sparkSession.conf
-      .getOption("graft.semdedup.stageTimes").exists(_.toBoolean)
-    var tMark = System.nanoTime()
-    def stamp(label: String): Unit = if (verbose) {
-      val now = System.nanoTime()
-      println(f"semdedup-stage $label%-12s ${(now - tMark) / 1e9}%8.1f s")
-      tMark = now
-    }
     val base = withNorm(corpus, "id", "v", "nm", idCol, vecCol)
       .materialize()
     val n = base.count()
-    stamp("base")
     val k = math.max(1, math.min((n / targetClusterSize).toInt, 1 << 16))
     def normalize(a: Array[Double]): Array[Double] = {
       val nm = math.sqrt(a.map(x => x * x).sum)
@@ -246,7 +235,6 @@ object Knn {
         maxTrain.toDouble / n, seed = 42L)).persist()
     var cents = train.orderBy("id").limit(k).select(col("v")).collect()
       .map(r => normalize(r.getSeq[Number](0).map(_.doubleValue).toArray))
-    stamp("train-init")
     // Flat argmax is n·k·dim work — QUADRATIC in n once k ∝ n (the
     // first 64× probe of this operator measured exactly that: the
     // assignment pass, not the pair join, was the 45×-per-octave
@@ -387,17 +375,6 @@ object Knn {
     def treeUdf(cs: Array[Array[Double]]) = {
       val leafCap = 128
       val root = buildTree(cs, cs.indices.toArray, leafCap, 32)
-      if (verbose) {
-        def stats(n: TNode): (Int, Int, Int) = n match { // (depth, leaves, maxLeaf)
-          case TLeaf(m) => (1, 1, m.length)
-          case TInner(_, kids) =>
-            val s = kids.map(stats)
-            (1 + s.map(_._1).max, s.map(_._2).sum, s.map(_._3).max)
-        }
-        val (d0, l0, m0) = stats(root)
-        println(s"semdedup-quantizer TREE k=${cs.length} depth=$d0 " +
-          s"leaves=$l0 maxLeaf=$m0")
-      }
       udf { (v: Seq[Double]) =>
         if (v == null) null
         else {
@@ -597,11 +574,6 @@ object Knn {
       val bal = balanced.result()
       val coarseLive = bal.map(_._1)
       val membersLive = bal.map(_._2)
-      if (verbose) println(s"semdedup-quantizer k=${cs.length} " +
-        s"k1=$k1 live=${coarseLive.length} " +
-        s"maxMembers=${membersLive.map(_.length).max} " +
-        s"p99Members=${membersLive.map(_.length).sorted.apply(
-          math.max(0, (membersLive.length * 99) / 100 - 1))}")
       // input arrives cast to array<double> (see call sites): float
       // corpora upcast losslessly, double corpora keep full precision
       // — a Seq[Float] signature would silently truncate doubles and
@@ -662,14 +634,12 @@ object Knn {
         }.toMap
       cents = cents.indices.map(j => means.getOrElse(j, cents(j))).toArray
     }
-    stamp("lloyd")
     train.unpersist()
     val parts = base.sparkSession.sparkContext.defaultParallelism * 4
     val withCell = base.withColumn("cell",
         argmaxUdf(cents)(col("v").cast("array<double>")))
       .repartition(parts, col("cell"))
       .materialize()
-    stamp("assign")
     // NOT clusterLocalKeepers (the label form keeps it): the all-pairs
     // cluster-local join evaluates S²/2 dots per S-member cell, and on
     // a dup-DENSE cell — the exact cell SemDeDup exists to find — that
@@ -686,37 +656,8 @@ object Knn {
     // where the join produced nothing for the cost either. Cells are
     // k∝n-bounded (~targetClusterSize × dup multiplicity), so the
     // per-task group fits comfortably in memory. (The scan itself
-    // executes at the caller's action — its wall is the run's
-    // remainder after the `assign` stamp.)
+    // executes at the caller's action.)
     cellKeepersScan(withCell, "cell", idCol, threshold)
-  }
-
-  /** Accumulator-backed stage split for [[cellKeepersScan]], wired
-    * only when `graft.semdedup.stageTimes` is on. Built for the r12
-    * attribution probe (SemScanProbe → tools/semscan_r12.txt) that
-    * measured the old groupByKey form's remainder: decode 912 s /
-    * sort 145 s / scan 308 s task-summed CPU, dots/rows = 1.001.
-    * After the InternalRow-cursor rewrite the decode and sort live
-    * in Tungsten stages the accumulators cannot see, so only the
-    * scan fields are populated (decodeNs/sortNs stay 0 and report
-    * as such). Accumulator values exist only AFTER the caller's
-    * action, so scratch probes, not the library, read them. */
-  private[graft] final case class ScanTelemetry(
-      decodeNs: org.apache.spark.util.LongAccumulator,
-      sortNs: org.apache.spark.util.LongAccumulator,
-      scanNs: org.apache.spark.util.LongAccumulator,
-      dots: org.apache.spark.util.LongAccumulator,
-      rows: org.apache.spark.util.LongAccumulator,
-      cells: org.apache.spark.util.LongAccumulator) {
-    def report: String =
-      f"decode=${decodeNs.value / 1e9}%.1fs sort=${sortNs.value / 1e9}%.1fs " +
-        f"scan=${scanNs.value / 1e9}%.1fs dots=${dots.value}%d " +
-        f"rows=${rows.value}%d cells=${cells.value}%d (task-summed CPU; " +
-        "wall is lower by the task parallelism)"
-  }
-  private[graft] object ScanTelemetry {
-    /** Most recent scan's accumulators (probe-read, post-action). */
-    @volatile var last: Option[ScanTelemetry] = None
   }
 
   /** Per-cell early-exit argfirst (see semDedupScaled): for each
@@ -737,13 +678,13 @@ object Knn {
     * 8192× attribution probe, tools/semscan_r12.txt): the typed
     * groupByKey path cost a second 16.8M-row exchange, a SQL sort by
     * key PLUS a boxed per-group sortBy, and — the dominant term —
-    * the tuple ENCODER decode at 912 s task-summed CPU (67% of
-    * in-lambda CPU; `array<float>` with containsNull=true forces the
-    * deserializer through a per-element boxing loop, ~1B boxed
-    * floats at 16.4M rows). The same probe measured dots/rows =
-    * 1.001 — the argfirst really is O(1) probes per row on dup-dense
-    * corpora, so the scan itself was never the wall and the
-    * theorized quadratic tail does not exist there. Now: ONE
+    * the tuple ENCODER decode at 912 s task-summed CPU (vs sort 145 s,
+    * scan 308 s: 67% of in-lambda CPU; `array<float>` with
+    * containsNull=true forces the deserializer through a per-element
+    * boxing loop, ~1B boxed floats at 16.4M rows). The same probe
+    * measured dots/rows = 1.001 — the argfirst really is O(1) probes
+    * per row on dup-dense corpora, so the scan itself was never the
+    * wall and the theorized quadratic tail does not exist there. Now: ONE
     * Tungsten `sortWithinPartitions(cell, id)` over the pre-
     * partitioned frame (no exchange — localCheckpoint preserves
     * physical partitioning; replaces both sorts), then an
@@ -753,18 +694,6 @@ object Knn {
   private def cellKeepersScan(withCell: DataFrame, cellCol: String,
       idCol: String, threshold: Double): DataFrame = {
     val spark = withCell.sparkSession
-    val telem = if (spark.conf.getOption("graft.semdedup.stageTimes")
-        .exists(_.toBoolean)) {
-      val sc = spark.sparkContext
-      val t = ScanTelemetry(sc.longAccumulator("semdedup-scan-decodeNs"),
-        sc.longAccumulator("semdedup-scan-sortNs"),
-        sc.longAccumulator("semdedup-scan-scanNs"),
-        sc.longAccumulator("semdedup-scan-dots"),
-        sc.longAccumulator("semdedup-scan-rows"),
-        sc.longAccumulator("semdedup-scan-cells"))
-      ScanTelemetry.last = Some(t)
-      Some(t)
-    } else None
     val sorted = withCell
       .select(col(cellCol).cast("int").as("cell"), col("id"),
         col("v").cast("array<float>").as("v"), col("nm"))
@@ -782,9 +711,7 @@ object Knn {
       def flush(): Iterator[org.apache.spark.sql.Row] = {
         if (n == 0) Iterator.empty
         else {
-          val t0 = if (telem.isDefined) System.nanoTime() else 0L
           val out = Array.newBuilder[org.apache.spark.sql.Row]
-          var dots = 0L
           var i = 1
           while (i < n) {
             val va = vecs(i); val na = nms(i); val ida = ids(i)
@@ -801,14 +728,9 @@ object Knn {
                 out += org.apache.spark.sql.Row(ida, cur, ids(j), sim)
                 found = true
               }
-              dots += 1
               j += 1
             }
             i += 1
-          }
-          telem.foreach { t =>
-            t.scanNs.add(System.nanoTime() - t0)
-            t.dots.add(dots); t.rows.add(n); t.cells.add(1)
           }
           n = 0
           out.result().iterator

@@ -67,14 +67,6 @@ object Dedup {
     transform(sequence(lit(0), lit(b - 1)),
       j => xxhash64(concat_ws(",", slice(sig, j * r + 1, lit(r))), j))
 
-  /** MinHash-LSH candidate pairs with exact-Jaccard verification.
-    *
-    * Shuffles: one groupBy on (band, bucket) realized as a
-    * self-join, then the verification join back to the shingle
-    * sets. The bucket join's fan-in is bounded by the LSH bands —
-    * at 100 TB the candidate set stays ~linear in true near-dups,
-    * never the n² cross product.
-    */
   /** Per-document MinHash/LSH index rows — (id, sh, sz, ba): the
     * sorted xxhash64'd token set, its size, and the banded bucket
     * array. The map-side-only kernel shared by the bulk pipeline
@@ -121,6 +113,14 @@ object Dedup {
         md5(concat_ws(",", transform(col("sh"), x => x.cast("string")))))
       .materialize()
 
+  /** MinHash-LSH candidate pairs with exact-Jaccard verification.
+    *
+    * Shuffles: one groupBy on (band, bucket) realized as a
+    * self-join, then the verification join back to the shingle
+    * sets. The bucket join's fan-in is bounded by the LSH bands —
+    * at 100 TB the candidate set stays ~linear in true near-dups,
+    * never the n² cross product.
+    */
   def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, numHashes: Int = 30, bands: Int = 6,
       prebuiltHashed: Option[DataFrame] = None): DataFrame = {
@@ -683,7 +683,8 @@ object Dedup {
     * the gram key instead of the previous groupBy + join-back shape
     * whose two consumers of the gram frame re-ran tokenize+md5 per
     * position TWICE and paid a second (partial-agged) exchange
-    * (r12, SpanAbProbe ABBA at sf0.1: 3.15 → 1.54 s best,
+    * (r12 ABBA at sf0.1, OPTIMIZATION_r12.md session 3 #2 and
+    * plans/r12/d_dedup_spans_{before,after}.txt: 3.15 → 1.54 s best,
     * executed stages 5 → 4, shuffle 9.3 → 6.9 MB, output
     * byte-identical). The island merge is one window shuffle on
     * doc id. Grams travel as md5 hashes, not strings — binary

@@ -743,8 +743,9 @@ object Algorithms {
     // removed exchanges are the round's dominant bytes). In-plan,
     // the identical Exchange(a) subtrees dedupe via ReuseExchange in
     // the broadcast regime's single-execution chain: measured
-    // (BallAbProbe, sf0.1) stages 18 → 11, shuffle write
-    // 46.3 → 8.1 MB, best wall 5.59 → 3.33 s. The shuffle regime's
+    // (r12 A/B at sf0.1, OPTIMIZATION_r12.md "What this session
+    // changed" #3; plans/r12/g_diameter_{before,after}.txt) stages
+    // 18 → 11, shuffle write 46.3 → 8.1 MB, best wall 5.59 → 3.33 s. The shuffle regime's
     // per-round executions (roundCkpt) cannot reuse across rounds —
     // for them the in-plan exchange costs exactly what the
     // EnsureRequirements one did before.
@@ -899,8 +900,8 @@ object Algorithms {
     * ([[PackedAdjacency.decode]]). Broadcasts go through Java
     * serialization, which walks every object — the unpacked map's
     * ~2|E| string objects cost 2.1-2.3 s to ship at sf0.1 (1.17 M
-    * edges) vs 0.06 s packed + a one-time 0.1 s decode (BetwProbe,
-    * r12); that build was ~60 % of g_betweenness's wall. The count
+    * edges) vs 0.06 s packed + a one-time 0.1 s decode (r12
+    * attribution, OPTIMIZATION_r12.md session 3 #3); that build was ~60 % of g_betweenness's wall. The count
     * rides along so decode can fail LOUDLY if an id ever contains
     * the separator (split length mismatch) instead of silently
     * corrupting neighbor sets. */
@@ -1242,8 +1243,8 @@ object Algorithms {
     // into the join's stage, and the Exchange(a) subtree is
     // identical across rounds so ReuseExchange ships it once.
     // Executed-plan pin: plans/r12/g_communities_{before,after}.txt —
-    // per-round shuffle exchanges 2 → 0; runtime (LpaAbProbe, hinted
-    // legs): stages 25 → 17, shuffle write 38.5 → 30.5 MB, best wall
+    // per-round shuffle exchanges 2 → 0; runtime (hinted ABBA legs,
+    // OPTIMIZATION_r12.md #2, tools/lpa_ab_r12.txt): stages 25 → 17, shuffle write 38.5 → 30.5 MB, best wall
     // 4.48 → 3.71 s at sf0.1. The SMJ regime keeps
     // the plain frame: its round join already reuses the b-exchange,
     // and forcing a-partitioning there would re-exchange the big side
@@ -1359,9 +1360,10 @@ object Algorithms {
     * The choice table is WIDE (r12): one row per node with `length`
     * min_by columns, instead of exploding edges × length into a
     * (cur, t) grouping — the same md5-argmin cells, computed in one
-    * pass over the edges with no row multiplication (WalkProbe
-    * clean-leg A/B: agg 1.30 → 0.85 s, collect+broadcast
-    * 0.46 → ~0.2 s; cell-for-cell equality asserted in-probe). The
+    * pass over the edges with no row multiplication (r12 clean-leg
+    * A/B, OPTIMIZATION_r12.md session 3 #4: agg 1.30 → 0.85 s,
+    * collect+broadcast 0.46 → ~0.2 s; cell-for-cell equality
+    * asserted in the A/B). The
     * shuffle regime's step-t join reads column n_t of the same
     * frame, so its join table is |V| rows, not |V|·length. */
   def deterministicWalks(undirectedEdges: DataFrame,

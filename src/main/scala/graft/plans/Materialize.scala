@@ -41,6 +41,10 @@ import org.apache.spark.storage.StorageLevel
   *    so superseded rounds' checkpoint files are reclaimed the way
   *    local blocks are (the probe harness sets it).
   *
+  * Any other value fails loudly. No mode skips the cut: the checkpoint
+  * also pins nondeterministic frames (sample, first), whose repeated
+  * reads could otherwise diverge.
+  *
   * The mode is deliberately a CONF, not a parameter: the call sites
   * are the engine's internals, but the durability trade belongs to the
   * cluster operator running the job.
@@ -59,14 +63,6 @@ object Materialize {
         .map(_.trim.toLowerCase).getOrElse("local") match {
         case "local" | "" =>
           ds.localCheckpoint(eager)
-        // plan-audit only (graft.Explain): no truncation, so
-        // `.explain` shows the operator tree THROUGH the boundaries
-        // that localCheckpoint would turn into ExistingRDD scans.
-        // Never set in bench/verify runs — repeated reads of a
-        // nondeterministic frame (sample, first) could diverge
-        // without the checkpoint pin.
-        case "none" =>
-          ds
         case "replicated" =>
           ds.localCheckpoint(eager, StorageLevel.MEMORY_AND_DISK_2)
         case "reliable" =>

@@ -170,7 +170,8 @@ object Retrieval {
     * totals ride a single-row broadcast. */
   def trigramPerplexity(docs: DataFrame, idCol: String, textCol: String,
       l3: Double = 0.6, l2: Double = 0.3, l1: Double = 0.1): DataFrame = {
-    // MEASURED NEGATIVE (r12, PerplexAbProbe ABBA): checkpointing
+    // MEASURED NEGATIVE (r12 ABBA, OPTIMIZATION_r12.md #5 and
+    // "Measured negatives"): checkpointing
     // this frame so uni/bi/tri tokenize once read 1.5× SLOWER than
     // the lazy recompute at sf0.1 (best-of 3.49 vs 2.35 s) — the
     // whitespace split is cheap and the token-array checkpoint is

@@ -77,20 +77,15 @@ class MaterializeSpec extends AnyFunSuite with SparkFixture {
     } finally spark.conf.unset("graft.checkpoint.mode")
   }
 
-  test("none mode (plan audit) is a pass-through — no lineage cut") {
-    spark.conf.set("graft.checkpoint.mode", "none")
-    try {
-      val s = sample
-      // same object ⇒ no checkpoint, the audit sees the real tree
-      assert(s.materialize() eq s)
-    } finally spark.conf.unset("graft.checkpoint.mode")
-  }
-
   test("unknown mode fails loudly") {
-    spark.conf.set("graft.checkpoint.mode", "hdfs")
-    try {
-      val e = intercept[IllegalArgumentException](sample.materialize())
-      assert(e.getMessage.contains("local|replicated|reliable"))
-    } finally spark.conf.unset("graft.checkpoint.mode")
+    // "none" included: no mode may skip the checkpoint pin
+    for (mode <- Seq("hdfs", "none")) {
+      spark.conf.set("graft.checkpoint.mode", mode)
+      try {
+        val e = intercept[IllegalArgumentException](sample.materialize())
+        assert(e.getMessage.contains("local|replicated|reliable"))
+        assert(e.getMessage.contains(mode))
+      } finally spark.conf.unset("graft.checkpoint.mode")
+    }
   }
 }

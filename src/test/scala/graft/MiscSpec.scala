@@ -215,4 +215,24 @@ class MiscSpec extends AnyFunSuite with SparkFixture {
       assert(math.abs(p90 - p90e) <= 0.02 * p90e, s"$k p90 $p90 vs $p90e")
     }
   }
+
+  test("main entry points are exactly the documented tools") {
+    // README's Entry points list these; a new scratch main fails here
+    // until it is deleted or documented
+    import scala.jdk.CollectionConverters._
+    val documented = Set("Bench", "Verify", "Probe", "BootstrapProbe",
+      "EBootstrapProbe", "StreamChaosProbe", "EmbedChaosProbe",
+      "IngestChaosProbe", "PerfProbe")
+    val obj = """(?m)^\s*object\s+(\w+)""".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val mains = try walk.iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        "def main\\(".r.findAllMatchIn(src).map(m =>
+          obj.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1))
+      }.toSet
+    finally walk.close()
+    assert(mains == documented)
+  }
 }
