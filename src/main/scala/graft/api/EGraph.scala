@@ -44,8 +44,10 @@ final class EGraph(
       .select("node_key")
 
   /** A store-loaded frame carries the typed key_num shadow column
-    * (GraphStore.saveIndexes): filtering it pushes to the scan, as in
-    * QueryJson.run; a cast of key_str cannot. */
+    * (GraphStore.saveIndexes): a native double predicate, as in
+    * QueryJson.run, which a file-regime version pushes to its scan
+    * (a cast of key_str cannot push) and a resident one folds into
+    * its local rows. */
   def indexRange(name: String, keyType: String, lo: Double, hi: Double): DataFrame = {
     val key =
       if (indexes.columns.contains("key_num")) col("key_num")

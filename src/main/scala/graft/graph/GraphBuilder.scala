@@ -52,8 +52,9 @@ object GraphBuilder {
     * inverted onto the base table's native key column, so it reaches
     * the scan as a pushed filter — filtering the computed
     * `concat('c:', custkey)` key is a full scan at 100 TB. (The
-    * stored path, GraphStore.nodeByKey, prunes by shard partition
-    * instead.) */
+    * stored path, GraphStore.nodeByKey, prunes by shard partition on
+    * a file-regime version and filters driver-resident rows on a
+    * small one.) */
   def nodeByKey(s: SparkSession, dir: String, key: String): DataFrame = {
     // invert only keys that round-trip exactly: "c:007" must NOT
     // match custkey 7 (its canonical key is "c:7"), and all-digit

@@ -110,8 +110,9 @@ object QueryJson {
   def run(nodes: DataFrame, indexes: DataFrame, q: IndexQuery): DataFrame = {
     require(q.any.nonEmpty, "conditions.any must have at least one probe")
     // a store-loaded frame carries the typed key_num shadow column
-    // (GraphStore.saveIndexes): numeric probes filter it directly so
-    // the predicate pushes to the scan un-cast-wrapped
+    // (GraphStore.saveIndexes): numeric probes filter it directly, so
+    // on a file-regime version the predicate pushes to the scan
+    // un-cast-wrapped (a resident version filters its local rows)
     val numeric = Set("int", "double")
     val hasKeyNum = indexes.columns.contains("key_num")
     val keys = q.any.map { c =>

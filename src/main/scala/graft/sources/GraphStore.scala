@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,27 +31,61 @@ import graft.index.Sharding
   * recent good versions are kept; older ones are pruned best-effort.
   *
   * Read path: a marked version dir never changes, so every load and
-  * probe reads it through one resolved `spark.read.parquet` relation
-  * per (session, version dir, `_SUCCESS` mtime), kept in a bounded
-  * LRU. A reused relation keeps its file listing and schema: no
-  * per-call listing or schema-inference job, and a rewritten root
-  * (new marker mtime) is read fresh. The cached relations are
+  * probe reads it through one resolved form per (session, version
+  * dir, `_SUCCESS` mtime), kept in a bounded LRU, in one of two
+  * regimes:
+  *
+  *  - *resident*: a version whose file statistics (the relation's
+  *    `sizeInBytes`, from its file listing: no job) are within
+  *    `spark.sql.autoBroadcastJoinThreshold` — Spark's own "small
+  *    enough to ship to every executor" rule, −1 turns the regime
+  *    off — is collected once into a local relation with the file
+  *    relation's exact schema (partition columns last, all nullable).
+  *    Catalyst's `ConvertToLocalRelation` folds a probe's filter and
+  *    projection into the local rows at optimization time, so a
+  *    point, index or link read collects without a Spark job;
+  *  - *file*: a larger version is a `spark.read.parquet` relation,
+  *    whose probes prune partitions and push their key predicates
+  *    into the scan.
+  *
+  * Either form keeps its file listing and schema: no per-call listing
+  * or schema-inference job, and a rewritten root (new marker mtime) is
+  * read fresh. The regime is part of the cache key, so a changed
+  * threshold takes effect on the next read. The resident bound is
+  * the LRU's 32 entries × the threshold in file bytes, and rows held
+  * on the driver take several times their parquet bytes: Spark's
+  * size estimate of the local rows was ~10× the files for an sf0.01
+  * indexes version and ~19× for its edges. The cached forms are
   * [[graft.graph.GraphBuilder.markStable]] frames, so adjacency built
   * over a stored edges version is memoized per version. Only marked
   * versions are cached: plain (pre-versioning) layouts are read anew
   * per call, and a table carrying `expires_at_us` hands out a fresh
-  * expiry-filtered frame per call (its filter is per execution), so
-  * no expiry-bearing frame is ever cached or memoized. Parquet read
-  * options that shape a relation (e.g. schema merging) are fixed at a
-  * version's first read in a session.
+  * expiry-filtered frame per call over either form (its filter is per
+  * execution), so no expiry-bearing frame is ever cached or memoized.
+  * Parquet read options that shape a relation (e.g. schema merging)
+  * are fixed at a version's first read in a session.
+  *
+  * A nodes version records its shard width in its name (`…-b<bits>`),
+  * so a point lookup prunes to the right directory whatever width its
+  * caller assumes.
   */
 object GraphStore {
 
   private val saveSeq = new AtomicLong()
 
-  /** Monotonic, lexicographically sortable version names. */
-  private def nextVersion(): String =
-    f"v${System.currentTimeMillis()}%013d-${saveSeq.incrementAndGet()}%04d"
+  /** Monotonic, lexicographically sortable version names; `tag`
+    * (e.g. a shard width) follows the sequence number. */
+  private def nextVersion(tag: String = ""): String =
+    f"v${System.currentTimeMillis()}%013d-${saveSeq.incrementAndGet()}%04d$tag"
+
+  private val ShardTag = """-b(\d+)$""".r.unanchored
+
+  /** The shard width a version was saved with; None for versions
+    * written before widths were recorded. */
+  private def savedShardBits(version: String): Option[Int] = version match {
+    case ShardTag(b) => Some(b.toInt)
+    case _ => None
+  }
 
   private def goodVersions(spark: SparkSession, dir: String): Seq[String] = {
     val p = new Path(dir)
@@ -62,28 +98,46 @@ object GraphStore {
 
   // bounded so a service reading many stores cannot pin relations
   // (and their SparkSessions) without limit; eviction drops only the
-  // reference
+  // reference. Keyed by (session, version dir, marker mtime, resident)
   private val relations =
-    new graft.util.LruCache[(SparkSession, String, Long), DataFrame](32)
+    new graft.util.LruCache[(SparkSession, String, Long, Boolean), DataFrame](32)
+
+  /** A marked version's cached form: its file relation, or, when the
+    * relation's file statistics are within the broadcast threshold,
+    * its rows as a local relation. The resident build is one eager
+    * collect, serialized per key like GraphBuilder.aKeyed: a server's
+    * reader and writer threads both resolve versions. */
+  private def cached(spark: SparkSession, at: String, mtime: Long): DataFrame = {
+    val file = relations.getOrElseUpdate((spark, at, mtime, false))(
+      graft.graph.GraphBuilder.markStable(spark.read.parquet(at)))
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (limit < 0 || file.queryExecution.optimizedPlan.stats.sizeInBytes > limit) file
+    else {
+      val key = (spark, at, mtime, true)
+      graft.util.Latches.forKey(key).synchronized {
+        relations.getOrElseUpdate(key)(graft.graph.GraphBuilder.markStable(
+          spark.createDataFrame(file.collect().toSeq.asJava, file.schema)))
+      }
+    }
+  }
 
   /** THE read helper: the epoch-pinned version if the given epoch
     * names this table (one marker stat, no listing of the retained
     * versions), else the newest complete version dir — either one
-    * through its cached relation — else the plain dir itself, read
+    * through its cached form — else the plain dir itself, read
     * anew, for layouts written before versioning; all under the
-    * per-execution expiry filter. */
-  private def read(spark: SparkSession, epoch: Map[String, String],
-      root: String, table: String): DataFrame = {
+    * per-execution expiry filter. Returns the version read too (None
+    * for a plain layout). */
+  private def resolve(spark: SparkSession, epoch: Map[String, String],
+      root: String, table: String): (Option[String], DataFrame) = {
     val dir = s"$root/$table"
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def marked(v: String): Option[DataFrame] =
+    def marked(v: String): Option[(Option[String], DataFrame)] =
       (try Some(fs.getFileStatus(new Path(dir, s"$v/_SUCCESS")).getModificationTime)
-      catch { case _: java.io.FileNotFoundException => None }).map { m =>
-        relations.getOrElseUpdate((spark, s"$dir/$v", m))(
-          graft.graph.GraphBuilder.markStable(spark.read.parquet(s"$dir/$v")))
-      }
-    notExpired(epoch.get(table).flatMap(marked)
+      catch { case _: java.io.FileNotFoundException => None })
+        .map(m => (Some(v), cached(spark, s"$dir/$v", m)))
+    val (v, df) = epoch.get(table).flatMap(marked)
       .orElse(goodVersions(spark, dir).view.flatMap(marked).headOption)
       .getOrElse {
         // pre-versioning plain layout: the SAME visibility contract
@@ -95,9 +149,14 @@ object GraphStore {
           s"$dir has no complete version dir and no _SUCCESS marker; " +
             "refusing to read a possibly-incomplete layout " +
             "(see GraphStore.hasTable's visibility contract)")
-        spark.read.parquet(dir)
-      })
+        (None, spark.read.parquet(dir))
+      }
+    (v, notExpired(df))
   }
+
+  private def read(spark: SparkSession, epoch: Map[String, String],
+      root: String, table: String): DataFrame =
+    resolve(spark, epoch, root, table)._2
 
   /** The root epoch: table → pinned version. Written atomically by
     * [[commitEpoch]] AFTER all of a batch's table saves, so readers
@@ -250,8 +309,8 @@ object GraphStore {
     * (StreamingIngest) pass publish = false and commit one epoch
     * covering all their tables at the end. */
   private def versionedSave(df: DataFrame, root: String, table: String,
-      publish: Boolean)(write: (DataFrame, String) => Unit): String = {
-    val v = nextVersion()
+      publish: Boolean, tag: String = "")(write: (DataFrame, String) => Unit): String = {
+    val v = nextVersion(tag)
     write(df, s"$root/$table/$v")
     val spark = df.sparkSession
     if (publish && currentEpoch(spark, root).contains(table))
@@ -262,7 +321,7 @@ object GraphStore {
 
   def saveNodes(nodes: DataFrame, root: String, shardBits: Int = 6,
       publish: Boolean = true): String =
-    versionedSave(nodes, root, "nodes", publish) { (df, path) =>
+    versionedSave(nodes, root, "nodes", publish, s"-b$shardBits") { (df, path) =>
       df.withColumn("shard", Sharding.shardOfId(col("id"), shardBits))
         .write.mode("overwrite").partitionBy("shard").parquet(path)
     }
@@ -327,15 +386,21 @@ object GraphStore {
     read(spark, currentEpoch(spark, root), root, "indexes")
 
   /** Point lookup against the stored node partitioning: computes the
-    * shard from the key so the scan prunes to one directory. */
+    * shard from the key so a file-regime scan prunes to one
+    * directory. The shard width is the one the version was saved
+    * with; `shardBits` applies only to versions that predate recorded
+    * widths (and plain layouts). */
   def nodeByKey(spark: SparkSession, root: String, key: String,
-      shardBits: Int = 6): DataFrame =
-    loadNodes(spark, root)
-      .filter(col("shard") === Sharding.shardOfKey(lit(key), shardBits) &&
-        col("key_data") === key)
+      shardBits: Int = 6): DataFrame = {
+    val (v, nodes) = resolve(spark, currentEpoch(spark, root), root, "nodes")
+    val bits = v.flatMap(savedShardBits).getOrElse(shardBits)
+    nodes.filter(col("shard") === Sharding.shardOfKey(lit(key), bits) &&
+      col("key_data") === key)
+  }
 
-  /** Index probe against the stored layout: partition pruning on
-    * (index_name, key_type) + pushed key predicate. */
+  /** Index probe against the stored layout: a resident version
+    * filters its local rows; a file version prunes partitions on
+    * (index_name, key_type) and pushes the key predicate. */
   def probeStored(spark: SparkSession, root: String, name: String,
       typ: String, key: String): DataFrame =
     loadIndexes(spark, root)
@@ -344,9 +409,10 @@ object GraphStore {
       .select("node_key")
 
   /** Numeric range probe `[lo, hi]` against the stored layout: the
-    * typed key_num column written by saveIndexes carries the range
-    * as a pushed native predicate (+ row-group skipping via parquet
-    * stats), on top of the (index_name, key_type) pruning. */
+    * typed key_num column written by saveIndexes is a native double
+    * predicate; on a file version it pushes to the scan (+ row-group
+    * skipping via parquet stats), on top of the (index_name,
+    * key_type) pruning. */
   def probeStoredRange(spark: SparkSession, root: String, name: String,
       typ: String, lo: Double, hi: Double): DataFrame =
     loadIndexes(spark, root)

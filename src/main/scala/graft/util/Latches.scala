@@ -1,7 +1,8 @@
 package graft.util
 
 /** Striped build latches for the eager memoized artifacts
-  * (GraphBuilder.aKeyed, Algorithms.broadcastAdjacency).
+  * (GraphBuilder.aKeyed, Algorithms.broadcastAdjacency, GraphStore's
+  * resident versions).
   *
   * Why not one monitor per cache: those builds are real Spark jobs
   * (a 2|E| shuffle+checkpoint, a ~100 MB collect+broadcast), and a
@@ -10,11 +11,12 @@ package graft.util
   * EAGER — two racing first calls would each pay the full job and
   * orphan the loser's blocks/broadcast until a driver GC.
   *
-  * Striping by identity hash gives per-key serialization with a
-  * fixed footprint: same key → same monitor (never two builds of one
-  * artifact); different keys collide on a stripe with probability
-  * 1/64 (a brief serialization, never a correctness issue). No
-  * per-key map to grow or weakly reference.
+  * Striping by the key's hash — the one its LruCache keys on, so
+  * identity for frame keys, by value for tuple keys — gives per-key
+  * serialization with a fixed footprint: equal keys → same monitor
+  * (never two builds of one artifact); different keys collide on a
+  * stripe with probability 1/64 (a brief serialization, never a
+  * correctness issue). No per-key map to grow or weakly reference.
   */
 object Latches {
   private val stripes = Array.fill(64)(new Object)
@@ -22,5 +24,5 @@ object Latches {
   /** The monitor for `key` — synchronize the cache lookup AND the
     * eager build under it. */
   def forKey(key: AnyRef): Object =
-    stripes(Math.floorMod(System.identityHashCode(key), stripes.length))
+    stripes(Math.floorMod(key.##, stripes.length))
 }

@@ -50,26 +50,41 @@ class ApiSpec extends AnyFunSuite with SparkFixture {
     val re = EGraph.fromStore(spark, store)
     assert(re.nodes.count() == g.nodes.count())
     assert(re.edges.count() == g.edges.count())
-    // index probe prunes to one (index_name, key_type) directory
-    val probe = GraphStore.probeStored(spark, store, "mktsegment", "text",
-      "BUILDING")
-    val scan = probe.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters") &&
-      scan.contains("index_name"), scan)
-    assert(probe.count() ==
-      g.indexLookup("mktsegment", "text", "BUILDING").count())
-    // node point-lookup prunes on the shard partition
-    val one = GraphStore.nodeByKey(spark, store, "c:1")
-    assert(one.count() == 1)
-    // numeric range probe: pushed native predicate on key_num
-    val rng = GraphStore.probeStoredRange(spark, store, "acctbal", "double",
-      0.0, 5000.0)
-    val rngPlan = rng.queryExecution.executedPlan.toString
-    assert(rngPlan.contains("PushedFilters") &&
-      rngPlan.contains("GreaterThanOrEqual(key_num,0.0)"), rngPlan)
-    assert(rng.count() ==
-      graft.index.TypedIndexes.probeRangeDouble(g.indexes, "acctbal",
-        0.0, 5000.0).count())
+    // the plan assertions read the file regime (a resident version
+    // has no parquet scan); the resident leg below returns the same rows
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val fileRows = inFileRegime {
+      // index probe prunes to one (index_name, key_type) directory
+      val probe = GraphStore.probeStored(spark, store, "mktsegment", "text",
+        "BUILDING")
+      val scan = probe.queryExecution.executedPlan.toString
+      assert(scan.contains("PartitionFilters") &&
+        scan.contains("index_name"), scan)
+      assert(probe.count() ==
+        g.indexLookup("mktsegment", "text", "BUILDING").count())
+      // node point-lookup prunes on the shard partition
+      val one = GraphStore.nodeByKey(spark, store, "c:1")
+      assert(one.count() == 1)
+      // numeric range probe: pushed native predicate on key_num
+      val rng = GraphStore.probeStoredRange(spark, store, "acctbal", "double",
+        0.0, 5000.0)
+      val rngPlan = rng.queryExecution.executedPlan.toString
+      assert(rngPlan.contains("PushedFilters") &&
+        rngPlan.contains("GreaterThanOrEqual(key_num,0.0)"), rngPlan)
+      assert(rng.count() ==
+        graft.index.TypedIndexes.probeRangeDouble(g.indexes, "acctbal",
+          0.0, 5000.0).count())
+      Seq(probe, one, rng).map(rows)
+    }
+    val resident = Seq(
+      GraphStore.probeStored(spark, store, "mktsegment", "text", "BUILDING"),
+      GraphStore.nodeByKey(spark, store, "c:1"),
+      GraphStore.probeStoredRange(spark, store, "acctbal", "double", 0.0, 5000.0))
+    resident.foreach(df => assert(
+      df.queryExecution.executedPlan.toString.contains("LocalTableScan"),
+      df.queryExecution.executedPlan))
+    assert(resident.map(rows) == fileRows)
   }
 
   test("upsert/delete semantics: latest wins, indexes follow incrementally") {

@@ -15,6 +15,20 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
     spark.conf.set("graft.graph.broadcastEdges", "0")
     try body finally spark.conf.unset("graft.graph.broadcastEdges")
   }
+
+  /** Runs `body` with GraphStore's versions read as file relations: a
+    * −1 `spark.sql.autoBroadcastJoinThreshold` turns the
+    * driver-resident regime off. */
+  def inFileRegime[T](body: => T): T = withBroadcastThreshold(-1L)(body)
+
+  /** Runs `body` under `spark.sql.autoBroadcastJoinThreshold = bytes`,
+    * restoring the previous value after. */
+  def withBroadcastThreshold[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, bytes.toString)
+    try body finally spark.conf.set(key, prev)
+  }
 }
 
 object SparkFixture {

@@ -1,21 +1,23 @@
 package graft
 
 import java.io.File
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, CyclicBarrier, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.EGraph
 import graft.graph.GraphBuilder
+import graft.search.QueryJson
 import graft.sources.GraphStore
 
-/** GraphStore's read path: one cached relation per marked version,
-  * one memoized adjacency per stored edges version, and the
-  * visibility rules both must keep. */
+/** GraphStore's read path: one cached form per marked version (rows
+  * held on the driver when small, a file relation otherwise), one
+  * memoized adjacency per stored edges version, and the visibility
+  * rules both must keep. */
 class StoreReadSpec extends AnyFunSuite with SparkFixture {
 
   private def fresh(name: String): String = {
@@ -28,6 +30,13 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     keys.map(k => (k, s"d-$k", k.hashCode.toLong)).toDF("key_data", "details", "id")
   }
+
+  /** Nodes whose ids are their keys' xxhash64, as GraphBuilder makes
+    * them: the shard nodeByKey computes from a key is the stored one. */
+  private def hashedNodesOf(keys: String*): DataFrame =
+    nodesOf(keys: _*).withColumn("id", xxhash64(col("key_data")))
+
+  private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
   private def keys(df: DataFrame): Set[String] =
     df.select("key_data").collect().map(_.getString(0)).toSet
@@ -113,21 +122,25 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a row expiring between two reads of one cached version is gone on the second") {
-    val root = fresh("read-expiry")
-    val soon = GraphStore.withExpiry(nodesOf("k2"), 2L)
-    val v = GraphStore.saveNodes(
-      nodesOf("k1").unionByName(soon, allowMissingColumns = true), root)
-    GraphStore.commitEpoch(spark, root, Map("nodes" -> v))
-    val first = GraphStore.loadNodes(spark, root)
-    assert(keys(first) == Set("k1", "k2"))
-    val expiresMs = soon.select("expires_at_us").head().getLong(0) / 1000L
-    Thread.sleep(math.max(0L, expiresMs - System.currentTimeMillis()) + 200L)
-    var second: DataFrame = null
-    // the relation under the expiry filter is the cached one ...
-    assert(jobsDuring { second = GraphStore.loadNodes(spark, root) } == 0)
-    // ... but the filtered frame is fresh per read
-    assert(!(second eq first))
-    assert(keys(second) == Set("k1"))
+    def expiring(root: String, resident: Boolean): Unit = {
+      val soon = GraphStore.withExpiry(nodesOf("k2"), 2L)
+      val v = GraphStore.saveNodes(
+        nodesOf("k1").unionByName(soon, allowMissingColumns = true), root)
+      GraphStore.commitEpoch(spark, root, Map("nodes" -> v))
+      val first = GraphStore.loadNodes(spark, root)
+      assert(plan(first).contains("LocalTableScan") == resident, plan(first))
+      assert(keys(first) == Set("k1", "k2"))
+      val expiresMs = soon.select("expires_at_us").head().getLong(0) / 1000L
+      Thread.sleep(math.max(0L, expiresMs - System.currentTimeMillis()) + 200L)
+      var second: DataFrame = null
+      // the form under the expiry filter is the cached one ...
+      assert(jobsDuring { second = GraphStore.loadNodes(spark, root) } == 0)
+      // ... but the filtered frame is fresh per read
+      assert(!(second eq first))
+      assert(keys(second) == Set("k1"))
+    }
+    expiring(fresh("read-expiry"), resident = true)
+    inFileRegime(expiring(fresh("read-expiry-file"), resident = false))
   }
 
   test("store-loaded graphs share one adjacency per edges version") {
@@ -171,15 +184,128 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
     val root = fresh("index-range")
     val g = EGraph.fromTables(spark, sfDir)
     storeOf(g, root)
-    val s = EGraph.fromStore(spark, root)
     def rows(df: DataFrame) = df.collect().map(_.getString(0)).sorted.toSeq
     for ((name, typ, lo, hi) <- Seq(("acctbal", "double", 0.0, 5000.0),
         ("nationkey", "int", 3.0, 7.0))) {
-      val stored = s.indexRange(name, typ, lo, hi)
-      val plan = stored.queryExecution.executedPlan.toString
-      assert(plan.contains(s"GreaterThanOrEqual(key_num,$lo)"), plan)
       val want = rows(g.indexRange(name, typ, lo, hi))
-      assert(want.nonEmpty && rows(stored) == want, name)
+      // the scan's pushed filter exists in the file regime only
+      inFileRegime {
+        val stored = EGraph.fromStore(spark, root).indexRange(name, typ, lo, hi)
+        val plan = stored.queryExecution.executedPlan.toString
+        assert(plan.contains(s"GreaterThanOrEqual(key_num,$lo)"), plan)
+        assert(want.nonEmpty && rows(stored) == want, name)
+      }
+      // the resident version returns the same rows
+      assert(rows(EGraph.fromStore(spark, root).indexRange(name, typ, lo, hi)) == want,
+        name)
     }
+  }
+
+  test("resident and file versions return identical rows and schemas") {
+    val root = fresh("regimes")
+    val g = EGraph.fromTables(spark, sfDir)
+    storeOf(g, root)
+    val src = "c:1"
+    val dst = g.linksFrom(src).orderBy("dst_key").head().getAs[String]("dst_key")
+    val far = g.neighbors(src, 2).filter(col("depth") === 2)
+      .orderBy("node").head().getString(0)
+    val q = """{"query":{"type":"index","conditions":{"any":[""" +
+      """{"key":[0,5000],"key_type":"double","index_name":"acctbal"},""" +
+      """{"key":3,"key_type":"int","index_name":"nationkey"}],""" +
+      """"filters":[{"key":"BUILDING","key_type":"text",""" +
+      """"index_json_path":["details","mktsegment"]}]},""" +
+      """"selected_paths":{"name":["details","name"],""" +
+      """"acctbal":["details","acctbal"]}}}"""
+    def reads(): Seq[(String, DataFrame)] = {
+      val s = EGraph.fromStore(spark, root)
+      Seq(
+        "nodeByKey" -> GraphStore.nodeByKey(spark, root, src),
+        "probeStored" -> GraphStore.probeStored(spark, root, "mktsegment", "text", "BUILDING"),
+        "probeStoredRange" ->
+          GraphStore.probeStoredRange(spark, root, "acctbal", "double", 0.0, 5000.0),
+        "linksFrom" -> s.linksFrom(src),
+        "link" -> s.link(src, dst),
+        "neighbors" -> s.neighbors(src, 2),
+        "path" -> s.path(src, far),
+        "QueryJson" -> QueryJson.run(s.nodes, s.indexes, q))
+    }
+    // the reads whose plans are one filtered version
+    val direct = Set("nodeByKey", "probeStored", "probeStoredRange", "linksFrom", "link")
+    def run(scan: String) = reads().map { case (n, df) =>
+      if (direct(n)) assert(plan(df).contains(scan), n)
+      n -> (df.schema, df.collect().map(_.toString).sorted.toSeq)
+    }
+    val file = inFileRegime(run("FileScan"))
+    val resident = run("LocalTableScan")
+    file.zip(resident).foreach { case ((n, f), (_, r)) =>
+      assert(f._2.nonEmpty, n)
+      assert(r == f, n)
+    }
+  }
+
+  test("a nodeByKey collect on a resident version starts no Spark job") {
+    val root = fresh("resident-jobs")
+    GraphStore.commitEpoch(spark, root,
+      Map("nodes" -> GraphStore.saveNodes(hashedNodesOf("k1", "k2"), root)))
+    // the first read collects the version
+    assert(jobsDuring(GraphStore.loadNodes(spark, root)) >= 1)
+    var rows: Array[Row] = null
+    assert(jobsDuring { rows = GraphStore.nodeByKey(spark, root, "k1").collect() } == 0)
+    assert(rows.map(_.getAs[String]("key_data")).toSeq == Seq("k1"))
+  }
+
+  test("a version above the threshold stays a file relation") {
+    val root = fresh("threshold")
+    val v = GraphStore.saveNodes(hashedNodesOf("k1", "k2", "k3"), root)
+    GraphStore.commitEpoch(spark, root, Map("nodes" -> v))
+    // the gate's measure: the version's data files, as Spark lists them
+    val bytes = FileUtils.listFiles(new File(s"$root/nodes/$v"), null, true)
+      .toArray(Array.empty[File]).filterNot(f => f.getName.startsWith("_") ||
+        f.getName.startsWith(".")).map(_.length).sum
+    assert(bytes > 0)
+    withBroadcastThreshold(bytes - 1) {
+      val above = GraphStore.nodeByKey(spark, root, "k2")
+      assert(plan(above).contains("FileScan"), plan(above))
+      assert(keys(above) == Set("k2"))
+    }
+    withBroadcastThreshold(bytes) {
+      val at = GraphStore.nodeByKey(spark, root, "k2")
+      assert(plan(at).contains("LocalTableScan"), plan(at))
+      assert(keys(at) == Set("k2"))
+    }
+  }
+
+  test("two threads that first-read one version build it once") {
+    val root = fresh("resident-race")
+    GraphStore.commitEpoch(spark, root,
+      Map("nodes" -> GraphStore.saveNodes(hashedNodesOf("k1", "k2"), root)))
+    // the file relation (and its schema job) first, so the threads
+    // race on the resident build alone
+    inFileRegime(GraphStore.loadNodes(spark, root))
+    val start = new CyclicBarrier(2)
+    val got = new ConcurrentLinkedQueue[DataFrame]
+    val builds = jobsDuring {
+      val ts = Seq.fill(2)(new Thread(() => {
+        start.await()
+        got.add(GraphStore.loadNodes(spark, root))
+      }))
+      ts.foreach(_.start())
+      ts.foreach(_.join())
+    }
+    assert(builds == 1, "one collect builds the resident version")
+    val Seq(a, b) = got.toArray(Array.empty[DataFrame]).toSeq
+    assert(a eq b)
+    assert(keys(a) == Set("k1", "k2"))
+  }
+
+  test("nodeByKey finds every key of a store saved with another shard width") {
+    val root = fresh("shard-width")
+    val ks = (1 to 32).map(i => s"k$i")
+    GraphStore.commitEpoch(spark, root,
+      Map("nodes" -> GraphStore.saveNodes(hashedNodesOf(ks: _*), root, 3)))
+    def each(): Unit = ks.foreach(k =>
+      assert(keys(GraphStore.nodeByKey(spark, root, k)) == Set(k), k))
+    each()
+    inFileRegime(each())
   }
 }

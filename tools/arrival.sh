@@ -9,7 +9,8 @@
 # Usage: tools/arrival.sh [outFile]   (default tools/arrival_r10.txt)
 set -eo pipefail
 OUT="${1:-tools/arrival_r10.txt}"
-cd /root/repo
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+cd "$ROOT"
 STORE=/tmp/graft-arrival-store
 {
   echo "# arrival-cost ladder, $(date -u +%FT%TZ)"

@@ -5,12 +5,13 @@
 set -eo pipefail
 BASE="${1:-/tmp/graft-echaos}"
 rm -rf "$BASE"; mkdir -p "$BASE"
-cd /root/repo
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+cd "$ROOT"
 
 run() {
   SPARK_GRAFT_MASTER='local-cluster[2,16,36864]' \
   SPARK_GRAFT_EXEC_MEM=36g \
-  SPARK_GRAFT_EXEC_CP=/root/repo/target/scala-2.13/classes \
+  SPARK_GRAFT_EXEC_CP="$ROOT/target/scala-2.13/classes" \
   SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
   SPARK_GRAFT_SF_DIR=/tmp/graft64x \
   SPARK_GRAFT_SHUFFLE=64 \

@@ -7,7 +7,8 @@
 set -eo pipefail
 QUERIES="$1"
 TAG="${2:-probe}"
-cd /root/repo
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+cd "$ROOT"
 for scale in 1x 8x 64x; do
   case $scale in
     1x) DIR=/root/testdata/sf0.1;;

@@ -7,10 +7,11 @@ MODE="$1"
 OUT=/tmp/verify_${MODE}
 CKPT=/tmp/graft-ckpt-${MODE}
 rm -rf "$OUT" "$CKPT"; mkdir -p "$CKPT"
-cd /root/repo
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+cd "$ROOT"
 SPARK_GRAFT_MASTER='local-cluster[2,16,36864]' \
 SPARK_GRAFT_EXEC_MEM=36g \
-SPARK_GRAFT_EXEC_CP=/root/repo/target/scala-2.13/classes \
+SPARK_GRAFT_EXEC_CP="$ROOT/target/scala-2.13/classes" \
 SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
 SPARK_GRAFT_CONF="graft.checkpoint.mode=${MODE};spark.checkpoint.dir=${CKPT}" \
 tools/runjava.sh graft.Verify /root/testdata/sf0.01 "$OUT" 2>/dev/null

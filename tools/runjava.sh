@@ -5,7 +5,8 @@
 #
 # Usage: [SPARK_GRAFT_* envs] tools/runjava.sh graft.Verify <args...>
 set -eo pipefail
-cd /root/repo
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+cd "$ROOT"
 CLASS="$1"; shift
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \

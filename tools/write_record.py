@@ -19,7 +19,11 @@ spread<=1.15 window. The composed record carries every source run's
 noise block so the provenance is auditable.
 """
 import json
+import os
 import sys
+
+# the checkout this script sits in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 if "--compose" in sys.argv:
     paths = sys.argv[sys.argv.index("--compose") + 1:]
@@ -40,7 +44,7 @@ if "--compose" in sys.argv:
     }
     spread = 0.0
 else:
-    last = json.load(open("/root/repo/bench_last.json"))
+    last = json.load(open(os.path.join(ROOT, "bench_last.json")))
     noise = last.get("noise", {})
     # Bench grades an artifact by its cleanest per-pass bracket
     # (grade_spread); artifacts older than that carry only the overall
@@ -51,7 +55,7 @@ else:
         sys.exit(f"refusing: sentinel grade spread {spread:.3f} > 1.15 "
                  f"(quality={quality}); rerun in a quieter window or --force")
 
-old = json.load(open("/root/repo/bench_record.json"))
+old = json.load(open(os.path.join(ROOT, "bench_record.json")))
 old_queries = old.get("queries", {})
 history = old.get("history", {})
 # keep exactly one entry per superseded protocol generation
@@ -73,6 +77,6 @@ rec = {
     "sf": last.get("sf", ""),
     "history": history,
 }
-with open("/root/repo/bench_record.json", "w") as f:
+with open(os.path.join(ROOT, "bench_record.json"), "w") as f:
     json.dump(rec, f, separators=(",", ":"))
 print(f"record <- total {last['value']:.1f}s, protocol {rec['protocol']}")
