@@ -37,25 +37,28 @@ import graft.index.Sharding
   *
   *  - *resident*: a version whose file statistics (the relation's
   *    `sizeInBytes`, from its file listing: no job) are within
-  *    `spark.sql.autoBroadcastJoinThreshold` — Spark's own "small
-  *    enough to ship to every executor" rule, −1 turns the regime
-  *    off — is collected once into a local relation with the file
-  *    relation's exact schema (partition columns last, all nullable).
-  *    Catalyst's `ConvertToLocalRelation` folds a probe's filter and
-  *    projection into the local rows at optimization time, so a
-  *    point, index or link read collects without a Spark job;
+  *    [[ResidentMaxBytes]] is collected once into a local relation
+  *    with the file relation's exact schema (partition columns last,
+  *    all nullable). Catalyst's `ConvertToLocalRelation` folds a
+  *    probe's filter and projection into the local rows at
+  *    optimization time, so a point, index or link read collects
+  *    without a Spark job — but it filters every row of the version
+  *    in one driver thread, so the cap is a fixed constant below the
+  *    measured point where that costs more than a pruned, parallel
+  *    scan. `spark.sql.autoBroadcastJoinThreshold` can only lower the
+  *    gate (−1 turns the regime off): raising it for joins pins
+  *    nothing more on the driver;
   *  - *file*: a larger version is a `spark.read.parquet` relation,
   *    whose probes prune partitions and push their key predicates
   *    into the scan.
   *
   * Either form keeps its file listing and schema: no per-call listing
   * or schema-inference job, and a rewritten root (new marker mtime) is
-  * read fresh. The regime is part of the cache key, so a changed
-  * threshold takes effect on the next read. The resident bound is
-  * the LRU's 32 entries × the threshold in file bytes, and rows held
-  * on the driver take several times their parquet bytes: Spark's
-  * size estimate of the local rows was ~10× the files for an sf0.01
-  * indexes version and ~19× for its edges. The cached forms are
+  * read fresh. An entry remembers the file bytes it was gated on, so a
+  * changed gate re-picks the regime on the next read. Resident entries
+  * are bounded together: past [[ResidentBudgetBytes]] of their file
+  * bytes the least recent are evicted (their rows take 10–72× those
+  * bytes on the heap). The cached forms are
   * [[graft.graph.GraphBuilder.markStable]] frames, so adjacency built
   * over a stored edges version is memoized per version. Only marked
   * versions are cached: plain (pre-versioning) layouts are read anew
@@ -96,27 +99,76 @@ object GraphStore {
       .filter(v => fs.exists(new Path(dir, s"$v/_SUCCESS")))
   }
 
-  // bounded so a service reading many stores cannot pin relations
-  // (and their SparkSessions) without limit; eviction drops only the
-  // reference. Keyed by (session, version dir, marker mtime, resident)
-  private val relations =
-    new graft.util.LruCache[(SparkSession, String, Long, Boolean), DataFrame](32)
+  /** A marked version's cached form and the file bytes (the
+    * relation's `sizeInBytes`) its regime was chosen on. */
+  private final case class Version(form: DataFrame, fileBytes: BigInt,
+      resident: Boolean)
 
-  /** A marked version's cached form: its file relation, or, when the
-    * relation's file statistics are within the broadcast threshold,
-    * its rows as a local relation. The resident build is one eager
-    * collect, serialized per key like GraphBuilder.aKeyed: a server's
-    * reader and writer threads both resolve versions. */
+  /** The largest version, in data-file bytes, held on the driver. A
+    * resident read filters every row of its version in one driver
+    * thread, so its cost grows with the version while a file read's
+    * stays near one job's. Measured per read kind (4 cores, sf0.01 and
+    * sf0.1 graphs, OPTIMIZATION_r14.md §6), the two cost the same at
+    * ~215–370 KiB of edges (`linksFrom`, `link`), ~230–250 KiB of
+    * indexes (`probeStored`, `probeStoredRange`) and ~900 KiB of
+    * nodes (`nodeByKey`); the cap sits below all three. QueryJson's
+    * filter on a JSON path parses every resident node row and crosses
+    * over sooner, at ~2.5–3k nodes (~125–150 KiB); up to the cap, the
+    * point kinds' gain on the same versions outweighs that loss. */
+  private[graft] val ResidentMaxBytes: Long = 192L << 10
+
+  /** The summed data-file bytes of the resident versions the cache
+    * holds: least recent resident versions are evicted past it. Held
+    * rows measured 10–72× their file bytes on the heap (nodes lowest,
+    * edges highest), so this bounds the cache's resident rows to
+    * ~110 MB. */
+  private[graft] val ResidentBudgetBytes: Long = 8 * ResidentMaxBytes
+
+  // bounded so a service reading many stores cannot pin relations
+  // (and their SparkSessions) without limit, and weighted so resident
+  // rows stay within ResidentBudgetBytes of files; eviction drops
+  // only the reference. One entry per (session, version dir, marker
+  // mtime), whichever its regime.
+  private val versions =
+    new graft.util.LruCache[(SparkSession, String, Long), Version](32,
+      maxWeight = ResidentBudgetBytes,
+      weight = v => if (v.resident) v.fileBytes.toLong else 0L)
+
+  /** The resident gate in data-file bytes: ResidentMaxBytes, or a
+    * lower `spark.sql.autoBroadcastJoinThreshold`; a negative
+    * threshold turns the regime off (-1). */
+  private def residentLimit(spark: SparkSession): Long = {
+    val t = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (t < 0) -1L else math.min(t, ResidentMaxBytes)
+  }
+
+  /** A marked version's cached form: its file relation, or, when its
+    * file statistics are within [[residentLimit]], its rows as a
+    * local relation. A cached form whose regime the limit no longer
+    * picks is rebuilt. Builds (a schema-inference job, or one eager
+    * collect) are serialized per key like GraphBuilder.aKeyed: a
+    * server's reader and writer threads both resolve versions. */
   private def cached(spark: SparkSession, at: String, mtime: Long): DataFrame = {
-    val file = relations.getOrElseUpdate((spark, at, mtime, false))(
-      graft.graph.GraphBuilder.markStable(spark.read.parquet(at)))
-    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
-    if (limit < 0 || file.queryExecution.optimizedPlan.stats.sizeInBytes > limit) file
-    else {
-      val key = (spark, at, mtime, true)
+    val key = (spark, at, mtime)
+    val limit = residentLimit(spark)
+    def current(v: Version) = v.resident == (v.fileBytes <= limit)
+    versions.get(key).filter(current).map(_.form).getOrElse {
       graft.util.Latches.forKey(key).synchronized {
-        relations.getOrElseUpdate(key)(graft.graph.GraphBuilder.markStable(
-          spark.createDataFrame(file.collect().toSeq.asJava, file.schema)))
+        versions.get(key) match {
+          case Some(v) if current(v) => v.form
+          case held =>
+            val file = held.filterNot(_.resident).map(_.form).getOrElse(
+              graft.graph.GraphBuilder.markStable(spark.read.parquet(at)))
+            val bytes = held.fold(file.queryExecution.optimizedPlan.stats.sizeInBytes)(
+              _.fileBytes)
+            val v =
+              if (bytes > limit) Version(file, bytes, resident = false)
+              else Version(graft.graph.GraphBuilder.markStable(
+                spark.createDataFrame(file.collect().toSeq.asJava, file.schema)),
+                bytes, resident = true)
+            versions.put(key, v)
+            v.form
+        }
       }
     }
   }

@@ -17,10 +17,17 @@ package graft.util
   *  - `onEvict` runs outside the lock and is best-effort: it may
   *    talk to a block manager whose session has stopped, and an
   *    eviction failure must never fail the caller's lookup.
+  *
+  * Besides the entry count, the entries' summed `weight` (a pure,
+  * cheap function of the value; 0 by default) is bounded by
+  * `maxWeight`: an insert that pushes the sum over it evicts the
+  * least recent weighted entries, never the one just inserted.
   */
-final class LruCache[K, V](limit: Int, onEvict: V => Unit = (_: V) => ()) {
+final class LruCache[K, V](limit: Int, onEvict: V => Unit = (_: V) => (),
+    maxWeight: Long = Long.MaxValue, weight: V => Long = (_: V) => 0L) {
   require(limit > 0, s"limit must be positive, got $limit")
   private val m = scala.collection.mutable.LinkedHashMap.empty[K, V]
+  private var total = 0L // summed weight of m's values
 
   def getOrElseUpdate(k: K)(build: => V): V =
     get(k).getOrElse {
@@ -31,14 +38,7 @@ final class LruCache[K, V](limit: Int, onEvict: V => Unit = (_: V) => ()) {
             m.remove(k); m.put(k, w) // lost the race; refresh winner
             (w, List(built))
           case None =>
-            m.put(k, built)
-            var ev = List.empty[V]
-            while (m.size > limit) {
-              val (ek, ew) = m.head // insertion/recency order: oldest
-              m.remove(ek)
-              ev ::= ew
-            }
-            (built, ev)
+            (built, insert(k, built))
         }
       }
       evicted.foreach(e => try onEvict(e) catch { case _: Throwable => () })
@@ -57,16 +57,27 @@ final class LruCache[K, V](limit: Int, onEvict: V => Unit = (_: V) => ()) {
   def put(k: K, v: V): Unit = {
     val evicted = synchronized {
       val old = m.remove(k).toList
-      m.put(k, v)
-      var ev = old
-      while (m.size > limit) {
-        val (ek, ew) = m.head
-        m.remove(ek)
-        ev ::= ew
-      }
-      ev
+      old.foreach(o => total -= weight(o))
+      insert(k, v) ++ old
     }
     evicted.foreach(e => try onEvict(e) catch { case _: Throwable => () })
+  }
+
+  /** Under the lock: adds `k` as the most recent entry, then evicts
+    * the oldest entries past `limit` and the oldest weighted ones
+    * (other than `k`) while the summed weight exceeds `maxWeight`. */
+  private def insert(k: K, v: V): List[V] = {
+    m.put(k, v)
+    total += weight(v)
+    var ev = List.empty[V]
+    def drop(ek: K): Unit = m.remove(ek).foreach { ew => total -= weight(ew); ev ::= ew }
+    while (m.size > limit) drop(m.head._1)
+    var heavy = total > maxWeight
+    while (heavy) m.find { case (ek, ew) => ek != k && weight(ew) > 0 } match {
+      case Some((ek, _)) => drop(ek); heavy = total > maxWeight
+      case None => heavy = false
+    }
+    ev
   }
 
   def size: Int = synchronized(m.size)
@@ -77,7 +88,7 @@ final class LruCache[K, V](limit: Int, onEvict: V => Unit = (_: V) => ()) {
     * ContextCleaner reclaims unpinned checkpoint blocks), unpersisting
     * caches free their blocks eagerly. */
   def clear(): Unit = {
-    val evicted = synchronized { val vs = m.values.toList; m.clear(); vs }
+    val evicted = synchronized { val vs = m.values.toList; m.clear(); total = 0L; vs }
     evicted.foreach(e => try onEvict(e) catch { case _: Throwable => () })
   }
 }

@@ -216,6 +216,22 @@ class MiscSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("LruCache evicts the least recent weighted entries past maxWeight") {
+    val evicted = scala.collection.mutable.Buffer.empty[Int]
+    val c = new graft.util.LruCache[String, Int](8, (v: Int) => evicted += v,
+      maxWeight = 10L, weight = (v: Int) => v.toLong)
+    c.put("a", 4); c.put("zero", 0); c.put("b", 4)
+    assert(c.get("a").contains(4)) // a is now more recent than b
+    c.put("c", 5) // 13 > 10: b, the least recent weighted entry, goes
+    assert(evicted == Seq(4) && c.get("b").isEmpty && c.size == 3)
+    // an entry over the bound alone stays; every other weighted one goes
+    assert(c.getOrElseUpdate("d")(11) == 11)
+    assert(evicted.sorted == Seq(4, 4, 5) && c.get("zero").contains(0))
+    // replacing a value releases its old weight
+    c.put("d", 1); c.put("e", 9)
+    assert(c.get("d").contains(1) && c.get("e").contains(9) && c.size == 3)
+  }
+
   test("main entry points are exactly the documented tools") {
     // README's Entry points list these; a new scratch main fails here
     // until it is deleted or documented

@@ -65,6 +65,12 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
     } finally sc.removeSparkListener(l)
   }
 
+  /** The gate's measure: a version's data files, as Spark lists them. */
+  private def dataBytes(versionDir: String): Long =
+    FileUtils.listFiles(new File(versionDir), null, true)
+      .toArray(Array.empty[File]).filterNot(f => f.getName.startsWith("_") ||
+        f.getName.startsWith(".")).map(_.length).sum
+
   /** The sf graph persisted under one epoch. */
   private def storeOf(g: EGraph, root: String): Unit =
     GraphStore.commitEpoch(spark, root, Map(
@@ -72,18 +78,27 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
       "edges" -> GraphStore.saveEdges(g.edges, root),
       "indexes" -> GraphStore.saveIndexes(g.indexes, root)))
 
+  /** Runs `body` on a fresh root once per regime: resident (the
+    * fixture's versions are within the gate), then file. */
+  private def inBothRegimes(name: String)(body: (String, String) => Unit): Unit = {
+    body(fresh(name), "LocalTableScan")
+    inFileRegime(body(fresh(s"$name-file"), "FileScan"))
+  }
+
   test("a second read of one stored version starts no Spark job before its action") {
-    val root = fresh("read-jobs")
-    GraphStore.commitEpoch(spark, root,
-      Map("nodes" -> GraphStore.saveNodes(nodesOf("k1"), root)))
-    // the instrument sees the first read's schema inference
-    assert(jobsDuring(GraphStore.loadNodes(spark, root)) >= 1)
-    var second: DataFrame = null
-    assert(jobsDuring { second = GraphStore.loadNodes(spark, root) } == 0)
-    assert(jobsDuring(GraphStore.nodeByKey(spark, root, "k1")) == 0)
-    assert(second eq GraphStore.loadNodes(spark, root),
-      "one relation per marked version")
-    assert(keys(second) == Set("k1"))
+    inBothRegimes("read-jobs") { (root, scan) =>
+      GraphStore.commitEpoch(spark, root,
+        Map("nodes" -> GraphStore.saveNodes(nodesOf("k1"), root)))
+      // the instrument sees the first read's schema inference
+      assert(jobsDuring(GraphStore.loadNodes(spark, root)) >= 1)
+      var second: DataFrame = null
+      assert(jobsDuring { second = GraphStore.loadNodes(spark, root) } == 0)
+      assert(jobsDuring(GraphStore.nodeByKey(spark, root, "k1")) == 0)
+      assert(second eq GraphStore.loadNodes(spark, root),
+        "one relation per marked version")
+      assert(plan(second).contains(scan), plan(second))
+      assert(keys(second) == Set("k1"))
+    }
   }
 
   test("the first read after commitEpoch returns the new version; " +
@@ -144,12 +159,16 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("store-loaded graphs share one adjacency per edges version") {
+    inBothRegimes("adj-memo")(sharedAdjacency)
+  }
+
+  private def sharedAdjacency(root: String, scan: String): Unit = {
     import spark.implicits._
-    val root = fresh("adj-memo")
     storeOf(EGraph.fromTables(spark, sfDir), root)
     graft.util.Memos.resetDerived()
     val before = GraphBuilder.aKeyedCacheSize
     val g1 = EGraph.fromStore(spark, root)
+    assert(plan(g1.edges).contains(scan), plan(g1.edges))
     val hop1 = g1.neighbors("c:1", 1).collect().map(_.getString(0)).toSet
     g1.neighbors("c:1", 2).collect()
     // a nodes-only commit: the reopened graph reads the new nodes and
@@ -258,10 +277,7 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
     val root = fresh("threshold")
     val v = GraphStore.saveNodes(hashedNodesOf("k1", "k2", "k3"), root)
     GraphStore.commitEpoch(spark, root, Map("nodes" -> v))
-    // the gate's measure: the version's data files, as Spark lists them
-    val bytes = FileUtils.listFiles(new File(s"$root/nodes/$v"), null, true)
-      .toArray(Array.empty[File]).filterNot(f => f.getName.startsWith("_") ||
-        f.getName.startsWith(".")).map(_.length).sum
+    val bytes = dataBytes(s"$root/nodes/$v")
     assert(bytes > 0)
     withBroadcastThreshold(bytes - 1) {
       val above = GraphStore.nodeByKey(spark, root, "k2")
@@ -272,6 +288,25 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
       val at = GraphStore.nodeByKey(spark, root, "k2")
       assert(plan(at).contains("LocalTableScan"), plan(at))
       assert(keys(at) == Set("k2"))
+    }
+  }
+
+  test("a version above ResidentMaxBytes stays a file relation under any broadcast threshold") {
+    import spark.implicits._
+    val root = fresh("resident-cap")
+    // random hex details: ~1 parquet byte per 2 characters
+    val n = (GraphStore.ResidentMaxBytes / 100).toInt + 1000
+    val rnd = new scala.util.Random(11)
+    val big = (1 to n).map(i => (s"k$i", Seq.fill(8)(rnd.nextLong().toHexString).mkString))
+      .toDF("key_data", "details").withColumn("id", xxhash64(col("key_data")))
+    val v = GraphStore.saveNodes(big, root)
+    GraphStore.commitEpoch(spark, root, Map("nodes" -> v))
+    val bytes = dataBytes(s"$root/nodes/$v")
+    assert(bytes > GraphStore.ResidentMaxBytes)
+    withBroadcastThreshold(Long.MaxValue) {
+      val probe = GraphStore.nodeByKey(spark, root, "k7")
+      assert(plan(probe).contains("FileScan"), plan(probe))
+      assert(keys(probe) == Set("k7"))
     }
   }
 
