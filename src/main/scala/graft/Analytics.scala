@@ -37,9 +37,8 @@ object Analytics {
   // makes it ONE cached frame, and eviction unpersists it (safe for a
   // persist: consumers just recompute through the original plan).
   private val q20PairCache =
-    new graft.util.LruCache[(SparkSession, String), DataFrame](
-      4, (df: DataFrame) => df.unpersist(false))
-  graft.util.Memos.registerDerived(() => q20PairCache.clear())
+    new graft.util.Memos.Memo[(SparkSession, String), DataFrame](
+      4, derived = true, onEvict = (df: DataFrame) => df.unpersist(false))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_agg" -> { (s, d) =>
@@ -378,7 +377,7 @@ object Analytics {
       // sums are exact in any accumulation order (< 2^53) and the
       // 0.8 share compare sees identical IEEE operands in both
       // engines.
-      val sp = q20PairCache.getOrElseUpdate((s, d))(
+      val sp = q20PairCache((s, d))(
         Tables.lineitem(s, d)
           .filter(col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
             col("l_shipdate") < lit("1996-01-01").cast("timestamp"))

@@ -53,10 +53,9 @@ object EgraphQueries {
   // multi-store service can't pin sessions + checkpoints forever;
   // eviction drops the reference only — see the edgeCache note)
   private val overlayCache =
-    new graft.util.LruCache[(SparkSession, String), DataFrame](16)
-  graft.util.Memos.registerDerived(() => overlayCache.clear())
+    new graft.util.Memos.Memo[(SparkSession, String), DataFrame](16, derived = true)
   private def overlaidFor(s: SparkSession, d: String): DataFrame =
-    overlayCache.getOrElseUpdate((s, d))(
+    overlayCache((s, d))(
       GraphBuilder.undirectedFor(s, d)
         .unionByName(supplierChainOverlay(s, d)).materialize())
 

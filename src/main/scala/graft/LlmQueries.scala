@@ -8,6 +8,7 @@ import graft.multimodal.Multimodal
 import graft.streaming.{EventStreams, Funnels}
 import graft.text.{Packing, Retrieval => TextRetrieval, TextAnalysis}
 import graft.plans.Materialize._
+import graft.util.Memos
 
 /** LLM-training-data pipeline + streaming blocks of SURVEY.md §2. */
 object LlmQueries {
@@ -23,23 +24,19 @@ object LlmQueries {
   // needs: banding makes the candidate+verification cost threshold-
   // independent, so the pair queries and the cluster resolution share
   // one pipeline run and re-filter on j (inputs are immutable dirs,
-  // same memoization contract as GraphBuilder's adjacency; like
-  // there, entries pin their session for the JVM lifetime — fine for
-  // this engine's one-session-per-process deployment)
-  private val pairsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  graft.util.Memos.registerDerived(() => pairsCache.clear())
+  // same memoization contract and bound as GraphBuilder's adjacency)
+  private val pairsCache =
+    new Memos.Memo[(SparkSession, String), DataFrame](16, derived = true)
   // the corpus-wide hashed-token-set frame (tokenize + per-token
   // xxhash64 + sort + 128-bit content key, checkpointed) — the
   // dominant scan of BOTH the minhash pipeline and the fuzzy
   // decontamination check; built once per (session, dir) like the
   // pair frame (r12 verdict #4 / guide §1.2). Bench attribution: the
   // minhash key runs first (orderKey) so the build bills to it.
-  private val hashedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  graft.util.Memos.registerDerived(() => hashedCache.clear())
+  private val hashedCache =
+    new Memos.Memo[(SparkSession, String), DataFrame](16, derived = true)
   private def hashedSets(s: SparkSession, d: String): DataFrame =
-    hashedCache.getOrElseUpdate((s, d),
+    hashedCache((s, d))(
       Dedup.hashedTokenSets(Tables.documents(s, d), "doc_id", "text"))
   // the train-side 8-gram bloom (driver-held sketch): built once per
   // (session, dir), consumed by d_decontaminate_bloom (its namesake,
@@ -47,14 +44,13 @@ object LlmQueries {
   // pre-filter (guide §3.2 — drops definitely-clean eval grams
   // map-side before the gram exchange; the exact semi-join still
   // verifies every survivor, so the result is unchanged)
-  private val bloomCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Option[Array[Byte]]]
-  graft.util.Memos.registerDerived(() => bloomCache.clear())
+  private val bloomCache =
+    new Memos.Memo[(SparkSession, String), Option[Array[Byte]]](16, derived = true)
   private def trainBloom(s: SparkSession, d: String): Option[Array[Byte]] =
-    bloomCache.getOrElseUpdate((s, d),
+    bloomCache((s, d))(
       Dedup.trainGramBloom(Tables.documents(s, d), "doc_id", "text", n = 8))
   private def minhashPairs(s: SparkSession, d: String): DataFrame =
-    pairsCache.getOrElseUpdate((s, d),
+    pairsCache((s, d))(
       Dedup.minhashNearDups(Tables.documents(s, d), "doc_id", "text",
         threshold = 0.8, prebuiltHashed = Some(hashedSets(s, d)))
         .materialize())

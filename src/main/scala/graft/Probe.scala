@@ -11,6 +11,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.util.Memos
+
 /** A/B measurement main for catalog keys:
   * `graft.Probe [--plans] [--leg name:k=v;k=v]… key…`, e.g.
   * `tools/runjava.sh graft.Probe --leg rounds:graft.graph.broadcastEdges=0
@@ -28,7 +30,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - Prints one fabric line, then one JSON line per timed call.
   *    Counters come from a SparkListener; the listener bus is drained
   *    before they are read, so metering adds no job. parallel_eff is
-  *    task-CPU ÷ (wall × defaultParallelism).
+  *    task-CPU ÷ (wall × defaultParallelism). memo_hits and
+  *    memo_misses are the call's deltas of `Memos.hits`/`misses`.
   *  - `--plans` prints the executed (post-AQE) plans of each leg's
   *    last timed rep, largest last: the view where ReusedExchange,
   *    AQEShuffleRead and runtime join choices show.
@@ -53,14 +56,15 @@ object Probe {
   final case class Rec(key: String, leg: String, rep: Int, rows: Long,
       wallS: Double, jobs: Long, stages: Long, tasks: Long,
       taskCpuS: Double, shuffleReadBytes: Long, shuffleWriteBytes: Long,
-      parallelEff: Double) {
+      parallelEff: Double, memoHits: Long, memoMisses: Long) {
     def json: String =
       s"""{"key":${str(key)},"leg":${str(leg)},"rep":$rep,"rows":$rows,""" +
         s""""wall_s":${num(wallS)},"jobs":$jobs,"stages":$stages,""" +
         s""""tasks":$tasks,"task_cpu_s":${num(taskCpuS)},""" +
         s""""shuffle_read_bytes":$shuffleReadBytes,""" +
         s""""shuffle_write_bytes":$shuffleWriteBytes,""" +
-        s""""parallel_eff":${num(parallelEff)}}"""
+        s""""parallel_eff":${num(parallelEff)},"memo_hits":$memoHits,""" +
+        s""""memo_misses":$memoMisses}"""
   }
 
   /** Executed plans of one leg's last timed rep of one key. */
@@ -147,9 +151,10 @@ object Probe {
           withLeg(spark, leg)(catalog(key)(spark, sfDir).count())
         runLegs.foreach(call)
         val last = order(runLegs, reps).map { case (rep, leg) =>
-          graft.util.Memos.resetDerived()
+          Memos.resetDerived()
           org.apache.spark.GraftProbeBus.drain(sc)
           meter.reset()
+          val (hits0, misses0) = (Memos.hits(), Memos.misses())
           val t0 = System.nanoTime()
           val rows = call(leg)
           val wall = (System.nanoTime() - t0) / 1e9
@@ -157,7 +162,8 @@ object Probe {
           val cpu = meter.cpuNs.get / 1e9
           val rec = Rec(key, leg.name, rep, rows, wall, meter.jobs.get,
             meter.stages.get, meter.tasks.get, cpu, meter.shuffleRead.get,
-            meter.shuffleWrite.get, cpu / (wall * sc.defaultParallelism))
+            meter.shuffleWrite.get, cpu / (wall * sc.defaultParallelism),
+            Memos.hits() - hits0, Memos.misses() - misses0)
           emit(rec)
           recs += rec
           leg.name -> Plans(key, leg.name, rep,

@@ -1,6 +1,7 @@
 package graft.ann
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Registry
@@ -106,30 +107,21 @@ object Ivf {
     * e_knn_ivfpq train the IDENTICAL deterministic quantizer on the
     * same scan (Lloyd from id-ordered seeds, fixed sample seed), so
     * the second training pass was pure duplicate work. Keyed on the
-    * ANALYZED PLAN's semantic hash (Tables.* builds a fresh frame per
-    * call, so instance identity — the lpaCache key — would never
-    * hit). Registered with Memos: the bench's reset protocol clears
-    * it between passes like every derived artifact. */
+    * CANONICALIZED analyzed plan, by structural equality — the match
+    * Spark's CacheManager uses (Tables.* builds a fresh frame per
+    * call, so instance identity — the lpaCache key — would never hit;
+    * a 32-bit plan hash could hand one corpus another's model). A
+    * derived memo: the bench's reset protocol clears it between
+    * passes, and racing first calls train once. */
   def trainCached(corpus0: DataFrame, idCol: String, vecCol: String,
       dim: Int, k: Int, iters: Int = 2,
       sampleFraction: Double = 1.0): Model =
-    cache.getOrElseUpdate(
-      (corpus0.queryExecution.analyzed.semanticHash(), idCol, vecCol,
-        dim, k, iters, sampleFraction),
+    cache((corpus0.queryExecution.analyzed.canonicalized, idCol, vecCol,
+        dim, k, iters, sampleFraction))(
       train(corpus0, idCol, vecCol, dim, k, iters, sampleFraction))
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String, Int, Int, Int, Double), Model]()
-  private implicit final class MapOps(private val m:
-      java.util.concurrent.ConcurrentHashMap[
-        (Int, String, String, Int, Int, Int, Double), Model]) {
-    def getOrElseUpdate(k: (Int, String, String, Int, Int, Int, Double),
-        v: => Model): Model = {
-      val hit = m.get(k)
-      if (hit != null) hit else { val nv = v; m.putIfAbsent(k, nv); nv }
-    }
-  }
-  graft.util.Memos.registerDerived(() => cache.clear())
+  private val cache = new graft.util.Memos.Memo[(LogicalPlan, String, String,
+    Int, Int, Int, Double), Model](8, derived = true)
 
   /** Approximate top-k: per query, exact cosine rank over the
     * vectors in its `nprobe` best cells. */

@@ -1,6 +1,7 @@
 package graft.ann
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Registry
@@ -144,29 +145,17 @@ object Pq {
 
   /** [[train]] memoized per (corpus plan, geometry) — e_knn_pq and
     * e_knn_ivfpq train the IDENTICAL deterministic codebooks on the
-    * same scan; see Ivf.trainCached for the keying rationale (plan
-    * semantic hash, not frame identity). Reset-protocol-visible via
-    * Memos like every derived artifact. */
+    * same scan; see Ivf.trainCached for the keying rationale
+    * (canonicalized plan, not frame identity) and the memo's rules. */
   def trainCached(corpus0: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int = 4, k: Int = 16, iters: Int = 2,
       sampleFraction: Double = 1.0): Model =
-    cache.getOrElseUpdate(
-      (corpus0.queryExecution.analyzed.semanticHash(), idCol, vecCol,
-        dim, m, k, iters, sampleFraction),
+    cache((corpus0.queryExecution.analyzed.canonicalized, idCol, vecCol,
+        dim, m, k, iters, sampleFraction))(
       train(corpus0, idCol, vecCol, dim, m, k, iters, sampleFraction))
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String, Int, Int, Int, Int, Double), Model]()
-  private implicit final class MapOps(private val mp:
-      java.util.concurrent.ConcurrentHashMap[
-        (Int, String, String, Int, Int, Int, Int, Double), Model]) {
-    def getOrElseUpdate(k: (Int, String, String, Int, Int, Int, Int, Double),
-        v: => Model): Model = {
-      val hit = mp.get(k)
-      if (hit != null) hit else { val nv = v; mp.putIfAbsent(k, nv); nv }
-    }
-  }
-  graft.util.Memos.registerDerived(() => cache.clear())
+  private val cache = new graft.util.Memos.Memo[(LogicalPlan, String, String,
+    Int, Int, Int, Int, Double), Model](8, derived = true)
 
   /** Approximate top-k by ADC over the coded corpus, then exact
     * cosine re-rank of the top `rerankK` candidates per query. */

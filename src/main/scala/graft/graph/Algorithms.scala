@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.plans.Materialize._
+import graft.util.Memos
 
 /** Whole-graph analytics over the edge DataFrame — the batch-scale
   * path for the reference's "massively scalable" graph vision
@@ -64,12 +65,9 @@ object Algorithms {
     * the join each. Eviction only drops the reference (these are
     * localCheckpoint roots; see the edgeCache note in GraphBuilder).
     */
-  private val triangleCache =
-    new graft.util.LruCache[DataFrame, DataFrame](8)
-  graft.util.Memos.registerDerived(() => triangleCache.clear())
+  private val triangleCache = new Memos.Memo[DataFrame, DataFrame](8, derived = true)
   private def triangleStream(undirectedEdges: DataFrame): DataFrame =
-    triangleCache.getOrElseUpdate(undirectedEdges)(
-      triangleStreamBuild(undirectedEdges).materialize())
+    triangleCache(undirectedEdges)(triangleStreamBuild(undirectedEdges).materialize())
 
   /** Degree-ordered triangle enumeration — each triangle exactly once. */
   private def triangleStreamBuild(undirectedEdges: DataFrame): DataFrame = {
@@ -590,47 +588,44 @@ object Algorithms {
     * block-manager pressure, persist() pins partitioning and blocks
     * AQE's shuffle→broadcast conversion for the round join). */
   def ballSizes(undirectedEdges: DataFrame, maxDepth: Int): DataFrame =
-    ballCache.get(undirectedEdges) match {
-      case Some((d, df)) if d >= maxDepth => df
-      case _ =>
-        // the eager localCheckpoint materializes the whole round
-        // chain INSIDE the hash-agg scope
-        val spark = undirectedEdges.sparkSession
-        val nodes = undirectedEdges.select(col("a")).distinct()
-        val nNodes = nodes.count()
-        // conf override so tests can pin the shuffle-regime round
-        // shape (per-round checkpoint) on spec-sized graphs
-        val ceiling = spark.conf.getOption("graft.ball.broadcastNodes")
-          .flatMap(v => scala.util.Try(v.toLong).toOption)
-          .getOrElse(ballBroadcastNodes)
-        val bcast = nNodes <= ceiling
-        // graft.ball.lgk overrides the shuffle-regime register count:
-        // every edge row hauls one serialized sketch per round there,
-        // so register bytes ARE the round exchange (lgk=8 ≈ 296 B/row
-        // measured; lgk=6 ≈ 2.6× smaller at ±13 % theoretical
-        // per-node error — the SUMMED neighborhood curve averages
-        // most of the wobble out; see SURVEY §13 for the measured
-        // drift). The broadcast regime ignores the override — spec-
-        // scale exactness (sparse-mode HLL) rides the lgk=10 path.
-        val lgk = if (bcast) 10
-          else spark.conf.getOption("graft.ball.lgk")
-            .flatMap(v => scala.util.Try(v.toInt).toOption)
-            .filter(v => v >= 4 && v <= 12).getOrElse(8)
-        // per-round lineage truncation (see ballSizesBuild): default
-        // follows the regime — off while the state broadcasts (the
-        // lazy chain's measured fast path), on in the shuffle regime
-        // where rounds × |E| × sketch-bytes is a real scratch-disk
-        // budget. graft.ball.roundCheckpoint=true|false overrides
-        // for operators whose cluster has ample per-node scratch
-        // (trade peak disk back for round fusion) or probes.
-        val roundCkpt = spark.conf.getOption("graft.ball.roundCheckpoint")
-          .map(_.trim.equalsIgnoreCase("true")).getOrElse(!bcast)
-        val built = withHashAgg(spark, hashAggThreshold(spark, lgk))(
-          ballSizesBuild(undirectedEdges, nodes, bcast, lgk, maxDepth,
-            roundCkpt).materialize())
-        ballCache.put(undirectedEdges, (maxDepth, built))
-        built
-    }
+    ballCache(undirectedEdges, _._1 >= maxDepth) { _ =>
+      // the eager localCheckpoint materializes the whole round
+      // chain INSIDE the hash-agg scope
+      val spark = undirectedEdges.sparkSession
+      val nodes = undirectedEdges.select(col("a")).distinct()
+      val nNodes = nodes.count()
+      // conf override so tests can pin the shuffle-regime round
+      // shape (per-round checkpoint) on spec-sized graphs
+      val ceiling = spark.conf.getOption("graft.ball.broadcastNodes")
+        .flatMap(v => scala.util.Try(v.toLong).toOption)
+        .getOrElse(ballBroadcastNodes)
+      val bcast = nNodes <= ceiling
+      // graft.ball.lgk overrides the shuffle-regime register count:
+      // every edge row hauls one serialized sketch per round there,
+      // so register bytes ARE the round exchange (lgk=8 ≈ 296 B/row
+      // measured; lgk=6 ≈ 2.6× smaller at ±13 % theoretical
+      // per-node error — the SUMMED neighborhood curve averages
+      // most of the wobble out; see SURVEY §13 for the measured
+      // drift). The broadcast regime ignores the override — spec-
+      // scale exactness (sparse-mode HLL) rides the lgk=10 path.
+      val lgk = if (bcast) 10
+        else spark.conf.getOption("graft.ball.lgk")
+          .flatMap(v => scala.util.Try(v.toInt).toOption)
+          .filter(v => v >= 4 && v <= 12).getOrElse(8)
+      // per-round lineage truncation (see ballSizesBuild): default
+      // follows the regime — off while the state broadcasts (the
+      // lazy chain's measured fast path), on in the shuffle regime
+      // where rounds × |E| × sketch-bytes is a real scratch-disk
+      // budget. graft.ball.roundCheckpoint=true|false overrides
+      // for operators whose cluster has ample per-node scratch
+      // (trade peak disk back for round fusion) or probes.
+      val roundCkpt = spark.conf.getOption("graft.ball.roundCheckpoint")
+        .map(_.trim.equalsIgnoreCase("true")).getOrElse(!bcast)
+      val built = withHashAgg(spark, hashAggThreshold(spark, lgk))(
+        ballSizesBuild(undirectedEdges, nodes, bcast, lgk, maxDepth,
+          roundCkpt).materialize())
+      (maxDepth, built)
+    }._2
 
   /** Memory-derived group cap for the sketch-union hash path. The
     * map-side ObjectHashAggregate holds one ~1.1 KB sketch buffer per
@@ -712,9 +707,7 @@ object Algorithms {
     }
   }
 
-  private val ballCache =
-    new graft.util.LruCache[DataFrame, (Int, DataFrame)](8)
-  graft.util.Memos.registerDerived(() => ballCache.clear())
+  private val ballCache = new Memos.Memo[DataFrame, (Int, DataFrame)](8, derived = true)
 
   /** Node-count ceiling for broadcasting the per-round sketch state:
     * |V| × ~1.1 KB (lgk=10 dense sketch + carries) ≤ ~256 MB. Below
@@ -905,32 +898,28 @@ object Algorithms {
     * rides along so decode can fail LOUDLY if an id ever contains
     * the separator (split length mismatch) instead of silently
     * corrupting neighbor sets. */
-  private val adjBcastCache = new graft.util.LruCache[DataFrame,
-    org.apache.spark.broadcast.Broadcast[Array[(String, String, Int)]]](8)
-  graft.util.Memos.registerDerived(() => adjBcastCache.clear())
-  // serialized build PER KEY (striped latch — one monitor here used
-  // to serialize first builds of DIFFERENT graphs too): LruCache runs
-  // builders outside its lock on the assumption they are LAZY; this
-  // one is an eager collect+broadcast, and two racing first calls for
-  // the same frame would each ship the ~100 MB map and orphan the
-  // loser's TorrentBroadcast until a driver GC
+  // admits every frame, not only stable ones: a caller may hand
+  // several verbs one unmarked frame (kCore, LPA and betweenness over
+  // one `und` per pass) and they share this broadcast. The build is
+  // an eager collect+broadcast, so racing first calls for one frame
+  // build it once under the memo's per-key lock
+  private val adjBcastCache = new Memos.Memo[DataFrame,
+    org.apache.spark.broadcast.Broadcast[Array[(String, String, Int)]]](8, derived = true)
   private def broadcastAdjacency(undirectedEdges: DataFrame) =
-    graft.util.Latches.forKey(undirectedEdges).synchronized {
-      adjBcastCache.getOrElseUpdate(undirectedEdges) {
-        val spark = undirectedEdges.sparkSession
-        import spark.implicits._
-        // null ids are dropped, as in the rounds ([[nonNullIds]]) —
-        // without this a null id survives the groupBy into the map
-        // and the kernels' id sort NPEs, a regime-divergent failure
-        // for the same input
-        val adj = nonNullIds(undirectedEdges)
-          .groupBy(col("a").cast("string").as("a"))
-          .agg(concat_ws(PackedAdjacency.Sep.toString,
-              collect_list(col("b").cast("string"))).as("bs"),
-            count(col("b")).cast("int").as("n"))
-          .as[(String, String, Int)].collect()
-        spark.sparkContext.broadcast(adj)
-      }
+    adjBcastCache(undirectedEdges) {
+      val spark = undirectedEdges.sparkSession
+      import spark.implicits._
+      // null ids are dropped, as in the rounds ([[nonNullIds]]) —
+      // without this a null id survives the groupBy into the map
+      // and the kernels' id sort NPEs, a regime-divergent failure
+      // for the same input
+      val adj = nonNullIds(undirectedEdges)
+        .groupBy(col("a").cast("string").as("a"))
+        .agg(concat_ws(PackedAdjacency.Sep.toString,
+            collect_list(col("b").cast("string"))).as("bs"),
+          count(col("b")).cast("int").as("n"))
+        .as[(String, String, Int)].collect()
+      spark.sparkContext.broadcast(adj)
     }
 
   /** Executor-side decode of [[broadcastAdjacency]]'s packed payload,
@@ -946,36 +935,25 @@ object Algorithms {
     // per SparkContext, so id alone could serve a STALE map to a JVM
     // that recreated its session (r12 ADVICE); the app id makes the
     // key context-unique
-    private val cache = new java.util.LinkedHashMap[
-        (String, Long), Map[String, Array[String]]](8, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[
-          (String, Long), Map[String, Array[String]]]) =
-        size() > 4
-    }
+    private val cache =
+      new Memos.Memo[(String, Long), Map[String, Array[String]]](4, derived = false)
     def decode(b: org.apache.spark.broadcast.Broadcast[
         Array[(String, String, Int)]]): Map[String, Array[String]] =
-      cache.synchronized {
-        val key = (org.apache.spark.SparkEnv.get.conf.getAppId, b.id)
-        val got = cache.get(key)
-        if (got != null) got
-        else {
-          val m = b.value.iterator.map { case (k, packed, n) =>
-            // split with limit -1 keeps trailing empty strings, so the
-            // count check catches BOTH corruption directions (r12
-            // ADVICE): an empty-string last neighbor no longer crashes
-            // a valid input, and an id ENDING in the separator can no
-            // longer pass the require with silently-wrong neighbors
-            val bs = if (n == 0) Array.empty[String]
-              else packed.split(
-                java.util.regex.Pattern.quote(Sep.toString), -1)
-            require(bs.length == n, s"packed adjacency for '$k' " +
-              s"decoded ${bs.length} neighbors, expected $n — " +
-              "a node id contains the separator")
-            (k, bs)
-          }.toMap
-          cache.put(key, m)
-          m
-        }
+      cache((org.apache.spark.SparkEnv.get.conf.getAppId, b.id)) {
+        b.value.iterator.map { case (k, packed, n) =>
+          // split with limit -1 keeps trailing empty strings, so the
+          // count check catches BOTH corruption directions (r12
+          // ADVICE): an empty-string last neighbor no longer crashes
+          // a valid input, and an id ENDING in the separator can no
+          // longer pass the require with silently-wrong neighbors
+          val bs = if (n == 0) Array.empty[String]
+            else packed.split(
+              java.util.regex.Pattern.quote(Sep.toString), -1)
+          require(bs.length == n, s"packed adjacency for '$k' " +
+            s"decoded ${bs.length} neighbors, expected $n — " +
+            "a node id contains the separator")
+          (k, bs)
+        }.toMap
       }
   }
 
@@ -1325,12 +1303,10 @@ object Algorithms {
     * frame. */
   def labelPropagationCached(undirectedEdges: DataFrame,
       steps: Int = 5): DataFrame =
-    lpaCache.getOrElseUpdate((undirectedEdges, steps))(
+    lpaCache((undirectedEdges, steps))(
       labelPropagation(undirectedEdges, steps).materialize())
 
-  private val lpaCache =
-    new graft.util.LruCache[(DataFrame, Int), DataFrame](8)
-  graft.util.Memos.registerDerived(() => lpaCache.clear())
+  private val lpaCache = new Memos.Memo[(DataFrame, Int), DataFrame](8, derived = true)
 
   /** Deterministic "random" walks of `length` steps from every
     * node: step `t` from node `v` moves to
@@ -1438,12 +1414,10 @@ object Algorithms {
     * checkpointed by the regimes themselves. */
   def deterministicWalksCached(undirectedEdges: DataFrame,
       length: Int): DataFrame =
-    walksCache.getOrElseUpdate((undirectedEdges, length))(
+    walksCache((undirectedEdges, length))(
       deterministicWalks(undirectedEdges, length))
 
-  private val walksCache =
-    new graft.util.LruCache[(DataFrame, Int), DataFrame](8)
-  graft.util.Memos.registerDerived(() => walksCache.clear())
+  private val walksCache = new Memos.Memo[(DataFrame, Int), DataFrame](8, derived = true)
 
   /** Structural similarity between destination-side nodes of a
     * bipartite edge list: neighbor-set Jaccard — for suppliers x, y,

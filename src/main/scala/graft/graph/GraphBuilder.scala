@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.Materialize._
+import graft.util.Memos
 
 /** Builds the property graph (nodes + links) from the raw tables.
   *
@@ -81,7 +82,7 @@ object GraphBuilder {
     * partitioning via partial (map-side) aggregation.
     */
   def edges(s: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrElseUpdate((s, dir))(markStable(
+    edgeCache((s, dir))(Memos.markStable(
       Tables.orders(s, dir).select("o_orderkey", "o_custkey")
         .join(Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey", "l_quantity"),
           col("o_orderkey") === col("l_orderkey"))
@@ -112,49 +113,22 @@ object GraphBuilder {
   // recompute impossible. Dropped frames are reclaimed by the
   // ContextCleaner once no derived plan references them.
   private val edgeCache =
-    new graft.util.LruCache[(SparkSession, String), DataFrame](16)
+    new Memos.Memo[(SparkSession, String), DataFrame](16, derived = false)
   private val undirectedCache =
-    new graft.util.LruCache[DataFrame, DataFrame](16)
+    new Memos.Memo[DataFrame, DataFrame](16, derived = false)
 
   /** Memoized undirected adjacency of the demo graph for `dir`. */
   def undirectedFor(s: SparkSession, dir: String): DataFrame =
     undirectedOf(edges(s, dir))
 
   /** Checkpointed [[undirected]] adjacency of an edge frame, memoized
-    * per [[markStable]] frame instance (the demo graph's per-dir
+    * per [[Memos.markStable]] frame instance (the demo graph's per-dir
     * edges, a GraphStore edges version) and itself stable, so its
     * [[aKeyed]] copy is memoized too. One-shot frames get a fresh
-    * checkpoint per call. The build is eager, so it is serialized per
-    * key like [[aKeyed]]. */
+    * checkpoint per call. */
   def undirectedOf(edges: DataFrame): DataFrame =
-    if (!isStable(edges)) undirected(edges).materialize()
-    else graft.util.Latches.forKey(edges).synchronized {
-      undirectedCache.getOrElseUpdate(edges)(
-        markStable(undirected(edges).materialize()))
-    }
-
-  // ---- stable-instance registry --------------------------------
-  // Frames handed out by the caches above and GraphStore's relation
-  // cache are LONG-LIVED (the memo returns the same instance to
-  // every query), so derived
-  // artifacts keyed on them (aKeyed, broadcastAdjacency, lpaCache)
-  // actually get cache hits. A frame built fresh per call (e.g. the
-  // dedup keeper-resolution adjacency — a new unionByName().distinct()
-  // per call) NEVER hits an instance-keyed memo; caching its derived
-  // checkpoint only pins dead 2|E| copies in the LRU until 16 more
-  // one-shot misses churn them out (r10 ADVICE, GraphBuilder:151).
-  // Weak identity set: a registered frame falls out on its own when
-  // the owning cache evicts it and no consumer holds it.
-  private val stableFrames = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[DataFrame, java.lang.Boolean]))
-
-  /** Register `df` as a long-lived, memo-eligible frame instance.
-    * The caches here and GraphStore's do it automatically; a service
-    * holding its own adjacency for many queries can opt in. */
-  def markStable(df: DataFrame): DataFrame = { stableFrames.add(df); df }
-
-  private def isStable(df: DataFrame): Boolean = stableFrames.contains(df)
+    if (!Memos.isStable(edges)) undirected(edges).materialize()
+    else undirectedCache(edges)(Memos.markStable(undirected(edges).materialize()))
 
   /** Undirected, deduplicated (a, b) adjacency — both directions
     * materialized, like the reference's two-rows-per-bidirectional-link
@@ -185,21 +159,16 @@ object GraphBuilder {
     * dirs, and GraphStore hands out one frame per marked version (a
     * commit or a rewritten store is a new instance; expiry-bearing
     * tables get a fresh, unregistered frame per read).
-    * Build is serialized PER KEY (striped latch, not one monitor —
-    * concurrent first builds of DIFFERENT graphs run in parallel):
-    * it is an EAGER shuffle+checkpoint, and racing first calls for
-    * the same frame would each write the 2|E| copy.
+    * The build is an EAGER shuffle+checkpoint, built once per key
+    * under the memo's per-key lock.
     *
-    * Memoization applies only to [[markStable]]-registered frames —
+    * Memoization applies only to [[Memos.markStable]]-registered frames —
     * the instances the dir-keyed caches (and long-lived services)
     * hand out repeatedly. One-shot frames route around the memo via
     * [[withAKeyed]]; memoizing them pinned dead 2|E| checkpoints in
     * the LRU until churn evicted them (r10 ADVICE). */
   def aKeyed(edges: DataFrame): DataFrame =
-    graft.util.Latches.forKey(edges).synchronized {
-      aKeyedCache.getOrElseUpdate(edges)(
-        edges.repartition(col("a")).materialize())
-    }
+    aKeyedCache(edges)(edges.repartition(col("a")).materialize())
 
   /** Scoped a-keyed adjacency — THE entry point for the iterative
     * operators. Stable (registered) frames read the shared memoized
@@ -215,16 +184,14 @@ object GraphBuilder {
     * scratch copy is never re-read after `body`; the blocks are
     * freed immediately instead of waiting out 16 LRU misses. */
   def withAKeyed[T](edges: DataFrame)(body: DataFrame => T): T =
-    if (isStable(edges)) body(aKeyed(edges))
+    if (Memos.isStable(edges)) body(aKeyed(edges))
     else {
       val scratch = edges.repartition(col("a"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try body(scratch) finally scratch.unpersist(blocking = false)
     }
 
-  private val aKeyedCache =
-    new graft.util.LruCache[DataFrame, DataFrame](16)
-  graft.util.Memos.registerDerived(() => aKeyedCache.clear())
+  private val aKeyedCache = new Memos.Memo[DataFrame, DataFrame](16, derived = true)
 
   /** Test hook: the memo must not grow on one-shot inputs. */
   private[graft] def aKeyedCacheSize: Int = aKeyedCache.size

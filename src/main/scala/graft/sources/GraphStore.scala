@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.Sharding
+import graft.util.Memos
 
 /** Persistent layout for a property graph, designed for the 100 TB
   * read paths:
@@ -59,7 +60,7 @@ import graft.index.Sharding
   * are bounded together: past [[ResidentBudgetBytes]] of their file
   * bytes the least recent are evicted (their rows take 10–72× those
   * bytes on the heap). The cached forms are
-  * [[graft.graph.GraphBuilder.markStable]] frames, so adjacency built
+  * [[graft.util.Memos.markStable]] frames, so adjacency built
   * over a stored edges version is memoized per version. Only marked
   * versions are cached: plain (pre-versioning) layouts are read anew
   * per call, and a table carrying `expires_at_us` hands out a fresh
@@ -130,7 +131,7 @@ object GraphStore {
   // only the reference. One entry per (session, version dir, marker
   // mtime), whichever its regime.
   private val versions =
-    new graft.util.LruCache[(SparkSession, String, Long), Version](32,
+    new Memos.Memo[(SparkSession, String, Long), Version](32, derived = false,
       maxWeight = ResidentBudgetBytes,
       weight = v => if (v.resident) v.fileBytes.toLong else 0L)
 
@@ -145,32 +146,21 @@ object GraphStore {
   /** A marked version's cached form: its file relation, or, when its
     * file statistics are within [[residentLimit]], its rows as a
     * local relation. A cached form whose regime the limit no longer
-    * picks is rebuilt. Builds (a schema-inference job, or one eager
-    * collect) are serialized per key like GraphBuilder.aKeyed: a
+    * picks is rebuilt, from its file relation and bytes. Builds (a
+    * schema-inference job, or one eager collect) run once per key: a
     * server's reader and writer threads both resolve versions. */
   private def cached(spark: SparkSession, at: String, mtime: Long): DataFrame = {
-    val key = (spark, at, mtime)
     val limit = residentLimit(spark)
-    def current(v: Version) = v.resident == (v.fileBytes <= limit)
-    versions.get(key).filter(current).map(_.form).getOrElse {
-      graft.util.Latches.forKey(key).synchronized {
-        versions.get(key) match {
-          case Some(v) if current(v) => v.form
-          case held =>
-            val file = held.filterNot(_.resident).map(_.form).getOrElse(
-              graft.graph.GraphBuilder.markStable(spark.read.parquet(at)))
-            val bytes = held.fold(file.queryExecution.optimizedPlan.stats.sizeInBytes)(
-              _.fileBytes)
-            val v =
-              if (bytes > limit) Version(file, bytes, resident = false)
-              else Version(graft.graph.GraphBuilder.markStable(
-                spark.createDataFrame(file.collect().toSeq.asJava, file.schema)),
-                bytes, resident = true)
-            versions.put(key, v)
-            v.form
-        }
-      }
-    }
+    versions((spark, at, mtime), v => v.resident == (v.fileBytes <= limit)) { held =>
+      val file = held.filterNot(_.resident).map(_.form).getOrElse(
+        Memos.markStable(spark.read.parquet(at)))
+      val bytes = held.fold(file.queryExecution.optimizedPlan.stats.sizeInBytes)(
+        _.fileBytes)
+      if (bytes > limit) Version(file, bytes, resident = false)
+      else Version(Memos.markStable(
+        spark.createDataFrame(file.collect().toSeq.asJava, file.schema)),
+        bytes, resident = true)
+    }.form
   }
 
   /** THE read helper: the epoch-pinned version if the given epoch

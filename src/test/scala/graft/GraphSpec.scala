@@ -387,7 +387,7 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     assert(GraphBuilder.aKeyedCacheSize == before)
     // stable: the registered instance memoizes — same a-keyed frame
     // both times
-    val stable = GraphBuilder.markStable(und("a" -> "b", "b" -> "c"))
+    val stable = graft.util.Memos.markStable(und("a" -> "b", "b" -> "c"))
     var first: org.apache.spark.sql.DataFrame = null
     var second: org.apache.spark.sql.DataFrame = null
     GraphBuilder.withAKeyed(stable) { k => first = k; k.count() }

@@ -216,20 +216,49 @@ class MiscSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("LruCache evicts the least recent weighted entries past maxWeight") {
+  test("Memo evicts the least recent weighted entries past maxWeight") {
     val evicted = scala.collection.mutable.Buffer.empty[Int]
-    val c = new graft.util.LruCache[String, Int](8, (v: Int) => evicted += v,
+    val c = new graft.util.Memos.Memo[String, Int](8, derived = false,
+      onEvict = (v: Int) => evicted += v,
       maxWeight = 10L, weight = (v: Int) => v.toLong)
-    c.put("a", 4); c.put("zero", 0); c.put("b", 4)
+    c("a")(4); c("zero")(0); c("b")(4)
     assert(c.get("a").contains(4)) // a is now more recent than b
-    c.put("c", 5) // 13 > 10: b, the least recent weighted entry, goes
+    c("c")(5) // 13 > 10: b, the least recent weighted entry, goes
     assert(evicted == Seq(4) && c.get("b").isEmpty && c.size == 3)
     // an entry over the bound alone stays; every other weighted one goes
-    assert(c.getOrElseUpdate("d")(11) == 11)
+    assert(c("d")(11) == 11)
     assert(evicted.sorted == Seq(4, 4, 5) && c.get("zero").contains(0))
     // replacing a value releases its old weight
-    c.put("d", 1); c.put("e", 9)
+    c("d", _ == 1)(_ => 1); c("e")(9)
     assert(c.get("d").contains(1) && c.get("e").contains(9) && c.size == 3)
+  }
+
+  test("src/main builds no concurrent or ordered map outside Memos") {
+    // every memo is a Memos.Memo; these maps are the non-memo uses
+    // (a lease registry, a top-k operator's per-task groups, an error
+    // report), each allowed by the declaration it must sit on
+    import scala.jdk.CollectionConverters._
+    val allowed = Map(
+      "util/Memos.scala" -> "private val m = ",
+      "sources/Lease.scala" -> "private val held = ",
+      "plans/TopKPerKey.scala" -> "val groups = ",
+      "Bench.scala" -> "val errors = ")
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val map = "TrieMap|ConcurrentHashMap|LinkedHashMap".r
+    val walk = java.nio.file.Files.walk(root)
+    val found = try walk.iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val rel = root.relativize(p).toString
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+          .filter { case (l, _) => map.findFirstIn(l).nonEmpty }
+          .map { case (l, i) => (rel, i + 1, l.trim) }
+      }
+    finally walk.close()
+    val stray = found.filterNot { case (rel, _, l) =>
+      allowed.get(rel).exists(l.contains) }
+    assert(stray.isEmpty, stray.mkString("\n"))
+    assert(found.map(_._1).toSet == allowed.keySet)
   }
 
   test("main entry points are exactly the documented tools") {

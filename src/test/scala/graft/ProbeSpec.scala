@@ -42,6 +42,9 @@ class ProbeSpec extends AnyFunSuite with SparkFixture {
       recs.foreach(r =>
         assert(r.jobs > 0 && r.stages > 0 && r.tasks > 0 && r.taskCpuS > 0,
           r.json))
+      // each call reads the warm input adjacency and rebuilds a
+      // derived artifact the reset before it cleared
+      recs.foreach(r => assert(r.memoHits > 0 && r.memoMisses > 0, r.json))
       val jobs = recs.groupBy(_.leg).transform((_, rs) => rs.map(_.jobs))
       assert(jobs("rounds").min > jobs("kernel").max, jobs)
       assert(spark.conf.get(kept) == "123")
