@@ -152,7 +152,7 @@ object Algorithms {
     * rounds only by summation order, in the last ulp. Contract notes:
     * the input is the symmetric adjacency (every `b` is also an `a`),
     * rows with a null id are dropped in both regimes, and only STRING
-    * adjacencies take the single task (see [[broadcastRegimeEligible]]). */
+    * adjacencies take the single task (see [[stringIds]]). */
   def pageRank(undirectedEdges0: DataFrame, iters: Int = 10,
       damping: Double = 0.85, seed: Option[String] = None): DataFrame =
     if (singleTaskEligible(undirectedEdges0))
@@ -308,7 +308,7 @@ object Algorithms {
     * convergence-failure throw is a rounds-only behavior), rows with
     * a null id are dropped in both regimes, and the single task keys
     * on STRING node columns — non-string adjacencies ride the rounds
-    * at any size (see [[broadcastRegimeEligible]]). */
+    * at any size (see [[stringIds]]). */
   def kCore(undirectedEdges0: DataFrame, maxIter: Int = 50): DataFrame =
     if (singleTaskEligible(undirectedEdges0))
       singleTask(undirectedEdges0, "core")(kCoreKernel)
@@ -388,13 +388,15 @@ object Algorithms {
   }
 
   /** Edge-count ceiling (`graft.graph.broadcastEdges`) for the
-    * single-task regimes of [[pageRank]], [[connectedComponents]],
-    * [[labelPropagation]], [[kCore]] and [[betweenness]]: ~2M
-    * directed rows ≈ ~120 MB as the grouped
-    * `Map[node, Array[neighbor]]` (~60 B/edge — leaner than a
+    * broadcast regimes of eight verbs: the single-task kernels of
+    * [[pageRank]], [[connectedComponents]], [[labelPropagation]] and
+    * [[kCore]], the seed-parallel sweep of [[betweenness]], and the
+    * driver-side kernels of `Traversal.bfsLevels`, `pathBetween` and
+    * `shortestPathsWeighted`: ~2M directed rows ≈ ~120 MB as the
+    * grouped `Map[node, Array[neighbor]]` (~60 B/edge — leaner than a
     * hash-join relation, so the ceiling sits above
     * [[triangleBroadcastEdges]] at the same memory envelope). All
-    * five share the memoized [[broadcastAdjacency]]; the driver
+    * eight share the memoized [[broadcastAdjacency]]; the driver
     * materializes only its |V| pre-grouped rows, bounded by the
     * ceiling itself. */
   val broadcastEdges = 2000000L
@@ -408,34 +410,49 @@ object Algorithms {
       .flatMap(v => scala.util.Try(v.toLong).toOption)
       .getOrElse(default)
 
-  /** Gate for the broadcast kernels: under the row ceiling AND both
-    * key columns are strings. The kernels collect keys into
-    * `Map[String, …]`; casting non-string ids would silently flip
+  /** Both key columns are strings. The broadcast kernels collect keys
+    * into `Map[String, …]`; casting non-string ids would silently flip
     * the output schema (and a bigint-vs-string result join coerces
     * through double, mis-comparing 64-bit ids above 2^53) — so
     * non-string adjacencies take the type-generic shuffle regime at
-    * any size. The count is one scan of the caller's frame; the
-    * query path hands memoized checkpointed adjacencies, for which
-    * it is near-free (a raw un-materialized plan pays one extra
-    * computation — materialize first if that matters). */
-  private def broadcastRegimeEligible(edges: DataFrame,
-      ceiling: Long): Boolean = {
+    * any size. */
+  private def stringIds(edges: DataFrame): Boolean = {
     val st = org.apache.spark.sql.types.StringType
-    edges.schema.fields.take(2).forall(_.dataType == st) &&
-      edges.count() <= ceiling
+    edges.schema.fields.take(2).forall(_.dataType == st)
   }
 
-  /** The one gate of the five single-task kernels. */
-  private def singleTaskEligible(undirectedEdges: DataFrame): Boolean =
-    broadcastRegimeEligible(undirectedEdges, confLong(
-      undirectedEdges.sparkSession, "graft.graph.broadcastEdges",
-      broadcastEdges))
+  /** Gate of a broadcast regime with its own ceiling: string ids and
+    * at most `ceiling` rows, by one count of the caller's frame. */
+  private def broadcastRegimeEligible(edges: DataFrame,
+      ceiling: Long): Boolean =
+    stringIds(edges) && edges.count() <= ceiling
+
+  /** The one gate of the eight broadcast verbs: string ids and at
+    * most `graft.graph.broadcastEdges` rows. The row count lives in
+    * the frame's [[adjBcastCache]] entry, so a repeated call compares
+    * the held count with the CURRENT ceiling and runs no count job
+    * (lowering the ceiling below it sends the next call to the
+    * rounds). A frame with no entry is counted once; if it is within
+    * the ceiling its entry is built here, so the kernel that follows
+    * finds it, and a frame above the ceiling gets no entry — nothing
+    * pins a big frame's broadcast. */
+  private[graph] def singleTaskEligible(edges: DataFrame): Boolean =
+    stringIds(edges) && {
+      val ceiling = confLong(edges.sparkSession,
+        "graft.graph.broadcastEdges", broadcastEdges)
+      adjBcastCache.get(edges) match {
+        case Some(held) => held.rows <= ceiling
+        case None =>
+          val rows = edges.count()
+          rows <= ceiling && { adjacencyEntry(edges, rows); true }
+      }
+    }
 
   /** Rows with a null endpoint, dropped by every regime: the rounds'
     * equi-joins never match a null id, but their group-bys would
     * still emit a null node (and count its rows into a neighbor's
     * degree) that [[broadcastAdjacency]]'s null-free map has not. */
-  private def nonNullIds(edges: DataFrame): DataFrame =
+  private[graph] def nonNullIds(edges: DataFrame): DataFrame =
     edges.filter(col("a").isNotNull && col("b").isNotNull)
 
   /** A decoded [[broadcastAdjacency]] in index form: node ids sorted
@@ -472,7 +489,7 @@ object Algorithms {
     import spark.implicits._
     val bAdj = broadcastAdjacency(undirectedEdges)
     spark.sparkContext.parallelize(Seq(0), 1).flatMap { _ =>
-      val g = new IndexedAdjacency(PackedAdjacency.decode(bAdj))
+      val g = new IndexedAdjacency(PackedAdjacency.decode(bAdj).adj)
       g.ids.iterator.zip(kernel(g).iterator)
     }.toDF("node", valueCol).materialize(false)
   }
@@ -882,13 +899,15 @@ object Algorithms {
   /** Memoized broadcast adjacency behind the sub-ceiling regimes —
     * grouped DISTRIBUTED (groupBy(a) + collect_list, so the driver
     * receives |V| pre-built rows instead of 2|E| pairs to re-group)
-    * and shipped once per frame instance: [[betweenness]] and the
-    * [[singleTask]] kernels probe the same map. Eviction drops the
+    * and shipped once per frame instance: [[betweenness]], the
+    * [[singleTask]] kernels and the traversal kernels probe the same
+    * map. Eviction drops the
     * reference; the TorrentBroadcast is reclaimed by the
     * ContextCleaner.
     *
     * The broadcast payload is PACKED (r12): one -joined
-    * neighbor string + the neighbor count per node, decoded to the
+    * neighbor string + the neighbor count per node (+ the weights of
+    * a weighted frame, as one primitive array), decoded to the
     * Map[String, Array[String]] once per JVM on first task access
     * ([[PackedAdjacency.decode]]). Broadcasts go through Java
     * serialization, which walks every object — the unpacked map's
@@ -902,45 +921,82 @@ object Algorithms {
   // several verbs one unmarked frame (kCore, LPA and betweenness over
   // one `und` per pass) and they share this broadcast. The build is
   // an eager collect+broadcast, so racing first calls for one frame
-  // build it once under the memo's per-key lock
-  private val adjBcastCache = new Memos.Memo[DataFrame,
-    org.apache.spark.broadcast.Broadcast[Array[(String, String, Int)]]](8, derived = true)
+  // build it once under the memo's per-key lock. Only frames within
+  // the ceiling get an entry ([[singleTaskEligible]])
+  private val adjBcastCache = new Memos.Memo[DataFrame, AdjEntry](8, derived = true)
+
+  /** An [[adjBcastCache]] entry: the packed broadcast, and the row
+    * count of the frame it was built for — the gate's measure. */
+  private final case class AdjEntry(rows: Long,
+      packed: org.apache.spark.broadcast.Broadcast[Array[PackedAdjacency.Row]])
+
+  private def adjacencyEntry(edges: DataFrame, rows: => Long): AdjEntry =
+    adjBcastCache(edges)(AdjEntry(rows, packAdjacency(edges)))
+
   private def broadcastAdjacency(undirectedEdges: DataFrame) =
-    adjBcastCache(undirectedEdges) {
-      val spark = undirectedEdges.sparkSession
-      import spark.implicits._
-      // null ids are dropped, as in the rounds ([[nonNullIds]]) —
-      // without this a null id survives the groupBy into the map
-      // and the kernels' id sort NPEs, a regime-divergent failure
-      // for the same input
-      val adj = nonNullIds(undirectedEdges)
-        .groupBy(col("a").cast("string").as("a"))
-        .agg(concat_ws(PackedAdjacency.Sep.toString,
-            collect_list(col("b").cast("string"))).as("bs"),
-          count(col("b")).cast("int").as("n"))
-        .as[(String, String, Int)].collect()
-      spark.sparkContext.broadcast(adj)
-    }
+    adjacencyEntry(undirectedEdges, undirectedEdges.count()).packed
+
+  /** The decoded [[broadcastAdjacency]] of a frame that passed
+    * [[singleTaskEligible]], on the calling JVM (the driver for the
+    * traversal kernels, which already holds the collected payload). */
+  private[graph] def decodedAdjacency(edges: DataFrame): PackedAdjacency.Decoded =
+    PackedAdjacency.decode(broadcastAdjacency(edges))
+
+  private def packAdjacency(undirectedEdges: DataFrame) = {
+    val spark = undirectedEdges.sparkSession
+    import spark.implicits._
+    // null ids are dropped, as in the rounds ([[nonNullIds]]) —
+    // without this a null id survives the groupBy into the map
+    // and the kernels' id sort NPEs, a regime-divergent failure
+    // for the same input
+    val grouped = nonNullIds(undirectedEdges)
+      .groupBy(col("a").cast("string").as("a"))
+    val sep = PackedAdjacency.Sep.toString
+    // a weighted `(a, b, w)` frame ships its weights in neighbor
+    // order (one collect_list of (b, w) pairs keeps them aligned); a
+    // null weight packs as NaN so the neighbor list stays the one
+    // every verb sees, and only the weighted kernel skips it
+    val adj =
+      if (!undirectedEdges.columns.contains("w"))
+        grouped.agg(concat_ws(sep, collect_list(col("b").cast("string"))).as("bs"),
+          count(col("b")).cast("int").as("n"),
+          lit(null).cast("array<double>").as("ws"))
+      else grouped
+        .agg(collect_list(struct(col("b").cast("string").as("b"),
+          coalesce(col("w").cast("double"), lit(Double.NaN)).as("w"))).as("nb"))
+        .select(col("a"), concat_ws(sep, col("nb.b")).as("bs"),
+          size(col("nb")).as("n"), col("nb.w").as("ws"))
+    spark.sparkContext.broadcast(adj.as[PackedAdjacency.Row].collect())
+  }
 
   /** Executor-side decode of [[broadcastAdjacency]]'s packed payload,
     * cached per JVM and broadcast id so the k seed tasks (and any
-    * same-graph consumer, e.g. kCore after labelPropagation) share ONE
-    * Map[String, Array[String]] materialization. Bounded LRU — an
-    * executor outliving many graphs must not pin every decoded map.
-    * Decode is loud on separator collisions: the packed neighbor
-    * count must match the split length. */
+    * same-graph consumer, e.g. kCore after labelPropagation, or the
+    * driver's repeated traversals) share ONE materialization.
+    * Bounded LRU — a JVM outliving many graphs must not pin every
+    * decoded map. Decode is loud on separator collisions: the packed
+    * neighbor count must match the split length. */
   private[graph] object PackedAdjacency {
-    val Sep = ''
+    val Sep = '\u0001'
+
+    /** (node, packed neighbors, neighbor count, weights in neighbor
+      * order or null for an unweighted frame). */
+    type Row = (String, String, Int, Array[Double])
+
+    /** Neighbor lists by node, and for a weighted frame the weights
+      * aligned with them (NaN for a null weight); empty otherwise. */
+    final case class Decoded(adj: Map[String, Array[String]],
+        weights: Map[String, Array[Double]])
+
     // cache key: (appId, broadcast id) — broadcast ids restart from 0
     // per SparkContext, so id alone could serve a STALE map to a JVM
     // that recreated its session (r12 ADVICE); the app id makes the
     // key context-unique
-    private val cache =
-      new Memos.Memo[(String, Long), Map[String, Array[String]]](4, derived = false)
-    def decode(b: org.apache.spark.broadcast.Broadcast[
-        Array[(String, String, Int)]]): Map[String, Array[String]] =
+    private val cache = new Memos.Memo[(String, Long), Decoded](4, derived = false)
+    def decode(b: org.apache.spark.broadcast.Broadcast[Array[Row]]): Decoded =
       cache((org.apache.spark.SparkEnv.get.conf.getAppId, b.id)) {
-        b.value.iterator.map { case (k, packed, n) =>
+        val rows = b.value
+        val adj = rows.iterator.map { case (k, packed, n, _) =>
           // split with limit -1 keeps trailing empty strings, so the
           // count check catches BOTH corruption directions (r12
           // ADVICE): an empty-string last neighbor no longer crashes
@@ -954,6 +1010,8 @@ object Algorithms {
             "a node id contains the separator")
           (k, bs)
         }.toMap
+        Decoded(adj, rows.iterator.collect {
+          case (k, _, _, ws) if ws != null => (k, ws) }.toMap)
       }
   }
 
@@ -975,7 +1033,7 @@ object Algorithms {
     spark.sparkContext
       .parallelize(seedKeys.toSeq, math.max(1, seedKeys.length))
       .flatMap { s =>
-        val g = PackedAdjacency.decode(bAdj)
+        val g = PackedAdjacency.decode(bAdj).adj
         val depth = scala.collection.mutable.HashMap(s -> 0)
         val sigma = scala.collection.mutable.HashMap(s -> 1.0)
         val levels = scala.collection.mutable.ArrayBuffer(Array(s))

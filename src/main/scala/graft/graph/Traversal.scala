@@ -1,7 +1,10 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.plans.Materialize._
 
 /** Frontier-based traversals over an undirected adjacency DataFrame
@@ -9,11 +12,25 @@ import graft.plans.Materialize._
   * expansion (`models/egraph_fquery_model.erl:100-110`) and DFS
   * path search (`src/egraph_dfs_algo.erl:36-99`).
   *
-  * Scale notes (100 TB contract, SURVEY.md §5): each level is one
-  * `frontier ⋈ edges` shuffle; the frontier is broadcast while it
-  * stays under [[broadcastLimit]] rows, and every level is
-  * `localCheckpoint`ed so lineage (and thus re-execution cost on
-  * failure) stays O(1) in depth, not O(depth).
+  * Scale notes (100 TB contract, SURVEY.md §5): two regimes, picked
+  * by the one gate of the graph verbs, `graft.graph.broadcastEdges`
+  * ([[Algorithms.broadcastEdges]]; string ids only).
+  *  - Within the ceiling each verb runs as an in-memory kernel on the
+  *    DRIVER over the memoized broadcast adjacency the gate built (and
+  *    collected there), decoded once per broadcast. A kernel walks only
+  *    the nodes it reaches, and its result is a local relation: a
+  *    repeated point traversal runs no Spark job at all. The gate reads
+  *    the row count held with the adjacency, so a repeated call runs no
+  *    count job either.
+  *  - Past the ceiling (and for non-string ids) each level is one
+  *    `frontier ⋈ edges` join over the shared a-keyed adjacency; the
+  *    frontier is broadcast while it stays under [[broadcastLimit]]
+  *    rows, and every level is `localCheckpoint`ed so lineage (and
+  *    thus re-execution cost on failure) stays O(1) in depth, not
+  *    O(depth).
+  * Both regimes return the same rows: null ids, null seeds and null
+  * weights are no nodes or edges, and ties break in Spark's string
+  * order (UTF-8 bytes).
   */
 object Traversal {
 
@@ -21,17 +38,36 @@ object Traversal {
   val broadcastLimit = 4000000L
 
   /** All nodes within `maxDepth` hops of the seeds, with their
-    * minimum depth (seeds at depth 0). */
+    * minimum depth: one row per node, seeds at depth 0 (a seed absent
+    * from the graph too), null seeds dropped. */
   def bfsLevels(edges0: DataFrame, seeds: Seq[String], maxDepth: Int): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
+    val starts = seeds.filter(_ != null).distinct
+    if (Algorithms.singleTaskEligible(edges0)) {
+      val g = Algorithms.decodedAdjacency(edges0).adj
+      val depth = mutable.HashMap(starts.map(_ -> 0): _*)
+      var frontier = starts
+      var d = 0
+      while (d < maxDepth && frontier.nonEmpty) {
+        d += 1
+        val next = mutable.ArrayBuffer.empty[String]
+        // neighbor lists include sinks (ids only ever seen as `b`),
+        // which are reached but expand nothing, as in the rounds
+        for (v <- frontier; w <- g.getOrElse(v, Array.empty[String]))
+          if (!depth.contains(w)) { depth(w) = d; next += w }
+        frontier = next.toSeq
+      }
+      depth.toSeq.toDF("node", "depth")
+    } else
     // the shared a-keyed adjacency: every level joins on `a`, and
     // the per-call `edges0.materialize()` this replaces re-copied an
     // ALREADY-checkpointed memoized frame on every invocation
-    GraphBuilder.withAKeyed(edges0) { edges =>
-    var visited = seeds.toDF("node").withColumn("depth", lit(0)).materialize()
+    GraphBuilder.withAKeyed(edges0) { keyed =>
+    val edges = Algorithms.nonNullIds(keyed)
+    var visited = starts.toDF("node").withColumn("depth", lit(0)).materialize()
     var frontier = visited.select("node")
-    var frontierSize = seeds.size.toLong
+    var frontierSize = starts.size.toLong
     var visitedSize = frontierSize
     var depth = 0
     while (depth < maxDepth && frontierSize > 0) {
@@ -63,24 +99,63 @@ object Traversal {
   }
 
   /** One seed→destination path, reference DFS semantics ("a path,
-    * not necessarily shortest" — egraph_dfs_algo.erl:63-66). The
-    * distributed form runs level-synchronous parent discovery
-    * (deterministic min-parent tie-break), then walks parent
-    * pointers back — path reconstruction is inherently sequential
-    * and touches only path-length many tiny lookups.
+    * not necessarily shortest" — egraph_dfs_algo.erl:63-66). Both
+    * regimes run level-synchronous parent discovery — each node
+    * found at level d takes the minimum frontier neighbor, in Spark's
+    * string order, as its parent — then walk parent pointers back, so
+    * they return the same path. Path reconstruction is inherently
+    * sequential and touches only path-length many tiny lookups.
     *
-    * Returns (step, node) rows, step 0 = source.
+    * Returns (step, node) rows, step 0 = source; no rows when there
+    * is no path within `maxDepth` hops or an endpoint is null.
     */
   def pathBetween(edges0: DataFrame, source: String, destination: String,
       maxDepth: Int = 20): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
-    if (source == destination)
-      return Seq((0, source)).toDF("step", "node")
-    GraphBuilder.withAKeyed(edges0) { edges =>
+    val path =
+      if (source == null || destination == null) Nil
+      else if (source == destination) List(source)
+      else if (Algorithms.singleTaskEligible(edges0))
+        pathKernel(Algorithms.decodedAdjacency(edges0).adj, source,
+          destination, maxDepth)
+      else pathRounds(edges0, source, destination, maxDepth)
+    path.zipWithIndex.map { case (n, i) => (i, n) }.toDF("step", "node")
+  }
+
+  private def pathKernel(g: Map[String, Array[String]], source: String,
+      destination: String, maxDepth: Int): List[String] = {
+    val parent = mutable.HashMap[String, String](source -> null)
+    var frontier = Seq(source)
+    var found = false
+    var depth = 0
+    while (!found && depth < maxDepth && frontier.nonEmpty) {
+      depth += 1
+      // children of this level only: a node visited at an earlier
+      // level is skipped, like the rounds' anti join
+      val level = mutable.HashMap.empty[String, UTF8String]
+      for (v <- frontier) {
+        val uv = UTF8String.fromString(v)
+        for (w <- g.getOrElse(v, Array.empty[String]) if !parent.contains(w))
+          if (level.get(w).forall(p => uv.compareTo(p) < 0)) level(w) = uv
+      }
+      level.foreach { case (w, p) => parent(w) = p.toString }
+      frontier = level.keys.toSeq
+      found = level.contains(destination)
+    }
+    if (!found) Nil
+    else Iterator.iterate(destination)(parent).takeWhile(_ != null).toList.reverse
+  }
+
+  private def pathRounds(edges0: DataFrame, source: String,
+      destination: String, maxDepth: Int): List[String] = {
+    val spark = edges0.sparkSession
+    import spark.implicits._
+    GraphBuilder.withAKeyed(edges0) { keyed =>
+    val edges = Algorithms.nonNullIds(keyed)
     var frontier = Seq(source).toDF("node").materialize()
     var visited = frontier
-    val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val levels = mutable.ArrayBuffer.empty[DataFrame]
     var found = false
     var depth = 0
     var frontierSize = 1L
@@ -109,8 +184,7 @@ object Traversal {
       found = agg.getLong(1) > 0
       visitedSize += frontierSize
     }
-    if (!found)
-      spark.emptyDataFrame.selectExpr("0 as step", "'' as node").limit(0)
+    if (!found) Nil
     else {
       // walk back: levels(i) maps child -> parent at depth i+1
       var path = List(destination)
@@ -119,25 +193,64 @@ object Traversal {
       while (level >= 0) {
         val p = levels(level).filter(col("child") === current)
           .select("parent").collect()
-        if (p.nonEmpty) { current = p.head.getString(0); path = current :: path }
+        // `parent` has the edges' id type; the path is rendered as strings
+        if (p.nonEmpty) { current = p.head.get(0).toString; path = current :: path }
         level -= 1
       }
-      path.zipWithIndex.map { case (n, i) => (i, n) }.toDF("step", "node")
+      path
     }
     }
   }
 
-  /** Weighted single-source shortest distances by iterative edge
-    * relaxation (Bellman-Ford rounds; converges in ≤ diameter
-    * rounds, each one shuffle). Edges: (a, b, w). Throws if
-    * distances still improve after `maxIter` rounds, like
-    * [[Algorithms.connectedComponents]]: returning them would hand
-    * back too-long distances and drop the nodes not reached yet. */
+  /** Weighted single-source shortest distances by synchronous edge
+    * relaxation rounds (Bellman-Ford; converges in ≤ diameter
+    * rounds). Edges: (a, b, w); a row with a null id or a null (or
+    * NaN) weight is no edge, and a null source reaches nothing. Both
+    * regimes run the same rounds — the kernel relaxes only from the
+    * nodes that changed in the previous round, which offers exactly
+    * the candidates that can still improve — so they return the same
+    * double sums and throw on the same inputs: if distances still
+    * improve after `maxIter` rounds, like
+    * [[Algorithms.connectedComponents]], since returning them would
+    * hand back too-long distances and drop the nodes not reached yet. */
   def shortestPathsWeighted(edges0: DataFrame, source: String,
       maxIter: Int = 20): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
-    GraphBuilder.withAKeyed(edges0) { edges =>
+    require(edges0.columns.contains("w"), "weighted edges need a `w` column")
+    def notConverged() = new IllegalStateException(
+      s"shortest paths did not converge in $maxIter rounds — " +
+        "distances were still improving; raise maxIter")
+    if (source == null) Seq.empty[(String, Double)].toDF("node", "dist")
+    else if (Algorithms.singleTaskEligible(edges0)) {
+      val g = Algorithms.decodedAdjacency(edges0)
+      val dist = mutable.HashMap(source -> 0.0)
+      var changed = Seq(source)
+      var iter = 0
+      while (changed.nonEmpty && iter < maxIter) {
+        iter += 1
+        // offers use the previous round's distances (synchronous)
+        val offers = changed.map(u => u -> dist(u))
+        val improved = mutable.HashSet.empty[String]
+        for ((u, du) <- offers; nbrs <- g.adj.get(u)) {
+          val ws = g.weights(u)
+          for (i <- nbrs.indices if !ws(i).isNaN) {
+            val c = du + ws(i)
+            // Double.compare orders NaN last, as Spark's min and `<` do
+            if (dist.get(nbrs(i)).forall(x => java.lang.Double.compare(c, x) < 0)) {
+              dist(nbrs(i)) = c
+              improved += nbrs(i)
+            }
+          }
+        }
+        changed = improved.toSeq
+      }
+      if (changed.nonEmpty) throw notConverged()
+      dist.toSeq.toDF("node", "dist")
+    } else GraphBuilder.withAKeyed(edges0) { keyed =>
+    val w = col("w").cast("double")
+    val edges = Algorithms.nonNullIds(keyed).filter(w.isNotNull && !isnan(w))
+      .select(col("a"), col("b"), w.as("w"))
     var dist = Seq((source, 0.0)).toDF("node", "dist").materialize()
     var changed = true
     var iter = 0
@@ -157,9 +270,7 @@ object Traversal {
         .limit(1).count() > 0
       dist = relaxed.select("node", "dist")
     }
-    if (changed) throw new IllegalStateException(
-      s"shortest paths did not converge in $maxIter rounds — " +
-        "distances were still improving; raise maxIter")
+    if (changed) throw notConverged()
     dist
     }
   }

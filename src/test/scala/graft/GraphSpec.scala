@@ -141,15 +141,17 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
 
   test("weighted sssp throws when maxIter runs out, exact with enough rounds") {
     // a 25-node path from one end: 24 edges to relax, so 20 rounds
-    // stop while distances are still improving
+    // stop while distances are still improving — in both regimes
     val path = und((0 until 24).map(i => s"p$i" -> s"p${i + 1}"): _*)
       .withColumn("w", lit(1.0))
-    val e = intercept[IllegalStateException](
-      Traversal.shortestPathsWeighted(path, "p0", maxIter = 20))
-    assert(e.getMessage.contains("did not converge"), e.getMessage)
-    val d = Traversal.shortestPathsWeighted(path, "p0", maxIter = 25)
+    def run(maxIter: Int) = Traversal.shortestPathsWeighted(path, "p0", maxIter)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(d == (0 until 25).map(i => s"p$i" -> i.toDouble).toMap)
+    for (regime <- Seq[(=> Map[String, Double]) => Map[String, Double]](
+        x => x, x => inRounds(x))) {
+      val e = intercept[IllegalStateException](regime(run(20)))
+      assert(e.getMessage.contains("did not converge in 20 rounds"), e.getMessage)
+      assert(regime(run(25)) == (0 until 25).map(i => s"p$i" -> i.toDouble).toMap)
+    }
   }
 
   test("weighted sssp matches hand-computed distances") {
@@ -300,6 +302,19 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     val lp = Algorithms.labelPropagation(und, 2)
     assert(lp.schema("community").dataType == long)
     assert(lp.count() == 4)
+    // so do the traversals (whose seeds are strings): the same rows
+    // and schemas as with the kernels switched off
+    def traversals() = (Traversal.bfsLevels(und, Seq("1"), 2),
+      Traversal.pathBetween(und, "1", "4"),
+      Traversal.shortestPathsWeighted(und.withColumn("w", lit(2)), "1"))
+    val (lv, p, sp) = traversals()
+    val (lvR, pR, spR) = inRounds(traversals())
+    for ((x, y) <- Seq(lv -> lvR, p -> pR, sp -> spR))
+      assert(x.schema == y.schema)
+    assert(levelRows(lv) == Seq(("1", 0), ("2", 1), ("3", 1), ("4", 2)))
+    assert(pathRows(p).map(_._2) == Seq("1", "3", "4"))
+    assert(sp.collect().map(r => String.valueOf(r.get(0)) -> r.getDouble(1)).toMap ==
+      Map("1" -> 0.0, "2" -> 2.0, "3" -> 2.0, "4" -> 4.0))
   }
 
   test("modularity matches the hand-computed two-triangle value") {
@@ -545,5 +560,112 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     assert(inRounds(maps(mixed)) == ((cc, lp)))
     val demo = GraphBuilder.undirectedFor(spark, sfDir)
     assert(maps(demo) == inRounds(maps(demo)))
+  }
+
+  // ---- traversals: driver kernels == rounds ----
+
+  private def levelRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (String.valueOf(r.get(0)), r.getInt(1))).toSeq.sortBy(_.toString)
+
+  private def pathRows(df: org.apache.spark.sql.DataFrame) =
+    df.orderBy("step").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+
+  test("bfsLevels keeps one depth-0 row per seed and drops null seeds in both regimes") {
+    val g = und("a" -> "b", "b" -> "c")
+    def run() = levelRows(
+      Traversal.bfsLevels(g, Seq("a", "a", null, "zz", "zz", "b"), 1))
+    // "zz" is in no edge: a seed still, at depth 0
+    val want = Seq(("a", 0), ("b", 0), ("c", 1), ("zz", 0))
+    assert(run() == want)
+    assert(inRounds(run()) == want)
+  }
+
+  test("bfsLevels regimes agree: driver kernel == rounds") {
+    import spark.implicits._
+    val nulls = Seq(("a", "b"), ("b", "a"), ("b", null), (null, "c"),
+        ("c", "d"), ("d", "c"), ("a", "c"), ("c", "a"))
+      .toDF("a", "b")
+    // directed rows: "x" and the far end of "y" -> "a" are sinks or
+    // sources the symmetric adjacency would hide
+    val asym = Seq(("a", "b"), ("b", "c"), ("c", "x"), ("y", "a"), ("b", "x"))
+      .toDF("a", "b")
+    val demo = GraphBuilder.undirectedFor(spark, sfDir)
+    val cases = Seq(
+      (mixed, Seq("ﾟ"), Seq(0, 1, 2, 5)),
+      (mixed, Seq("😁", "a", "zz"), Seq(1, 3)),
+      (nulls, Seq("a", null), Seq(1, 2, 3)),
+      (asym, Seq("a"), Seq(1, 2, 5)),
+      (asym, Seq("x", "y"), Seq(2)),
+      (demo, Seq("c:1"), Seq(2, 4)))
+    for ((g, seeds, depths) <- cases; d <- depths) {
+      def run() = levelRows(Traversal.bfsLevels(g, seeds, d))
+      val (kernel, rounds) = (run(), inRounds(run()))
+      assert(kernel == rounds, s"$seeds depth $d: $kernel vs $rounds")
+      assert(kernel.map(_._1).distinct.size == kernel.size)
+    }
+    val sinks = levelRows(Traversal.bfsLevels(asym, Seq("a"), 5))
+    assert(sinks == Seq(("a", 0), ("b", 1), ("c", 2), ("x", 2)))
+  }
+
+  test("pathBetween regimes agree: the kernel returns the rounds' path") {
+    import spark.implicits._
+    // "s" reaches "t2" through "ﾟ" or "😀": "ﾟ" is the smaller in UTF-8
+    // bytes (Spark's min), "😀" in UTF-16 (JVM String order). "m" has
+    // three equal-depth parents, "z" the smallest in UTF-8.
+    val g = und("s" -> "ﾟ", "s" -> "😀", "s" -> "z", "ﾟ" -> "t2", "😀" -> "t2",
+      "ﾟ" -> "m", "😀" -> "m", "z" -> "m", "m" -> "t", "island" -> "i2")
+    val nulls = g.unionByName(Seq(("s", null), (null, "t"), ("m", null))
+      .toDF("a", "b"))
+    val asym = Seq(("a", "b"), ("b", "c"), ("a", "q"), ("q", "c"), ("c", "sink"))
+      .toDF("a", "b")
+    val demo = GraphBuilder.undirectedFor(spark, sfDir)
+    def run(e: org.apache.spark.sql.DataFrame, src: String, dst: String, depth: Int) =
+      pathRows(Traversal.pathBetween(e, src, dst, depth))
+    val want = Map(
+      (g, "s", "t2", 20) -> Seq("s", "ﾟ", "t2"),
+      (g, "s", "t", 20) -> Seq("s", "z", "m", "t"),
+      (g, "t", "s", 20) -> Seq("t", "m", "z", "s"),
+      (g, "s", "t", 2) -> Nil,
+      (g, "s", "ﾟ", 0) -> Nil,
+      (g, "s", "s", 0) -> Seq("s"),
+      (g, "s", "island", 20) -> Nil,
+      (g, "nope", "t", 20) -> Nil,
+      (g, "s", "nope", 20) -> Nil,
+      (g, "s", null, 20) -> Nil,
+      (nulls, "s", "t", 20) -> Seq("s", "z", "m", "t"),
+      (asym, "a", "sink", 20) -> Seq("a", "b", "c", "sink"),
+      (asym, "sink", "a", 20) -> Nil)
+    for (((e, src, dst, depth), path) <- want) {
+      val (kernel, rounds) = (run(e, src, dst, depth), inRounds(run(e, src, dst, depth)))
+      assert(kernel == path.zipWithIndex.map(_.swap), s"$src -> $dst: $kernel")
+      assert(rounds == kernel, s"$src -> $dst: $rounds vs $kernel")
+    }
+    val onDemo = run(demo, "c:1", "s:5", 20)
+    assert(onDemo.nonEmpty && onDemo == inRounds(run(demo, "c:1", "s:5", 20)))
+  }
+
+  test("weighted sssp regimes agree: same sums, null weights, duplicates") {
+    import spark.implicits._
+    val nul = null.asInstanceOf[java.lang.Double]
+    def d(x: Double): java.lang.Double = x
+    // duplicate (s, b) rows with different weights; "c" only through a
+    // null weight (no edge); 0.1 + 0.2 is not 0.3 in doubles; a
+    // negative weight that is still cycle-free from "s"
+    val e = Seq[(String, String, java.lang.Double)](
+        ("s", "a", d(1.0)), ("a", "s", d(1.0)), ("s", "b", d(4.0)),
+        ("s", "b", d(2.5)), ("a", "b", d(1.0)), ("b", "c", nul),
+        ("a", "😀", d(0.1)), ("😀", "ﾟ", d(0.2)), ("ﾟ", "e", d(-0.05)),
+        (null, "a", d(1.0)), ("a", null, d(1.0)), ("b", "f", d(Double.NaN)))
+      .toDF("a", "b", "w")
+    def dists(src: String) = Traversal.shortestPathsWeighted(e, src)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    for (src <- Seq("s", "😀", "c", "zz")) {
+      val (kernel, rounds) = (dists(src), inRounds(dists(src)))
+      assert(kernel == rounds, s"$src: $kernel vs $rounds")
+    }
+    assert(dists("s") == Map("s" -> 0.0, "a" -> 1.0, "b" -> 2.0,
+      "😀" -> (1.0 + 0.1), "ﾟ" -> (1.0 + 0.1 + 0.2), "e" -> (1.0 + 0.1 + 0.2 - 0.05)))
+    assert(dists("zz") == Map("zz" -> 0.0))
+    assert(Traversal.shortestPathsWeighted(e, null).count() == 0)
   }
 }

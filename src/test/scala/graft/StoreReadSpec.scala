@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.EGraph
-import graft.graph.GraphBuilder
+import graft.graph.{Algorithms, GraphBuilder}
 import graft.search.QueryJson
 import graft.sources.GraphStore
 
@@ -159,7 +159,49 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("store-loaded graphs share one adjacency per edges version") {
-    inBothRegimes("adj-memo")(sharedAdjacency)
+    // the a-keyed copy is the traversal rounds' adjacency; below the
+    // ceiling the traversals share the broadcast one instead (next spec)
+    inBothRegimes("adj-memo")((root, scan) => inRounds(sharedAdjacency(root, scan)))
+  }
+
+  test("a repeated traversal of a store-loaded graph runs no Spark job") {
+    val root = fresh("traverse-jobs")
+    storeOf(EGraph.fromTables(spark, sfDir), root)
+    val g = EGraph.fromStore(spark, root)
+    val far = g.neighbors("c:1", 2).filter(col("depth") === 2)
+      .orderBy("node").head().getString(0)
+    def levels(e: EGraph) = e.neighbors("c:1", 2).collect().map(_.toString).sorted.toSeq
+    def path(e: EGraph) = e.path("c:1", far).collect().map(_.toString).toSeq
+    val (lv, p) = (levels(g), path(g))
+    assert(p.length == 3, p)
+    var again = (Seq.empty[String], Seq.empty[String])
+    assert(jobsDuring { again = (levels(g), path(g)) } == 0)
+    assert(again == ((lv, p)))
+    // a reopened snapshot over the same edges version shares the
+    // adjacency, its row count included
+    val g2 = EGraph.fromStore(spark, root)
+    assert(jobsDuring { again = (levels(g2), path(g2)) } == 0)
+    assert(again == ((lv, p)))
+    // a ceiling below the held row count sends the next call to the rounds
+    val rows = GraphBuilder.undirectedOf(g.edges).count()
+    spark.conf.set("graft.graph.broadcastEdges", (rows - 1).toString)
+    try assert(jobsDuring { again = (levels(g), path(g)) } > 0)
+    finally spark.conf.unset("graft.graph.broadcastEdges")
+    assert(again == ((lv, p)))
+  }
+
+  test("a second broadcast verb over one frame runs no gate count") {
+    val und = GraphBuilder.undirected(GraphBuilder.edges(spark, sfDir)).localCheckpoint()
+    val cores = Algorithms.kCore(und).collect().map(_.toString).sorted.toSeq
+    var second: DataFrame = null
+    // the kernel's frame is a lazy checkpoint: with the count held in
+    // the adjacency's entry, building it starts no job
+    assert(jobsDuring { second = Algorithms.kCore(und) } == 0)
+    assert(second.collect().map(_.toString).sorted.toSeq == cores)
+    spark.conf.set("graft.graph.broadcastEdges", (und.count() - 1).toString)
+    try assert(jobsDuring { second = Algorithms.kCore(und) } > 0, "the rounds run eagerly")
+    finally spark.conf.unset("graft.graph.broadcastEdges")
+    assert(second.collect().map(_.toString).sorted.toSeq == cores)
   }
 
   private def sharedAdjacency(root: String, scan: String): Unit = {
