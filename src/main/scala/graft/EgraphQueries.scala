@@ -282,8 +282,7 @@ object EgraphQueries {
     "g_sssp_weighted" -> { (s, d) =>
       // synchronous Bellman-Ford rounds over unit weights (a driver
       // kernel below graft.graph.broadcastEdges, DataFrame rounds past it)
-      Traversal.shortestPathsWeighted(
-          GraphBuilder.undirectedFor(s, d).withColumn("w", lit(1.0)), "c:1")
+      Traversal.shortestPathsWeighted(GraphBuilder.unitWeightedFor(s, d), "c:1")
         .select(col("node"), round(col("dist"), 4).as("dist"))
         .orderBy("node")
     },

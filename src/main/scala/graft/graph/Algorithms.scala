@@ -435,16 +435,18 @@ object Algorithms {
     * rounds). A frame with no entry is counted once; if it is within
     * the ceiling its entry is built here, so the kernel that follows
     * finds it, and a frame above the ceiling gets no entry — nothing
-    * pins a big frame's broadcast. */
+    * pins a big frame's broadcast. A frame with a neighbor id that
+    * contains [[PackedAdjacency.Sep]] cannot be packed and takes the
+    * rounds too, whatever its size. */
   private[graph] def singleTaskEligible(edges: DataFrame): Boolean =
     stringIds(edges) && {
       val ceiling = confLong(edges.sparkSession,
         "graft.graph.broadcastEdges", broadcastEdges)
       adjBcastCache.get(edges) match {
-        case Some(held) => held.rows <= ceiling
+        case Some(held) => held.rows <= ceiling && held.packed.isDefined
         case None =>
           val rows = edges.count()
-          rows <= ceiling && { adjacencyEntry(edges, rows); true }
+          rows <= ceiling && adjacencyEntry(edges, rows).packed.isDefined
       }
     }
 
@@ -913,10 +915,11 @@ object Algorithms {
     * serialization, which walks every object — the unpacked map's
     * ~2|E| string objects cost 2.1-2.3 s to ship at sf0.1 (1.17 M
     * edges) vs 0.06 s packed + a one-time 0.1 s decode (r12
-    * attribution, OPTIMIZATION_r12.md session 3 #3); that build was ~60 % of g_betweenness's wall. The count
-    * rides along so decode can fail LOUDLY if an id ever contains
-    * the separator (split length mismatch) instead of silently
-    * corrupting neighbor sets. */
+    * attribution, OPTIMIZATION_r12.md session 3 #3); that build was ~60 % of g_betweenness's wall. A
+    * frame with an id that contains the separator is never broadcast
+    * ([[PackedAdjacency.packs]]); the count still rides along so
+    * decode fails LOUDLY (split length mismatch) rather than
+    * silently corrupting neighbor sets. */
   // admits every frame, not only stable ones: a caller may hand
   // several verbs one unmarked frame (kCore, LPA and betweenness over
   // one `und` per pass) and they share this broadcast. The build is
@@ -925,57 +928,67 @@ object Algorithms {
   // the ceiling get an entry ([[singleTaskEligible]])
   private val adjBcastCache = new Memos.Memo[DataFrame, AdjEntry](8, derived = true)
 
-  /** An [[adjBcastCache]] entry: the packed broadcast, and the row
-    * count of the frame it was built for — the gate's measure. */
-  private final case class AdjEntry(rows: Long,
-      packed: org.apache.spark.broadcast.Broadcast[Array[PackedAdjacency.Row]])
+  /** An [[adjBcastCache]] entry: the row count of the frame it was
+    * built for (the gate's measure) and its packed broadcast — none
+    * when a node id contains [[PackedAdjacency.Sep]], so such a frame
+    * takes the rounds. The driver's decode, which the traversal
+    * kernels walk, lives and dies with the entry: eviction and
+    * `Memos.resetDerived` drop it with the broadcast. */
+  private final case class AdjEntry(rows: Long, packed: Option[
+      org.apache.spark.broadcast.Broadcast[Array[PackedAdjacency.Row]]]) {
+    lazy val decoded: PackedAdjacency.Decoded = PackedAdjacency.unpack(packed.get.value)
+  }
 
   private def adjacencyEntry(edges: DataFrame, rows: => Long): AdjEntry =
     adjBcastCache(edges)(AdjEntry(rows, packAdjacency(edges)))
 
+  /** The packed broadcast of a frame that passed [[singleTaskEligible]]. */
   private def broadcastAdjacency(undirectedEdges: DataFrame) =
-    adjacencyEntry(undirectedEdges, undirectedEdges.count()).packed
+    adjacencyEntry(undirectedEdges, undirectedEdges.count()).packed.get
 
   /** The decoded [[broadcastAdjacency]] of a frame that passed
-    * [[singleTaskEligible]], on the calling JVM (the driver for the
-    * traversal kernels, which already holds the collected payload). */
+    * [[singleTaskEligible]], on the driver (for the traversal
+    * kernels, which run there on the payload the driver collected). */
   private[graph] def decodedAdjacency(edges: DataFrame): PackedAdjacency.Decoded =
-    PackedAdjacency.decode(broadcastAdjacency(edges))
+    adjacencyEntry(edges, edges.count()).decoded
 
   private def packAdjacency(undirectedEdges: DataFrame) = {
     val spark = undirectedEdges.sparkSession
     import spark.implicits._
+    val b = col("b").cast("string")
+    // a weighted `(a, b, w)` frame ships its weights in neighbor
+    // order (one collect_list of (b, w) pairs keeps them aligned); a
+    // null weight packs as NaN so the neighbor list stays the one
+    // every verb sees, and only the weighted kernel skips it. An
+    // unweighted frame collects bare ids: a struct with a null weight
+    // shuffles ~10% more bytes (sf0.1 kCore build, graft.Probe)
+    val (nb, bs, ws) =
+      if (undirectedEdges.columns.contains("w"))
+        (struct(b.as("b"), coalesce(col("w").cast("double"), lit(Double.NaN)).as("w")),
+          col("nb.b"), col("nb.w"))
+      else (b, col("nb"), lit(null).cast("array<double>"))
     // null ids are dropped, as in the rounds ([[nonNullIds]]) —
     // without this a null id survives the groupBy into the map
     // and the kernels' id sort NPEs, a regime-divergent failure
     // for the same input
-    val grouped = nonNullIds(undirectedEdges)
+    val rows = nonNullIds(undirectedEdges)
       .groupBy(col("a").cast("string").as("a"))
-    val sep = PackedAdjacency.Sep.toString
-    // a weighted `(a, b, w)` frame ships its weights in neighbor
-    // order (one collect_list of (b, w) pairs keeps them aligned); a
-    // null weight packs as NaN so the neighbor list stays the one
-    // every verb sees, and only the weighted kernel skips it
-    val adj =
-      if (!undirectedEdges.columns.contains("w"))
-        grouped.agg(concat_ws(sep, collect_list(col("b").cast("string"))).as("bs"),
-          count(col("b")).cast("int").as("n"),
-          lit(null).cast("array<double>").as("ws"))
-      else grouped
-        .agg(collect_list(struct(col("b").cast("string").as("b"),
-          coalesce(col("w").cast("double"), lit(Double.NaN)).as("w"))).as("nb"))
-        .select(col("a"), concat_ws(sep, col("nb.b")).as("bs"),
-          size(col("nb")).as("n"), col("nb.w").as("ws"))
-    spark.sparkContext.broadcast(adj.as[PackedAdjacency.Row].collect())
+      .agg(collect_list(nb).as("nb"))
+      .select(col("a"), concat_ws(PackedAdjacency.Sep.toString, bs).as("bs"),
+        size(col("nb")).as("n"), ws.as("ws"))
+      .as[PackedAdjacency.Row].collect()
+    if (PackedAdjacency.packs(rows)) Some(spark.sparkContext.broadcast(rows))
+    else None
   }
 
-  /** Executor-side decode of [[broadcastAdjacency]]'s packed payload,
-    * cached per JVM and broadcast id so the k seed tasks (and any
-    * same-graph consumer, e.g. kCore after labelPropagation, or the
-    * driver's repeated traversals) share ONE materialization.
-    * Bounded LRU — a JVM outliving many graphs must not pin every
-    * decoded map. Decode is loud on separator collisions: the packed
-    * neighbor count must match the split length. */
+  /** The packed payload of [[broadcastAdjacency]] and its decode.
+    * Executors decode through a per-JVM cache keyed by broadcast id, so
+    * the k seed tasks (and any same-graph consumer, e.g. kCore after
+    * labelPropagation) share ONE materialization; bounded LRU — an
+    * executor outliving many graphs must not pin every decoded map.
+    * The driver holds its own decode in the [[AdjEntry]]. Decode is
+    * loud on separator collisions: the packed neighbor count must
+    * match the split length. */
   private[graph] object PackedAdjacency {
     val Sep = '\u0001'
 
@@ -988,31 +1001,42 @@ object Algorithms {
     final case class Decoded(adj: Map[String, Array[String]],
         weights: Map[String, Array[Double]])
 
+    /** No neighbor id of `rows` contains [[Sep]]: every packed list
+      * holds exactly n - 1 separators. A frame that fails this is
+      * never broadcast, so it takes the rounds in every verb. */
+    def packs(rows: Array[Row]): Boolean = rows.forall { case (_, bs, n, _) =>
+      var seps = 0
+      var i = bs.indexOf(Sep)
+      while (i >= 0) { seps += 1; i = bs.indexOf(Sep, i + 1) }
+      seps == n - 1
+    }
+
     // cache key: (appId, broadcast id) — broadcast ids restart from 0
     // per SparkContext, so id alone could serve a STALE map to a JVM
     // that recreated its session (r12 ADVICE); the app id makes the
     // key context-unique
     private val cache = new Memos.Memo[(String, Long), Decoded](4, derived = false)
     def decode(b: org.apache.spark.broadcast.Broadcast[Array[Row]]): Decoded =
-      cache((org.apache.spark.SparkEnv.get.conf.getAppId, b.id)) {
-        val rows = b.value
-        val adj = rows.iterator.map { case (k, packed, n, _) =>
-          // split with limit -1 keeps trailing empty strings, so the
-          // count check catches BOTH corruption directions (r12
-          // ADVICE): an empty-string last neighbor no longer crashes
-          // a valid input, and an id ENDING in the separator can no
-          // longer pass the require with silently-wrong neighbors
-          val bs = if (n == 0) Array.empty[String]
-            else packed.split(
-              java.util.regex.Pattern.quote(Sep.toString), -1)
-          require(bs.length == n, s"packed adjacency for '$k' " +
-            s"decoded ${bs.length} neighbors, expected $n — " +
-            "a node id contains the separator")
-          (k, bs)
-        }.toMap
-        Decoded(adj, rows.iterator.collect {
-          case (k, _, _, ws) if ws != null => (k, ws) }.toMap)
-      }
+      cache((org.apache.spark.SparkEnv.get.conf.getAppId, b.id))(unpack(b.value))
+
+    def unpack(rows: Array[Row]): Decoded = {
+      val adj = rows.iterator.map { case (k, packed, n, _) =>
+        // split with limit -1 keeps trailing empty strings, so the
+        // count check catches BOTH corruption directions (r12
+        // ADVICE): an empty-string last neighbor no longer crashes
+        // a valid input, and an id ENDING in the separator can no
+        // longer pass the require with silently-wrong neighbors
+        val bs = if (n == 0) Array.empty[String]
+          else packed.split(
+            java.util.regex.Pattern.quote(Sep.toString), -1)
+        require(bs.length == n, s"packed adjacency for '$k' " +
+          s"decoded ${bs.length} neighbors, expected $n — " +
+          "a node id contains the separator")
+        (k, bs)
+      }.toMap
+      Decoded(adj, rows.iterator.collect {
+        case (k, _, _, ws) if ws != null => (k, ws) }.toMap)
+    }
   }
 
   /** Broadcast regime: per-seed truncated Brandes (forward BFS with

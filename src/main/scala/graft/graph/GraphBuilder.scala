@@ -115,11 +115,28 @@ object GraphBuilder {
   private val edgeCache =
     new Memos.Memo[(SparkSession, String), DataFrame](16, derived = false)
   private val undirectedCache =
-    new Memos.Memo[DataFrame, DataFrame](16, derived = false)
+    new Memos.Memo[DataFrame, Undirected](16, derived = false)
+
+  /** A memoized undirected adjacency and its unit-weighted `(a, b, w)`
+    * projection, one instance of each per edges frame: the weighted
+    * verbs then find the projection's broadcast adjacency on a repeated
+    * call, as the unweighted verbs find the adjacency's. */
+  private final class Undirected(val und: DataFrame) {
+    lazy val unitWeighted: DataFrame = und.withColumn("w", lit(1.0))
+  }
+
+  private def undirectedEntry(edges: DataFrame): Undirected =
+    undirectedCache(edges)(new Undirected(
+      Memos.markStable(undirected(edges).materialize())))
 
   /** Memoized undirected adjacency of the demo graph for `dir`. */
   def undirectedFor(s: SparkSession, dir: String): DataFrame =
     undirectedOf(edges(s, dir))
+
+  /** [[undirectedFor]] with a unit weight `w` on every row, one frame
+    * instance per memoized adjacency. */
+  def unitWeightedFor(s: SparkSession, dir: String): DataFrame =
+    undirectedEntry(edges(s, dir)).unitWeighted
 
   /** Checkpointed [[undirected]] adjacency of an edge frame, memoized
     * per [[Memos.markStable]] frame instance (the demo graph's per-dir
@@ -128,7 +145,7 @@ object GraphBuilder {
     * checkpoint per call. */
   def undirectedOf(edges: DataFrame): DataFrame =
     if (!Memos.isStable(edges)) undirected(edges).materialize()
-    else undirectedCache(edges)(Memos.markStable(undirected(edges).materialize()))
+    else undirectedEntry(edges).und
 
   /** Undirected, deduplicated (a, b) adjacency — both directions
     * materialized, like the reference's two-rows-per-bidirectional-link

@@ -14,14 +14,16 @@ import graft.plans.Materialize._
   *
   * Scale notes (100 TB contract, SURVEY.md §5): two regimes, picked
   * by the one gate of the graph verbs, `graft.graph.broadcastEdges`
-  * ([[Algorithms.broadcastEdges]]; string ids only).
+  * ([[Algorithms.broadcastEdges]]; string ids only, and none that
+  * contains U+0001, the packed adjacency's separator — such a frame
+  * takes the rounds at any size).
   *  - Within the ceiling each verb runs as an in-memory kernel on the
   *    DRIVER over the memoized broadcast adjacency the gate built (and
-  *    collected there), decoded once per broadcast. A kernel walks only
-  *    the nodes it reaches, and its result is a local relation: a
-  *    repeated point traversal runs no Spark job at all. The gate reads
-  *    the row count held with the adjacency, so a repeated call runs no
-  *    count job either.
+  *    collected there), decoded once and held with it. A kernel
+  *    walks only the nodes it reaches, and its result is a local
+  *    relation: a repeated point traversal runs no Spark job at all.
+  *    The gate reads the row count held with the adjacency, so a
+  *    repeated call runs no count job either.
   *  - Past the ceiling (and for non-string ids) each level is one
   *    `frontier ⋈ edges` join over the shared a-keyed adjacency; the
   *    frontier is broadcast while it stays under [[broadcastLimit]]

@@ -644,6 +644,26 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     assert(onDemo.nonEmpty && onDemo == inRounds(run(demo, "c:1", "s:5", 20)))
   }
 
+  test("ids with the packing separator take the rounds in every broadcast verb") {
+    // "b\u0001c" cannot travel in the packed adjacency, whatever the
+    // graph's size: the gate sends the frame to the rounds, so the
+    // verbs return what they return with the kernels switched off
+    val sep = "b\u0001c"
+    val g = und("a" -> sep, sep -> "d", "a" -> "x")
+    val weighted = g.withColumn("w", lit(1.0))
+    def run() = (levelRows(Traversal.bfsLevels(g, Seq("a"), 3)),
+      pathRows(Traversal.pathBetween(g, "a", "d")),
+      Traversal.shortestPathsWeighted(weighted, "a").collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap,
+      Algorithms.kCore(g).collect().map(r => r.getString(0) -> r.getInt(1)).toMap)
+    val got = run()
+    assert(got == inRounds(run()))
+    assert(got._1 == Seq(("a", 0), (sep, 1), ("d", 2), ("x", 1)))
+    assert(got._2.map(_._2) == Seq("a", sep, "d"))
+    assert(got._3 == Map("a" -> 0.0, sep -> 1.0, "x" -> 1.0, "d" -> 2.0))
+    assert(got._4.values.toSet == Set(1))
+  }
+
   test("weighted sssp regimes agree: same sums, null weights, duplicates") {
     import spark.implicits._
     val nul = null.asInstanceOf[java.lang.Double]

@@ -159,9 +159,12 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("store-loaded graphs share one adjacency per edges version") {
-    // the a-keyed copy is the traversal rounds' adjacency; below the
-    // ceiling the traversals share the broadcast one instead (next spec)
-    inBothRegimes("adj-memo")((root, scan) => inRounds(sharedAdjacency(root, scan)))
+    // the traversals walk the broadcast adjacency below the ceiling
+    // and the rounds' a-keyed copy past it: the same reads in both,
+    // with each regime's sharing checked on its own adjacency
+    inBothRegimes("adj-memo")(sharedAdjacency(rounds = false))
+    inBothRegimes("adj-memo-rounds")((root, scan) =>
+      inRounds(sharedAdjacency(rounds = true)(root, scan)))
   }
 
   test("a repeated traversal of a store-loaded graph runs no Spark job") {
@@ -204,11 +207,27 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
     assert(second.collect().map(_.toString).sorted.toSeq == cores)
   }
 
-  private def sharedAdjacency(root: String, scan: String): Unit = {
+  test("a repeated weighted shortest-paths query builds no new adjacency") {
+    val sssp = EgraphQueries.queries("g_sssp_weighted")
+    val first = sssp(spark, sfDir).collect().toSeq
+    var second: DataFrame = null
+    // the unit-weighted frame is one instance per memoized adjacency,
+    // so the second call finds its broadcast adjacency and row count
+    assert(jobsDuring { second = sssp(spark, sfDir) } == 0)
+    assert(second.collect().toSeq == first)
+    assert(GraphBuilder.unitWeightedFor(spark, sfDir) eq
+      GraphBuilder.unitWeightedFor(spark, sfDir))
+  }
+
+  private def sharedAdjacency(rounds: Boolean)(root: String, scan: String): Unit = {
     import spark.implicits._
     storeOf(EGraph.fromTables(spark, sfDir), root)
     graft.util.Memos.resetDerived()
     val before = GraphBuilder.aKeyedCacheSize
+    // the a-keyed copies built since `before`: the rounds' adjacency,
+    // which the kernels never build
+    def aKeyedCopies(n: Int, clue: String) =
+      assert(GraphBuilder.aKeyedCacheSize == before + (if (rounds) n else 0), clue)
     val g1 = EGraph.fromStore(spark, root)
     assert(plan(g1.edges).contains(scan), plan(g1.edges))
     val hop1 = g1.neighbors("c:1", 1).collect().map(_.getString(0)).toSet
@@ -220,9 +239,14 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
       publish = false)))
     val g2 = EGraph.fromStore(spark, root)
     assert(g2.node("c:2").isEmpty && !g1.node("c:2").isEmpty)
-    assert(g2.neighbors("c:1", 1).collect().map(_.getString(0)).toSet == hop1)
-    assert(GraphBuilder.aKeyedCacheSize == before + 1,
-      "two traversals and a reopen over one edges version build one a-keyed copy")
+    var reopened = (Set.empty[String], 0)
+    val jobs = jobsDuring { reopened = (
+      g2.neighbors("c:1", 1).collect().map(_.getString(0)).toSet,
+      g2.path("c:1", (hop1 - "c:1").min).collect().length) }
+    assert(reopened == ((hop1, 2)))
+    if (!rounds) assert(jobs == 0,
+      "a reopen over one edges version walks the broadcast adjacency the first graph built")
+    aKeyedCopies(1, "two traversals and a reopen over one edges version build one a-keyed copy")
     // an edges commit: new edges, no stale adjacency
     val extra = Seq(("c:1", "s:new", 1L, 1.0))
       .toDF("src_key", "dst_key", "n_items", "sum_qty")
@@ -234,11 +258,11 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
       .map(_.getAs[String]("node")).toSeq == Seq("c:1", "s:new"))
     assert(!g2.neighbors("c:1", 1).collect().map(_.getString(0)).contains("s:new"),
       "an open snapshot keeps its own edges version")
-    assert(GraphBuilder.aKeyedCacheSize == before + 2)
+    aKeyedCopies(2, "an edges commit builds a new adjacency")
     // a one-shot edges frame still adds no entry
     val oneShot = new EGraph(g3.nodes, g3.edges.select("src_key", "dst_key"), g3.indexes)
     assert(oneShot.neighbors("c:1", 1).count() == hop1.size + 1)
-    assert(GraphBuilder.aKeyedCacheSize == before + 2)
+    aKeyedCopies(2, "a one-shot edges frame adds no a-keyed copy")
   }
 
   test("indexRange: a store-loaded graph filters key_num and matches the table-built one") {
