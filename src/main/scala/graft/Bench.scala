@@ -1,7 +1,10 @@
 package graft
 
 /** Benchmark main — one JSON line on stdout, full detail to
-  * bench_last.json.
+  * bench_last.json. Both bench_record.json and bench_last.json are
+  * resolved against the working directory, which `sbt run` and
+  * `tools/runjava.sh` set to the checkout root, so each checkout
+  * reads and writes its own.
   *
   * Protocol (r11): per-key BEST-OF-2 with a noise sentinel, because
   * the host is co-tenant: r10's official artifact read 2.7× slower
@@ -211,7 +214,7 @@ object Bench {
     // committed clean-window reference, embedded per key when present
     val record: Map[String, Double] = try {
       val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/repo/bench_record.json")), "UTF-8")
+        java.nio.file.Paths.get("bench_record.json")), "UTF-8")
       // minimal parse of {"queries":{"k":v,...}} — no JSON lib on the
       // unmanaged classpath; the file is machine-written by this main
       val qsec = txt.split("\"queries\":\\{", 2)
@@ -306,7 +309,7 @@ object Bench {
     // Best-effort: a failed write (read-only checkout, other cwd) must
     // not turn already-printed valid timings into a nonzero sbt exit
     try java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/bench_last.json"),
+      java.nio.file.Paths.get("bench_last.json"),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case e: java.io.IOException =>
       System.err.println(s"[bench] artifact write failed: $e") }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.{Algorithms, GraphBuilder, Traversal}
 import graft.search.Search
+import graft.sources.GraphStore
 import graft.plans.Materialize._
 
 /** Facade exposing the reference's operation surface as batch
@@ -26,8 +27,11 @@ final class EGraph(
 
   private lazy val undirected = GraphBuilder.undirectedOf(edges)
 
+  // a store-loaded frame that is a held resident version narrows to
+  // its key index's rows first; any other frame is filtered as is
   def node(key: String): DataFrame =
-    nodes.filter(col("key_data") === key)
+    GraphStore.withKeys(nodes, "key_data", Seq(key)).getOrElse(nodes)
+      .filter(col("key_data") === key)
 
   /** Lookup by the xxhash64 node id — the reference's
     * `?keytype=rawhex` addressing (`GET /detail/<hex-id>`). */
@@ -39,29 +43,35 @@ final class EGraph(
     nodeById(java.lang.Long.parseUnsignedLong(hex, 16))
 
   def indexLookup(name: String, keyType: String, key: String): DataFrame =
-    indexes.filter(col("index_name") === name &&
-      col("key_type") === keyType && col("key_str") === key)
+    GraphStore.withProbes(indexes, Seq(GraphStore.KeyProbe(name, keyType, key)))
+      .getOrElse(indexes)
+      .filter(col("index_name") === name &&
+        col("key_type") === keyType && col("key_str") === key)
       .select("node_key")
 
   /** A store-loaded frame carries the typed key_num shadow column
     * (GraphStore.saveIndexes): a native double predicate, as in
     * QueryJson.run, which a file-regime version pushes to its scan
-    * (a cast of key_str cannot push) and a resident one folds into
-    * its local rows. */
+    * (a cast of key_str cannot push) and a resident one answers from
+    * its key_num order. */
   def indexRange(name: String, keyType: String, lo: Double, hi: Double): DataFrame = {
     val key =
       if (indexes.columns.contains("key_num")) col("key_num")
       else col("key_str").try_cast("double")
-    indexes.filter(col("index_name") === name && col("key_type") === keyType &&
-      key.between(lo, hi))
+    GraphStore.withProbes(indexes, Seq(GraphStore.RangeProbe(name, keyType, lo, hi)))
+      .getOrElse(indexes)
+      .filter(col("index_name") === name && col("key_type") === keyType &&
+        key.between(lo, hi))
       .select("node_key")
   }
 
   def linksFrom(key: String): DataFrame =
-    edges.filter(col("src_key") === key)
+    GraphStore.withKeys(edges, "src_key", Seq(key)).getOrElse(edges)
+      .filter(col("src_key") === key)
 
   def link(src: String, dst: String): DataFrame =
-    edges.filter(col("src_key") === src && col("dst_key") === dst)
+    GraphStore.withKeys(edges, "src_key", Seq(src)).getOrElse(edges)
+      .filter(col("src_key") === src && col("dst_key") === dst)
 
   def neighbors(key: String, maxDepth: Int): DataFrame =
     Traversal.bfsLevels(undirected, Seq(key), maxDepth)
@@ -117,8 +127,7 @@ object EGraph {
     * resolves all three tables, so the instance is a consistent
     * snapshot even while a streaming ingest commits concurrently. */
   def fromStore(spark: SparkSession, root: String): EGraph = {
-    val (nodes, edges, indexes) =
-      graft.sources.GraphStore.loadSnapshot(spark, root)
+    val (nodes, edges, indexes) = GraphStore.loadSnapshot(spark, root)
     new EGraph(nodes, edges, indexes)
   }
 }

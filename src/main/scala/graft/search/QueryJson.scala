@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import graft.sources.GraphStore
 
 /** Executes the reference's POST /v1/search JSON document verbatim
   * (README "A Little More Complex Search",
@@ -24,10 +25,13 @@ import org.json4s.jackson.JsonMethods
   * A user of the reference runs their existing query documents
   * unchanged.
   *
-  * Plan shape: each probe prunes the indexes frame on
+  * Plan shape: on held resident store versions the probes resolve
+  * to node keys through the versions' key indexes first, and only
+  * those keys' node rows are gathered and filtered, with no Spark
+  * job (`egraph_v1_search_model.erl`'s any-then-filters order).
+  * Otherwise each probe prunes the indexes frame on
   * (index_name, key_type) — one partition directory in the stored
-  * layout — the candidate keys semi-join the nodes, and filters/
-  * projection evaluate on the surviving rows only.
+  * layout — and the candidate keys semi-join the nodes.
   */
 object QueryJson {
 
@@ -105,6 +109,35 @@ object QueryJson {
     case _ => col(path.mkString("."))
   }
 
+  // the key types cond() compares after a cast
+  private val typedKeys = Set("int", "double", "date", "datetime")
+
+  /** A JSON bound as the double Spark compares key_num against. */
+  private def number(v: JValue): Option[Double] = v match {
+    case JInt(i) => Some(i.toLong.toDouble)
+    case JLong(i) => Some(i.toDouble)
+    case JDouble(d) => Some(d)
+    case JDecimal(d) => Some(d.toDouble)
+    case _ => None
+  }
+
+  /** The index probe that finds every row `cond` keeps for this
+    * condition, where one exists: an exact text key, or a numeric key
+    * or range on key_num. Text ranges, keys cond() casts (date,
+    * datetime, numeric without key_num) and literals it would cast
+    * have none. */
+  private def indexProbe(c: IndexCond, useNum: Boolean): Option[GraphStore.IndexProbe] =
+    (c.key, useNum) match {
+      case (JArray(lo :: hi :: Nil), true) =>
+        for (l <- number(lo); h <- number(hi))
+          yield GraphStore.RangeProbe(c.indexName, c.keyType, l, h)
+      case (JArray(_), _) => None
+      case (k, true) => number(k).map(x => GraphStore.RangeProbe(c.indexName, c.keyType, x, x))
+      case (JString(k), false) if !typedKeys(c.keyType) =>
+        Some(GraphStore.KeyProbe(c.indexName, c.keyType, k))
+      case _ => None
+    }
+
   /** Run a parsed query against (nodes, indexes) frames — the
     * whole-query plan the reference executes per HTTP POST. */
   def run(nodes: DataFrame, indexes: DataFrame, q: IndexQuery): DataFrame = {
@@ -112,10 +145,10 @@ object QueryJson {
     // a store-loaded frame carries the typed key_num shadow column
     // (GraphStore.saveIndexes): numeric probes filter it directly, so
     // on a file-regime version the predicate pushes to the scan
-    // un-cast-wrapped (a resident version filters its local rows)
+    // un-cast-wrapped
     val numeric = Set("int", "double")
     val hasKeyNum = indexes.columns.contains("key_num")
-    val keys = q.any.map { c =>
+    val probes = q.any.map { c =>
       val useNum = hasKeyNum && numeric(c.keyType)
       // key_num is already double: the try_cast inside cond() is a
       // no-op Catalyst removes, so the comparison pushes down; int
@@ -123,11 +156,24 @@ object QueryJson {
       val probe =
         if (useNum) cond(col("key_num"), "double", c.key)
         else cond(col("key_str"), c.keyType, c.key)
-      indexes.filter(col("index_name") === c.indexName &&
-          col("key_type") === c.keyType && probe)
-        .select(col("node_key").as("key_data"))
-    }.reduce(_ unionByName _).distinct()
-    val matched = nodes.join(keys, Seq("key_data"), "left_semi")
+      (col("index_name") === c.indexName && col("key_type") === c.keyType && probe,
+        indexProbe(c, useNum))
+    }
+    // held resident versions answer in the reference's order: the
+    // probes resolve to keys on the driver, then only those keys' node
+    // rows are gathered (no Spark job); any other frames, or a probe
+    // the index cannot answer, take the semi-join plan
+    val found = Option.when(probes.forall(_._2.nonEmpty))(probes.flatMap(_._2))
+      .flatMap(GraphStore.withProbes(indexes, _))
+      .flatMap(rows => GraphStore.withKeys(nodes, "key_data",
+        rows.filter(probes.map(_._1).reduce(_ || _)).select("node_key")
+          .collect().map(_.getString(0))))
+    val matched = found.getOrElse {
+      val keys = probes.map { case (p, _) =>
+        indexes.filter(p).select(col("node_key").as("key_data"))
+      }.reduce(_ unionByName _).distinct()
+      nodes.join(keys, Seq("key_data"), "left_semi")
+    }
     val filtered = q.filters.foldLeft(matched) { (df, f) =>
       df.filter(cond(pathCol(f.path), f.keyType, f.key))
     }

@@ -2,11 +2,19 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.index.Sharding
 import graft.util.Memos
 
@@ -40,15 +48,21 @@ import graft.util.Memos
   *    `sizeInBytes`, from its file listing: no job) are within
   *    [[ResidentMaxBytes]] is collected once into a local relation
   *    with the file relation's exact schema (partition columns last,
-  *    all nullable). Catalyst's `ConvertToLocalRelation` folds a
-  *    probe's filter and projection into the local rows at
-  *    optimization time, so a point, index or link read collects
-  *    without a Spark job — but it filters every row of the version
-  *    in one driver thread, so the cap is a fixed constant below the
-  *    measured point where that costs more than a pruned, parallel
-  *    scan. `spark.sql.autoBroadcastJoinThreshold` can only lower the
-  *    gate (−1 turns the regime off): raising it for joins pins
-  *    nothing more on the driver;
+  *    all nullable). Its entry also keeps key indexes over the held
+  *    rows, each built on the first probe that needs it: `key_data`
+  *    for nodes, `src_key` for edges, and per (index_name, key_type)
+  *    a `key_str` index and the rows in `key_num` order. A point,
+  *    index, link or QueryJson read of the held form itself takes
+  *    only its matched rows into a local frame and applies its full
+  *    predicate there (Catalyst's `ConvertToLocalRelation` folds it
+  *    at optimization time), so it collects without a Spark job in
+  *    time that follows the matches, not the version. Frames derived
+  *    from the form (the expiry filter, `drop`, `select`) filter
+  *    every held row instead. The cap is bounded by the held rows'
+  *    heap and by the collect a reopen pays per new version.
+  *    `spark.sql.autoBroadcastJoinThreshold` can only lower the gate
+  *    (−1 turns the regime off): raising it for joins pins nothing
+  *    more on the driver;
   *  - *file*: a larger version is a `spark.read.parquet` relation,
   *    whose probes prune partitions and push their key predicates
   *    into the scan.
@@ -101,21 +115,132 @@ object GraphStore {
   }
 
   /** A marked version's cached form and the file bytes (the
-    * relation's `sizeInBytes`) its regime was chosen on. */
-  private final case class Version(form: DataFrame, fileBytes: BigInt,
-      resident: Boolean)
+    * relation's `sizeInBytes`) its regime was chosen on. A resident
+    * form also carries key indexes over its held rows, each built on
+    * the first probe that needs it and dropped with the entry. */
+  private final class Version(val form: DataFrame, val fileBytes: BigInt,
+      val resident: Boolean) {
+    private lazy val held: LocalRelation = form.queryExecution.analyzed match {
+      case r: LocalRelation => r
+    }
+    private def ordinal(column: String, typ: DataType): Option[Int] =
+      Some(held.output.indexWhere(_.name == column))
+        .filter(i => i >= 0 && held.output(i).dataType == typ)
 
-  /** The largest version, in data-file bytes, held on the driver. A
-    * resident read filters every row of its version in one driver
-    * thread, so its cost grows with the version while a file read's
-    * stays near one job's. Measured per read kind (4 cores, sf0.01 and
-    * sf0.1 graphs, OPTIMIZATION_r14.md §6), the two cost the same at
-    * ~215–370 KiB of edges (`linksFrom`, `link`), ~230–250 KiB of
-    * indexes (`probeStored`, `probeStoredRange`) and ~900 KiB of
-    * nodes (`nodeByKey`); the cap sits below all three. QueryJson's
-    * filter on a JSON path parses every resident node row and crosses
-    * over sooner, at ~2.5–3k nodes (~125–150 KiB); up to the cap, the
-    * point kinds' gain on the same versions outweighs that loss. */
+    // one string-keyed index per key column probed: key_data for
+    // nodes, src_key for edges; guarded by this entry's monitor
+    private val keyed = mutable.HashMap.empty[String, Option[Keyed]]
+
+    /** The held rows whose `column` is one of `keys`, or None when the
+      * column is not a string column of this version. */
+    def withKeys(column: String, keys: Iterable[String]): Option[DataFrame] =
+      synchronized(keyed.getOrElseUpdate(column,
+        ordinal(column, StringType).map(i => byString(held.data, i))))
+        .map(ix => local(keys.toSeq.distinct.flatMap(k =>
+          ix.getOrElse(UTF8String.fromString(k), NoRows))))
+
+    // the indexes table's (index_name, key_type) directories, for
+    // versions that carry them and the typed key_num column
+    private lazy val groups: Option[Map[(UTF8String, UTF8String), IndexGroup]] =
+      for {
+        n <- ordinal("index_name", StringType)
+        t <- ordinal("key_type", StringType)
+        s <- ordinal("key_str", StringType)
+        k <- ordinal("key_num", DoubleType)
+      } yield held.data.filterNot(r => r.isNullAt(n) || r.isNullAt(t))
+        .groupBy(r => (r.getUTF8String(n), r.getUTF8String(t)))
+        .map { case (g, rs) => g -> new IndexGroup(rs.toArray, s, k) }
+
+    /** The held rows each probe can match, or None when this version
+      * is not an indexes table. */
+    def withProbes(probes: Seq[IndexProbe]): Option[DataFrame] =
+      groups.map(gs => local(probes.flatMap { p =>
+        gs.get((UTF8String.fromString(p.name), UTF8String.fromString(p.typ)))
+          .fold(NoRows: Seq[InternalRow]) { g => p match {
+            case KeyProbe(_, _, key) => g.byStr.getOrElse(UTF8String.fromString(key), NoRows)
+            case RangeProbe(_, _, lo, hi) => g.range(lo, hi)
+          } }
+      }))
+
+    private def local(rows: Seq[InternalRow]): DataFrame =
+      PlanBridge.ofRows(form.sparkSession, held.copy(data = rows))
+  }
+
+  private type Keyed = Map[UTF8String, IndexedSeq[InternalRow]]
+  private val NoRows = IndexedSeq.empty[InternalRow]
+
+  /** Rows grouped by a non-null string column. */
+  private def byString(rows: Seq[InternalRow], i: Int): Keyed =
+    rows.filterNot(_.isNullAt(i)).groupBy(_.getUTF8String(i))
+      .map { case (k, rs) => k -> rs.toIndexedSeq }
+
+  /** Spark's order on doubles: -0.0 equals 0.0, NaN equals NaN and
+    * sorts above +Infinity, so a key_num range probe finds exactly the
+    * rows `between` keeps. */
+  private val sqlDoubles: Ordering[Double] = SQLOrderingUtil.compareDoubles(_, _)
+
+  /** One (index_name, key_type) directory's held rows: a key_str index
+    * for exact probes and the rows in key_num order for ranges, each
+    * built on first use. */
+  private final class IndexGroup(rows: Array[InternalRow], str: Int, num: Int) {
+    lazy val byStr: Keyed = byString(rows.toSeq, str)
+    private lazy val byNum: Array[InternalRow] =
+      rows.filterNot(_.isNullAt(num)).sortBy(_.getDouble(num))(sqlDoubles)
+    private lazy val nums: Array[Double] = byNum.map(_.getDouble(num))
+
+    /** The rows with `lo <= key_num <= hi`, in key_num order. */
+    def range(lo: Double, hi: Double): Seq[InternalRow] = {
+      // the first position whose key is not below x (above x, if strict)
+      def bound(x: Double, strict: Boolean): Int = {
+        var (a, b) = (0, nums.length)
+        while (a < b) {
+          val m = (a + b) >>> 1
+          val c = sqlDoubles.compare(nums(m), x)
+          if (c < 0 || (strict && c == 0)) a = m + 1 else b = m
+        }
+        a
+      }
+      val (from, until) = (bound(lo, strict = false), bound(hi, strict = true))
+      if (from < until) ArraySeq.unsafeWrapArray(byNum).slice(from, until) else NoRows
+    }
+  }
+
+  /** An index probe the held indexes can answer: an exact key_str, or
+    * an inclusive key_num range. */
+  private[graft] sealed trait IndexProbe { def name: String; def typ: String }
+  private[graft] final case class KeyProbe(name: String, typ: String, key: String)
+      extends IndexProbe
+  private[graft] final case class RangeProbe(name: String, typ: String, lo: Double,
+      hi: Double) extends IndexProbe
+
+  /** The held resident version whose cached form is `df` itself. */
+  private def heldVersion(df: DataFrame): Option[Version] =
+    versions.find(v => v.resident && (v.form eq df))
+
+  /** The rows of `df` whose string `column` is one of `keys`, when
+    * `df` is a held resident form: a local frame of only those rows,
+    * from the version's key index. None for any other frame (a file
+    * relation, an expiry-filtered or derived frame, a table-built
+    * one), which its caller filters as is. `keys` is evaluated only
+    * for a held form. Callers apply their full predicate either way. */
+  private[graft] def withKeys(df: DataFrame, column: String,
+      keys: => Iterable[String]): Option[DataFrame] =
+    heldVersion(df).flatMap(_.withKeys(column, keys))
+
+  /** The rows of a held resident indexes form that the probes can
+    * match (every row of each probe's directory with its exact key, or
+    * its key_num in range); None for any other frame, as [[withKeys]]. */
+  private[graft] def withProbes(df: DataFrame,
+      probes: Seq[IndexProbe]): Option[DataFrame] =
+    heldVersion(df).flatMap(_.withProbes(probes))
+
+  /** The largest version, in data-file bytes, held on the driver. Its
+    * value is the crossover where a resident read that filtered every
+    * held row lost to a pruned file scan (OPTIMIZATION_r14.md §6).
+    * Indexed reads no longer grow with the version, so what bounds
+    * the cap is the heap the held rows take (10–72× their file bytes)
+    * and the collect each reopen pays for a new version; no benchmark
+    * with a store past the cap has measured that trade yet. */
   private[graft] val ResidentMaxBytes: Long = 192L << 10
 
   /** The summed data-file bytes of the resident versions the cache
@@ -156,8 +281,8 @@ object GraphStore {
         Memos.markStable(spark.read.parquet(at)))
       val bytes = held.fold(file.queryExecution.optimizedPlan.stats.sizeInBytes)(
         _.fileBytes)
-      if (bytes > limit) Version(file, bytes, resident = false)
-      else Version(Memos.markStable(
+      if (bytes > limit) new Version(file, bytes, resident = false)
+      else new Version(Memos.markStable(
         spark.createDataFrame(file.collect().toSeq.asJava, file.schema)),
         bytes, resident = true)
     }.form
@@ -429,36 +554,44 @@ object GraphStore {
 
   /** Point lookup against the stored node partitioning: computes the
     * shard from the key so a file-regime scan prunes to one
-    * directory. The shard width is the one the version was saved
-    * with; `shardBits` applies only to versions that predate recorded
-    * widths (and plain layouts). */
+    * directory, and a resident version filters only the key's rows
+    * from its key index. The shard width is the one the version was
+    * saved with; `shardBits` applies only to versions that predate
+    * recorded widths (and plain layouts). */
   def nodeByKey(spark: SparkSession, root: String, key: String,
       shardBits: Int = 6): DataFrame = {
     val (v, nodes) = resolve(spark, currentEpoch(spark, root), root, "nodes")
     val bits = v.flatMap(savedShardBits).getOrElse(shardBits)
-    nodes.filter(col("shard") === Sharding.shardOfKey(lit(key), bits) &&
-      col("key_data") === key)
+    withKeys(nodes, "key_data", Seq(key)).getOrElse(nodes)
+      .filter(col("shard") === Sharding.shardOfKey(lit(key), bits) &&
+        col("key_data") === key)
   }
 
   /** Index probe against the stored layout: a resident version
-    * filters its local rows; a file version prunes partitions on
-    * (index_name, key_type) and pushes the key predicate. */
+    * filters the key's rows from its key index; a file version prunes
+    * partitions on (index_name, key_type) and pushes the key
+    * predicate. */
   def probeStored(spark: SparkSession, root: String, name: String,
-      typ: String, key: String): DataFrame =
-    loadIndexes(spark, root)
+      typ: String, key: String): DataFrame = {
+    val indexes = loadIndexes(spark, root)
+    withProbes(indexes, Seq(KeyProbe(name, typ, key))).getOrElse(indexes)
       .filter(col("index_name") === name && col("key_type") === typ &&
         col("key_str") === key)
       .select("node_key")
+  }
 
   /** Numeric range probe `[lo, hi]` against the stored layout: the
     * typed key_num column written by saveIndexes is a native double
     * predicate; on a file version it pushes to the scan (+ row-group
     * skipping via parquet stats), on top of the (index_name,
-    * key_type) pruning. */
+    * key_type) pruning; a resident version filters only the range's
+    * rows from its key_num order. */
   def probeStoredRange(spark: SparkSession, root: String, name: String,
-      typ: String, lo: Double, hi: Double): DataFrame =
-    loadIndexes(spark, root)
+      typ: String, lo: Double, hi: Double): DataFrame = {
+    val indexes = loadIndexes(spark, root)
+    withProbes(indexes, Seq(RangeProbe(name, typ, lo, hi))).getOrElse(indexes)
       .filter(col("index_name") === name && col("key_type") === typ &&
         col("key_num").between(lo, hi))
       .select(col("node_key"), col("key_num").as("key_val"))
+  }
 }

@@ -95,6 +95,10 @@ object Memos {
       m.remove(k).map { v => m.put(k, v); v }
     }
 
+    /** A held entry satisfying `p`; refreshes nothing and counts
+      * neither a hit nor a miss. */
+    def find(p: V => Boolean): Option[V] = synchronized(m.valuesIterator.find(p))
+
     def size: Int = synchronized(m.size)
     def hits: Long = hitN.get
     def misses: Long = missN.get

@@ -7,7 +7,9 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.commons.io.FileUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.EGraph
 import graft.graph.{Algorithms, GraphBuilder}
@@ -325,6 +327,182 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
     file.zip(resident).foreach { case ((n, f), (_, r)) =>
       assert(f._2.nonEmpty, n)
       assert(r == f, n)
+    }
+  }
+
+  /** Held rows a frame's plan reads: a resident read through its key
+    * index holds only the candidate rows, a filter holds the version. */
+  private def heldRows(df: DataFrame): Int =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case r: LocalRelation => r.data.size
+    }.sum
+
+  private def rowsOf(df: DataFrame): (StructType, Seq[String]) =
+    (df.schema, df.collect().map(_.toString).sorted.toSeq)
+
+  /** A store whose rows meet every edge of the key indexes: absent,
+    * null and duplicate keys, "NaN", ±Infinity, −0.0 against 0.0, a
+    * non-numeric numeric key and a null index name. */
+  private def edgeCaseStore(root: String): Unit = {
+    import spark.implicits._
+    val nodes = Seq(("c:1", "A", "one"), ("c:2", "A", "two"), ("c:3", "B", "three"),
+      ("c:4", "A", "four"), ("s:1", "B", "sup"))
+      .map { case (k, seg, name) => (k, s"""{"seg":"$seg","name":"$name"}""") }
+      .toDF("key_data", "details").withColumn("id", xxhash64(col("key_data")))
+    val edges = Seq[(String, String, Long, Double)](("c:1", "s:1", 1L, 1.0),
+      ("c:1", "s:1", 2L, 2.0), ("c:1", "s:2", 1L, 1.5), ("c:2", "s:1", 3L, 3.0),
+      (null, "s:1", 1L, 1.0)).toDF("src_key", "dst_key", "n_items", "sum_qty")
+    val indexes = Seq[(String, String, String, String)](
+      ("c:1", "bal", "double", "0.0"), ("c:2", "bal", "double", "-0.0"),
+      ("c:3", "bal", "double", "NaN"), ("c:4", "bal", "double", "Infinity"),
+      ("s:1", "bal", "double", "-Infinity"), ("c:1", "bal", "double", "5"),
+      ("c:2", "bal", "double", "10"), ("c:3", "bal", "double", null),
+      ("c:4", "bal", "double", "abc"), ("c:1", "n", "int", "3"),
+      ("c:2", "n", "int", "3"), ("c:3", "n", "int", "4"),
+      ("c:1", "seg", "text", "A"), ("c:2", "seg", "text", "A"),
+      ("c:3", "seg", "text", "B"), ("c:4", "seg", "text", null),
+      ("c:1", "seg", "text", "NaN"), ("c:4", null, "text", "A"),
+      ("c:2", "day", "date", "2024-01-05"), ("c:3", "day", "date", "2024-02-01"))
+      .toDF("node_key", "index_name", "key_type", "key_str")
+    GraphStore.commitEpoch(spark, root, Map(
+      "nodes" -> GraphStore.saveNodes(nodes, root),
+      "edges" -> GraphStore.saveEdges(edges, root),
+      "indexes" -> GraphStore.saveIndexes(indexes, root)))
+  }
+
+  private def queryOf(any: String, filters: String = "", selected: String = "") =
+    s"""{"query":{"type":"index","conditions":{"any":[$any]""" +
+      (if (filters.isEmpty) "" else s""","filters":[$filters]""") + "}" +
+      (if (selected.isEmpty) "" else s""","selected_paths":{$selected}""") + "}}"
+
+  test("key-indexed reads return the rows and schema of the file regime and of the filter") {
+    val root = fresh("indexed-regimes")
+    edgeCaseStore(root)
+    val ranges = Seq((0.0, 0.0), (-0.0, -0.0), (0.0, 10.0), (5.0, 10.0), (10.0, 5.0),
+      (Double.NegativeInfinity, Double.PositiveInfinity), (Double.NaN, Double.NaN),
+      (Double.NegativeInfinity, Double.NaN), (6.0, 7.0))
+    val text = Seq("A", "B", "NaN", "absent")
+    val indexed = Seq(
+      queryOf("""{"key":[0,5],"key_type":"double","index_name":"bal"},""" +
+        """{"key":3,"key_type":"int","index_name":"n"}""",
+        """{"key":"A","key_type":"text","index_json_path":["details","seg"]}""",
+        """"name":["details","name"]"""),
+      queryOf("""{"key":"A","key_type":"text","index_name":"seg"}"""),
+      queryOf("""{"key":-0.0,"key_type":"double","index_name":"bal"}"""),
+      queryOf("""{"key":[10,5],"key_type":"double","index_name":"bal"}"""),
+      queryOf("""{"key":"absent","key_type":"text","index_name":"seg"}"""))
+    // the index cannot answer these exactly: they take the semi-join
+    val fallback = Seq(
+      queryOf("""{"key":["2024-01-01","2024-01-31"],"key_type":"date","index_name":"day"}"""),
+      queryOf("""{"key":["A","B"],"key_type":"text","index_name":"seg"}"""))
+    /** Every read once; `viaIndex = false` reads the same resident
+      * rows through copies of the frames, which no index serves, with
+      * the store probes' own predicates. */
+    def reads(viaIndex: Boolean): Seq[(String, Boolean, DataFrame)] = {
+      val s = EGraph.fromStore(spark, root)
+      val g = if (viaIndex) s else new EGraph(s.nodes.toDF(), s.edges.toDF(), s.indexes.toDF())
+      def store(name: String, probe: => DataFrame, filter: DataFrame => DataFrame) =
+        (name, true, if (viaIndex) probe else filter(g.indexes))
+      Seq("c:1", "s:1", "absent").flatMap(k => Seq(
+        ("nodeByKey " + k, true, if (viaIndex) GraphStore.nodeByKey(spark, root, k)
+          else g.nodes.filter(col("shard") === graft.index.Sharding.shardOfKey(lit(k), 6) &&
+            col("key_data") === k)),
+        ("node " + k, true, g.node(k)),
+        ("linksFrom " + k, true, g.linksFrom(k)),
+        ("link " + k, true, g.link(k, "s:1")))) ++
+      text.flatMap(k => Seq(
+        store("probeStored " + k, GraphStore.probeStored(spark, root, "seg", "text", k),
+          _.filter(col("index_name") === "seg" && col("key_type") === "text" &&
+            col("key_str") === k).select("node_key")),
+        ("indexLookup " + k, true, g.indexLookup("seg", "text", k)))) ++
+      ranges.flatMap { case (lo, hi) => Seq(
+        store(s"probeStoredRange [$lo, $hi]",
+          GraphStore.probeStoredRange(spark, root, "bal", "double", lo, hi),
+          _.filter(col("index_name") === "bal" && col("key_type") === "double" &&
+            col("key_num").between(lo, hi))
+            .select(col("node_key"), col("key_num").as("key_val"))),
+        (s"indexRange [$lo, $hi]", true, g.indexRange("bal", "double", lo, hi)))
+      } ++
+      indexed.map(q => ("QueryJson " + q, true, QueryJson.run(g.nodes, g.indexes, q))) ++
+      fallback.map(q => ("QueryJson " + q, false, QueryJson.run(g.nodes, g.indexes, q)))
+    }
+    val file = inFileRegime(reads(viaIndex = true).map { case (n, _, df) => n -> rowsOf(df) })
+    val filter = reads(viaIndex = false)
+    val index = reads(viaIndex = true)
+    assert(index.map(_._3).forall(df => plan(df).contains("LocalTableScan")))
+    file.lazyZip(filter).lazyZip(index).foreach {
+      case ((n, f), (_, _, byFilter), (_, served, byIndex)) =>
+        assert(rowsOf(byFilter) == f, s"$n: filter")
+        assert(rowsOf(byIndex) == f, s"$n: index")
+        if (served) assert(heldRows(byIndex) < heldRows(byFilter), s"$n reads its key index")
+        else assert(heldRows(byIndex) == heldRows(byFilter), s"$n falls back")
+    }
+    // the edge cases the rows must show
+    def keysOf(n: String) = file.toMap.apply(n)._2
+    assert(keysOf("probeStoredRange [-0.0, -0.0]").size == 2, "−0.0 and 0.0 are one key")
+    assert(keysOf("probeStoredRange [NaN, NaN]") == Seq("[c:3,NaN]"))
+    assert(keysOf("probeStoredRange [10.0, 5.0]").isEmpty)
+    assert(keysOf("probeStoredRange [5.0, 10.0]").size == 2, "bounds are inclusive")
+    assert(keysOf("linksFrom c:1").size == 3, "duplicate src_key rows all return")
+  }
+
+  test("a TTL store's reads fall back to the filter and still hide expired rows") {
+    import spark.implicits._
+    val root = fresh("indexed-ttl")
+    val live = Seq(("k1", """{"seg":"A"}""")).toDF("key_data", "details")
+    val gone = GraphStore.withExpiry(
+      Seq(("k2", """{"seg":"A"}""")).toDF("key_data", "details"), -60L)
+    val nodes = live.unionByName(gone, allowMissingColumns = true)
+      .withColumn("id", xxhash64(col("key_data")))
+    val indexes = Seq(("k1", "seg", "text", "A"), ("k2", "seg", "text", "A"))
+      .toDF("node_key", "index_name", "key_type", "key_str")
+    val edges = Seq(("k1", "k2")).toDF("src_key", "dst_key")
+    GraphStore.commitEpoch(spark, root, Map(
+      "nodes" -> GraphStore.saveNodes(nodes, root),
+      "edges" -> GraphStore.saveEdges(edges, root),
+      "indexes" -> GraphStore.saveIndexes(indexes, root)))
+    val g = EGraph.fromStore(spark, root)
+    assert(plan(g.nodes).contains("LocalTableScan"), plan(g.nodes))
+    val held = heldRows(g.nodes)
+    val q = queryOf("""{"key":"A","key_type":"text","index_name":"seg"}""")
+    for (df <- Seq(g.node("k1"), g.node("k2"), GraphStore.nodeByKey(spark, root, "k2"),
+        QueryJson.run(g.nodes, g.indexes, q)))
+      assert(heldRows(df) >= held, "an expiry-filtered frame is not a held form")
+    assert(keys(g.node("k1")) == Set("k1"))
+    assert(g.node("k2").isEmpty && GraphStore.nodeByKey(spark, root, "k2").isEmpty)
+    assert(keys(QueryJson.run(g.nodes, g.indexes, q)) == Set("k1"))
+  }
+
+  test("indexed reads of resident versions collect with no Spark job; " +
+      "file versions keep their pushed filters") {
+    val root = fresh("indexed-jobs")
+    storeOf(EGraph.fromTables(spark, sfDir), root)
+    val q = queryOf("""{"key":[0,5000],"key_type":"double","index_name":"acctbal"},""" +
+      """{"key":3,"key_type":"int","index_name":"nationkey"}""",
+      """{"key":"BUILDING","key_type":"text","index_json_path":["details","mktsegment"]}""",
+      """"name":["details","name"]""")
+    def reads(g: EGraph): Seq[(String, () => DataFrame)] = Seq(
+      "QueryJson.run" -> (() => QueryJson.run(g.nodes, g.indexes, q)),
+      "linksFrom" -> (() => g.linksFrom("c:1")),
+      "link" -> (() => g.link("c:1", "s:1")),
+      "probeStoredRange" ->
+        (() => GraphStore.probeStoredRange(spark, root, "acctbal", "double", 0.0, 5000.0)))
+    // the first reads collect the versions
+    val g = EGraph.fromStore(spark, root)
+    reads(g).foreach(_._2().collect())
+    for ((n, read) <- reads(g)) {
+      var rows = Array.empty[Row]
+      assert(jobsDuring { rows = read().collect() } == 0, n)
+      assert(rows.nonEmpty || n == "link", n)
+    }
+    inFileRegime {
+      val f = reads(EGraph.fromStore(spark, root)).map { case (n, r) => n -> plan(r()) }.toMap
+      val semi = f("QueryJson.run")
+      assert(semi.contains("FileScan") && semi.contains("LeftSemi"), semi)
+      assert(f("linksFrom").contains("EqualTo(src_key,c:1)"), f("linksFrom"))
+      assert(f("link").contains("EqualTo(dst_key,s:1)"), f("link"))
+      assert(f("probeStoredRange").contains("GreaterThanOrEqual(key_num,0.0)"),
+        f("probeStoredRange"))
     }
   }
 

@@ -16,7 +16,10 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# default heap: half of host memory, clamped to 2-8 GB (as build.sbt)
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
 exec java $OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" \
+  -Xmx"$HEAP" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$CLASS" "$@"
