@@ -4,16 +4,20 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType,
+  ShortType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.index.Sharding
 import graft.util.Memos
@@ -46,7 +50,7 @@ import graft.util.Memos
   *
   *  - *resident*: a version whose file statistics (the relation's
   *    `sizeInBytes`, from its file listing: no job) are within
-  *    [[ResidentMaxBytes]] is collected once into a local relation
+  *    [[ResidentMaxBytes]] is held as a local relation of its rows
   *    with the file relation's exact schema (partition columns last,
   *    all nullable). Its entry also keeps key indexes over the held
   *    rows, each built on the first probe that needs it: `key_data`
@@ -59,7 +63,8 @@ import graft.util.Memos
   *    time that follows the matches, not the version. Frames derived
   *    from the form (the expiry filter, `drop`, `select`) filter
   *    every held row instead. The cap is bounded by the held rows'
-  *    heap and by the collect a reopen pays per new version.
+  *    heap and by the one collect that fills them (the writer's, or
+  *    the first read's of a version this session did not seed).
   *    `spark.sql.autoBroadcastJoinThreshold` can only lower the gate
   *    (−1 turns the regime off): raising it for joins pins nothing
   *    more on the driver;
@@ -67,10 +72,26 @@ import graft.util.Memos
   *    whose probes prune partitions and push their key predicates
   *    into the scan.
   *
-  * Either form keeps its file listing and schema: no per-call listing
-  * or schema-inference job, and a rewritten root (new marker mtime) is
+  * Write-through: a save seeds the entry of the version it wrote,
+  * under that version's key, once its marker exists. It knows the
+  * data schema, so the file relation is a listing with the schema
+  * given (no schema-inference job). A frame whose every leaf is a
+  * local relation (a held version plus local update rows, as a
+  * server's upsert or [[compactExpiredNodes]] builds) is collected
+  * once: the save writes those rows and, when the gate picks the
+  * resident regime, holds them, with each partition value as the
+  * listing reads it back. Reopening a snapshot this session wrote so
+  * runs no Spark job. Other frames (file scans, checkpoints) are
+  * written as they are and seed only their schema: the first read
+  * lists the files and, if resident, collects them. A partition
+  * column that is not a string or an integer, or a value whose
+  * directory the listing does not name, also seeds only the schema.
+  *
+  * Either form keeps its file relation: no per-call listing or
+  * schema-inference job, and a rewritten root (new marker mtime) is
   * read fresh. An entry remembers the file bytes it was gated on, so a
-  * changed gate re-picks the regime on the next read. Resident entries
+  * changed gate re-picks the regime on the next read, from the same
+  * relation. Resident entries
   * are bounded together: past [[ResidentBudgetBytes]] of their file
   * bytes the least recent are evicted (their rows take 10–72× those
   * bytes on the heap). The cached forms are
@@ -114,12 +135,16 @@ object GraphStore {
       .filter(v => fs.exists(new Path(dir, s"$v/_SUCCESS")))
   }
 
-  /** A marked version's cached form and the file bytes (the
-    * relation's `sizeInBytes`) its regime was chosen on. A resident
-    * form also carries key indexes over its held rows, each built on
-    * the first probe that needs it and dropped with the entry. */
-  private final class Version(val form: DataFrame, val fileBytes: BigInt,
-      val resident: Boolean) {
+  /** A marked version's cached form, the file relation it was listed
+    * as, and the file bytes (the relation's `sizeInBytes`) its regime
+    * was chosen on. A resident version holds `rows`, under the file
+    * relation's schema, and carries key indexes over them, each built
+    * on the first probe that needs it and dropped with the entry. */
+  private final class Version(val file: DataFrame, val fileBytes: BigInt,
+      rows: Option[Seq[InternalRow]]) {
+    val resident: Boolean = rows.isDefined
+    val form: DataFrame = rows.fold(file)(rs =>
+      Memos.markStable(PlanBridge.localFrame(file.sparkSession, file.schema, rs)))
     private lazy val held: LocalRelation = form.queryExecution.analyzed match {
       case r: LocalRelation => r
     }
@@ -237,10 +262,12 @@ object GraphStore {
   /** The largest version, in data-file bytes, held on the driver. Its
     * value is the crossover where a resident read that filtered every
     * held row lost to a pruned file scan (OPTIMIZATION_r14.md §6).
-    * Indexed reads no longer grow with the version, so what bounds
+    * Indexed reads no longer grow with the version, and a reopen no
+    * longer collects the versions this session wrote, so what bounds
     * the cap is the heap the held rows take (10–72× their file bytes)
-    * and the collect each reopen pays for a new version; no benchmark
-    * with a store past the cap has measured that trade yet. */
+    * and the collect the writer pays per table it saves (or the first
+    * read, for a version written elsewhere); no benchmark with a store
+    * past the cap has measured that trade yet. */
   private[graft] val ResidentMaxBytes: Long = 192L << 10
 
   /** The summed data-file bytes of the resident versions the cache
@@ -250,15 +277,24 @@ object GraphStore {
     * ~110 MB. */
   private[graft] val ResidentBudgetBytes: Long = 8 * ResidentMaxBytes
 
+  private type VersionKey = (SparkSession, String, Long)
+
   // bounded so a service reading many stores cannot pin relations
   // (and their SparkSessions) without limit, and weighted so resident
   // rows stay within ResidentBudgetBytes of files; eviction drops
   // only the reference. One entry per (session, version dir, marker
   // mtime), whichever its regime.
   private val versions =
-    new Memos.Memo[(SparkSession, String, Long), Version](32, derived = false,
+    new Memos.Memo[VersionKey, Version](32, derived = false,
       maxWeight = ResidentBudgetBytes,
       weight = v => if (v.resident) v.fileBytes.toLong else 0L)
+
+  // the data schema of each version a save wrote without collecting
+  // it, under the version's key: its first read lists the files with
+  // this schema instead of inferring one in a Spark job, and the save
+  // itself lists nothing
+  private val writtenSchemas =
+    new Memos.Memo[VersionKey, StructType](32, derived = false)
 
   /** The resident gate in data-file bytes: ResidentMaxBytes, or a
     * lower `spark.sql.autoBroadcastJoinThreshold`; a negative
@@ -268,25 +304,87 @@ object GraphStore {
     if (t < 0) -1L else math.min(t, ResidentMaxBytes)
   }
 
+  /** The rows a save collected and wrote: its data columns, then its
+    * partition columns, as typed in the saved frame. */
+  private final case class Written(dataSchema: StructType, partitions: StructType,
+      rows: Array[InternalRow])
+
   /** A marked version's cached form: its file relation, or, when its
     * file statistics are within [[residentLimit]], its rows as a
-    * local relation. A cached form whose regime the limit no longer
-    * picks is rebuilt, from its file relation and bytes. Builds (a
-    * schema-inference job, or one eager collect) run once per key: a
-    * server's reader and writer threads both resolve versions. */
-  private def cached(spark: SparkSession, at: String, mtime: Long): DataFrame = {
+    * local relation. The file relation is listed with the schema a
+    * save in this session wrote, if one did, else inferred. The
+    * rows are the ones `written` (a save seeding its version) holds,
+    * else one collect of the file relation; a seed without rows that
+    * the held form can take installs the file relation, and the first
+    * read's gate collects it. A cached form whose regime the limit no
+    * longer picks is rebuilt from its file relation and bytes. Builds
+    * run once per key: a server's reader and writer threads both
+    * resolve versions. */
+  private def cached(spark: SparkSession, at: String, mtime: Long,
+      written: Option[Written] = None): DataFrame = {
     val limit = residentLimit(spark)
-    versions((spark, at, mtime), v => v.resident == (v.fileBytes <= limit)) { held =>
-      val file = held.filterNot(_.resident).map(_.form).getOrElse(
-        Memos.markStable(spark.read.parquet(at)))
+    val key = (spark, at, mtime)
+    versions(key, v => v.resident == (v.fileBytes <= limit)) { held =>
+      val file = held.fold(Memos.markStable(
+        written.map(_.dataSchema).orElse(writtenSchemas.get(key))
+          .fold(spark.read)(s => spark.read.schema(s)).parquet(at)))(_.file)
       val bytes = held.fold(file.queryExecution.optimizedPlan.stats.sizeInBytes)(
         _.fileBytes)
-      if (bytes > limit) new Version(file, bytes, resident = false)
-      else new Version(Memos.markStable(
-        spark.createDataFrame(file.collect().toSeq.asJava, file.schema)),
-        bytes, resident = true)
+      new Version(file, bytes,
+        if (bytes > limit) None
+        else written.fold(Option[Seq[InternalRow]](
+          ArraySeq.unsafeWrapArray(PlanBridge.internalRows(file))))(heldRows(file, _)))
     }.form
   }
+
+  /** A save's rows as its file relation reads them back: data columns
+    * as written, and each partition value the one the listing parsed
+    * from the directory its row was written to, so a name that reads
+    * back as a number, or an empty string that reads back as null, is
+    * held as such. None if some row's directory is not among the
+    * listed ones (a string written as the default-partition name). */
+  private def heldRows(file: DataFrame, w: Written): Option[Seq[InternalRow]] =
+    file.queryExecution.analyzed.collectFirst {
+      case r: LogicalRelation => r.relation
+    }.collect { case h: HadoopFsRelation => h.location }.collect {
+      case ix: PartitioningAwareFileIndex => ix.partitionSpec()
+    }.filter(_.partitionColumns.fieldNames.sameElements(w.partitions.fieldNames))
+      .flatMap { spec =>
+        val parts = w.partitions.length
+        val data = w.dataSchema.length
+        // a partition directory's values, by the strings in its path
+        val dirs = spec.partitions.map { p =>
+          Iterator.iterate(p.path)(_.getParent).take(parts).map { d =>
+            ExternalCatalogUtils.unescapePathName(d.getName.split("=", 2).last) match {
+              case ExternalCatalogUtils.DEFAULT_PARTITION_NAME => null
+              case v => v
+            }
+          }.toSeq.reverse -> p.values
+        }.toMap
+        // the string the writer named a row's directory by: null for
+        // a null or empty value
+        def named(r: InternalRow, k: Int): String =
+          if (r.isNullAt(data + k)) null
+          else w.partitions(k).dataType match {
+            case _: StringType => Some(r.getUTF8String(data + k).toString).filter(_.nonEmpty).orNull
+            case t => r.get(data + k, t).toString
+          }
+        val project = UnsafeProjection.create(file.schema.fields.toSeq.zipWithIndex.map {
+          case (f, i) => BoundReference(if (i < data) i else i + parts, f.dataType, nullable = true)
+        })
+        val out = new Array[InternalRow](w.rows.length)
+        var i = 0
+        var missing = false
+        while (i < out.length && !missing) {
+          val r = w.rows(i)
+          dirs.get((0 until parts).map(named(r, _))) match {
+            case Some(values) => out(i) = project(new JoinedRow(r, values)).copy()
+            case None => missing = true
+          }
+          i += 1
+        }
+        if (missing) None else Some(ArraySeq.unsafeWrapArray(out))
+      }
 
   /** THE read helper: the epoch-pinned version if the given epoch
     * names this table (one marker stat, no listing of the retained
@@ -301,9 +399,7 @@ object GraphStore {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def marked(v: String): Option[(Option[String], DataFrame)] =
-      (try Some(fs.getFileStatus(new Path(dir, s"$v/_SUCCESS")).getModificationTime)
-      catch { case _: java.io.FileNotFoundException => None })
-        .map(m => (Some(v), cached(spark, s"$dir/$v", m)))
+      markerTime(fs, s"$dir/$v").map(m => (Some(v), cached(spark, s"$dir/$v", m)))
     val (v, df) = epoch.get(table).flatMap(marked)
       .orElse(goodVersions(spark, dir).view.flatMap(marked).headOption)
       .getOrElse {
@@ -320,6 +416,12 @@ object GraphStore {
       }
     (v, notExpired(df))
   }
+
+  /** The mtime of a version dir's `_SUCCESS` marker: None while the
+    * version is unmarked (incomplete or torn). */
+  private def markerTime(fs: FileSystem, at: String): Option[Long] =
+    try Some(fs.getFileStatus(new Path(at, "_SUCCESS")).getModificationTime)
+    catch { case _: java.io.FileNotFoundException => None }
 
   private def read(spark: SparkSession, epoch: Map[String, String],
       root: String, table: String): DataFrame =
@@ -463,55 +565,91 @@ object GraphStore {
 
   /** Rewrite the node table without its expired rows (physical
     * reclamation of lazily-expired data): a new version under the
-    * same crash-safe save path, pin advancing as usual. Returns the
-    * version written. */
+    * same crash-safe save path, pin advancing as usual. The new
+    * version keeps the shard width the pinned version was saved with
+    * (6 for versions that predate recorded widths and for plain
+    * layouts) unless `shardBits` names another. Returns the version
+    * written. */
   def compactExpiredNodes(spark: SparkSession, root: String,
-      shardBits: Int = 6): String =
-    saveNodes(loadNodes(spark, root).drop("shard"), root, shardBits)
+      shardBits: Option[Int] = None): String = {
+    val (v, nodes) = resolve(spark, currentEpoch(spark, root), root, "nodes")
+    saveNodes(nodes.drop("shard"), root,
+      shardBits.orElse(v.flatMap(savedShardBits)).getOrElse(6))
+  }
 
-  /** Returns the version name the frame was written under. When the
-    * root already has an epoch and `publish` is true (the default),
-    * the table's pin auto-advances — otherwise a plain save would be
-    * silently invisible behind a stale pin. Multi-table writers
-    * (StreamingIngest) pass publish = false and commit one epoch
-    * covering all their tables at the end. */
+  /** Returns the version name the frame was written under. `columns`
+    * adds the derived columns (shard, key_num) to the frame, which is
+    * written partitioned by `partitions`. A frame whose every leaf is
+    * a local relation is collected once and those rows are written;
+    * either way the version the save wrote is seeded for reads in
+    * this session once its marker exists (see the object doc). When
+    * the root already has an epoch and `publish` is true (the
+    * default), the table's pin auto-advances — otherwise a plain save
+    * would be silently invisible behind a stale pin. Multi-table
+    * writers (StreamingIngest) pass publish = false and commit one
+    * epoch covering all their tables at the end. */
   private def versionedSave(df: DataFrame, root: String, table: String,
-      publish: Boolean, tag: String = "")(write: (DataFrame, String) => Unit): String = {
-    val v = nextVersion(tag)
-    write(df, s"$root/$table/$v")
+      publish: Boolean, partitions: Seq[String], tag: String = "")(
+      columns: DataFrame => DataFrame): String = {
     val spark = df.sparkSession
+    val v = nextVersion(tag)
+    val at = s"$root/$table/$v"
+    val out = columns(df)
+    val data = out.columns.toSeq.filterNot(partitions.contains)
+    // partition columns last, as the file relation orders them
+    val framed = out.select((data ++ partitions).map(c => out.col(s"`${c.replace("`", "``")}`")): _*)
+    val (dataSchema, partSchema) =
+      (StructType(framed.schema.take(data.length)), StructType(framed.schema.drop(data.length)))
+    val rows =
+      if (localLeaves(framed) && partSchema.forall(f => heldPartition(f.dataType)))
+        Some(PlanBridge.internalRows(framed))
+      else None
+    rows.fold(framed)(rs => PlanBridge.localFrame(spark, framed.schema, ArraySeq.unsafeWrapArray(rs)))
+      .write.mode("overwrite").partitionBy(partitions: _*).parquet(at)
+    markerTime(new Path(at).getFileSystem(spark.sparkContext.hadoopConfiguration), at)
+      .foreach { mtime =>
+        rows match {
+          case Some(rs) => cached(spark, at, mtime, Some(Written(dataSchema, partSchema, rs)))
+          case None => writtenSchemas((spark, at, mtime))(dataSchema)
+        }
+      }
     if (publish && currentEpoch(spark, root).contains(table))
       commitEpoch(spark, root, Map(table -> v))
     pruneOld(spark, root, table)
     v
   }
 
+  /** Whether every leaf of the frame's plan, subqueries included, is
+    * a local relation: rows the driver already holds. */
+  private def localLeaves(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectWithSubqueries { case l: LeafNode => l }
+      .forall(_.isInstanceOf[LocalRelation])
+
+  /** Partition types whose directory names a save can match back to
+    * the listing's values: strings and integers. */
+  private def heldPartition(t: DataType): Boolean = t match {
+    case _: StringType | ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
   def saveNodes(nodes: DataFrame, root: String, shardBits: Int = 6,
       publish: Boolean = true): String =
-    versionedSave(nodes, root, "nodes", publish, s"-b$shardBits") { (df, path) =>
-      df.withColumn("shard", Sharding.shardOfId(col("id"), shardBits))
-        .write.mode("overwrite").partitionBy("shard").parquet(path)
-    }
+    versionedSave(nodes, root, "nodes", publish, Seq("shard"), s"-b$shardBits")(
+      _.withColumn("shard", Sharding.shardOfId(col("id"), shardBits)))
 
   def saveEdges(edges: DataFrame, root: String, shardBits: Int = 6,
       publish: Boolean = true): String =
-    versionedSave(edges, root, "edges", publish) { (df, path) =>
-      df.withColumn("shard", Sharding.shardOfKey(col("src_key"), shardBits))
-        .write.mode("overwrite").partitionBy("shard").parquet(path)
-    }
+    versionedSave(edges, root, "edges", publish, Seq("shard"))(
+      _.withColumn("shard", Sharding.shardOfKey(col("src_key"), shardBits)))
 
   def saveIndexes(indexes: DataFrame, root: String,
       publish: Boolean = true): String =
-    versionedSave(indexes, root, "indexes", publish) { (df, path) =>
-      df
-        // typed shadow column: numeric range probes push a native
-        // double predicate to the scan (a range over the string
-        // key_str cannot push, and parquet min/max stats on key_num
-        // skip whole row groups)
-        .withColumn("key_num", col("key_str").try_cast("double"))
-        .write.mode("overwrite")
-        .partitionBy("index_name", "key_type").parquet(path)
-    }
+    versionedSave(indexes, root, "indexes", publish, Seq("index_name", "key_type"))(
+      // typed shadow column: numeric range probes push a native
+      // double predicate to the scan (a range over the string
+      // key_str cannot push, and parquet min/max stats on key_num
+      // skip whole row groups)
+      _.withColumn("key_num", col("key_str").try_cast("double")))
 
   /** All three tables resolved against ONE epoch read — per-table
     * loads each re-read the epoch, so a commit landing between them

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.api.EGraph
 import graft.graph.{Algorithms, GraphBuilder}
 import graft.search.QueryJson
-import graft.sources.GraphStore
+import graft.sources.{DocumentIngest, GraphStore}
 
 /** GraphStore's read path: one cached form per marked version (rows
   * held on the driver when small, a file relation otherwise), one
@@ -73,6 +73,15 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
       .toArray(Array.empty[File]).filterNot(f => f.getName.startsWith("_") ||
         f.getName.startsWith(".")).map(_.length).sum
 
+  /** A version as a process other than this session would leave it:
+    * moving its marker's mtime keys it apart from the entry the save
+    * seeded, so its first read lists and collects the files. */
+  private def unseeded(root: String, table: String, v: String): String = {
+    val marker = new File(s"$root/$table/$v/_SUCCESS")
+    assert(marker.setLastModified(marker.lastModified() + 5000L))
+    v
+  }
+
   /** The sf graph persisted under one epoch. */
   private def storeOf(g: EGraph, root: String): Unit =
     GraphStore.commitEpoch(spark, root, Map(
@@ -90,7 +99,7 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
   test("a second read of one stored version starts no Spark job before its action") {
     inBothRegimes("read-jobs") { (root, scan) =>
       GraphStore.commitEpoch(spark, root,
-        Map("nodes" -> GraphStore.saveNodes(nodesOf("k1"), root)))
+        Map("nodes" -> unseeded(root, "nodes", GraphStore.saveNodes(nodesOf("k1"), root))))
       // the instrument sees the first read's schema inference
       assert(jobsDuring(GraphStore.loadNodes(spark, root)) >= 1)
       var second: DataFrame = null
@@ -508,8 +517,8 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
 
   test("a nodeByKey collect on a resident version starts no Spark job") {
     val root = fresh("resident-jobs")
-    GraphStore.commitEpoch(spark, root,
-      Map("nodes" -> GraphStore.saveNodes(hashedNodesOf("k1", "k2"), root)))
+    GraphStore.commitEpoch(spark, root, Map("nodes" ->
+      unseeded(root, "nodes", GraphStore.saveNodes(hashedNodesOf("k1", "k2"), root))))
     // the first read collects the version
     assert(jobsDuring(GraphStore.loadNodes(spark, root)) >= 1)
     var rows: Array[Row] = null
@@ -556,8 +565,8 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
 
   test("two threads that first-read one version build it once") {
     val root = fresh("resident-race")
-    GraphStore.commitEpoch(spark, root,
-      Map("nodes" -> GraphStore.saveNodes(hashedNodesOf("k1", "k2"), root)))
+    GraphStore.commitEpoch(spark, root, Map("nodes" ->
+      unseeded(root, "nodes", GraphStore.saveNodes(hashedNodesOf("k1", "k2"), root))))
     // the file relation (and its schema job) first, so the threads
     // race on the resident build alone
     inFileRegime(GraphStore.loadNodes(spark, root))
@@ -586,5 +595,160 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
       assert(keys(GraphStore.nodeByKey(spark, root, k)) == Set(k), k))
     each()
     inFileRegime(each())
+  }
+
+  /** The table's version pinned at `root` against a fresh
+    * `spark.read.parquet` of its files: the same schema and rows as
+    * seeded (no job when the save held its rows), and the regime
+    * following the gate both ways on the version's own bytes, a
+    * re-gated version rebuilding from its file relation with no job. */
+  private def readsAsWritten(root: String, table: String, v: String,
+      seededRows: Boolean): Unit = {
+    val dir = s"$root/$table/$v"
+    GraphStore.commitEpoch(spark, root, Map(table -> v))
+    def load(): DataFrame = table match {
+      case "nodes" => GraphStore.loadNodes(spark, root)
+      case "edges" => GraphStore.loadEdges(spark, root)
+      case _ => GraphStore.loadIndexes(spark, root)
+    }
+    val want = rowsOf(spark.read.parquet(dir))
+    var got: DataFrame = null
+    val jobs = jobsDuring { got = load() }
+    if (seededRows) assert(jobs == 0, s"$dir: the save held its rows")
+    else assert(jobs == 1, s"$dir: the save seeded its schema; the first read only collects")
+    assert(plan(got).contains("LocalTableScan"), plan(got))
+    assert(rowsOf(got) == want, dir)
+    val bytes = dataBytes(dir)
+    withBroadcastThreshold(bytes - 1) {
+      var above: DataFrame = null
+      assert(jobsDuring { above = load() } == 0, s"$dir: re-gated from its file relation")
+      assert(plan(above).contains("FileScan"), plan(above))
+      assert(rowsOf(above) == want, dir)
+    }
+    withBroadcastThreshold(bytes) {
+      val at = load()
+      assert(plan(at).contains("LocalTableScan"), plan(at))
+      assert(rowsOf(at) == want, dir)
+    }
+    inFileRegime(assert(rowsOf(load()) == want, dir))
+  }
+
+  test("a seeded version has the schema and rows of a fresh read of its files") {
+    import spark.implicits._
+    val root = fresh("seeded")
+    val ks = (1 to 20).map(i => s"k$i")
+    for (bits <- Seq(3, 6))
+      readsAsWritten(root, "nodes", GraphStore.saveNodes(hashedNodesOf(ks: _*), root, bits),
+        seededRows = true)
+    // a column the previous version lacked, with expiry instants
+    // (one null: never expires) and a held version as a leaf
+    val later = GraphStore.withExpiry(hashedNodesOf("k21"), 3600L)
+      .unionByName(hashedNodesOf("k22").withColumn("expires_at_us", lit(null).cast("long")))
+    readsAsWritten(root, "nodes", GraphStore.saveNodes(GraphStore.loadNodes(spark, root)
+      .drop("shard").unionByName(later, allowMissingColumns = true), root, 3),
+      seededRows = true)
+    val edges = Seq(("k1", "k2", 1L), ("k1", "k3", 2L), ("k2", "k1", 3L), (null, "k1", 4L))
+      .toDF("src_key", "dst_key", "n")
+    readsAsWritten(root, "edges", GraphStore.saveEdges(edges, root, 3), seededRows = true)
+    // partition values that do not read back as written: a null and
+    // an empty name (both read as null), separators in a name, and
+    // key_str values whose key_num is NaN, ±Infinity and −0.0
+    val names = Seq[String](null, "", "a/b=c", "bal", "day")
+    val indexes = names.zipWithIndex.flatMap { case (n, i) =>
+      Seq("NaN", "Infinity", "-Infinity", "-0.0", "0.0", "2024-01-05", null, "x")
+        .map(k => (s"k$i", n, if (n == "day") "date" else "double", k))
+    }.toDF("node_key", "index_name", "key_type", "key_str")
+    readsAsWritten(root, "indexes", GraphStore.saveIndexes(indexes, root), seededRows = true)
+    // a numeric-looking name alone: the listing types the column int
+    val numeric = Seq(("k1", "2024", "int", "7"), ("k2", "2024", "int", "8"))
+      .toDF("node_key", "index_name", "key_type", "key_str")
+    val v = GraphStore.saveIndexes(numeric, root)
+    assert(spark.read.parquet(s"$root/indexes/$v").schema("index_name").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    readsAsWritten(root, "indexes", v, seededRows = true)
+    // a partition column that is not a string or an integer: the save
+    // seeds only the schema
+    val doubles = Seq(("k1", 1.5, "text", "A"), ("k2", 2.5, "text", "B"))
+      .toDF("node_key", "index_name", "key_type", "key_str")
+    readsAsWritten(root, "indexes", GraphStore.saveIndexes(doubles, root), seededRows = false)
+  }
+
+  test("a reopen after a commit of local upserts runs no Spark job") {
+    import spark.implicits._
+    val root = fresh("write-through")
+    storeOf(EGraph.fromTables(spark, sfDir), root)
+    val g = EGraph.fromStore(spark, root)
+    g.neighbors("c:1", 0).collect()
+    val specs = Seq(DocumentIngest.IndexSpec("seg", "text", Seq("seg")))
+    val updates = DocumentIngest.nodes(Seq(("c:1", """{"seg":"NEW"}"""),
+      ("c:new", """{"seg":"NEW"}""")).toDF("k", "d"), "k", "d")
+    val vn = GraphStore.saveNodes(DocumentIngest.upsertNodes(
+      GraphStore.loadNodes(spark, root).drop("shard"), updates), root, publish = false)
+    val vi = GraphStore.saveIndexes(DocumentIngest.upsertIndexes(
+      GraphStore.loadIndexes(spark, root).drop("key_num"), updates, specs), root,
+      publish = false)
+    GraphStore.commitEpoch(spark, root, Map("nodes" -> vn, "indexes" -> vi))
+    var g2: EGraph = null
+    assert(jobsDuring {
+      g2 = EGraph.fromStore(spark, root)
+      g2.neighbors("c:1", 0).collect()
+    } == 0)
+    assert(plan(g2.nodes).contains("LocalTableScan") && plan(g2.indexes).contains("LocalTableScan"))
+    assert(rowsOf(g2.nodes) == rowsOf(spark.read.parquet(s"$root/nodes/$vn")))
+    assert(rowsOf(g2.indexes) == rowsOf(spark.read.parquet(s"$root/indexes/$vi")))
+    assert(g2.node("c:1").select("details").as[String].collect().toSeq == Seq("""{"seg":"NEW"}"""))
+    assert(g2.indexLookup("seg", "text", "NEW").as[String].collect().toSet == Set("c:1", "c:new"))
+  }
+
+  test("a save of a frame that reads a parquet file starts no collect job") {
+    val root = fresh("file-leaf")
+    val src = fresh("file-leaf-src")
+    hashedNodesOf("k1", "k2", "k3").write.parquet(src)
+    val scan = spark.read.parquet(src)
+    val plain = jobsDuring(scan.withColumn("shard", graft.index.Sharding.shardOfId(col("id"), 6))
+      .write.partitionBy("shard").parquet(fresh("file-leaf-plain")))
+    var v = ""
+    assert(jobsDuring { v = GraphStore.saveNodes(scan, root) } == plain,
+      "the save runs the jobs of a plain partitioned write")
+    readsAsWritten(root, "nodes", v, seededRows = false)
+  }
+
+  test("a save whose marker is missing seeds nothing and stays invisible") {
+    val root = fresh("torn-seed")
+    val v1 = GraphStore.saveNodes(hashedNodesOf("k1"), root)
+    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    spark.conf.set(key, "false")
+    val torn = try GraphStore.saveNodes(hashedNodesOf("k1", "k2"), root)
+      finally spark.conf.unset(key)
+    assert(!new File(s"$root/nodes/$torn/_SUCCESS").exists())
+    assert(keys(GraphStore.loadNodes(spark, root)) == Set("k1"))
+    GraphStore.commitEpoch(spark, root, Map("nodes" -> torn))
+    assert(keys(GraphStore.loadNodes(spark, root)) == Set("k1"), "an unmarked pin falls back")
+    assert(GraphStore.currentEpoch(spark, root)("nodes") == torn && v1 != torn)
+    // marked later, it is read from its files: the save seeded nothing
+    assert(new File(s"$root/nodes/$torn/_SUCCESS").createNewFile())
+    var got: DataFrame = null
+    assert(jobsDuring { got = GraphStore.loadNodes(spark, root) } >= 1)
+    assert(keys(got) == Set("k1", "k2"))
+  }
+
+  test("compacting a TTL store keeps its shard width") {
+    import spark.implicits._
+    def compacted(root: String): Unit = {
+      val live = (1 to 24).map(i => s"k$i")
+      val nodes = GraphStore.withExpiry(hashedNodesOf(live: _*), 3600L)
+        .unionByName(GraphStore.withExpiry(hashedNodesOf("gone1", "gone2"), -60L))
+      GraphStore.commitEpoch(spark, root,
+        Map("nodes" -> GraphStore.saveNodes(nodes, root, 3)))
+      val v = GraphStore.compactExpiredNodes(spark, root)
+      assert(v.endsWith("-b3"), v)
+      assert(spark.read.parquet(s"$root/nodes/$v").select("shard").distinct()
+        .as[Int].collect().forall(_ < 8), "re-sharded at another width")
+      live.foreach(k => assert(keys(GraphStore.nodeByKey(spark, root, k)) == Set(k), k))
+      assert(GraphStore.nodeByKey(spark, root, "gone1").isEmpty)
+      assert(spark.read.parquet(s"$root/nodes/$v").count() == live.size)
+    }
+    compacted(fresh("compact-width"))
+    inFileRegime(compacted(fresh("compact-width-file")))
   }
 }
