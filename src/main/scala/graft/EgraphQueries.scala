@@ -266,7 +266,7 @@ object EgraphQueries {
         .orderBy("t")
     },
 
-    // PageRank and components: single task below
+    // PageRank and components: driver kernels below
     // graft.graph.broadcastEdges, DataFrame rounds past it
     "g_pagerank" -> { (s, d) =>
       Algorithms.pageRank(GraphBuilder.undirectedFor(s, d), iters = 5)
@@ -288,7 +288,7 @@ object EgraphQueries {
     },
 
     "g_kcore" -> { (s, d) =>
-      // exact core numbers: single-task bucket peeling below
+      // exact core numbers: driver bucket peeling below
       // graft.graph.broadcastEdges, the h-index fixpoint rounds past
       // it; the DuckDB oracle replays the same all-integer iteration
       // via a counter-carrying recursive CTE (exact, not rows-only,
@@ -309,7 +309,7 @@ object EgraphQueries {
     },
 
     "g_communities" -> { (s, d) =>
-      // deterministic LPA (min-label tie-break; single task below
+      // deterministic LPA (min-label tie-break; driver kernel below
       // graft.graph.broadcastEdges, DataFrame rounds past it),
       // canonical min-member community names; the DuckDB oracle
       // replays the 5 integer/string-ordered rounds exactly (exact

@@ -1,7 +1,11 @@
 package graft.graph
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.plans.Materialize._
 import graft.util.Memos
 
@@ -147,16 +151,17 @@ object Algorithms {
     * every rank at 0.
     *
     * Dual regime, like [[kCore]]: under `graft.graph.broadcastEdges`
-    * the same unnormalized update runs as ONE executor task over the
-    * broadcast out-lists ([[singleTask]]); the values differ from the
+    * the same unnormalized update runs on the driver over the frame's
+    * held adjacency ([[onAdjacency]]); the values differ from the
     * rounds only by summation order, in the last ulp. Contract notes:
-    * the input is the symmetric adjacency (every `b` is also an `a`),
-    * rows with a null id are dropped in both regimes, and only STRING
-    * adjacencies take the single task (see [[stringIds]]). */
+    * rows with a null id are dropped in both regimes, only the rounds'
+    * nodes (ids seen as `a`) get a row, a node's share splits over all
+    * its rows, and only STRING adjacencies take the kernel (see
+    * [[stringIds]]). */
   def pageRank(undirectedEdges0: DataFrame, iters: Int = 10,
       damping: Double = 0.85, seed: Option[String] = None): DataFrame =
-    if (singleTaskEligible(undirectedEdges0))
-      singleTask(undirectedEdges0, "rank")(g =>
+    if (kernelEligible(undirectedEdges0))
+      onAdjacency(undirectedEdges0, "rank")(g =>
         pageRankKernel(g, iters, damping, seed))
     else GraphBuilder.withAKeyed(undirectedEdges0) { keyed =>
     // (scoped: a one-shot input's repartitioned copy is freed on
@@ -194,24 +199,23 @@ object Algorithms {
   /** The rounds' update, as index arrays: each node pushes
     * share = rank/deg to its out-list, then
     * rank = (1 − d)·t(v) + d · Σ shares received, where the teleport
-    * t is 1 everywhere, or 1 on the seed and 0 elsewhere. */
-  private def pageRankKernel(g: IndexedAdjacency, iters: Int,
-      damping: Double, seed: Option[String]): Array[Double] = {
-    val teleport = seed.fold(Array.fill(g.n)(1.0)) { s =>
-      val i = g.ids.indexOf(s) // -1 when absent: all zeros
-      Array.tabulate(g.n)(v => if (v == i) 1.0 else 0.0)
-    }
+    * t is 1 everywhere, or 1 on the seed and 0 elsewhere. A sink
+    * receives shares but, like the rounds' base, gets no row. */
+  private def pageRankKernel(g: Csr, iters: Int,
+      damping: Double, seed: Option[String]): Seq[(String, Double)] = {
+    val s = seed.map(g.indexOf) // Some(-1) when absent: all zeros
+    val teleport = Array.tabulate(g.n)(v => if (s.forall(_ == v)) 1.0 else 0.0)
     var rank = teleport
     for (_ <- 1 to iters) {
       val csum = new Array[Double](g.n)
       for (v <- 0 until g.n) {
-        val share = rank(v) / g.adj(v).length
-        g.adj(v).foreach(u => csum(u) += share)
+        val share = rank(v) / g.deg(v)
+        for (e <- g.nbrs(v)) csum(g.dst(e)) += share
       }
       rank = Array.tabulate(g.n)(v =>
         (1.0 - damping) * teleport(v) + damping * csum(v))
     }
-    rank
+    (0 until g.n).filter(g.deg(_) > 0).map(v => (g.ids(v), rank(v)))
   }
 
   /** Connected components by min-label propagation: every node takes
@@ -221,17 +225,18 @@ object Algorithms {
     * component named by its smallest member in Spark's string order.
     *
     * Dual regime, like [[kCore]]: under `graft.graph.broadcastEdges`
-    * ONE executor task traverses the broadcast adjacency once
-    * ([[singleTask]]) — exact, the same map as the rounds. Contract
-    * notes: the input is the symmetric adjacency, `maxIter` does not
-    * apply below the ceiling (the traversal always finishes, so the
-    * convergence-failure throw is a rounds-only behavior), rows with
-    * a null id are dropped in both regimes, and only STRING
-    * adjacencies take the single task. */
+    * the driver traverses the frame's held adjacency once
+    * ([[onAdjacency]]) — exact, the same map as the rounds. Contract
+    * notes: labels flow along `(a, b)` rows, so on an asymmetric
+    * frame a node takes the smallest id that reaches it, in both
+    * regimes; `maxIter` does not apply below the ceiling (the
+    * traversal always finishes, so the convergence-failure throw is a
+    * rounds-only behavior), rows with a null id are dropped in both
+    * regimes, and only STRING adjacencies take the kernel. */
   def connectedComponents(undirectedEdges0: DataFrame,
       maxIter: Int = 50): DataFrame =
-    if (singleTaskEligible(undirectedEdges0))
-      singleTask(undirectedEdges0, "component")(componentsKernel)
+    if (kernelEligible(undirectedEdges0))
+      onAdjacency(undirectedEdges0, "component")(componentsKernel)
     else GraphBuilder.withAKeyed(undirectedEdges0) { keyed =>
     val undirectedEdges = nonNullIds(keyed)
     var labels = undirectedEdges.select(col("a").as("node")).distinct()
@@ -261,9 +266,9 @@ object Algorithms {
     labels.withColumnRenamed("label", "component")
   }
 
-  /** One depth-first sweep in index order: the first node of each
-    * component is its smallest index, i.e. the rounds' `min(label)`. */
-  private def componentsKernel(g: IndexedAdjacency): Array[String] = {
+  /** One depth-first sweep in index order: each node takes the first,
+    * i.e. smallest, index that reaches it — the rounds' `min(label)`. */
+  private def componentsKernel(g: Csr): Seq[(String, String)] = {
     val comp = Array.fill(g.n)(-1)
     val stack = new Array[Int](g.n) // each node is pushed at most once
     for (s <- 0 until g.n if comp(s) < 0) {
@@ -272,12 +277,14 @@ object Algorithms {
       var top = 1
       while (top > 0) {
         top -= 1
-        g.adj(stack(top)).foreach { u =>
+        val v = stack(top)
+        for (e <- g.nbrs(v)) {
+          val u = g.dst(e)
           if (comp(u) < 0) { comp(u) = s; stack(top) = u; top += 1 }
         }
       }
     }
-    comp.map(g.ids)
+    g.ids.indices.map(v => (g.ids(v), g.ids(comp(v))))
   }
 
   /** k-core decomposition by h-index iteration (Lü et al., "The
@@ -294,8 +301,8 @@ object Algorithms {
     * pathological degree ever demanded it. Returns (node, core).
     *
     * Dual regime: under the broadcast ceiling
-    * (`graft.graph.broadcastEdges`) the decomposition runs as ONE
-    * executor task over the broadcast adjacency — exact
+    * (`graft.graph.broadcastEdges`) the decomposition runs on the
+    * driver over the frame's held adjacency ([[onAdjacency]]) — exact
     * Batagelj–Zaveršnik bucket peeling, O(E), whose output IS the
     * h-index fixpoint (both equal the core number, Lü et al. Thm 1)
     * — because below ~1M edges the distributed form's cost is pure
@@ -303,15 +310,16 @@ object Algorithms {
     * checkpoint + convergence job for milliseconds of actual work).
     * Past the ceiling the rounds above are the scale shape and run
     * unchanged; spec pins regime equality. Contract notes: the input
-    * is the symmetric adjacency, `maxIter` does not apply below the
-    * ceiling (peeling is exact and always terminates, so the
-    * convergence-failure throw is a rounds-only behavior), rows with
-    * a null id are dropped in both regimes, and the single task keys
-    * on STRING node columns — non-string adjacencies ride the rounds
-    * at any size (see [[stringIds]]). */
+    * is the symmetric adjacency (on an asymmetric frame the peeling
+    * sees only the ids seen as `a`, and the regimes differ),
+    * `maxIter` does not apply below the ceiling (peeling is exact and
+    * always terminates, so the convergence-failure throw is a
+    * rounds-only behavior), rows with a null id are dropped in both
+    * regimes, and the kernel keys on STRING node columns — non-string
+    * adjacencies ride the rounds at any size (see [[stringIds]]). */
   def kCore(undirectedEdges0: DataFrame, maxIter: Int = 50): DataFrame =
-    if (singleTaskEligible(undirectedEdges0))
-      singleTask(undirectedEdges0, "core")(kCoreKernel)
+    if (kernelEligible(undirectedEdges0))
+      onAdjacency(undirectedEdges0, "core")(kCoreKernel)
     else GraphBuilder.withAKeyed(undirectedEdges0) { keyed =>
     val undirectedEdges = nonNullIds(keyed)
     // h-index of a desc-sorted estimate list: |{i : s_i ≥ i+1}| —
@@ -352,10 +360,13 @@ object Algorithms {
   }
 
   /** Exact core numbers by bucket peeling (Batagelj & Zaveršnik
-    * 2003). Integer-only — no FP wobble between regimes. */
-  private def kCoreKernel(g: IndexedAdjacency): Array[Int] = {
+    * 2003). Integer-only — no FP wobble between regimes. A sink (an
+    * id never seen as `a`) starts at 0, so it moves no estimate, and
+    * is neither counted into a degree nor given a row. */
+  private def kCoreKernel(g: Csr): Seq[(String, Int)] = {
     val n = g.n
-    val core = g.adj.map(_.length)
+    val core = Array.tabulate(n)(v =>
+      g.nbrs(v).count(e => g.deg(g.dst(e)) > 0))
     if (n > 0) {
       val maxDeg = core.max
       // bin[d] = start offset of degree-d nodes in vert
@@ -368,7 +379,8 @@ object Algorithms {
       for (v <- 0 until n) { pos(v) = fill(core(v)); vert(pos(v)) = v; fill(core(v)) += 1 }
       for (i <- 0 until n) {
         val v = vert(i)
-        g.adj(v).foreach { u =>
+        for (e <- g.nbrs(v)) {
+          val u = g.dst(e)
           if (core(u) > core(v)) {
             // swap u with the first vertex of its bucket, then
             // shrink the bucket boundary and u's core by one
@@ -384,21 +396,22 @@ object Algorithms {
         }
       }
     }
-    core
+    (0 until n).filter(g.deg(_) > 0).map(v => (g.ids(v), core(v)))
   }
 
   /** Edge-count ceiling (`graft.graph.broadcastEdges`) for the
-    * broadcast regimes of eight verbs: the single-task kernels of
-    * [[pageRank]], [[connectedComponents]], [[labelPropagation]] and
-    * [[kCore]], the seed-parallel sweep of [[betweenness]], and the
-    * driver-side kernels of `Traversal.bfsLevels`, `pathBetween` and
-    * `shortestPathsWeighted`: ~2M directed rows ≈ ~120 MB as the
-    * grouped `Map[node, Array[neighbor]]` (~60 B/edge — leaner than a
-    * hash-join relation, so the ceiling sits above
-    * [[triangleBroadcastEdges]] at the same memory envelope). All
-    * eight share the memoized [[broadcastAdjacency]]; the driver
-    * materializes only its |V| pre-grouped rows, bounded by the
-    * ceiling itself. */
+    * kernel regimes of eight verbs: the driver kernels of
+    * [[pageRank]], [[connectedComponents]], [[labelPropagation]],
+    * [[kCore]], the seed-parallel sweeps of [[betweenness]], and
+    * `Traversal.bfsLevels`, `pathBetween` and `shortestPathsWeighted`.
+    * All eight read the frame's one held [[Csr]]: 4 B per row of
+    * targets (12 B with weights) plus |V| offsets and ids, ~8–24 MB at
+    * ~2M directed rows. The build's transient peak is the tasks'
+    * collected parts, two `Int`s per row (plus a `Double` with
+    * weights) and each task's distinct ids once (~16–32 MB plus ids at
+    * the ceiling) — under the ~60 B/edge of a hash-join relation, so
+    * the ceiling sits above [[triangleBroadcastEdges]] at the same
+    * memory envelope. */
   val broadcastEdges = 2000000L
 
   /** One conf-ceiling parse for the regime gates. Malformed values
@@ -410,8 +423,8 @@ object Algorithms {
       .flatMap(v => scala.util.Try(v.toLong).toOption)
       .getOrElse(default)
 
-  /** Both key columns are strings. The broadcast kernels collect keys
-    * into `Map[String, …]`; casting non-string ids would silently flip
+  /** Both key columns are strings. The kernels key nodes by their
+    * string ids; casting non-string ids would silently flip
     * the output schema (and a bigint-vs-string result join coerces
     * through double, mis-comparing 64-bit ids above 2^53) — so
     * non-string adjacencies take the type-generic shuffle regime at
@@ -427,7 +440,7 @@ object Algorithms {
       ceiling: Long): Boolean =
     stringIds(edges) && edges.count() <= ceiling
 
-  /** The one gate of the eight broadcast verbs: string ids and at
+  /** The one gate of the eight kernel verbs: string ids and at
     * most `graft.graph.broadcastEdges` rows. The row count lives in
     * the frame's [[adjBcastCache]] entry, so a repeated call compares
     * the held count with the CURRENT ceiling and runs no count job
@@ -435,65 +448,40 @@ object Algorithms {
     * rounds). A frame with no entry is counted once; if it is within
     * the ceiling its entry is built here, so the kernel that follows
     * finds it, and a frame above the ceiling gets no entry — nothing
-    * pins a big frame's broadcast. A frame with a neighbor id that
-    * contains [[PackedAdjacency.Sep]] cannot be packed and takes the
-    * rounds too, whatever its size. */
-  private[graph] def singleTaskEligible(edges: DataFrame): Boolean =
+    * pins a big frame's adjacency. */
+  private[graph] def kernelEligible(edges: DataFrame): Boolean =
     stringIds(edges) && {
       val ceiling = confLong(edges.sparkSession,
         "graft.graph.broadcastEdges", broadcastEdges)
       adjBcastCache.get(edges) match {
-        case Some(held) => held.rows <= ceiling && held.packed.isDefined
+        case Some(held) => held.rows <= ceiling
         case None =>
           val rows = edges.count()
-          rows <= ceiling && adjacencyEntry(edges, rows).packed.isDefined
+          val within = rows <= ceiling
+          if (within) adjacencyEntry(edges, rows)
+          within
       }
     }
 
   /** Rows with a null endpoint, dropped by every regime: the rounds'
     * equi-joins never match a null id, but their group-bys would
     * still emit a null node (and count its rows into a neighbor's
-    * degree) that [[broadcastAdjacency]]'s null-free map has not. */
+    * degree) that the null-free [[Csr]] has not. */
   private[graph] def nonNullIds(edges: DataFrame): DataFrame =
     edges.filter(col("a").isNotNull && col("b").isNotNull)
 
-  /** A decoded [[broadcastAdjacency]] in index form: node ids sorted
-    * in Spark's string order — UTF-8 bytes, as `UTF8String` compares;
-    * JVM `String` order is UTF-16 and disagrees on supplementary
-    * characters — so the smallest index is the id the rounds' `min`
-    * and `min_by` elect. Neighbors are indexes restricted to known
-    * nodes (identity on a symmetric adjacency), repeats kept so a
-    * repeated row counts twice, as in the rounds. */
-  private final class IndexedAdjacency(g: Map[String, Array[String]]) {
-    val ids: Array[String] = g.keys.toArray
-      .map(org.apache.spark.unsafe.types.UTF8String.fromString)
-      .sortWith(_.compareTo(_) < 0).map(_.toString)
-    val n: Int = ids.length
-    val adj: Array[Array[Int]] = {
-      val idx = ids.zipWithIndex.toMap
-      ids.map(k => g(k).flatMap(idx.get))
-    }
-  }
-
-  /** Single-task regime of [[pageRank]], [[connectedComponents]],
-    * [[labelPropagation]] and [[kCore]]: ONE executor task decodes
-    * the memoized broadcast adjacency, runs `kernel` over its index
-    * form and emits (node, `valueCol`) with the kernel's value per
-    * node index. Below the ceiling the rounds' cost is pure per-job
-    * overhead for milliseconds of work. The result is a lazy
-    * checkpoint: the first action runs the kernel once and pins the
-    * |V|-row result, so multi-action consumers don't re-run it (the
-    * rounds' result is materialized and has the same property). */
-  private def singleTask[V: scala.reflect.runtime.universe.TypeTag](
+  /** Kernel regime of [[pageRank]], [[connectedComponents]],
+    * [[labelPropagation]] and [[kCore]]: `kernel` runs on the driver
+    * over the frame's held [[Csr]], and its (node, `valueCol`) rows
+    * are a local relation, so building and collecting the result runs
+    * no Spark job. Below the ceiling the rounds' cost is pure per-job
+    * overhead for milliseconds of work. */
+  private def onAdjacency[V: scala.reflect.runtime.universe.TypeTag](
       undirectedEdges: DataFrame, valueCol: String)(
-      kernel: IndexedAdjacency => Array[V]): DataFrame = {
+      kernel: Csr => Seq[(String, V)]): DataFrame = {
     val spark = undirectedEdges.sparkSession
     import spark.implicits._
-    val bAdj = broadcastAdjacency(undirectedEdges)
-    spark.sparkContext.parallelize(Seq(0), 1).flatMap { _ =>
-      val g = new IndexedAdjacency(PackedAdjacency.decode(bAdj).adj)
-      g.ids.iterator.zip(kernel(g).iterator)
-    }.toDF("node", valueCol).materialize(false)
+    kernel(adjacency(undirectedEdges)).toDF("node", valueCol)
   }
 
   /** HyperBall-style neighborhood-function estimation: for EVERY
@@ -862,16 +850,15 @@ object Algorithms {
     *
     * Two regimes, same dual-regime convention as [[ballSizes]] and
     * the triangle closure: while the adjacency fits the broadcast
-    * ceiling, the sweep runs SEED-PARALLEL — Brandes' sources are
-    * independent, the textbook parallelization — as one job of k
-    * tasks over the broadcast edge list (one bounded collect + one
-    * broadcast + one tiny (v, δ) aggregation, instead of
+    * ceiling, the sweeps run SEED-PARALLEL on the driver — Brandes'
+    * sources are independent, the textbook parallelization — over the
+    * frame's held [[Csr]] (one tiny (v, δ) aggregation instead of
     * ~2·maxDepth join/agg/checkpoint rounds whose per-round job
     * cost dominates below cluster scale). Past the ceiling the
     * DataFrame rounds above are the right shape — k·|V| state rows
     * shuffling on (s, v) — and run unchanged
     * (`graft.graph.broadcastEdges` overrides the ceiling, as for the
-    * other single-task kernels; spec pins regime equality). */
+    * other kernels; spec pins regime equality). */
   def betweenness(undirectedEdges: DataFrame, k: Int = 16,
       maxDepth: Int = 4): DataFrame = {
     // a null id is no node (see [[nonNullIds]]): it must not count
@@ -887,8 +874,8 @@ object Algorithms {
       .orderBy(md5(col("a").cast("string")), col("a")).limit(kk.toInt)
       .select(col("a").as("s"))
     val deltas =
-      if (singleTaskEligible(undirectedEdges))
-        dependencyBroadcast(undirectedEdges, seeds, maxDepth)
+      if (kernelEligible(undirectedEdges))
+        dependencyKernel(undirectedEdges, seeds, maxDepth)
       else dependencyShuffle(undirectedEdges, seeds, maxDepth)
     val scale = n.toDouble / kk.toDouble / 2.0
     nodes.join(deltas.groupBy("v").agg(sum("delta").as("delta")),
@@ -898,207 +885,173 @@ object Algorithms {
           .as("betweenness"))
   }
 
-  /** Memoized broadcast adjacency behind the sub-ceiling regimes —
-    * grouped DISTRIBUTED (groupBy(a) + collect_list, so the driver
-    * receives |V| pre-built rows instead of 2|E| pairs to re-group)
-    * and shipped once per frame instance: [[betweenness]], the
-    * [[singleTask]] kernels and the traversal kernels probe the same
-    * map. Eviction drops the
-    * reference; the TorrentBroadcast is reclaimed by the
-    * ContextCleaner.
-    *
-    * The broadcast payload is PACKED (r12): one -joined
-    * neighbor string + the neighbor count per node (+ the weights of
-    * a weighted frame, as one primitive array), decoded to the
-    * Map[String, Array[String]] once per JVM on first task access
-    * ([[PackedAdjacency.decode]]). Broadcasts go through Java
-    * serialization, which walks every object — the unpacked map's
-    * ~2|E| string objects cost 2.1-2.3 s to ship at sf0.1 (1.17 M
-    * edges) vs 0.06 s packed + a one-time 0.1 s decode (r12
-    * attribution, OPTIMIZATION_r12.md session 3 #3); that build was ~60 % of g_betweenness's wall. A
-    * frame with an id that contains the separator is never broadcast
-    * ([[PackedAdjacency.packs]]); the count still rides along so
-    * decode fails LOUDLY (split length mismatch) rather than
-    * silently corrupting neighbor sets. */
+  /** Memoized adjacency behind the kernel regimes, one [[Csr]] per
+    * frame instance, held on the driver: [[betweenness]], the
+    * [[onAdjacency]] kernels and the traversal kernels read the same
+    * arrays. Eviction and `Memos.resetDerived` drop it. */
   // admits every frame, not only stable ones: a caller may hand
   // several verbs one unmarked frame (kCore, LPA and betweenness over
-  // one `und` per pass) and they share this broadcast. The build is
-  // an eager collect+broadcast, so racing first calls for one frame
-  // build it once under the memo's per-key lock. Only frames within
-  // the ceiling get an entry ([[singleTaskEligible]])
+  // one `und` per pass) and they share this entry. The build is an
+  // eager collect, so racing first calls for one frame build it once
+  // under the memo's per-key lock. Only frames within the ceiling get
+  // an entry ([[kernelEligible]])
   private val adjBcastCache = new Memos.Memo[DataFrame, AdjEntry](8, derived = true)
 
   /** An [[adjBcastCache]] entry: the row count of the frame it was
-    * built for (the gate's measure) and its packed broadcast — none
-    * when a node id contains [[PackedAdjacency.Sep]], so such a frame
-    * takes the rounds. The driver's decode, which the traversal
-    * kernels walk, lives and dies with the entry: eviction and
-    * `Memos.resetDerived` drop it with the broadcast. */
-  private final case class AdjEntry(rows: Long, packed: Option[
-      org.apache.spark.broadcast.Broadcast[Array[PackedAdjacency.Row]]]) {
-    lazy val decoded: PackedAdjacency.Decoded = PackedAdjacency.unpack(packed.get.value)
-  }
+    * built for (the gate's measure) and its adjacency. */
+  private final case class AdjEntry(rows: Long, csr: Csr)
 
   private def adjacencyEntry(edges: DataFrame, rows: => Long): AdjEntry =
-    adjBcastCache(edges)(AdjEntry(rows, packAdjacency(edges)))
+    adjBcastCache(edges)(AdjEntry(rows, Csr(edges)))
 
-  /** The packed broadcast of a frame that passed [[singleTaskEligible]]. */
-  private def broadcastAdjacency(undirectedEdges: DataFrame) =
-    adjacencyEntry(undirectedEdges, undirectedEdges.count()).packed.get
+  /** The held [[Csr]] of a frame that passed [[kernelEligible]]. */
+  private[graph] def adjacency(edges: DataFrame): Csr =
+    adjacencyEntry(edges, edges.count()).csr
 
-  /** The decoded [[broadcastAdjacency]] of a frame that passed
-    * [[singleTaskEligible]], on the driver (for the traversal
-    * kernels, which run there on the payload the driver collected). */
-  private[graph] def decodedAdjacency(edges: DataFrame): PackedAdjacency.Decoded =
-    adjacencyEntry(edges, edges.count()).decoded
+  /** An adjacency in CSR form: node ids sorted once in Spark's string
+    * order — UTF-8 bytes, as `UTF8String` compares; JVM `String` order
+    * is UTF-16 and disagrees on supplementary characters — so the
+    * smallest index is the id the rounds' `min` and `min_by` elect.
+    * Node v's neighbors are `dst(off(v) until off(v + 1))`, repeated
+    * rows kept so a repeated row counts twice, as in the rounds. The
+    * nodes are every non-null `a` and `b` id, so a sink (an id never
+    * seen as `a`) has an empty range. For a weighted `(a, b, w)` frame
+    * `w` holds the weights aligned with `dst`, NaN for a null weight;
+    * it is null otherwise. */
+  private[graph] final class Csr(val ids: Array[String],
+      val off: Array[Int], val dst: Array[Int], val w: Array[Double]) {
+    def n: Int = ids.length
+    def deg(v: Int): Int = off(v + 1) - off(v)
 
-  private def packAdjacency(undirectedEdges: DataFrame) = {
-    val spark = undirectedEdges.sparkSession
-    import spark.implicits._
-    val b = col("b").cast("string")
-    // a weighted `(a, b, w)` frame ships its weights in neighbor
-    // order (one collect_list of (b, w) pairs keeps them aligned); a
-    // null weight packs as NaN so the neighbor list stays the one
-    // every verb sees, and only the weighted kernel skips it. An
-    // unweighted frame collects bare ids: a struct with a null weight
-    // shuffles ~10% more bytes (sf0.1 kCore build, graft.Probe)
-    val (nb, bs, ws) =
-      if (undirectedEdges.columns.contains("w"))
-        (struct(b.as("b"), coalesce(col("w").cast("double"), lit(Double.NaN)).as("w")),
-          col("nb.b"), col("nb.w"))
-      else (b, col("nb"), lit(null).cast("array<double>"))
-    // null ids are dropped, as in the rounds ([[nonNullIds]]) —
-    // without this a null id survives the groupBy into the map
-    // and the kernels' id sort NPEs, a regime-divergent failure
-    // for the same input
-    val rows = nonNullIds(undirectedEdges)
-      .groupBy(col("a").cast("string").as("a"))
-      .agg(collect_list(nb).as("nb"))
-      .select(col("a"), concat_ws(PackedAdjacency.Sep.toString, bs).as("bs"),
-        size(col("nb")).as("n"), ws.as("ws"))
-      .as[PackedAdjacency.Row].collect()
-    if (PackedAdjacency.packs(rows)) Some(spark.sparkContext.broadcast(rows))
-    else None
+    def nbrs(v: Int): Range = off(v) until off(v + 1)
+
+    /** The index of `id`, or -1 when it is no node. */
+    def indexOf(id: String): Int = -1 max java.util.Arrays.binarySearch(ids, id,
+      (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y)))
   }
 
-  /** The packed payload of [[broadcastAdjacency]] and its decode.
-    * Executors decode through a per-JVM cache keyed by broadcast id, so
-    * the k seed tasks (and any same-graph consumer, e.g. kCore after
-    * labelPropagation) share ONE materialization; bounded LRU — an
-    * executor outliving many graphs must not pin every decoded map.
-    * The driver holds its own decode in the [[AdjEntry]]. Decode is
-    * loud on separator collisions: the packed neighbor count must
-    * match the split length. */
-  private[graph] object PackedAdjacency {
-    val Sep = '\u0001'
-
-    /** (node, packed neighbors, neighbor count, weights in neighbor
-      * order or null for an unweighted frame). */
-    type Row = (String, String, Int, Array[Double])
-
-    /** Neighbor lists by node, and for a weighted frame the weights
-      * aligned with them (NaN for a null weight); empty otherwise. */
-    final case class Decoded(adj: Map[String, Array[String]],
-        weights: Map[String, Array[Double]])
-
-    /** No neighbor id of `rows` contains [[Sep]]: every packed list
-      * holds exactly n - 1 separators. A frame that fails this is
-      * never broadcast, so it takes the rounds in every verb. */
-    def packs(rows: Array[Row]): Boolean = rows.forall { case (_, bs, n, _) =>
-      var seps = 0
-      var i = bs.indexOf(Sep)
-      while (i >= 0) { seps += 1; i = bs.indexOf(Sep, i + 1) }
-      seps == n - 1
+  private[graph] object Csr {
+    /** One collect of per-task dictionaries: each task maps the ids of
+      * its `(a, b[, w])` rows to local indexes through a `UTF8String`
+      * table and ships each distinct id's bytes once plus one `Int` per
+      * endpoint. The driver merges the tasks' ids into one table,
+      * sorts them, and counting-sorts the rows by `a` (arrival order
+      * within a node); only the |V| ids become `String`s. */
+    def apply(undirectedEdges: DataFrame): Csr = {
+      val weighted = undirectedEdges.columns.contains("w")
+      // a null weight becomes NaN, so every verb sees the same neighbor
+      // list and only the weighted kernel skips it
+      val cols = Seq(col("a").cast("string"), col("b").cast("string")) ++
+        (if (weighted) Seq(coalesce(col("w").cast("double"), lit(Double.NaN)))
+        else Nil)
+      // null ids are dropped, as in the rounds ([[nonNullIds]])
+      val parts = nonNullIds(undirectedEdges).select(cols: _*).queryExecution
+        .toRdd.mapPartitions { rows =>
+          val local = new Dictionary
+          val (src, tgt) = (new mutable.ArrayBuilder.ofInt, new mutable.ArrayBuilder.ofInt)
+          val ws = new mutable.ArrayBuilder.ofDouble
+          while (rows.hasNext) {
+            val r = rows.next()
+            src += local.id(r.getUTF8String(0))
+            tgt += local.id(r.getUTF8String(1))
+            if (weighted) ws += r.getDouble(2)
+          }
+          Iterator(Part(local.keys.map(_.getBytes).toArray, src.result(),
+            tgt.result(), if (weighted) ws.result() else null))
+        }.collect()
+      val ids = new Dictionary
+      val global = parts.map(_.ids.map(b => ids.id(UTF8String.fromBytes(b))))
+      val sorted = ids.keys.toArray
+      java.util.Arrays.sort(sorted, (x: UTF8String, y: UTF8String) => x.compareTo(y))
+      val rank = new Array[Int](sorted.length)
+      for (i <- sorted.indices) rank(ids.id(sorted(i))) = i
+      // each task's local index → final index
+      val toFinal = global.map(_.map(rank))
+      val off = new Array[Int](sorted.length + 1)
+      for ((p, f) <- parts.zip(toFinal); e <- p.src.indices) off(f(p.src(e)) + 1) += 1
+      for (v <- 1 to sorted.length) off(v) += off(v - 1)
+      val fill = off.clone()
+      val dst = new Array[Int](off(sorted.length))
+      val w = if (weighted) new Array[Double](dst.length) else null
+      for ((p, f) <- parts.zip(toFinal); e <- p.src.indices) {
+        val at = fill(f(p.src(e)))
+        fill(f(p.src(e))) += 1
+        dst(at) = f(p.tgt(e))
+        if (weighted) w(at) = p.w(e)
+      }
+      new Csr(sorted.map(_.toString), off, dst, w)
     }
 
-    // cache key: (appId, broadcast id) — broadcast ids restart from 0
-    // per SparkContext, so id alone could serve a STALE map to a JVM
-    // that recreated its session (r12 ADVICE); the app id makes the
-    // key context-unique
-    private val cache = new Memos.Memo[(String, Long), Decoded](4, derived = false)
-    def decode(b: org.apache.spark.broadcast.Broadcast[Array[Row]]): Decoded =
-      cache((org.apache.spark.SparkEnv.get.conf.getAppId, b.id))(unpack(b.value))
+    /** One task's rows: its distinct ids' UTF-8 bytes, and per row the
+      * local indexes of `a` and `b` (and the weight). */
+    private final case class Part(ids: Array[Array[Byte]], src: Array[Int],
+        tgt: Array[Int], w: Array[Double])
 
-    def unpack(rows: Array[Row]): Decoded = {
-      val adj = rows.iterator.map { case (k, packed, n, _) =>
-        // split with limit -1 keeps trailing empty strings, so the
-        // count check catches BOTH corruption directions (r12
-        // ADVICE): an empty-string last neighbor no longer crashes
-        // a valid input, and an id ENDING in the separator can no
-        // longer pass the require with silently-wrong neighbors
-        val bs = if (n == 0) Array.empty[String]
-          else packed.split(
-            java.util.regex.Pattern.quote(Sep.toString), -1)
-        require(bs.length == n, s"packed adjacency for '$k' " +
-          s"decoded ${bs.length} neighbors, expected $n — " +
-          "a node id contains the separator")
-        (k, bs)
-      }.toMap
-      Decoded(adj, rows.iterator.collect {
-        case (k, _, _, ws) if ws != null => (k, ws) }.toMap)
+    /** Indexes in first-seen order; a new key is copied out of its row,
+      * whose buffer the scan may reuse. */
+    private final class Dictionary {
+      private val index = new java.util.HashMap[UTF8String, Integer]
+      val keys = mutable.ArrayBuffer.empty[UTF8String]
+      def id(k: UTF8String): Int = {
+        val i = index.get(k)
+        if (i != null) i
+        else { val c = k.clone(); index.put(c, keys.length); keys += c; keys.length - 1 }
+      }
     }
   }
 
-  /** Broadcast regime: per-seed truncated Brandes (forward BFS with
-    * σ path counts, backward dependency sweep) as ONE flatMap task
-    * per seed over the broadcast adjacency — emits each reached
-    * node's (v, δ_s(v)) rows, depths 1..maxDepth, exactly the rows
-    * the shuffle regime's `acc` carries. σ sums are
-    * integers-in-doubles (exact in any order); δ addition order
-    * differs from the distributed agg only in the last ulp, absorbed
-    * by the caller's 6-decimal rounding like every other double
-    * reduction in this file. */
-  private def dependencyBroadcast(undirectedEdges: DataFrame,
+  /** Kernel regime of [[betweenness]]: per-seed truncated Brandes
+    * (forward BFS with σ path counts, backward dependency sweep) over
+    * the held [[Csr]], seeds in parallel on the JDK's common fork-join
+    * pool. Emits each reached node's (v, δ) summed over the seeds in
+    * seed order, depths 1..maxDepth — the sums of the rows the shuffle
+    * regime's `acc` carries. σ sums are integers-in-doubles (exact in
+    * any order); δ addition order differs from the distributed agg
+    * only in the last ulp, absorbed by the caller's 6-decimal
+    * rounding like every other double reduction in this file. */
+  private def dependencyKernel(undirectedEdges: DataFrame,
       seeds: DataFrame, maxDepth: Int): DataFrame = {
     val spark = undirectedEdges.sparkSession
     import spark.implicits._
-    val bAdj = broadcastAdjacency(undirectedEdges)
-    val seedKeys = seeds.select(col("s").cast("string")).as[String].collect()
-    spark.sparkContext
-      .parallelize(seedKeys.toSeq, math.max(1, seedKeys.length))
-      .flatMap { s =>
-        val g = PackedAdjacency.decode(bAdj).adj
-        val depth = scala.collection.mutable.HashMap(s -> 0)
-        val sigma = scala.collection.mutable.HashMap(s -> 1.0)
-        val levels = scala.collection.mutable.ArrayBuffer(Array(s))
-        var frontier = levels(0)
-        var t = 1
-        while (t <= maxDepth && frontier.nonEmpty) {
-          val found = scala.collection.mutable.ArrayBuffer[String]()
-          frontier.foreach { v =>
-            val sv = sigma(v)
-            g.getOrElse(v, Array.empty[String]).foreach { w =>
-              depth.get(w) match {
-                case None => depth(w) = t; sigma(w) = sv; found += w
-                case Some(d) if d == t => sigma(w) += sv
-                case _ => ()
-              }
-            }
-          }
-          frontier = found.toArray
-          levels += frontier
-          t += 1
-        }
-        val delta = scala.collection.mutable.HashMap[String, Double]()
-        val out = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-        // deepest level first: a node's δ is final before its row is
-        // emitted, because contributions only flow downward in depth
-        for (d <- (levels.length - 1) to 1 by -1) {
-          levels(d).foreach { w =>
-            val dw = delta.getOrElse(w, 0.0)
-            out += ((w, dw))
-            val sw = sigma(w)
-            g.getOrElse(w, Array.empty[String]).foreach { v =>
-              if (depth.get(v).contains(d - 1))
-                delta(v) = delta.getOrElse(v, 0.0) + sigma(v) / sw * (1.0 + dw)
-            }
-          }
-        }
-        out
-      }.toDF("v", "delta")
-      // lazy checkpoint, same reason as singleTask: don't re-run
-      // k seed sweeps per downstream action
-      .materialize(false)
+    val g = adjacency(undirectedEdges)
+    val seedIdx = seeds.select(col("s").cast("string")).as[String].collect()
+      .map(g.indexOf).filter(_ >= 0)
+    // per seed, in seed order: the nodes reached at depth ≥ 1 and their δ
+    val sweeps = java.util.stream.IntStream.range(0, seedIdx.length).parallel()
+      .mapToObj(i => brandes(g, seedIdx(i), maxDepth)).toList.asScala
+    val total = mutable.HashMap.empty[Int, Double]
+    for ((vs, ds) <- sweeps; i <- vs.indices)
+      total(vs(i)) = total.getOrElse(vs(i), 0.0) + ds(i)
+    total.toSeq.map { case (v, d) => (g.ids(v), d) }.toDF("v", "delta")
+  }
+
+  /** One seed's sweep of [[dependencyKernel]]. */
+  private def brandes(g: Csr, s: Int,
+      maxDepth: Int): (Array[Int], Array[Double]) = {
+    val depth = Array.fill(g.n)(-1)
+    val sigma = new Array[Double](g.n)
+    val delta = new Array[Double](g.n)
+    depth(s) = 0; sigma(s) = 1.0
+    val levels = mutable.ArrayBuffer(Array(s))
+    var t = 1
+    while (t <= maxDepth && levels.last.nonEmpty) {
+      val found = mutable.ArrayBuffer.empty[Int]
+      for (v <- levels.last; e <- g.nbrs(v)) {
+        val w = g.dst(e)
+        if (depth(w) < 0) { depth(w) = t; sigma(w) = sigma(v); found += w }
+        else if (depth(w) == t) sigma(w) += sigma(v)
+      }
+      levels += found.toArray
+      t += 1
+    }
+    // deepest level first: a node's δ is final before it is read,
+    // because contributions only flow downward in depth
+    for (d <- levels.length - 1 to 1 by -1; w <- levels(d); e <- g.nbrs(w)) {
+      val v = g.dst(e)
+      if (depth(v) == d - 1) delta(v) += sigma(v) / sigma(w) * (1.0 + delta(w))
+    }
+    val vs = levels.iterator.drop(1).flatten.toArray
+    (vs, vs.map(delta))
   }
 
   /** Shuffle regime of [[betweenness]] — the DataFrame-iterative
@@ -1226,22 +1179,27 @@ object Algorithms {
     * min_by over (count desc, label asc).
     *
     * Dual regime, like [[kCore]]: under `graft.graph.broadcastEdges`
-    * the same synchronous rounds run in ONE executor task over the
-    * broadcast adjacency ([[singleTask]]) — exact, the same map as
-    * the rounds. Contract notes: the input is the symmetric
-    * adjacency, labels and community names compare in Spark's string
-    * order (UTF-8 bytes), rows with a null id are dropped in both
-    * regimes, and only STRING adjacencies take the single task. */
+    * the same synchronous rounds run on the driver over the frame's
+    * held adjacency ([[onAdjacency]]) — exact, the same map as
+    * the rounds. Contract notes: labels compare in Spark's string
+    * order (UTF-8 bytes); a node takes labels from its `(a, b)` rows,
+    * so on an asymmetric frame a node with no labeled `b` has no row
+    * in both regimes; rows with a null id are dropped in both
+    * regimes, and only STRING adjacencies take the kernel. */
   def labelPropagation(undirectedEdges: DataFrame,
       steps: Int = 5): DataFrame =
-    if (singleTaskEligible(undirectedEdges))
-      singleTask(undirectedEdges, "community")(g =>
+    if (kernelEligible(undirectedEdges))
+      onAdjacency(undirectedEdges, "community")(g =>
         labelPropagationKernel(g, steps))
+    else labelPropagationRounds(undirectedEdges, steps)
+
+  private def labelPropagationRounds(undirectedEdges: DataFrame,
+      steps: Int): DataFrame =
     // the shared a-keyed adjacency (memoized for stable frames,
     // scoped scratch for one-shot ones); rounds reference the
     // checkpointed frame, so the cluster-scale SMJ path ships its
     // b-exchange once via ReuseExchange, as before
-    else GraphBuilder.withAKeyed(undirectedEdges) { keyed =>
+    GraphBuilder.withAKeyed(undirectedEdges) { keyed =>
     val spark = undirectedEdges.sparkSession
     val edges = nonNullIds(keyed)
     var labels = edges.select(col("a").as("node")).distinct()
@@ -1342,33 +1300,39 @@ object Algorithms {
   /** The rounds' update, as index arrays: each round every node takes
     * the label most frequent among its neighbors' previous labels,
     * ties toward the smallest; then each community is named by its
-    * smallest member. */
-  private def labelPropagationKernel(g: IndexedAdjacency,
-      steps: Int): Array[String] = {
-    var label = Array.range(0, g.n)
+    * smallest member. A node starts labeled iff it has a row (an `a`
+    * id) and stays labeled iff a neighbor was, as in the rounds'
+    * inner joins; -1 is no label. */
+  private def labelPropagationKernel(g: Csr,
+      steps: Int): Seq[(String, String)] = {
+    var label = Array.tabulate(g.n)(v => if (g.deg(v) > 0) v else -1)
     val cnt = new Array[Int](g.n) // zero between nodes
     for (_ <- 1 to steps) {
+      val prev = label
       label = Array.tabulate(g.n) { v =>
         // the running (max count, then min label) winner is the
         // final one: a label can only take the lead when it reaches
         // the current maximum
-        var best = label(v)
+        var best = -1
         var bestC = 0
-        g.adj(v).foreach { u =>
-          val l = label(u)
-          cnt(l) += 1
-          if (cnt(l) > bestC || (cnt(l) == bestC && l < best)) {
-            best = l; bestC = cnt(l)
+        val nbrs = g.nbrs(v)
+        for (e <- nbrs) {
+          val l = prev(g.dst(e))
+          if (l >= 0) {
+            cnt(l) += 1
+            if (cnt(l) > bestC || (cnt(l) == bestC && l < best)) {
+              best = l; bestC = cnt(l)
+            }
           }
         }
-        g.adj(v).foreach(u => cnt(label(u)) = 0)
+        for (e <- nbrs) { val l = prev(g.dst(e)); if (l >= 0) cnt(l) = 0 }
         best
       }
     }
     // nodes in index order: the first member seen names the label
     val canon = Array.fill(g.n)(-1)
-    for (v <- 0 until g.n if canon(label(v)) < 0) canon(label(v)) = v
-    label.map(l => g.ids(canon(l)))
+    for (v <- 0 until g.n; l = label(v) if l >= 0 && canon(l) < 0) canon(l) = v
+    (0 until g.n).filter(label(_) >= 0).map(v => (g.ids(v), g.ids(canon(label(v)))))
   }
 
   /** Node-count ceiling for statically broadcasting the LPA label
@@ -1380,13 +1344,14 @@ object Algorithms {
     * steps) — LPA's partition is a reusable artifact (g_modularity
     * SCORES the assignment g_communities produced; without sharing,
     * every consumer re-ran the 5 aggregation rounds and the cost
-    * mis-attributed to the consumer, not the assigner). The |V|-row
-    * result is localCheckpoint'd so consumers read a materialized
-    * frame. */
+    * mis-attributed to the consumer, not the assigner). The rounds'
+    * |V|-row result is localCheckpoint'd so consumers read a
+    * materialized frame; the kernel's already is a local relation. */
   def labelPropagationCached(undirectedEdges: DataFrame,
       steps: Int = 5): DataFrame =
     lpaCache((undirectedEdges, steps))(
-      labelPropagation(undirectedEdges, steps).materialize())
+      if (kernelEligible(undirectedEdges)) labelPropagation(undirectedEdges, steps)
+      else labelPropagationRounds(undirectedEdges, steps).materialize())
 
   private val lpaCache = new Memos.Memo[(DataFrame, Int), DataFrame](8, derived = true)
 

@@ -119,7 +119,7 @@ object GraphBuilder {
 
   /** A memoized undirected adjacency and its unit-weighted `(a, b, w)`
     * projection, one instance of each per edges frame: the weighted
-    * verbs then find the projection's broadcast adjacency on a repeated
+    * verbs then find the projection's held adjacency on a repeated
     * call, as the unweighted verbs find the adjacency's. */
   private final class Undirected(val und: DataFrame) {
     lazy val unitWeighted: DataFrame = und.withColumn("w", lit(1.0))

@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
 import graft.plans.Materialize._
 
 /** Frontier-based traversals over an undirected adjacency DataFrame
@@ -14,13 +13,12 @@ import graft.plans.Materialize._
   *
   * Scale notes (100 TB contract, SURVEY.md §5): two regimes, picked
   * by the one gate of the graph verbs, `graft.graph.broadcastEdges`
-  * ([[Algorithms.broadcastEdges]]; string ids only, and none that
-  * contains U+0001, the packed adjacency's separator — such a frame
-  * takes the rounds at any size).
+  * ([[Algorithms.broadcastEdges]]; string ids only).
   *  - Within the ceiling each verb runs as an in-memory kernel on the
-  *    DRIVER over the memoized broadcast adjacency the gate built (and
-  *    collected there), decoded once and held with it. A kernel
-  *    walks only the nodes it reaches, and its result is a local
+  *    DRIVER over the frame's memoized CSR adjacency (the one the
+  *    whole-graph kernels read, built by the gate's first call). A
+  *    kernel walks only the nodes it reaches, compares ids as ints in
+  *    index order (Spark's string order), and its result is a local
   *    relation: a repeated point traversal runs no Spark job at all.
   *    The gate reads the row count held with the adjacency, so a
   *    repeated call runs no count job either.
@@ -46,21 +44,25 @@ object Traversal {
     val spark = edges0.sparkSession
     import spark.implicits._
     val starts = seeds.filter(_ != null).distinct
-    if (Algorithms.singleTaskEligible(edges0)) {
-      val g = Algorithms.decodedAdjacency(edges0).adj
-      val depth = mutable.HashMap(starts.map(_ -> 0): _*)
-      var frontier = starts
+    if (Algorithms.kernelEligible(edges0)) {
+      val g = Algorithms.adjacency(edges0)
+      // a seed absent from the graph is a node at depth 0 all the same
+      val (absent, known) = starts.partition(g.indexOf(_) < 0)
+      val depth = mutable.HashMap(known.map(g.indexOf(_) -> 0): _*)
+      var frontier = depth.keys.toSeq
       var d = 0
       while (d < maxDepth && frontier.nonEmpty) {
         d += 1
-        val next = mutable.ArrayBuffer.empty[String]
-        // neighbor lists include sinks (ids only ever seen as `b`),
-        // which are reached but expand nothing, as in the rounds
-        for (v <- frontier; w <- g.getOrElse(v, Array.empty[String]))
-          if (!depth.contains(w)) { depth(w) = d; next += w }
+        val next = mutable.ArrayBuffer.empty[Int]
+        // sinks (ids only ever seen as `b`) are reached but expand
+        // nothing, as in the rounds
+        for (v <- frontier; e <- g.nbrs(v) if !depth.contains(g.dst(e))) {
+          depth(g.dst(e)) = d; next += g.dst(e)
+        }
         frontier = next.toSeq
       }
-      depth.toSeq.toDF("node", "depth")
+      (absent.map(_ -> 0) ++ depth.map { case (v, dv) => g.ids(v) -> dv })
+        .toDF("node", "depth")
     } else
     // the shared a-keyed adjacency: every level joins on `a`, and
     // the per-call `edges0.materialize()` this replaces re-copied an
@@ -118,35 +120,34 @@ object Traversal {
     val path =
       if (source == null || destination == null) Nil
       else if (source == destination) List(source)
-      else if (Algorithms.singleTaskEligible(edges0))
-        pathKernel(Algorithms.decodedAdjacency(edges0).adj, source,
-          destination, maxDepth)
+      else if (Algorithms.kernelEligible(edges0))
+        pathKernel(Algorithms.adjacency(edges0), source, destination, maxDepth)
       else pathRounds(edges0, source, destination, maxDepth)
     path.zipWithIndex.map { case (n, i) => (i, n) }.toDF("step", "node")
   }
 
-  private def pathKernel(g: Map[String, Array[String]], source: String,
+  private def pathKernel(g: Algorithms.Csr, source: String,
       destination: String, maxDepth: Int): List[String] = {
-    val parent = mutable.HashMap[String, String](source -> null)
-    var frontier = Seq(source)
-    var found = false
+    val t = g.indexOf(destination)
+    // each node found, with its level and parent; -1 is no parent
+    val found = mutable.HashMap(g.indexOf(source) -> ((0, -1)))
+    var frontier = found.keys.filter(_ >= 0).toSeq
     var depth = 0
-    while (!found && depth < maxDepth && frontier.nonEmpty) {
+    while (t >= 0 && !found.contains(t) && depth < maxDepth && frontier.nonEmpty) {
       depth += 1
-      // children of this level only: a node visited at an earlier
-      // level is skipped, like the rounds' anti join
-      val level = mutable.HashMap.empty[String, UTF8String]
-      for (v <- frontier) {
-        val uv = UTF8String.fromString(v)
-        for (w <- g.getOrElse(v, Array.empty[String]) if !parent.contains(w))
-          if (level.get(w).forall(p => uv.compareTo(p) < 0)) level(w) = uv
+      // children of this level only: a node found at an earlier level
+      // is skipped, like the rounds' anti join; the smallest parent
+      // in index order (Spark's string order) wins
+      val next = mutable.ArrayBuffer.empty[Int]
+      for (v <- frontier; e <- g.nbrs(v); w = g.dst(e)) found.get(w) match {
+        case None => found(w) = (depth, v); next += w
+        case Some((d, p)) if d == depth && v < p => found(w) = (depth, v)
+        case _ =>
       }
-      level.foreach { case (w, p) => parent(w) = p.toString }
-      frontier = level.keys.toSeq
-      found = level.contains(destination)
+      frontier = next.toSeq
     }
-    if (!found) Nil
-    else Iterator.iterate(destination)(parent).takeWhile(_ != null).toList.reverse
+    if (t < 0 || !found.contains(t)) Nil
+    else Iterator.iterate(t)(found(_)._2).takeWhile(_ >= 0).map(g.ids).toList.reverse
   }
 
   private def pathRounds(edges0: DataFrame, source: String,
@@ -224,31 +225,29 @@ object Traversal {
       s"shortest paths did not converge in $maxIter rounds — " +
         "distances were still improving; raise maxIter")
     if (source == null) Seq.empty[(String, Double)].toDF("node", "dist")
-    else if (Algorithms.singleTaskEligible(edges0)) {
-      val g = Algorithms.decodedAdjacency(edges0)
-      val dist = mutable.HashMap(source -> 0.0)
-      var changed = Seq(source)
+    else if (Algorithms.kernelEligible(edges0)) {
+      val g = Algorithms.adjacency(edges0)
+      // an absent source is index -1: it reaches nothing
+      val dist = mutable.HashMap(g.indexOf(source) -> 0.0)
+      var changed = dist.keys.toSeq
       var iter = 0
       while (changed.nonEmpty && iter < maxIter) {
         iter += 1
         // offers use the previous round's distances (synchronous)
         val offers = changed.map(u => u -> dist(u))
-        val improved = mutable.HashSet.empty[String]
-        for ((u, du) <- offers; nbrs <- g.adj.get(u)) {
-          val ws = g.weights(u)
-          for (i <- nbrs.indices if !ws(i).isNaN) {
-            val c = du + ws(i)
-            // Double.compare orders NaN last, as Spark's min and `<` do
-            if (dist.get(nbrs(i)).forall(x => java.lang.Double.compare(c, x) < 0)) {
-              dist(nbrs(i)) = c
-              improved += nbrs(i)
-            }
+        val improved = mutable.HashSet.empty[Int]
+        for ((u, du) <- offers if u >= 0; e <- g.nbrs(u) if !g.w(e).isNaN) {
+          val (v, c) = (g.dst(e), du + g.w(e))
+          // Double.compare orders NaN last, as Spark's min and `<` do
+          if (dist.get(v).forall(x => java.lang.Double.compare(c, x) < 0)) {
+            dist(v) = c; improved += v
           }
         }
         changed = improved.toSeq
       }
       if (changed.nonEmpty) throw notConverged()
-      dist.toSeq.toDF("node", "dist")
+      dist.toSeq.map { case (v, dv) => (if (v < 0) source else g.ids(v)) -> dv }
+        .toDF("node", "dist")
     } else GraphBuilder.withAKeyed(edges0) { keyed =>
     val w = col("w").cast("double")
     val edges = Algorithms.nonNullIds(keyed).filter(w.isNotNull && !isnan(w))

@@ -5,8 +5,8 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 
 /** The engine's one cache contract. Every memo in the library (the
-  * demo graph's edges and adjacency, a-keyed copies, broadcast
-  * adjacency maps, triangle/ball/LPA/walk artifacts, the minhash pair
+  * demo graph's edges and adjacency, a-keyed copies, the graph
+  * kernels' CSR adjacency, triangle/ball/LPA/walk artifacts, the minhash pair
   * build, IVF/PQ models, GraphStore's resolved versions…) is a
   * [[Memos.Memo]]:
   *
@@ -37,8 +37,7 @@ import scala.collection.mutable
   *    second timed pass re-measures the operators instead of hitting
   *    their artifacts. INPUT-layer memos (the edge frames and their
   *    undirected adjacency the untimed warmup builds, GraphStore's
-  *    versions, the executor-side adjacency decode) stay warm in both
-  *    passes.
+  *    versions) stay warm in both passes.
   *  - Admission is the call site's decision: a site that must not
   *    memoize a one-shot input (`GraphBuilder.withAKeyed`,
   *    `undirectedOf`) checks [[isStable]] and routes around the memo.

@@ -76,6 +76,12 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     val peel = run()
     val rounds = inRounds(run())
     assert(peel == rounds, s"$peel vs $rounds")
+    // directed rows are outside the contract, and there the regimes
+    // differ: the peeling sees only ids seen as `a`, and only their rows
+    // between such ids ("x" is a sink)
+    val directed = asym
+    assert(Algorithms.kCore(directed).collect().map(r => r.getString(0) -> r.getInt(1))
+      .toMap == Map("a" -> 1, "b" -> 1, "c" -> 0, "q" -> 0, "y" -> 1))
   }
 
   test("k-core is bounded by degree on real data") {
@@ -457,18 +463,31 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     "e" -> "f", "f" -> "g", "e" -> "g",
     "h" -> "i", "h" -> "j", "i" -> "j", "j" -> "k")
 
+  // Directed rows: "x" is only ever a `b` (a sink), "y" and "q" only
+  // `a`s, so the four whole-graph verbs see nodes without rows.
+  private def asym = {
+    import spark.implicits._
+    Seq(("a", "b"), ("b", "c"), ("c", "x"), ("y", "a"), ("b", "x"), ("q", "x"))
+      .toDF("a", "b")
+  }
+
   private def ranks(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
   test("pagerank regimes agree: single task == rounds to 1e-9") {
     // unseeded, and seeded at a node whose UTF-8 and UTF-16 indexes
-    // differ and at the demo graph's catalog seed
+    // differ, at the demo graph's catalog seed, and on directed rows
+    // (seeded at a source and at a sink)
+    val directed = asym
     for ((g, seed) <- Seq(mixed -> None, mixed -> Some("😀"),
+        directed -> None, directed -> Some("y"), directed -> Some("x"),
         GraphBuilder.undirectedFor(spark, sfDir) -> None,
         GraphBuilder.undirectedFor(spark, sfDir) -> Some("c:1"))) {
       def run() = ranks(Algorithms.pageRank(g, 10, seed = seed))
       val (kernel, rounds) = (run(), inRounds(run()))
       assert(kernel.keySet == rounds.keySet)
+      // only ids seen as `a` get a rank
+      if (g eq directed) assert(kernel.keySet == Set("a", "b", "c", "y", "q"))
       val worst = kernel.map { case (k, v) => math.abs(v - rounds(k)) }.max
       assert(worst <= 1e-9, s"$seed: max |kernel - rounds| = $worst")
     }
@@ -512,6 +531,9 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
       // community names are member keys of the graph
       assert(lp.join(nodes.withColumnRenamed("node", "community"), "community")
         .count() == lp.count())
+      // a cached kernel result would serve every later query with the
+      // same local rows, through a cache scan job
+      lp.unpersist()
     }
   }
 
@@ -519,7 +541,7 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     val edges = und(
       "a1" -> "a2", "a2" -> "a3", "a1" -> "a3",
       "b1" -> "b2", "b2" -> "b3", "b1" -> "b3")
-    // the DataFrame rounds; the single-task kernel is pinned equal to
+    // the DataFrame rounds; the kernel is pinned equal to
     // them below
     def run() = inRounds(Algorithms.labelPropagation(edges, 5)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
@@ -560,6 +582,14 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     assert(inRounds(maps(mixed)) == ((cc, lp)))
     val demo = GraphBuilder.undirectedFor(spark, sfDir)
     assert(maps(demo) == inRounds(maps(demo)))
+    // directed rows: labels flow from `a` to `b`, so the sink "x" takes
+    // the smallest id that reaches it, and a node with no labeled `b`
+    // has no LPA row
+    val directed = asym
+    val (dcc, dlp) = maps(directed)
+    assert(dcc == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "a",
+      "y" -> "y", "q" -> "q"), dcc)
+    assert(inRounds(maps(directed)) == ((dcc, dlp)))
   }
 
   // ---- traversals: driver kernels == rounds ----
@@ -644,24 +674,30 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     assert(onDemo.nonEmpty && onDemo == inRounds(run(demo, "c:1", "s:5", 20)))
   }
 
-  test("ids with the packing separator take the rounds in every broadcast verb") {
-    // "b\u0001c" cannot travel in the packed adjacency, whatever the
-    // graph's size: the gate sends the frame to the rounds, so the
-    // verbs return what they return with the kernels switched off
+  test("ids with U+0001 run the kernels in every broadcast verb") {
+    // "b\u0001c" is an id like any other in the CSR adjacency, whatever
+    // the graph's size: the kernels return what the rounds return
     val sep = "b\u0001c"
     val g = und("a" -> sep, sep -> "d", "a" -> "x")
     val weighted = g.withColumn("w", lit(1.0))
-    def run() = (levelRows(Traversal.bfsLevels(g, Seq("a"), 3)),
+    def levels() = levelRows(Traversal.bfsLevels(g, Seq("a"), 3))
+    def cores() = Algorithms.kCore(g).collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    def run() = (levels(),
       pathRows(Traversal.pathBetween(g, "a", "d")),
       Traversal.shortestPathsWeighted(weighted, "a").collect()
         .map(r => r.getString(0) -> r.getDouble(1)).toMap,
-      Algorithms.kCore(g).collect().map(r => r.getString(0) -> r.getInt(1)).toMap)
+      cores())
     val got = run()
     assert(got == inRounds(run()))
     assert(got._1 == Seq(("a", 0), (sep, 1), ("d", 2), ("x", 1)))
     assert(got._2.map(_._2) == Seq("a", sep, "d"))
     assert(got._3 == Map("a" -> 0.0, sep -> 1.0, "x" -> 1.0, "d" -> 2.0))
     assert(got._4.values.toSet == Set(1))
+    // the kernel regime ran: with the adjacency held, a repeated BFS
+    // and kCore read it with no Spark job, where the rounds run several
+    var again = (Seq.empty[(String, Int)], Map.empty[String, Int])
+    assert(jobsDuring { again = (levels(), cores()) } == 0)
+    assert(again == ((got._1, got._4)))
   }
 
   test("weighted sssp regimes agree: same sums, null weights, duplicates") {

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
@@ -10,10 +14,34 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 
   /** Runs `body` with the graph operators pinned to their DataFrame
     * rounds: a zero `graft.graph.broadcastEdges` ceiling turns the
-    * single-task kernels off. */
+    * kernels off. */
   def inRounds[T](body: => T): T = {
     spark.conf.set("graft.graph.broadcastEdges", "0")
     try body finally spark.conf.unset("graft.graph.broadcastEdges")
+  }
+
+  /** Spark jobs started while `f` runs. The listener bus is FIFO:
+    * once a marked barrier job's start arrives, every job `f` started
+    * has been counted. */
+  def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val barrier = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.barrier") != null))
+          barrier.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      f
+      sc.setLocalProperty("graft.test.barrier", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.barrier", null)
+      assert(barrier.await(30, TimeUnit.SECONDS), "barrier job never observed")
+      jobs.get
+    } finally sc.removeSparkListener(l)
   }
 
   /** Runs `body` with GraphStore's versions read as file relations: a

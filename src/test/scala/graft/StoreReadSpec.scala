@@ -1,11 +1,9 @@
 package graft
 
 import java.io.File
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, CyclicBarrier, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, CyclicBarrier}
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -42,30 +40,6 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
 
   private def keys(df: DataFrame): Set[String] =
     df.select("key_data").collect().map(_.getString(0)).toSet
-
-  /** Spark jobs started while `f` runs. The listener bus is FIFO:
-    * once a marked barrier job's start arrives, every job `f` started
-    * has been counted. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val barrier = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.test.barrier") != null))
-          barrier.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      f
-      sc.setLocalProperty("graft.test.barrier", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.test.barrier", null)
-      assert(barrier.await(30, TimeUnit.SECONDS), "barrier job never observed")
-      jobs.get
-    } finally sc.removeSparkListener(l)
-  }
 
   /** The gate's measure: a version's data files, as Spark lists them. */
   private def dataBytes(versionDir: String): Long =
@@ -170,7 +144,7 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("store-loaded graphs share one adjacency per edges version") {
-    // the traversals walk the broadcast adjacency below the ceiling
+    // the traversals walk the held CSR adjacency below the ceiling
     // and the rounds' a-keyed copy past it: the same reads in both,
     // with each regime's sharing checked on its own adjacency
     inBothRegimes("adj-memo")(sharedAdjacency(rounds = false))
@@ -208,10 +182,28 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
     val und = GraphBuilder.undirected(GraphBuilder.edges(spark, sfDir)).localCheckpoint()
     val cores = Algorithms.kCore(und).collect().map(_.toString).sorted.toSeq
     var second: DataFrame = null
-    // the kernel's frame is a lazy checkpoint: with the count held in
+    // the kernel's frame is a local relation: with the count held in
     // the adjacency's entry, building it starts no job
     assert(jobsDuring { second = Algorithms.kCore(und) } == 0)
     assert(second.collect().map(_.toString).sorted.toSeq == cores)
+    // with the entry held, each whole-graph kernel builds and collects
+    // its result with no job at all
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for ((name, verb) <- Seq[(String, () => DataFrame)](
+        "pageRank" -> (() => Algorithms.pageRank(und)),
+        "connectedComponents" -> (() => Algorithms.connectedComponents(und)),
+        "kCore" -> (() => Algorithms.kCore(und)),
+        "labelPropagation" -> (() => Algorithms.labelPropagation(und)))) {
+      var got = Seq.empty[String]
+      assert(jobsDuring { got = rows(verb()) } == 0, name)
+      assert(got.nonEmpty && got == rows(verb()), name)
+    }
+    // betweenness keeps the jobs of its node set, seeds and (v, δ)
+    // aggregation; its sweeps run none (a job of one task per seed
+    // made it 9)
+    var bc = Seq.empty[String]
+    assert(jobsDuring { bc = rows(Algorithms.betweenness(und)) } == 8)
+    assert(bc == inRounds(rows(Algorithms.betweenness(und))))
     spark.conf.set("graft.graph.broadcastEdges", (und.count() - 1).toString)
     try assert(jobsDuring { second = Algorithms.kCore(und) } > 0, "the rounds run eagerly")
     finally spark.conf.unset("graft.graph.broadcastEdges")
@@ -223,7 +215,7 @@ class StoreReadSpec extends AnyFunSuite with SparkFixture {
     val first = sssp(spark, sfDir).collect().toSeq
     var second: DataFrame = null
     // the unit-weighted frame is one instance per memoized adjacency,
-    // so the second call finds its broadcast adjacency and row count
+    // so the second call finds its held adjacency and row count
     assert(jobsDuring { second = sssp(spark, sfDir) } == 0)
     assert(second.collect().toSeq == first)
     assert(GraphBuilder.unitWeightedFor(spark, sfDir) eq
